@@ -14,7 +14,8 @@ idiomatically on Spark DataFrames / Spark SQL so every operator distributes:
 - ``plans``      — the query catalog: every operator from SURVEY §2 as a
                    (spark_fn, oracle_sql) pair runnable against the testdata.
 - ``streaming``  — Structured Streaming variants of the batch operators.
-- ``ml``         — MLlib-based train/predict with group-aware CV folds.
+- ``ml``         — the imputer: group-aware CV folds, a single-node booster
+                   fitted on the collected sample, distributed predict.
 """
 
 __version__ = "0.1.0"

@@ -1,22 +1,20 @@
-"""Booster-parity training path (SURVEY M3/M4 exact-parity option).
+"""The imputer's trainer: a single-node booster fitted on the sample.
 
 The reference fits single-node XGBoost/LightGBM regressors on the 2-3 %
 stratified sample (`imputation_model_pipeline.py:90-112`) with the paper's
-hyperparameters (`setup/training.py:68-139`). MLlib's GBTRegressor
-(`ml/pipeline.py`) is the distributed default; this module adds the
-booster path behind the same interface for bit-parity with the reference
-when xgboost/lightgbm are installed:
+hyperparameters (`setup/training.py:68-139`). This module is that path:
 
 * fit: collect the SAMPLE (small by contract — the reference itself fits
-  it in one process) to the driver and fit the booster there;
+  it in one process) to the driver in one Spark job and fit the booster
+  there; group-aware CV folds are fitted and scored on the same
+  collected rows (``cross_validate_booster``, the one CV loop);
 * predict: pickle-broadcast the fitted booster and score in Arrow batches
   via ``mapInPandas`` — M4 stays fully distributed.
 
-Neither library is in this container, so those backends raise a clear
-error unless a ``model_factory`` is injected. The always-available
+xgboost/lightgbm are not in this container, so those backends raise a
+clear error unless a ``model_factory`` is injected. The always-available
 ``backend="numpy"`` (``ml/numpy_gbm.NumpyHistGBM``, a real histogram
-GBM) exercises the full numeric path — CV folds → fit → broadcast →
-``mapInPandas`` score → quality gate — without either library.
+GBM) is what ``ml/pipeline.train_imputation_model`` trains.
 """
 
 from __future__ import annotations
@@ -24,6 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -118,8 +117,8 @@ def _default_factory(backend: str, params: dict) -> Callable[[], object]:
             from xgboost import XGBRegressor
         except ImportError as exc:
             raise ImportError(
-                "booster backend 'xgb' needs xgboost; use the MLlib path "
-                "(ml/pipeline.py) or inject model_factory"
+                "booster backend 'xgb' needs xgboost; use backend='numpy' "
+                "or inject model_factory"
             ) from exc
         return lambda: XGBRegressor(**params)
     if backend == "lgbm":
@@ -127,8 +126,8 @@ def _default_factory(backend: str, params: dict) -> Callable[[], object]:
             from lightgbm import LGBMRegressor
         except ImportError as exc:
             raise ImportError(
-                "booster backend 'lgbm' needs lightgbm; use the MLlib path "
-                "(ml/pipeline.py) or inject model_factory"
+                "booster backend 'lgbm' needs lightgbm; use backend='numpy' "
+                "or inject model_factory"
             ) from exc
         return lambda: LGBMRegressor(**params)
     raise ValueError(f"unknown booster backend {backend!r}")
@@ -136,11 +135,10 @@ def _default_factory(backend: str, params: dict) -> Callable[[], object]:
 
 @dataclass
 class BoosterImputer:
-    """Fitted single-node booster + the distributed scoring contract.
-
-    Interface-compatible with ``TrainedImputer`` where it matters
-    (features/target/cv_r2/mean_cv_r2) so `predict_with_stats`-style
-    call sites can switch backends."""
+    """Fitted single-node booster + the distributed scoring contract:
+    the imputer that ``train_imputation_model`` returns, that
+    ``predict_with_stats`` scores through and that ``ModelStore``
+    persists."""
 
     model: object
     features: list[str]
@@ -201,6 +199,27 @@ class BoosterImputer:
         return df.mapInPandas(score, schema=schema)
 
 
+def _collect_sample(
+    df: DataFrame, features: list[str], target: str, *extra: str
+) -> pd.DataFrame:
+    """One Spark job: the non-null-target rows, sorted on their own
+    columns so that a fit never depends on row order or partition count
+    (the learners' float sums follow row order)."""
+    cols = [*extra, *features, target]
+    sample = df.filter(F.col(target).isNotNull()).select(*cols).toPandas()
+    if sample.empty:
+        raise ValueError("no non-null training rows to fit the booster on")
+    return sample.sort_values(cols, kind="mergesort", ignore_index=True)
+
+
+def _fit(model_factory: Callable[[], object], X, y, n_jobs: int | None = None):
+    model = model_factory()
+    if n_jobs is not None and hasattr(model, "set_params"):
+        model.set_params(n_jobs=n_jobs)
+    model.fit(X, y)
+    return model
+
+
 def train_booster_on_sample(
     df: DataFrame,
     features: list[str],
@@ -211,8 +230,8 @@ def train_booster_on_sample(
     model_factory: Callable[[], object] | None = None,
     n_jobs: int | None = None,
 ) -> BoosterImputer:
-    """M3 booster path: collect the (sampled, small-by-contract) training
-    frame and fit exactly as the reference does
+    """M3 booster path without CV: collect the (sampled, small-by-
+    contract) training frame and fit exactly as the reference does
     (`imputation_model_pipeline.py:90-112`). ``model_factory`` injects any
     sklearn-style regressor — the seam for tests and for future backends.
     """
@@ -220,17 +239,8 @@ def train_booster_on_sample(
         model_factory = _default_factory(
             backend, params if params is not None else XGB_AOD_PARAMS
         )
-    sample = (
-        df.filter(F.col(target).isNotNull())
-        .select(*features, target)
-        .toPandas()
-    )
-    if sample.empty:
-        raise ValueError("no non-null training rows to fit the booster on")
-    model = model_factory()
-    if n_jobs is not None and hasattr(model, "set_params"):
-        model.set_params(n_jobs=n_jobs)
-    model.fit(sample[features], sample[target])
+    sample = _collect_sample(df, features, target)
+    model = _fit(model_factory, sample[features], sample[target], n_jobs)
     return BoosterImputer(model=model, features=list(features), target=target)
 
 
@@ -245,32 +255,39 @@ def cross_validate_booster(
     backend: str = "xgb",
     params: dict | None = None,
 ) -> BoosterImputer:
-    """Group-aware CV (M1) + final fit, mirroring
-    `train_imputation_model` but on the booster backend. Each fold's test
-    split is scored distributed; only train folds are collected."""
-    from pm25ml_spark.ml.pipeline import assign_group_folds, regression_metrics
+    """Group-aware CV (M1) + final fit: the one CV loop.
 
-    data = assign_group_folds(df, group_col, n_folds).filter(
-        F.col(target).isNotNull()
-    ).persist()
-    cv_r2 = []
-    for fold in range(n_folds):
-        imputer = train_booster_on_sample(
-            data.filter(F.col("fold") != fold),
-            features,
-            target,
-            backend=backend,
-            params=params,
-            model_factory=model_factory,
+    Spark assigns the folds (``assign_group_folds``) and the fold-assigned
+    sample is collected once; the ``n_folds`` fold models and the final
+    model are then fitted on the driver, and each fold's held-out R² is
+    scored in numpy with ``regression_metrics``' formula. Predictors must
+    be non-null (P11, `imputation_model_pipeline.py:232-241`): the check
+    runs on the collected rows, so it costs no Spark job."""
+    from pm25ml_spark.ml.pipeline import assign_group_folds, r2_score
+
+    if model_factory is None:
+        model_factory = _default_factory(
+            backend, params if params is not None else XGB_AOD_PARAMS
         )
-        scored = imputer.transform(
-            data.filter(F.col("fold") == fold), output_col="prediction"
-        )
-        cv_r2.append(regression_metrics(scored, target)["r2"])
-    final = train_booster_on_sample(
-        data, features, target,
-        backend=backend, params=params, model_factory=model_factory,
+    sample = _collect_sample(
+        assign_group_folds(df, group_col, n_folds), features, target, "fold"
     )
-    data.unpersist()
-    final.cv_r2 = cv_r2
-    return final
+    null_cols = [f for f in features if sample[f].isna().any()]
+    if null_cols:
+        raise ValueError(
+            f"cross_validate_booster: null/NaN in predictor columns {null_cols}"
+            " — run the interpolation/fill stages first (reference P11 contract)"
+        )
+    X, y = sample[features], sample[target].to_numpy()
+    # a null group key joins to no fold: such rows train only the final model
+    fold = sample["fold"].to_numpy(dtype=float)
+    cv_r2 = []
+    for k in range(n_folds):
+        test = fold == k
+        train = ~test & ~np.isnan(fold)
+        model = _fit(model_factory, X[train], y[train])
+        cv_r2.append(r2_score(y[test], model.predict(X[test])))
+    final = _fit(model_factory, X, y)
+    return BoosterImputer(
+        model=final, features=list(features), target=target, cv_r2=cv_r2
+    )

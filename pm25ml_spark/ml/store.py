@@ -1,17 +1,14 @@
-"""Model store (SURVEY S18), Spark-native.
+"""Model store (SURVEY S18).
 
 Reference semantics (`training/model_storage.py:83-220`): models live under
 ``{base}/{model_name}/{run_ref}/`` together with their CV results and test
 metrics; loading takes an explicit run ref or resolves the LATEST ref
 (lexicographic max — refs are sortable timestamps); no runs → error.
 
-Here the model artifact is saved with MLlib's native writer whenever the
-model supports it (``GBTRegressionModel``, ``PipelineModel``, any
-``MLWritable`` — Hadoop-FS-backed, so the same code hits GCS/S3/HDFS on a
-cluster), with a pickle fallback for driver-side booster models
-(`ml/boosters.py`). Run metadata (features, target, cv_r2, model class)
-rides in ``meta.json`` and metrics in ``test_metrics.json``, mirroring
-the reference layout.
+The model artifact is the fitted driver-side booster (`ml/boosters.py`),
+gzip-pickled as the reference does. Run metadata (features, target,
+cv_r2, model class) rides in ``meta.json`` and metrics in
+``test_metrics.json``, mirroring the reference layout.
 """
 
 from __future__ import annotations
@@ -21,10 +18,7 @@ import json
 import pickle
 from pathlib import Path
 
-from pm25ml_spark.ml.pipeline import TrainedImputer
-
-# MLlib model classes the native loader may need to resolve
-_MLLIB_LOADERS = "pyspark.ml.regression", "pyspark.ml.pipeline", "pyspark.ml"
+from pm25ml_spark.ml.boosters import BoosterImputer
 
 
 class ModelStore:
@@ -40,27 +34,18 @@ class ModelStore:
         self,
         model_name: str,
         run_ref: str,
-        imputer: TrainedImputer,
+        imputer: BoosterImputer,
         test_metrics: dict | None = None,
     ) -> str:
         """Persist one validated run: model + metadata + metrics."""
         d = self._run_dir(model_name, run_ref)
         d.mkdir(parents=True, exist_ok=True)
-        model = imputer.model
-        if hasattr(model, "write"):  # MLlib native (cluster-FS capable)
-            model.write().overwrite().save(str(d / "model"))
-            kind = "mllib"
-            cls = f"{type(model).__module__}.{type(model).__name__}"
-        else:  # driver-side booster / stub: gzip pickle, as the reference
-            with gzip.open(d / "model.pkl.gz", "wb") as fh:
-                pickle.dump(model, fh)
-            kind = "pickle"
-            cls = type(model).__name__
+        with gzip.open(d / "model.pkl.gz", "wb") as fh:
+            pickle.dump(imputer.model, fh)
         (d / "meta.json").write_text(
             json.dumps(
                 {
-                    "kind": kind,
-                    "model_class": cls,
+                    "model_class": type(imputer.model).__name__,
                     "features": imputer.features,
                     "target": imputer.target,
                     "cv_r2": imputer.cv_r2,
@@ -70,22 +55,19 @@ class ModelStore:
         (d / "test_metrics.json").write_text(json.dumps(test_metrics or {}))
         return str(d)
 
-    def load(self, model_name: str, run_ref: str) -> TrainedImputer:
+    def load(self, model_name: str, run_ref: str) -> BoosterImputer:
         d = self._run_dir(model_name, run_ref)
         meta = json.loads((d / "meta.json").read_text())
-        if meta["kind"] == "mllib":
-            model = _load_mllib(meta["model_class"], str(d / "model"))
-        else:
-            with gzip.open(d / "model.pkl.gz", "rb") as fh:
-                model = pickle.load(fh)  # noqa: S301 - own artifacts
-        return TrainedImputer(
+        with gzip.open(d / "model.pkl.gz", "rb") as fh:
+            model = pickle.load(fh)  # noqa: S301 - own artifacts
+        return BoosterImputer(
             model=model,
             features=list(meta["features"]),
             target=meta["target"],
             cv_r2=list(meta["cv_r2"]),
         )
 
-    def load_latest(self, model_name: str) -> TrainedImputer:
+    def load_latest(self, model_name: str) -> BoosterImputer:
         """Latest run = lexicographically greatest run ref
         (model_storage.py:156-182); no runs → FileNotFoundError."""
         base = self.base / model_name
@@ -98,37 +80,3 @@ class ModelStore:
         return json.loads(
             (self._run_dir(model_name, run_ref) / "test_metrics.json").read_text()
         )
-
-
-def _load_mllib(qualified_class: str, path: str):
-    import importlib
-
-    module, cls_name = qualified_class.rsplit(".", 1)
-    cls = getattr(importlib.import_module(module), cls_name)
-    return cls.load(path)
-
-
-def build_mllib_pipeline(
-    features: list[str], target: str, max_iter: int = 20, seed: int = 42
-):
-    """The north star's literal 'MLlib pipeline': VectorAssembler →
-    GBTRegressor as one ``pyspark.ml.Pipeline`` whose fitted
-    ``PipelineModel`` transforms raw feature frames directly (no separate
-    assemble step) and round-trips through :class:`ModelStore`."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import GBTRegressor
-
-    return Pipeline(
-        stages=[
-            VectorAssembler(
-                inputCols=features, outputCol="features", handleInvalid="keep"
-            ),
-            GBTRegressor(
-                labelCol=target,
-                featuresCol="features",
-                maxIter=max_iter,
-                seed=seed,
-            ),
-        ]
-    )

@@ -11,12 +11,15 @@ Stages (reference entry points in parentheses):
 3. interpolate (s01c) — K1 daily spatial interpolation of selected columns
 4. features (s02)  — W1-W4 windows + derived scalars
 5. sample   (s03/s06) — stratified per-50km split of non-null-target rows
-6. train    (s04/s07) — group-CV GBT + quality gate
-7. impute   (s05/s08) — predict + M7 stats columns; recombine
+6. train    (s04/s07) — group-CV single-node booster on the collected
+                        sample + quality gate
+7. impute   (s05/s08) — distributed predict + M7 stats columns; recombine
 8. export   (s09)  — pivot to (time,y,x) raster + sink
 
-Each stage writes through :class:`StageStorage` and is skipped when its
-output already validates (the reference's idempotency, SURVEY §4.3).
+Each stage writes through :class:`StageStorage`, and every call
+overwrites its stage's output: no stage checks for a valid earlier
+output. Resume (the reference's idempotency, SURVEY §4.3) is an open
+ROADMAP item.
 """
 
 from __future__ import annotations
@@ -178,6 +181,9 @@ class Pm25Pipeline:
             how="left",
         )
         self.store.sink_stage(merged, "imputed")
+        # the model broadcast is done once the stage is written; a later
+        # transform() re-broadcasts
+        imputer.release()
         return imputer
 
     # -- stage 8: export ----------------------------------------------------

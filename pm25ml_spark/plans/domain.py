@@ -302,10 +302,10 @@ def d05_regex_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # d06 — the M7 imputed-stats column block (regression_model_predictor.py:
 # 132-229) with a deterministic SQL-expressible "model" (per-user mean of
-# observed values) standing in for the GBT so the whole derivation —
-# flag, coalesce, score, per-day share, 7-row rolling — hash-checks
-# against the oracle. predict_with_stats applies the SAME derive_imputed_
-# stats to real MLlib predictions.
+# observed values) standing in for the imputer's booster so the whole
+# derivation — flag, coalesce, score, per-day share, 7-row rolling —
+# hash-checks against the oracle. predict_with_stats applies the SAME
+# derive_imputed_stats to the booster's predictions.
 @query(
     "d06_imputed_stats",
     """

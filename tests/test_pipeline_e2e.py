@@ -85,3 +85,59 @@ def test_full_lifecycle(pipeline, spark, tmp_path):
     raster = read_raster(out)
     assert raster["value"].shape == (10, 6, 6)
     assert np.isfinite(raster["value"]).all()
+
+
+def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch):
+    """The stage destroys its model broadcast once ``imputed`` is
+    written, so months run in one session do not pile broadcasts up on
+    the executors; the returned imputer still scores (re-broadcasting)."""
+    from pm25ml_spark.ml.boosters import BoosterImputer
+
+    features = ("m2__t2m", "grid__lon", "grid__lat")
+    pipe = Pm25Pipeline(
+        spark,
+        synthetic_grid(spark, nx=6, ny=6),
+        PipelineSettings(
+            bucket=str(tmp_path / "bucket"),
+            target="m2__aot",
+            feature_cols=features,
+            sample_fraction=0.5,
+            n_folds=2,
+            max_iter=3,
+        ),
+    )
+    pipe.ingest(
+        [
+            RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
+            for d in range(1, 6)
+            for v in ("aot", "t2m")
+        ]
+    )
+    ds = pipe.store.scan_stage("ingested").drop("month").withColumn(
+        "aot", F.when(F.col("grid_id") % 7 == 0, None).otherwise(F.col("aot"))
+    )
+    pipe.combine({"m2": ds})
+    pipe.interpolate()
+    pipe.features(["m2__aot", "m2__t2m"])
+    pipe.sample()
+
+    broadcasts = []
+    transform = BoosterImputer.transform
+
+    def recording_transform(self, df, output_col=None):
+        out = transform(self, df, output_col)
+        broadcasts.append(self._bmodel)
+        return out
+
+    monkeypatch.setattr(BoosterImputer, "transform", recording_transform)
+    imputer = pipe.train_and_impute()
+    assert len(broadcasts) == 1
+    assert not broadcasts[0]._jbroadcast.isValid()  # destroyed
+
+    feat = pipe.store.scan_stage("generated_features").select(*features)
+    scored = imputer.transform(feat).toPandas()
+    assert len(scored) == 36 * 5
+    assert scored["m2__aot__predicted"].notna().all()
+    assert broadcasts[1] is not broadcasts[0]
+    assert broadcasts[1]._jbroadcast.isValid()
+    imputer.release()
