@@ -28,14 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# 15 hex chars = 60 bits — fits a signed BIGINT in every engine.
-_HEX_LEN = 15
-
-
-def _md5_long(col) -> F.Column:
-    """First 60 bits of md5 as a non-negative bigint (engine-portable)."""
-    return F.conv(F.substring(F.md5(col), 1, _HEX_LEN), 16, 10).cast("bigint")
-
+from pm25ml_spark.functions.columns import md5_long
 
 # Ceiling for the GUARDED broadcast hints below (guide §3.1: a few
 # hundred MB of broadcast is fine, multiple GB is a driver/executor OOM;
@@ -163,7 +156,7 @@ def shingle_arrays(
     if keep_strings:
         cols.append(sh.alias("sh_arr"))
     out = (
-        toks.select(*cols, F.transform(sh, lambda s: _md5_long(s)).alias("h_arr"))
+        toks.select(*cols, F.transform(sh, lambda s: md5_long(s)).alias("h_arr"))
         .withColumn("n_sh", F.size("h_arr"))
     )
     return out.persist()
@@ -602,11 +595,11 @@ def minhash_signatures(
         )
     elif "sh_arr" in docs.columns:
         base = docs.select("doc_id", F.explode("sh_arr").alias("s")).select(
-            "doc_id", (_md5_long(F.col("s")) % MERSENNE_P).alias("h")
+            "doc_id", (md5_long(F.col("s")) % MERSENNE_P).alias("h")
         )
     else:
         sh = docs.select("doc_id", F.explode(shingles(n=shingle_n)).alias("s"))
-        base = sh.select("doc_id", (_md5_long(F.col("s")) % MERSENNE_P).alias("h"))
+        base = sh.select("doc_id", (md5_long(F.col("s")) % MERSENNE_P).alias("h"))
     aggs = []
     for i in range(n_hashes):
         a, b = _hash_params(i)
@@ -688,7 +681,7 @@ def simhash(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     shuffle keyed on doc_id.
     """
     tok = docs.select("doc_id", F.explode(F.array_distinct(tokens())).alias("t"))
-    h = tok.select("doc_id", _md5_long(F.col("t")).alias("hv"))
+    h = tok.select("doc_id", md5_long(F.col("t")).alias("hv"))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("hv"), j).bitwiseAND(1) == 1, 1).otherwise(-1)

@@ -9,13 +9,16 @@ values are preserved exactly. Note the reference's nearest stage draws
 from all non-NaN points *after* the linear stage (its code, not its
 comment), which this kernel matches.
 
-scipy is not a dependency here, so both stages are numpy-only:
+Both stages are numpy-only:
 
 * linear — an incremental Bowyer-Watson Delaunay triangulation followed
   by barycentric interpolation inside each containing triangle. On any
   locally-linear field this is bit-equal to ``griddata(linear)``; on
   non-linear fields the only freedom is the diagonal choice inside
   exactly-cocircular lattice squares, which is arbitrary in qhull too.
+  Here it is pinned by the coordinates: the valid points are inserted
+  in a fixed order derived from their (y, x) sort, so the output does
+  not depend on the input's row order.
 * nearest — a uniform-bucket expanding-ring search, O(n) build and ~O(1)
   per query, with a deterministic (distance, y, x) tie-break.
 
@@ -317,54 +320,18 @@ class _Buckets:
         return np.concatenate(chunks) if chunks else np.empty(0, np.int64)
 
 
-try:  # fast path: compiled Delaunay when scipy is importable
-    from scipy.interpolate import griddata as _scipy_griddata
-except ImportError:
-    _scipy_griddata = None
-
-
-def _delaunay_linear(x: np.ndarray, y: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """griddata(method='linear') semantics: barycentric interpolation over
-    the Delaunay triangulation of the valid points; NaN outside the hull.
-
-    Cost model: the numpy Bowyer-Watson below is O(n log n) insertions
-    but with an interpreted-Python constant — ~2.8 s/date at the
-    reference's 33k cells, plausibly minutes/date at a 100× grid (3.3M
-    cells). When scipy is importable the kernel delegates to its
-    compiled ``griddata`` (same semantics, Qhull constant factors); the
-    numpy path remains the dependency-free fallback and the semantic
-    ground truth both implementations are tested against
-    (`tests/test_interpolation.py`)."""
-    if _scipy_griddata is not None:  # pragma: no cover - scipy not in container
-        out = v.copy()
-        valid = ~np.isnan(v)
-        missing = np.flatnonzero(~valid)
-        if valid.sum() < 3 or missing.size == 0:
-            return out
-        vidx = np.flatnonzero(valid)
-        try:
-            filled = _scipy_griddata(
-                np.stack([x[vidx], y[vidx]], axis=1),
-                v[vidx],
-                np.stack([x[missing], y[missing]], axis=1),
-                method="linear",
-            )
-        except Exception:
-            # QhullError on degenerate (collinear) valid points — the
-            # numpy kernel handles that case gracefully (empty
-            # triangulation → leave NaN for the nearest-fill stage), so
-            # fall back rather than kill the Spark task
-            return _delaunay_linear_numpy(x, y, v)
-        out[missing] = filled
-        return out
-    return _delaunay_linear_numpy(x, y, v)
-
-
 def _delaunay_linear_numpy(
     x: np.ndarray, y: np.ndarray, v: np.ndarray
 ) -> np.ndarray:
-    """Dependency-free implementation (and the agreement-test ground
-    truth for the scipy fast path above)."""
+    """griddata(method='linear') semantics: barycentric interpolation over
+    the Delaunay triangulation of the valid points; NaN outside the hull.
+
+    Cost model: O(n log n) Bowyer-Watson insertions with an
+    interpreted-Python constant — ~2.8 s/date at the reference's 33k
+    cells. The valid points are triangulated in (y, x) order, so the
+    result is a function of the coordinates alone, never of input row
+    order (the diagonal of an exactly-cocircular lattice square follows
+    the insertion sequence)."""
     out = v.copy()
     valid = ~np.isnan(v)
     missing = np.flatnonzero(~valid)
@@ -380,6 +347,7 @@ def _delaunay_linear_numpy(
     ny = (ally - ally.min()) / s
 
     vidx = np.flatnonzero(valid)
+    vidx = vidx[np.lexsort((x[vidx], y[vidx]))]
     pts = np.stack([nx[vidx], ny[vidx]], axis=1)
     tris = _delaunay(pts)
     if len(tris) == 0:  # all collinear
@@ -499,7 +467,7 @@ def interpolate_frame(
     y = pdf[y_col].to_numpy(dtype=np.float64)
     for c in value_cols:
         v = pdf[c].to_numpy(dtype=np.float64)
-        v = _delaunay_linear(x, y, v)
+        v = _delaunay_linear_numpy(x, y, v)
         v = _nearest_fill(x, y, v)
         pdf[c] = v
     return pdf
@@ -558,7 +526,7 @@ def idw_regrid_bucketed(
     """
     from pyspark.sql import functions as F
 
-    from pm25ml_spark.operators.nn_join import _haversine_col
+    from pm25ml_spark.functions.columns import haversine_col
 
     offsets = F.array(
         *[
@@ -583,7 +551,7 @@ def idw_regrid_bucketed(
     ).withColumn("cy", F.floor(F.col(lat) / cell_deg))
     d6 = F.greatest(
         F.round(
-            _haversine_col(
+            haversine_col(
                 F.col(lat), F.col(lon), F.col(src_lat), F.col(src_lon)
             ),
             6,

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-EARTH_RADIUS_KM = 6371.0088
+from pm25ml_spark.functions.columns import EARTH_RADIUS_KM, haversine_col
 
 
 def haversine_km(
@@ -80,14 +80,6 @@ def nearest_grid_join(
     return points.mapInPandas(fn, schema=out_schema)
 
 
-def _haversine_col(lat1, lon1, lat2, lon2):
-    """Haversine distance (km) as a JVM-side column expression."""
-    p1, p2 = F.radians(lat1), F.radians(lat2)
-    dp, dl = p2 - p1, F.radians(lon2) - F.radians(lon1)
-    a = F.pow(F.sin(dp / 2), 2) + F.cos(p1) * F.cos(p2) * F.pow(F.sin(dl / 2), 2)
-    return F.lit(2 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
-
-
 def nearest_grid_join_bucketed(
     points: DataFrame,
     grid: DataFrame,
@@ -134,7 +126,7 @@ def nearest_grid_join_bucketed(
     )
     cand = p.join(g, ["cx", "cy"]).withColumn(
         "nn_distance_km",
-        _haversine_col(F.col(lat), F.col(lon), F.col(grid_lat), F.col(grid_lon)),
+        haversine_col(F.col(lat), F.col(lon), F.col(grid_lat), F.col(grid_lon)),
     )
     from pyspark.sql import Window
 

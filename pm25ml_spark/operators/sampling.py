@@ -210,9 +210,9 @@ def stratified_cap_k(
     true per-stratum top-k over the ≤ k·salts survivors. Adds ``rk``
     (1-based within stratum); keeps all input columns.
     """
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
-    h = _md5_long(F.concat_ws(":", F.lit(seed), F.col(id_col)))
+    h = md5_long(F.concat_ws(":", F.lit(seed), F.col(id_col)))
     keyed = df.withColumn("__h", h).withColumn("__lane", h % salts)
     lane = Window.partitionBy(stratum, "__lane").orderBy(
         "__h", F.col(id_col)
@@ -296,10 +296,10 @@ def weighted_sample_topk(
     sign and rank ABOVE every valid row — so non-positive weights are
     filtered out up front rather than silently inverting the sample.
     """
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
     df = df.filter(F.col(weight_col) > 0)
-    h = _md5_long(F.concat_ws(":", F.lit(seed), F.col(id_col)))
+    h = md5_long(F.concat_ws(":", F.lit(seed), F.col(id_col)))
     u = (h % 1_000_000 + 0.5) / 1_000_000.0
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 6)
     keyed = df.select(

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pm25ml_spark.operators.dedup import _md5_long
+from pm25ml_spark.functions.columns import md5_long
 
 # the portable hash is 15 hex digits = 60 bits; 6 go to the bucket (m=64)
 # leaving 54 bits of "rest", so rho ranges 1..55.
@@ -183,7 +183,7 @@ def hll_registers(df: DataFrame, col: str, p: int = 6) -> DataFrame:
     """
     m = 1 << p
     rest_bits = _HASH_BITS - p
-    h = _md5_long(F.col(col))
+    h = md5_long(F.col(col))
     # bit ops, not arithmetic: h spans 60 bits, and a double division
     # (the / operator) would silently lose the low bits past 2^53.
     hashed = df.select(
@@ -250,7 +250,7 @@ def _cm_col(col, i: int, w: int) -> F.Column:
     60-bit md5 of ``"{i}:{value}"`` reduced mod w. Seeding through the
     hashed STRING (not h + i) keeps the d rows pairwise-independent and
     lets the DuckDB oracle re-derive the exact same cells."""
-    return _md5_long(F.concat_ws(":", F.lit(str(i)), col)) % w
+    return md5_long(F.concat_ws(":", F.lit(str(i)), col)) % w
 
 
 def cm_counters(df: DataFrame, col: str, d: int = 4, w: int = 1024) -> DataFrame:
@@ -369,7 +369,7 @@ def kmv_bottomk(
     """
     from pyspark.sql import Window
 
-    h = _md5_long(F.col(col))
+    h = md5_long(F.col(col))
     hashes = df.select(F.col(group), h.alias("h")).distinct()
     lane = Window.partitionBy(group, F.col("h") % salts).orderBy("h")
     pruned = (

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pm25ml_spark.catalog import load_table
+from pm25ml_spark.functions.columns import md5_long
 from pm25ml_spark.operators import dedup as D
 from pm25ml_spark.plans.registry import query
 
@@ -707,7 +708,7 @@ def cp05_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(D.word_ngrams("text", 2)).alias("b"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("is_t"),
     ).select(
-        "doc_id", (D._md5_long(F.col("b")) % _DSIR_B).alias("bucket"), "is_t"
+        "doc_id", (md5_long(F.col("b")) % _DSIR_B).alias("bucket"), "is_t"
     )
     # aggregate ONCE to per-(doc, bucket) counts; every later stage folds
     # out of that table instead of re-exploding (and re-md5-ing) the
@@ -746,7 +747,7 @@ def cp05_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     u = (
-        (D._md5_long(F.col("doc_id").cast("string")) % 1_000_000 + 0.5)
+        (md5_long(F.col("doc_id").cast("string")) % 1_000_000 + 0.5)
         / 1_000_000.0
     )
     return per_doc.select(

@@ -1,9 +1,8 @@
-"""Oracle-checked STREAMING, STORAGE, and MULTIMODAL queries.
+"""Oracle-checked STREAMING and STORAGE queries.
 
-Until round 7 the Structured-Streaming operators, the transaction-log
-storage layer, and the multimodal binary-column kernels were verified
-only by pytest (streaming-vs-batch duals, race fuzzes, codec round-
-trips) — no tabular oracle shape reached the external correctness
+Until round 7 the Structured-Streaming operators and the transaction-log
+storage layer were verified only by pytest (streaming-vs-batch duals,
+race fuzzes) — no tabular oracle shape reached the external correctness
 driver. These entries close that gap: each one RUNS the real streaming /
 storage machinery end-to-end and returns the materialized result as a
 batch DataFrame, with a DuckDB oracle computing the same answer
@@ -312,324 +311,6 @@ def st03_stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table(name)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
-    )
-
-
-# --------------------------------------------------------------------------
-# mm01 — the multimodal column pipeline, oracle-checked end-to-end:
-# render a REAL binary PGM payload per document (deterministic pixel
-# formula of doc_id), thumbnail it with the nearest-neighbour resize
-# kernel (which exercises the from-spec P5 decoder on every payload),
-# then run the feature-extraction kernel over the resized frames. All
-# three stages are Arrow-batched mapInPandas over a binary column — the
-# exact plumbing shape of a 100 TB image corpus (payloads never leave
-# the executors; only 6 small feature doubles come back). The oracle
-# re-derives every statistic relationally from the pixel formula at the
-# resized sample positions (16→8 nearest-neighbour keeps even indices:
-# yi = floor(i*16/8) = 2i). Every arithmetic step lands on dyadic
-# rationals (integer pixel sums over 64 cells, /64 divisions, squares
-# within 53 bits), so mean/std/p_low are bit-identical across numpy,
-# Spark, and DuckDB — the 6-dp round is belt-and-braces, not a fudge.
-_MM_W = 16  # rendered size; resized to _MM_W//2
-def _mm01_oracle() -> str:
-    w = _MM_W
-    return f"""
-    WITH px AS (
-        SELECT d.doc_id,
-               (d.doc_id * 31 + (2 * r.r) * 7 + (2 * c.c) * 3) % 251 AS v
-        FROM documents d,
-             UNNEST(range({w // 2})) AS r(r),
-             UNNEST(range({w // 2})) AS c(c)
-    )
-    SELECT doc_id AS media_id,
-           ROUND(AVG(v), 6) AS mean_intensity,
-           ROUND(SQRT(AVG(CAST(v AS DOUBLE) * v) - AVG(v) * AVG(v)), 6)
-               AS std_intensity,
-           ROUND(CAST(COUNT(*) FILTER (WHERE v < 64) AS DOUBLE) / COUNT(*), 6)
-               AS p_low,
-           1.0 AS aspect_ratio
-    FROM px GROUP BY doc_id
-    """
-
-
-@query("mm01_image_decode_stats", _mm01_oracle())
-def mm01_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterable, Iterator
-
-    import pandas as pd
-
-    from pm25ml_spark.sources.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_payloads,
-    )
-
-    w = _MM_W
-
-    def render(batches: "Iterable[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        header = f"P5\n{w} {w}\n255\n".encode()
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                r = np.arange(w, dtype=np.int64).reshape(-1, 1)
-                c = np.arange(w, dtype=np.int64).reshape(1, -1)
-                img = ((int(did) * 31 + r * 7 + c * 3) % 251).astype(np.uint8)
-                payload = header + img.tobytes()
-                rows.append(
-                    (int(did), "image", "pgm", w, w, len(payload),
-                     bytearray(payload))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_SCHEMA.fields]
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(render, schema=MEDIA_SCHEMA)
-    small = resize_payloads(media, w // 2, w // 2)
-    feats = extract_features(small)
-    return feats.select(
-        "media_id",
-        F.round("mean_intensity", 6).alias("mean_intensity"),
-        F.round("std_intensity", 6).alias("std_intensity"),
-        F.round("p_low", 6).alias("p_low"),
-        F.round("aspect_ratio", 6).alias("aspect_ratio"),
-    )
-
-
-# --------------------------------------------------------------------------
-# mm02 — the VIDEO face of the multimodal pipeline, oracle-checked:
-# render a REAL single-track MP4 per document (sources/mp4.build_mp4 —
-# ftyp + mdat + moov with genuine stts/stss/stsc/stsz/stco tables;
-# frame count, frame sizes, and display dimensions are deterministic
-# functions of doc_id), then SAMPLE KEYFRAMES by walking the sample
-# tables (sources/mp4.parse_mp4 + extract_frames) WITHOUT decoding a
-# single coded frame — the cheap seek-point sampling a 100 TB video
-# corpus runs before any expensive decode. Both stages are Arrow-batched
-# mapInPandas over a binary column, chained narrowly (payloads never
-# leave the executor; only a dozen small stats come back per video).
-# The oracle re-derives every statistic from the generator's closed
-# forms. k0_checksum additionally pins the BYTE SLICES extract_frames
-# returns (sum of the first keyframe's payload bytes), so chunk-offset
-# arithmetic — not just table metadata — is oracle-checked. last_key_ts
-# is one IEEE division of exact integers in both engines (i·100 / 1000).
-_MM2_FPS = 10  # build_mp4 timescale = fps*100, per-frame delta = 100
-
-
-def _mm02_frame_count(doc_id: int) -> int:
-    return 10 + doc_id % 13
-
-
-def _mm02_frame_size(doc_id: int, i: int) -> int:
-    return 40 + (doc_id * 7 + i * 13) % 100
-
-
-@query(
-    "mm02_video_keyframe_sample",
-    """
-    WITH d AS (
-        SELECT doc_id, 10 + doc_id % 13 AS n FROM documents
-    ),
-    f AS (
-        SELECT doc_id, n, u.i AS i,
-               40 + (doc_id * 7 + u.i * 13) % 100 AS sz
-        FROM d, UNNEST(range(n)) AS u(i)
-    )
-    SELECT doc_id AS media_id,
-           CAST(MAX(n) AS BIGINT) AS n_frames,
-           CAST(16 * (2 + doc_id % 3) AS BIGINT) AS width,
-           CAST(16 * (1 + doc_id % 2) AS BIGINT) AS height,
-           CAST(COUNT(*) FILTER (WHERE i % 5 = 0) AS BIGINT) AS n_keyframes,
-           CAST(SUM(sz) AS BIGINT) AS total_bytes,
-           CAST(SUM(sz) FILTER (WHERE i % 5 = 0) AS BIGINT) AS key_bytes,
-           ROUND(CAST(MAX(CASE WHEN i % 5 = 0 THEN i END) * 100 AS DOUBLE)
-                 / 1000, 6) AS last_key_ts,
-           CAST((40 + (doc_id * 7) % 100) * (doc_id % 256) AS BIGINT)
-               AS k0_checksum
-    FROM f
-    GROUP BY doc_id
-    """,
-)
-def mm02_video_keyframe_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterable, Iterator
-
-    import pandas as pd
-
-    def render(batches: "Iterable[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from pm25ml_spark.sources.mp4 import build_mp4
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n = _mm02_frame_count(d)
-                frames = [
-                    bytes([(d + i) % 256]) * _mm02_frame_size(d, i)
-                    for i in range(n)
-                ]
-                payload = build_mp4(
-                    frames,
-                    fps=_MM2_FPS,
-                    width=16 * (2 + d % 3),
-                    height=16 * (1 + d % 2),
-                    keyframe_every=5,
-                )
-                rows.append((d, bytearray(payload)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    def sample(batches: "Iterable[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from pm25ml_spark.sources.mp4 import extract_frames, parse_mp4
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload)
-                track = [
-                    t for t in parse_mp4(payload) if t.handler == "vide"
-                ][0]
-                keys = extract_frames(payload, keyframes_only=True)
-                rows.append(
-                    (
-                        int(mid),
-                        len(track.samples),
-                        int(track.width),
-                        int(track.height),
-                        len(keys),
-                        sum(s.size for s in track.samples),
-                        sum(len(b) for _, _, b in keys),
-                        round(keys[-1][1], 6),
-                        sum(keys[0][2]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "width", "height",
-                    "n_keyframes", "total_bytes", "key_bytes",
-                    "last_key_ts", "k0_checksum",
-                ],
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(
-        render, schema="media_id bigint, payload binary"
-    )
-    return media.mapInPandas(
-        sample,
-        schema=(
-            "media_id bigint, n_frames bigint, width bigint, "
-            "height bigint, n_keyframes bigint, total_bytes bigint, "
-            "key_bytes bigint, last_key_ts double, k0_checksum bigint"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
-# mm03 — the AUDIO face of the multimodal pipeline, oracle-checked
-# (completing the image/video/audio triad with mm01/mm02): render a
-# REAL 16-bit PCM WAV per document (stdlib-backed encode_wav; mono or
-# stereo, frame count / channel count / sample rate all deterministic
-# functions of doc_id, samples a pseudo-noise integer formula), decode
-# it distributed (sources/imaging.decode_wav — exercises RIFF framing +
-# int16 interleaving on every payload), and emit integer-exact loudness
-# stats. Every aggregate is an integer sum (|v| ≤ 1000, ≤ 2k samples →
-# sums well under 2^63); rms is one division + sqrt on exact integers,
-# identical IEEE ops in both engines; the 6-dp round is belt-and-braces.
-@query(
-    "mm03_audio_loudness",
-    """
-    WITH d AS (
-        SELECT doc_id,
-               400 + (doc_id % 37) * 16 AS n,
-               1 + doc_id % 2 AS ch,
-               8000 + (doc_id % 3) * 4000 AS rate
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, n, ch, rate,
-               ((doc_id * 13 + u.j * 7) % 2001) - 1000 AS v
-        FROM d, UNNEST(range(n * ch)) AS u(j)
-    )
-    SELECT doc_id AS media_id,
-           CAST(MAX(n) AS BIGINT) AS n_frames,
-           CAST(MAX(ch) AS BIGINT) AS n_channels,
-           CAST(MAX(rate) AS BIGINT) AS sample_rate,
-           CAST(MAX(v) AS BIGINT) AS peak,
-           CAST(MIN(v) AS BIGINT) AS trough,
-           CAST(SUM(ABS(v)) AS BIGINT) AS sum_abs,
-           ROUND(SQRT(CAST(SUM(v * v) AS DOUBLE) / COUNT(*)), 6) AS rms
-    FROM s
-    GROUP BY doc_id
-    """,
-)
-def mm03_audio_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterable, Iterator
-
-    import pandas as pd
-
-    def render(batches: "Iterable[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        from pm25ml_spark.sources.imaging import encode_wav
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n = 400 + (d % 37) * 16
-                ch = 1 + d % 2
-                rate = 8000 + (d % 3) * 4000
-                j = np.arange(n * ch, dtype=np.int64)
-                v = (((d * 13 + j * 7) % 2001) - 1000).astype(np.int16)
-                samples = v.reshape(n, ch)
-                rows.append((d, bytearray(encode_wav(samples, rate))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    def loudness(batches: "Iterable[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import math
-
-        import numpy as np
-
-        from pm25ml_spark.sources.imaging import decode_wav
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr, rate = decode_wav(bytes(payload))
-                flat = arr.reshape(-1).astype(np.int64)
-                sq = int((flat * flat).sum())
-                rows.append(
-                    (
-                        int(mid),
-                        int(arr.shape[0]),
-                        int(arr.shape[1]),
-                        int(rate),
-                        int(flat.max()),
-                        int(flat.min()),
-                        int(np.abs(flat).sum()),
-                        round(math.sqrt(sq / len(flat)), 6),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "n_channels", "sample_rate",
-                    "peak", "trough", "sum_abs", "rms",
-                ],
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(
-        render, schema="media_id bigint, payload binary"
-    )
-    return media.mapInPandas(
-        loudness,
-        schema=(
-            "media_id bigint, n_frames bigint, n_channels bigint, "
-            "sample_rate bigint, peak bigint, trough bigint, "
-            "sum_abs bigint, rms double"
-        ),
     )
 
 

@@ -251,7 +251,7 @@ def k04_grid_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the integer sum is engine-portable with no rounding step). The oracle
 # recomputes the generator formula relationally; nothing about the store
 # can drift without a hash mismatch. Fixed-size by design (a codec
-# entry, like mm01-mm03): ~6k cells locally, while both the sink and the
+# entry): ~6k cells locally, while both the sink and the
 # scan parallelize per chunk at any scale.
 _K5_T, _K5_Y, _K5_X = 6, 32, 32
 

@@ -64,7 +64,7 @@ def load_all_plans() -> None:
     """
     import pm25ml_spark.plans.relational  # noqa: F401
     import pm25ml_spark.plans.windows  # noqa: F401
-    # live (streaming/storage/multimodal) registers early on purpose:
+    # live (streaming/storage) registers early on purpose:
     # staleness ties in the driver-facing sample break by registration
     # position, and these entries are the ones whose driver verification
     # carries the most information (they exercise whole subsystems, not

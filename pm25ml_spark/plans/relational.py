@@ -835,7 +835,7 @@ _MIX_TARGET = 0.5  # sample half the corpus overall
     """,
 )
 def a05_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
     docs = load_table(spark, sf_dir, "documents")
     sizes = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -860,7 +860,7 @@ def a05_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keep_rate"),
     )
     u = (
-        _md5_long(F.concat_ws(":", F.lit("mix"), F.col("doc_id")))
+        md5_long(F.concat_ws(":", F.lit("mix"), F.col("doc_id")))
         % 1_000_000
         + 0.5
     ) / 1_000_000.0

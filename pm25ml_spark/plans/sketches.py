@@ -176,14 +176,14 @@ def sk03_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams, with true counts and the (always ≥ 0) overcount."""
     from pyspark.sql import Window
 
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
     bg = _bigram_instances(spark, sf_dir)
     counts = bg.groupBy("b").agg(F.count(F.lit(1)).alias("n_true"))
     # two-level top-20 (hash-lane prune, then the true top-20 over
     # ≤ 20·lanes survivors) so the accuracy side never funnels the whole
     # vocabulary through one sort partition either
-    lane = Window.partitionBy(_md5_long(F.col("b")) % 32).orderBy(
+    lane = Window.partitionBy(md5_long(F.col("b")) % 32).orderBy(
         F.col("n_true").desc(), F.col("b")
     )
     pre = (

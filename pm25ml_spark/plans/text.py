@@ -370,13 +370,13 @@ def t08_tfidf_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t09_hashed_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.explode(F.split("text", " ")).alias("t"),
-    ).select("doc_id", (_md5_long(F.col("t")) % 32).alias("bucket"))
+    ).select("doc_id", (md5_long(F.col("t")) % 32).alias("bucket"))
     tf = tok.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("tf"))
     norms = tf.groupBy("doc_id").agg(F.sum(F.col("tf") * F.col("tf")).alias("n2"))
     return tf.join(norms, "doc_id").select(
@@ -841,13 +841,13 @@ _FIM_SEP = "|SEP|"
     """,
 )
 def t15_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
     docs = load_table(spark, sf_dir, "documents")
     ts = _tokens()
     n = F.size(ts)
-    h1 = _md5_long(F.concat_ws(":", F.lit("fim1"), F.col("doc_id")))
-    h2 = _md5_long(F.concat_ws(":", F.lit("fim2"), F.col("doc_id")))
+    h1 = md5_long(F.concat_ws(":", F.lit("fim1"), F.col("doc_id")))
+    h2 = md5_long(F.concat_ws(":", F.lit("fim2"), F.col("doc_id")))
     base = docs.select(
         "doc_id",
         "text",

@@ -410,11 +410,12 @@ def kmv_sketch_stream(
         StructType,
     )
 
-    from pm25ml_spark.operators.dedup import _md5_long, word_ngrams
+    from pm25ml_spark.functions.columns import md5_long
+    from pm25ml_spark.operators.dedup import word_ngrams
 
     hashes = docs_stream.select(
         F.col(group), F.explode(word_ngrams("text", n)).alias("b")
-    ).select(F.col(group), _md5_long(F.col("b")).alias("h"))
+    ).select(F.col(group), md5_long(F.col("b")).alias("h"))
 
     # the group column keeps ITS OWN type (string source, int bucket,
     # ...) — hardcoding StringType would silently stringify non-string

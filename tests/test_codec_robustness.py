@@ -15,7 +15,6 @@ are allowed only where noted.
 
 from __future__ import annotations
 
-import struct
 import zlib
 
 import numpy as np
@@ -24,20 +23,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pm25ml_spark.sources.hdf5_min import read_hdf5, write_hdf5
-from pm25ml_spark.sources.jpeg import decode_jpeg, encode_jpeg
-from pm25ml_spark.sources.mp4 import build_mp4, parse_mp4
 from pm25ml_spark.sources.netcdf3 import read_netcdf3, write_netcdf3
 
 ACCEPTABLE = (ValueError, zlib.error)
-
-
-def _jpeg_bytes() -> bytes:
-    img = (np.arange(24 * 32, dtype=np.uint8) % 251).reshape(24, 32)
-    return encode_jpeg(img, quality=80)
-
-
-def _mp4_bytes() -> bytes:
-    return build_mp4([bytes([i]) * 20 for i in range(6)])
 
 
 def _hdf5_bytes(tmp_path) -> bytes:
@@ -48,28 +36,6 @@ def _hdf5_bytes(tmp_path) -> bytes:
 
 
 class TestTruncation:
-    @settings(max_examples=40, deadline=None)
-    @given(frac=st.floats(min_value=0.02, max_value=0.98))
-    def test_jpeg_truncated(self, frac):
-        data = _jpeg_bytes()
-        cut = data[: max(2, int(len(data) * frac))]
-        try:
-            decode_jpeg(cut)
-        except ACCEPTABLE:
-            pass
-
-    @settings(max_examples=40, deadline=None)
-    @given(frac=st.floats(min_value=0.0, max_value=0.98))
-    def test_mp4_truncated(self, frac):
-        data = _mp4_bytes()
-        cut = data[: int(len(data) * frac)]
-        try:
-            parse_mp4(cut)
-        except ACCEPTABLE:
-            pass
-        except struct.error:
-            pytest.fail("struct.error leaked from truncated MP4")
-
     @settings(max_examples=30, deadline=None)
     @given(frac=st.floats(min_value=0.0, max_value=0.98))
     def test_netcdf3_truncated(self, tmp_path_factory, frac):
@@ -92,61 +58,6 @@ class TestTruncation:
 
 
 class TestBitFlips:
-    @settings(max_examples=40, deadline=None)
-    @given(pos=st.integers(min_value=2, max_value=10_000), bit=st.integers(0, 7))
-    def test_jpeg_bitflip(self, pos, bit):
-        data = bytearray(_jpeg_bytes())
-        data[pos % len(data)] ^= 1 << bit
-        try:
-            out = decode_jpeg(bytes(data))
-            assert out.dtype == np.uint8  # decoded despite damage: fine
-        except ACCEPTABLE:
-            pass
-
-    @settings(max_examples=40, deadline=None)
-    @given(pos=st.integers(min_value=2, max_value=10_000), bit=st.integers(0, 7))
-    def test_progressive_jpeg_bitflip(self, pos, bit):
-        from pm25ml_spark.sources.jpeg import encode_jpeg_progressive
-
-        img = (np.arange(24 * 32, dtype=np.uint8) % 251).reshape(24, 32)
-        data = bytearray(encode_jpeg_progressive(img, quality=80))
-        data[pos % len(data)] ^= 1 << bit
-        try:
-            out = decode_jpeg(bytes(data))
-            assert out.dtype == np.uint8
-        except ACCEPTABLE:
-            pass
-
-    @settings(max_examples=30, deadline=None)
-    @given(frac=st.floats(min_value=0.02, max_value=0.98))
-    def test_progressive_jpeg_truncated(self, frac):
-        from pm25ml_spark.sources.jpeg import encode_jpeg_progressive
-
-        img = (np.arange(24 * 32, dtype=np.uint8) % 251).reshape(24, 32)
-        data = encode_jpeg_progressive(img, quality=80)
-        cut = data[: max(2, int(len(data) * frac))]
-        try:
-            out = decode_jpeg(cut)
-            # progressive partial decode is legitimate (that is the
-            # format's point) — but it must still be a sane image
-            assert out.dtype == np.uint8 and out.shape == (24, 32)
-        except ACCEPTABLE:
-            pass
-
-    @settings(max_examples=40, deadline=None)
-    @given(pos=st.integers(min_value=0, max_value=10_000), bit=st.integers(0, 7))
-    def test_mp4_bitflip(self, pos, bit):
-        data = bytearray(_mp4_bytes())
-        data[pos % len(data)] ^= 1 << bit
-        try:
-            tracks = parse_mp4(bytes(data))
-            for t in tracks:
-                assert len(t.samples) >= 0
-        except ACCEPTABLE:
-            pass
-        except struct.error:
-            pytest.fail("struct.error leaked from bit-flipped MP4")
-
     @settings(max_examples=25, deadline=None)
     @given(
         pos=st.integers(min_value=8, max_value=100_000),
@@ -171,13 +82,6 @@ class TestGarbage:
     @settings(max_examples=30, deadline=None)
     @given(data=st.binary(min_size=0, max_size=256))
     def test_all_decoders_reject_garbage(self, data, tmp_path_factory):
-        with pytest.raises(ACCEPTABLE):
-            decode_jpeg(b"\xff\xd8" + data)
-        try:
-            parse_mp4(data)
-            pytest.fail("garbage accepted as MP4")
-        except ACCEPTABLE:
-            pass
         tmp = tmp_path_factory.mktemp("g")
         p = str(tmp / "g.bin")
         with open(p, "wb") as fh:
@@ -186,26 +90,17 @@ class TestGarbage:
             read_netcdf3(p)
         except ACCEPTABLE:
             pass
+        with open(p, "wb") as fh:
+            fh.write(b"\x89HDF\r\n\x1a\n" + data)
+        try:
+            f = read_hdf5(p)
+            for ds in f.root.datasets.values():
+                ds.read()
+        except ACCEPTABLE:
+            pass
 
 
 class TestLyingHeaders:
-    def test_jpeg_implausible_sof_dims_rejected_not_oom(self):
-        """A corrupt SOF declaring 65535x65535 must raise ValueError at
-        header parse, never attempt the ~4 GiB plane allocation."""
-        data = bytearray(_jpeg_bytes())
-        i = data.find(b"\xff\xc0")
-        assert i > 0
-        struct.pack_into(">HH", data, i + 5, 65535, 65535)
-        with pytest.raises(ValueError, match="implausible SOF"):
-            decode_jpeg(bytes(data))
-
-    def test_jpeg_zero_dims_rejected(self):
-        data = bytearray(_jpeg_bytes())
-        i = data.find(b"\xff\xc0")
-        struct.pack_into(">HH", data, i + 5, 0, 32)
-        with pytest.raises(ValueError):
-            decode_jpeg(bytes(data))
-
     def test_hdf5_vl_size_mismatch_raises(self, tmp_path):
         """A VL heap object whose byte size is not a multiple of its
         element count is corrupt: quarantined, not silently truncated."""

@@ -520,10 +520,6 @@ def test_st03_stream_dedup_invocations_agree(spark, sf_dir):
     _run_twice_hash_stable(spark, sf_dir, "st03_stream_dedup_totals")
 
 
-def test_mm01_multimodal_invocations_agree(spark, sf_dir):
-    _run_twice_hash_stable(spark, sf_dir, "mm01_image_decode_stats")
-
-
 def test_sk05_sample_quantiles_invocations_agree(spark, sf_dir):
     _run_twice_hash_stable(spark, sf_dir, "sk05_sample_quantiles")
 

@@ -546,14 +546,14 @@ def test_weighted_sample_prune_equals_naive_topk(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
     from pm25ml_spark.operators.sampling import weighted_sample_topk
 
     df = spark.range(5000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 37 + 1).alias("w")
     ).repartition(16)
     got = weighted_sample_topk(df, "doc_id", "w", 200)
-    h = _md5_long(F.concat_ws(":", F.lit("es"), F.col("doc_id")))
+    h = md5_long(F.concat_ws(":", F.lit("es"), F.col("doc_id")))
     u = (h % 1_000_000 + 0.5) / 1_000_000.0
     key = F.round(F.log(u) / F.col("w").cast("double"), 6)
     naive = (

@@ -141,3 +141,65 @@ def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch)
     assert broadcasts[1] is not broadcasts[0]
     assert broadcasts[1]._jbroadcast.isValid()
     imputer.release()
+
+
+def _static_import_closure(root: str) -> set[str]:
+    """Package modules reachable from ``root`` through its import
+    statements, module-level and function-level alike (an AST walk;
+    nothing is imported)."""
+    import ast
+    import pathlib
+
+    import pm25ml_spark
+
+    top = pathlib.Path(pm25ml_spark.__file__).parent.parent
+
+    def source(mod: str) -> pathlib.Path | None:
+        p = top.joinpath(*mod.split("."))
+        for f in (p / "__init__.py", p.with_suffix(".py")):
+            if f.is_file():
+                return f
+        return None
+
+    seen: set[str] = set()
+    todo = [root]
+    while todo:
+        mod = todo.pop()
+        if mod in seen:
+            continue
+        seen.add(mod)
+        path = source(mod)
+        pkg = mod if path.name == "__init__.py" else mod.rpartition(".")[0]
+        names: list[str] = []
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names += [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    up = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
+                    base = ".".join(up + [base] if base else up)
+                names += [base] + [f"{base}.{a.name}" for a in node.names]
+        for name in names:
+            parts = name.split(".")
+            if parts[0] != "pm25ml_spark":
+                continue
+            for i in range(1, len(parts) + 1):
+                sub = ".".join(parts[:i])
+                if sub not in seen and source(sub):
+                    todo.append(sub)
+    return seen
+
+
+def test_pipeline_import_closure_is_pm25_only():
+    """The pipeline reaches no catalog plans, streaming code, dedup or
+    nearest-neighbour join, even through a function-level import."""
+    closure = _static_import_closure("pm25ml_spark.pipeline")
+    assert "pm25ml_spark.operators.interpolation" in closure
+    leaked = sorted(
+        m
+        for m in closure
+        if m.startswith(("pm25ml_spark.plans", "pm25ml_spark.streaming"))
+        or m in ("pm25ml_spark.operators.dedup", "pm25ml_spark.operators.nn_join")
+    )
+    assert not leaked, leaked

@@ -21,10 +21,6 @@ def physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_q06_filters_pushed_to_scan(spark, sf_dir):
     df = QUERIES["q06_forecast_revenue"](spark, sf_dir)
     plan = physical_plan(df)
@@ -63,18 +59,6 @@ def test_w01_single_exchange_for_both_frames(spark, sf_dir):
     plan = physical_plan(df)
     n_exchanges = plan.count("Exchange hashpartitioning(user_id")
     assert n_exchanges == 1, plan[:2000]
-
-
-def test_metadata_profile_never_reads_payload(spark):
-    from pm25ml_spark.sources.multimodal import (
-        metadata_only_profile,
-        synthesize_media_table,
-    )
-
-    media = synthesize_media_table(spark, n=8)
-    plan = optimized_plan(metadata_only_profile(media))
-    before_agg = plan.split("Aggregate", 1)[0]
-    assert "payload" not in before_agg
 
 
 def test_whole_stage_codegen_on_agg_path(spark, sf_dir):
@@ -726,17 +710,6 @@ def test_dd14_rank_join_is_equi_and_window_free(spark, sf_dir):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_mm01_payload_never_leaves_python_boundary(spark, sf_dir):
-    """The multimodal pipeline must scan ONLY doc_id from documents (the
-    payload is synthesized executor-side) — at 100 TB the text column
-    would be dead I/O on every media pass."""
-    df = QUERIES["mm01_image_decode_stats"](spark, sf_dir)
-    plan = physical_plan(df)
-    read_schema = plan.split("ReadSchema:", 1)[1].split("\n", 1)[0]
-    assert "doc_id" in read_schema
-    assert "text" not in read_schema and "lang" not in read_schema
 
 
 def test_sk05_windows_all_partitioned(spark, sf_dir):

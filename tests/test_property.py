@@ -247,28 +247,8 @@ def test_connected_components_match_union_find(spark, edges):
 
 
 # ---------------------------------------------------------------------------
-# codec round-trips: PNG / NetCDF-3 / LCC projection — pure numpy, so
+# codec round-trips: NetCDF-3 / LCC projection — pure numpy, so
 # examples are cheap and can run in volume
-
-
-@given(
-    h=st.integers(1, 24),
-    w=st.integers(1, 24),
-    ch=st.sampled_from([1, 2, 3, 4]),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None, derandomize=True)
-def test_png_roundtrip_property(h, w, ch, seed):
-    import numpy as np
-    from pm25ml_spark.sources.imaging import decode_png, encode_png
-
-    img = np.random.RandomState(seed).randint(
-        0, 256, size=(h, w, ch), dtype=np.uint8
-    )
-    out = decode_png(encode_png(img))
-    expect = img[:, :, 0] if ch == 1 else img
-    assert out.shape == expect.shape
-    assert np.array_equal(out, expect)
 
 
 @given(
@@ -376,35 +356,6 @@ def test_decimate_partitioned_property(spark, n, every, nparts, shuffle_seed):
         ).collect()
     )
     assert a == b == list(range(0, n, every))
-
-
-# ---------------------------------------------------------------------------
-# progressive JPEG ≡ baseline JPEG on identical quantized coefficients
-
-
-@given(
-    h=st.integers(8, 40),
-    w=st.integers(8, 40),
-    gray=st.booleans(),
-    quality=st.sampled_from([50, 75, 90]),
-    seed=st.integers(0, 1000),
-)
-@settings(max_examples=10, deadline=None, derandomize=True)
-def test_progressive_equals_baseline_property(h, w, gray, quality, seed):
-    import numpy as np
-
-    from pm25ml_spark.sources.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    img = rng.randint(0, 256, shape, dtype=np.uint8)
-    base = decode_jpeg(encode_jpeg(img, quality=quality))
-    prog = decode_jpeg(encode_jpeg_progressive(img, quality=quality))
-    assert np.array_equal(base, prog)
 
 
 @settings(max_examples=25, deadline=None)

@@ -242,13 +242,13 @@ def test_kmv_bottomk_equals_naive_global_bottomk(spark):
     """The salt-lane pre-prune must return EXACTLY the global bottom-k."""
     from pyspark.sql import Window
 
-    from pm25ml_spark.operators.dedup import _md5_long
+    from pm25ml_spark.functions.columns import md5_long
 
     df = _grouped(spark)
     k = 32
     got = SK.kmv_bottomk(df, "k", "g", k)
     naive = (
-        df.select("g", _md5_long(F.col("k")).alias("h"))
+        df.select("g", md5_long(F.col("k")).alias("h"))
         .distinct()
         .withColumn("rn", F.row_number().over(
             Window.partitionBy("g").orderBy("h")))

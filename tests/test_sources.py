@@ -1,4 +1,4 @@
-"""Raster reader plumbing (S12/S13/K2) and multimodal column operators."""
+"""Raster reader plumbing (S12/S13/K2)."""
 
 from __future__ import annotations
 
@@ -6,12 +6,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pm25ml_spark.sources.multimodal import (
-    extract_features,
-    metadata_only_profile,
-    resize_payloads,
-    synthesize_media_table,
-)
 from pm25ml_spark.sources.raster import (
     RasterGranule,
     bilinear_regrid,
@@ -60,55 +54,3 @@ def test_read_granules_distributed(spark):
     b = pdf2.sort_values(["date", "grid_id"]).value.to_numpy()
     assert np.array_equal(a, b)
 
-
-def test_media_features(spark):
-    media = synthesize_media_table(spark, n=12)
-    feats = extract_features(media).toPandas()
-    assert len(feats) == 12
-    assert (feats.mean_intensity.between(0, 255)).all()
-    assert (feats.p_low.between(0, 1)).all()
-
-
-def test_media_resize_roundtrip(spark):
-    media = synthesize_media_table(spark, n=6)
-    small = resize_payloads(media, 4, 4)
-    pdf = small.toPandas()
-    assert (pdf.width == 4).all() and (pdf.height == 4).all()
-    assert (pdf.n_bytes == 16).all()
-    # resized payloads decode to 4x4 arrays
-    assert all(len(bytes(p)) == 16 for p in pdf.payload)
-
-
-def test_metadata_profile_prunes_payload(spark):
-    media = synthesize_media_table(spark, n=12)
-    prof = metadata_only_profile(media)
-    rows = {r.kind: r for r in prof.collect()}
-    assert set(rows) == {"image", "audio", "video"}
-    assert all(r.total_bytes > 0 for r in rows.values())
-    # column pruning: payload must not appear in the aggregate's input
-    plan = prof._jdf.queryExecution().optimizedPlan().toString()
-    first_project_has_payload = "payload" in plan.split("Aggregate")[0]
-    assert not first_project_has_payload
-
-
-def test_media_frame_sampling(spark):
-    from pm25ml_spark.sources.multimodal import sample_frames, synthesize_media_table
-
-    media = synthesize_media_table(spark, n=12)
-    n_videos = media.filter("kind = 'video'").count()
-    frames = sample_frames(media, n_frames=3)
-    got = frames.collect()
-    # only video rows explode; ≤ 3 frames each, deterministic indices
-    assert {r.media_id for r in got} == {
-        r.media_id for r in media.filter("kind = 'video'").collect()
-    }
-    assert len(got) <= 3 * n_videos and len(got) >= n_videos
-    per = {}
-    for r in got:
-        per.setdefault(r.media_id, []).append(r.frame_idx)
-        assert r.height == 1 and len(bytes(r.frame)) == r.width
-    for idxs in per.values():
-        assert idxs == sorted(idxs)
-    # systematic variant: every 2nd frame
-    sys_frames = sample_frames(media, every_n=2).collect()
-    assert all(r.frame_idx % 2 == 0 for r in sys_frames)

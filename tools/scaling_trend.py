@@ -103,7 +103,7 @@ def main() -> int:
         f"{growth:g} = {args.flag_factor * growth:g} with t(sf{sf_big:g}) "
         "> 1 s is flagged as superlinear-suspect. Fixed-cost families "
         "(st/d12-d14 drains, generated-input codec queries like "
-        "mm01-mm03/k05) are expected near ratio 1; tiny-time ratios are "
+        "k05/k06) are expected near ratio 1; tiny-time ratios are "
         "noise-dominated.",
         "",
     ]
