@@ -1,4 +1,4 @@
-"""Stdlib-only media codecs for the multimodal column family.
+"""Stdlib-only PNG/BMP/PNM/WAV codecs.
 
 Real byte-level decoders for the formats that need no native library:
 
@@ -9,9 +9,6 @@ Real byte-level decoders for the formats that need no native library:
 * BMP — 24-bit uncompressed BI_RGB (bottom-up rows, 4-byte padding).
 * PGM/PPM — binary P5/P6.
 * WAV — stdlib ``wave``, 16-bit PCM → (n_samples, n_channels) int16.
-
-JPEG/MP4/etc. still require PIL/ffmpeg — that seam stays in
-``multimodal.decode_to_array``.
 """
 
 from __future__ import annotations

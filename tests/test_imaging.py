@@ -1,5 +1,4 @@
-"""Stdlib-only media codec tests (PNG/BMP/PNM/WAV) + real decode through
-the distributed multimodal feature extractor."""
+"""Stdlib-only media codec tests (PNG/BMP/PNM/WAV)."""
 
 from __future__ import annotations
 
@@ -7,7 +6,6 @@ import struct
 import zlib
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pm25ml_spark.sources.imaging import (
@@ -121,18 +119,3 @@ def test_grayscale_luma():
     img[0, 0] = [255, 0, 0]
     assert to_grayscale(img)[0, 0] == 76  # round(0.299*255)
 
-
-def test_distributed_features_over_real_png(spark):
-    """Real PNG bytes flow through the Arrow mapInPandas feature pass and
-    produce the pixel statistics of the decoded image."""
-    from pm25ml_spark.sources.multimodal import MEDIA_SCHEMA, extract_features
-
-    img = _img(12, 10)
-    payload = encode_png(img)
-    df = spark.createDataFrame(
-        [(1, "image", "png", 10, 12, len(payload), bytearray(payload))],
-        MEDIA_SCHEMA,
-    )
-    out = extract_features(df).toPandas()
-    assert out.iloc[0].mean_intensity == pytest.approx(float(img.mean()))
-    assert out.iloc[0].std_intensity == pytest.approx(float(img.std()))
