@@ -6,7 +6,8 @@ stage's hive-partitioned output (month pruning comes free), and the
 per-month parallelism collapses into Spark partition parallelism.
 
 Stages (reference entry points in parentheses):
-1. ingest   (s01a) — raster granules → long tables; scaffold completion
+1. ingest   (s01a) — raster granules → wide (grid_id, date, variable…)
+                      rows over every grid cell, one pass
 2. combine  (s01b) — wide monthly table (prefix-rename + N-way join)
 3. interpolate (s01c) — K1 daily spatial interpolation of selected columns
 4. features (s02)  — W1-W4 windows + derived scalars
@@ -33,13 +34,13 @@ from pm25ml_spark.ml.pipeline import (
     predict_with_stats,
     train_imputation_model,
 )
-from pm25ml_spark.operators.combine import scaffold_complete, wide_combine
+from pm25ml_spark.operators.combine import wide_combine
 from pm25ml_spark.operators.features import generate_features
 from pm25ml_spark.operators.interpolation import daily_spatial_interpolate
 from pm25ml_spark.operators.recombine import recombine
 from pm25ml_spark.operators.sampling import stratified_split
 from pm25ml_spark.sources.archive import StageStorage
-from pm25ml_spark.sources.raster import RasterGranule, read_granules_to_grid
+from pm25ml_spark.sources.raster import RasterGranule, read_granules_wide
 from pm25ml_spark.sources.results import pivot_to_raster, write_raster
 
 
@@ -74,34 +75,17 @@ class Pm25Pipeline:
 
     # -- stage 1: ingest ----------------------------------------------------
     def ingest(self, granules: list[RasterGranule]) -> None:
-        """Granule manifest → long rows → (grid×date) scaffold completion →
-        stage=ingested partitioned by month. Scaffold arithmetic fixes the
-        exact output row count (grid × distinct dates), validated against
-        the write-observed count."""
+        """Granule manifest → wide rows (grid_id, date, <variable>…) →
+        stage=ingested partitioned by month, in one pass: each task
+        decodes whole dates and emits every grid cell of them, so the
+        output is grid × manifest dates by construction (a variable a
+        date lacks is null). That count, known on the driver, is checked
+        against the write-observed one."""
         grid_pdf = self.grid.select("grid_id", "lon", "lat").toPandas()
-        # persist the decoded long rows: the write plan reads them through
-        # TWO join branches (pivot side + scaffold side) — without the
-        # cache the granule decode (the heaviest I/O of the pipeline)
-        # executes once per branch
-        long_rows = read_granules_to_grid(self.spark, granules, grid_pdf).persist()
-        # pivot values come from the manifest, not a discovery scan: the
-        # variables present in the decoded rows are exactly the manifest's
-        # (every granule emits its own variable), and passing them
-        # explicitly removes the eager distinct() pass over the decode.
-        # sorted() matches the column order Spark's own discovery produces.
-        variables = sorted({g.variable for g in granules})
-        per_var = (
-            long_rows.groupBy("grid_id", "date")
-            .pivot("variable", variables)
-            .agg(F.first("value"))
-        )
-        dates = long_rows.select("date").distinct()
-        scaffold = self.grid.select("grid_id").crossJoin(dates)
-        complete = scaffold_complete(per_var, scaffold, id_cols=("grid_id", "date"))
-        out = complete.withColumn("month", F.substring("date", 1, 7))
+        wide = read_granules_wide(self.spark, granules, grid_pdf)
+        out = wide.withColumn("month", F.substring("date", 1, 7))
         n = self.store.sink_stage(out, "ingested")
-        expected = self.grid.count() * dates.count()
-        long_rows.unpersist()
+        expected = len(grid_pdf) * len({g.date for g in granules})
         self._validate_rows("ingested", n, expected)
 
     # -- stage 2: combine ---------------------------------------------------

@@ -2,12 +2,16 @@
 
 Reference shape: NASA granules (NetCDF / HDF-EOS) are opened with
 xarray/h5netcdf, bbox-subset, time-averaged to a day grid, then regridded
-to the 33k grid centroids (`collectors/ned/*`). Spark-first shape:
+to the 33k grid centroids (`collectors/ned/*`). Spark-first shapes, both
+over one per-granule decode + regrid helper:
 
-    granule manifest DataFrame (path, date, variable)
-      → mapInPandas(reader_udf)           # one granule per task
-      → long rows (grid_id, date, value)
-      → scaffold completion + archive write
+    read_granules_wide: one manifest row per date (its granules)
+      → mapInPandas                       # a task decodes whole dates
+      → wide rows (grid_id, date, <variable>…) over every grid cell
+
+    read_granules_to_grid: one manifest row per granule
+      → mapInPandas                       # one granule per task
+      → long rows (grid_id, date, variable, value)
 
 Decode resolution order (S12/S13):
 
@@ -20,8 +24,8 @@ Decode resolution order (S12/S13):
    GridSpan/GridSpacing coord rebuild, and NetCDF-4-style files with the
    same MERRA semantics as (1);
 3. missing paths (tests, dry runs) produce a clearly-marked deterministic
-   plane-valued fake so the plumbing (schema, batching, regrid math,
-   scaffold join) stays testable anywhere.
+   plane-valued fake so the plumbing (schema, batching, regrid math)
+   stays testable anywhere.
 
 The regrid kernel (K2) is pure numpy bilinear — no scipy.
 """
@@ -207,6 +211,32 @@ def bilinear_regrid(
     )
 
 
+def _regrid_granule(
+    path: str,
+    variable: str,
+    bbox,
+    level,
+    g_lon: np.ndarray,
+    g_lat: np.ndarray,
+) -> np.ndarray:
+    """Decode one manifest granule and sample it at the grid centroids.
+    ``bbox`` and ``level`` arrive as the manifest columns surface them in
+    pandas: an array (or None) and a nullable int (null as NaN/None)."""
+    bbox = tuple(bbox) if bbox is not None else None
+    level = None if pd.isna(level) else int(level)
+    lons, lats, grid2d = decode_granule(path, variable, bbox=bbox, level=level)
+    return bilinear_regrid(lons, lats, grid2d, g_lon, g_lat)
+
+
+def _manifest_entry(g: RasterGranule) -> tuple:
+    return (
+        g.path,
+        g.variable,
+        list(g.bbox) if g.bbox is not None else None,
+        g.level,
+    )
+
+
 RASTER_ROW_SCHEMA = StructType(
     [
         StructField("grid_id", LongType()),
@@ -226,17 +256,8 @@ def read_granules_to_grid(
     and regridded inside mapInPandas (one task per granule, matching the
     reference's file-per-day unit of work)."""
     manifest = spark.createDataFrame(
-        [
-            (
-                g.path,
-                g.date,
-                g.variable,
-                list(g.bbox) if g.bbox is not None else None,
-                g.level,
-            )
-            for g in granules
-        ],
-        "path string, date string, variable string, "
+        [(g.date, *_manifest_entry(g)) for g in granules],
+        "date string, path string, variable string, "
         "bbox array<double>, level int",
     ).repartition(max(1, min(len(granules), 64)))
 
@@ -247,13 +268,9 @@ def read_granules_to_grid(
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                bbox = tuple(row.bbox) if row.bbox is not None else None
-                # a nullable int column surfaces null as NaN in pandas
-                level = None if pd.isna(row.level) else int(row.level)
-                lons, lats, grid2d = decode_granule(
-                    row.path, row.variable, bbox=bbox, level=level
+                vals = _regrid_granule(
+                    row.path, row.variable, row.bbox, row.level, g_lon, g_lat
                 )
-                vals = bilinear_regrid(lons, lats, grid2d, g_lon, g_lat)
                 yield pd.DataFrame(
                     {
                         "grid_id": g_ids,
@@ -264,3 +281,63 @@ def read_granules_to_grid(
                 )
 
     return manifest.mapInPandas(fn, schema=RASTER_ROW_SCHEMA)
+
+
+def read_granules_wide(
+    spark: SparkSession,
+    granules: list[RasterGranule],
+    grid_pdf: pd.DataFrame,  # columns: grid_id, lon, lat
+) -> DataFrame:
+    """Wide granule reader: rows ``(grid_id, date, <variable>…)``, the
+    variables in sorted order, one row per grid cell per manifest date.
+
+    The manifest is grouped by date on the driver, so a task decodes and
+    regrids every granule of its dates and emits each date's complete
+    grid; a variable the date has no granule for is null. The output is
+    complete by construction, with no shuffle: the manifest rows spread
+    over ``min(dates, defaultParallelism)`` partitions.
+
+    Two granules for the same (date, variable) raise ``ValueError``
+    before any Spark job: which one would win is not a function of the
+    manifest."""
+    variables = sorted({g.variable for g in granules})
+    by_date: dict[str, dict[str, RasterGranule]] = {}
+    for g in granules:
+        day = by_date.setdefault(g.date, {})
+        if g.variable in day:
+            raise ValueError(
+                f"two granules for date {g.date} variable {g.variable!r}: "
+                f"{day[g.variable].path!r} and {g.path!r}"
+            )
+        day[g.variable] = g
+    rows = [
+        (date, [_manifest_entry(day[v]) for v in sorted(day)])
+        for date, day in sorted(by_date.items())
+    ]
+    n_slices = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
+    manifest = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n_slices),
+        "date string, granules array<struct<path: string, variable: string, "
+        "bbox: array<double>, level: int>>",
+    )
+
+    g_ids = grid_pdf["grid_id"].to_numpy(dtype=np.int64)
+    g_lon = grid_pdf["lon"].to_numpy(dtype=np.float64)
+    g_lat = grid_pdf["lat"].to_numpy(dtype=np.float64)
+    schema = StructType(
+        [StructField("grid_id", LongType()), StructField("date", StringType())]
+        + [StructField(v, DoubleType()) for v in variables]
+    )
+
+    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for date, entries in zip(pdf["date"], pdf["granules"]):
+                cols = {v: np.full(len(g_ids), np.nan) for v in variables}
+                for e in entries:
+                    cols[e["variable"]] = _regrid_granule(
+                        e["path"], e["variable"], e["bbox"], e["level"],
+                        g_lon, g_lat,
+                    )
+                yield pd.DataFrame({"grid_id": g_ids, "date": date, **cols})
+
+    return manifest.mapInPandas(fn, schema=schema)

@@ -29,6 +29,7 @@ from pm25ml_spark.sources.raster import (
     RasterGranule,
     decode_granule,
     read_granules_to_grid,
+    read_granules_wide,
 )
 
 LONS = np.arange(60.0, 100.0, 2.0) + 1.0  # 20 centres
@@ -398,20 +399,15 @@ class TestGranuleSubsetPassThrough:
         grid_pdf = pd.DataFrame(
             {"grid_id": [1, 2], "lon": [73.0, 75.0], "lat": [14.0, 17.0]}
         )
+        granule = RasterGranule(
+            path=path,
+            date="2020-01-01",
+            variable="t2m",
+            bbox=(72.0, 12.0, 77.0, 20.0),
+            level=1,
+        )
         rows = (
-            read_granules_to_grid(
-                spark,
-                [
-                    RasterGranule(
-                        path=path,
-                        date="2020-01-01",
-                        variable="t2m",
-                        bbox=(72.0, 12.0, 77.0, 20.0),
-                        level=1,
-                    )
-                ],
-                grid_pdf,
-            )
+            read_granules_to_grid(spark, [granule], grid_pdf)
             .toPandas()
             .sort_values("grid_id")
         )
@@ -426,6 +422,15 @@ class TestGranuleSubsetPassThrough:
             grid_pdf["lon"].to_numpy(), grid_pdf["lat"].to_numpy(),
         )
         np.testing.assert_allclose(rows["value"].to_numpy(), expect)
+        # the date-grouped reader passes bbox/level through the same way
+        wide = (
+            read_granules_wide(spark, [granule], grid_pdf)
+            .toPandas()
+            .sort_values("grid_id")
+        )
+        np.testing.assert_array_equal(
+            wide["t2m"].to_numpy(), rows["value"].to_numpy()
+        )
 
     def test_level_on_hdfeos_grid_rejected(self, tmp_path):
         path = _write_omi(tmp_path / "omi.he5")

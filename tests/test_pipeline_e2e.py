@@ -7,13 +7,16 @@ end-to-end path — here it is an automated test.
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from pm25ml_spark.pipeline import PipelineSettings, Pm25Pipeline
 from pm25ml_spark.sources.grid import synthetic_grid
-from pm25ml_spark.sources.raster import RasterGranule
+from pm25ml_spark.sources.raster import RasterGranule, read_granules_to_grid
 from pm25ml_spark.sources.results import read_raster
 
 
@@ -141,6 +144,52 @@ def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch)
     assert broadcasts[1] is not broadcasts[0]
     assert broadcasts[1]._jbroadcast.isValid()
     imputer.release()
+
+
+def _ingested(spark, tmp_path, grid, granules) -> pd.DataFrame:
+    pipe = Pm25Pipeline(spark, grid, PipelineSettings(bucket=str(tmp_path)))
+    pipe.ingest(granules)
+    return (
+        pipe.store.scan_stage("ingested")
+        .toPandas()
+        .sort_values(["grid_id", "date"], ignore_index=True)
+    )
+
+
+def test_ingest_equals_long_reader_pivoted_onto_grid_and_dates(spark, tmp_path):
+    """``ingested`` is the per-granule reader's long rows pivoted onto
+    grid × manifest dates: a (date, variable) with no granule is null on
+    that date, every other value is bit-identical, and the manifest's
+    order does not matter."""
+    grid = synthetic_grid(spark, nx=6, ny=6)
+    granules = [
+        RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
+        for d in range(1, 6)
+        for v in ("aot", "t2m")
+        if (d, v) != (3, "t2m")
+    ]
+    grid_pdf = grid.select("grid_id", "lon", "lat").toPandas()
+    long = read_granules_to_grid(spark, granules, grid_pdf).toPandas()
+    dates = sorted({g.date for g in granules})
+    scaffold = pd.MultiIndex.from_product(
+        [grid_pdf["grid_id"], dates], names=["grid_id", "date"]
+    ).to_frame(index=False)
+    per_var = long.pivot(index=["grid_id", "date"], columns="variable", values="value")
+    expected = scaffold.merge(
+        per_var[["aot", "t2m"]].reset_index(), on=["grid_id", "date"], how="left"
+    )
+    expected["month"] = expected["date"].str[:7]
+
+    got = _ingested(spark, tmp_path / "a", grid, granules)
+    assert list(got.columns) == ["grid_id", "date", "aot", "t2m", "month"]
+    pd.testing.assert_frame_equal(got, expected, check_exact=True)
+    assert got.loc[got["date"] == "2023-01-03", "t2m"].isna().all()
+    assert got.loc[got["date"] != "2023-01-03", ["aot", "t2m"]].notna().all().all()
+
+    shuffled = granules[:]
+    random.Random(7).shuffle(shuffled)
+    again = _ingested(spark, tmp_path / "b", grid, shuffled)
+    pd.testing.assert_frame_equal(again, got, check_exact=True)
 
 
 def _static_import_closure(root: str) -> set[str]:

@@ -876,3 +876,26 @@ def test_lsh_probe_expression_stays_subquadratic(spark, sf_dir):
     df = QUERIES["ss09_lsh_multitable_top1"](spark, sf_dir)
     plan = physical_plan(df)
     assert plan.count("Generate ") == 2, plan.count("Generate ")
+
+
+def test_wide_granule_reader_plan_has_no_exchange_or_cache(spark):
+    """Ingest decodes each date's granules straight into complete wide
+    rows: no shuffle (pivot, scaffold join, repartition) and no cached
+    relation sit between the manifest scan and the writer."""
+    import numpy as np
+    import pandas as pd
+
+    from pm25ml_spark.sources.raster import RasterGranule, read_granules_wide
+
+    grid_pdf = pd.DataFrame(
+        {"grid_id": np.arange(9, dtype=np.int64), "lon": 70.0, "lat": 20.0}
+    )
+    granules = [
+        RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
+        for d in range(1, 8)
+        for v in ("aot", "t2m")
+    ]
+    plan = physical_plan(read_granules_wide(spark, granules, grid_pdf))
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan, plan
+    assert "InMemoryRelation" not in plan, plan

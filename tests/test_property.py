@@ -247,28 +247,8 @@ def test_connected_components_match_union_find(spark, edges):
 
 
 # ---------------------------------------------------------------------------
-# codec round-trips: PNG / NetCDF-3 / LCC projection — pure numpy, so
+# codec round-trips: NetCDF-3 / LCC projection — pure numpy, so
 # examples are cheap and can run in volume
-
-
-@given(
-    h=st.integers(1, 24),
-    w=st.integers(1, 24),
-    ch=st.sampled_from([1, 2, 3, 4]),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None, derandomize=True)
-def test_png_roundtrip_property(h, w, ch, seed):
-    import numpy as np
-    from pm25ml_spark.sources.imaging import decode_png, encode_png
-
-    img = np.random.RandomState(seed).randint(
-        0, 256, size=(h, w, ch), dtype=np.uint8
-    )
-    out = decode_png(encode_png(img))
-    expect = img[:, :, 0] if ch == 1 else img
-    assert out.shape == expect.shape
-    assert np.array_equal(out, expect)
 
 
 @given(

@@ -10,6 +10,7 @@ from pm25ml_spark.sources.raster import (
     RasterGranule,
     bilinear_regrid,
     read_granules_to_grid,
+    read_granules_wide,
 )
 
 
@@ -54,3 +55,20 @@ def test_read_granules_distributed(spark):
     b = pdf2.sort_values(["date", "grid_id"]).value.to_numpy()
     assert np.array_equal(a, b)
 
+
+def test_read_granules_wide_rejects_duplicate_date_variable(spark):
+    """Two granules for one (date, variable) leave the winner to chance:
+    the wide reader refuses them, naming both, before any Spark job."""
+    grid_pdf = pd.DataFrame(
+        {"grid_id": np.arange(4, dtype=np.int64), "lon": 70.0, "lat": 20.0}
+    )
+    granules = [
+        RasterGranule("fake://m2/aot/1.nc", "2023-01-01", "aot"),
+        RasterGranule("fake://m2/t2m/1.nc", "2023-01-01", "t2m"),
+        RasterGranule("fake://m2/aot/1b.nc", "2023-01-01", "aot"),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    with pytest.raises(ValueError, match=r"2023-01-01 variable 'aot'"):
+        read_granules_wide(spark, granules, grid_pdf)
+    assert set(tracker.getJobIdsForGroup()) == before
