@@ -8,7 +8,7 @@ idiomatically on Spark DataFrames / Spark SQL so every operator distributes:
 - ``catalog``    — typed loaders for the benchmark/test parquet tables.
 - ``storage``    — hive-path artifact store + declared-schema validation
                    (the reference's idempotency backbone, SURVEY §4.3).
-- ``operators``  — combine / recombine / features / sampling / interpolation /
+- ``operators``  — combine / features / sampling / interpolation /
                    dedup / similarity / asof / nn-join building blocks.
 - ``functions``  — scalar + exact-arithmetic + text + vector column functions.
 - ``plans``      — the query catalog: every operator from SURVEY §2 as a

@@ -8,8 +8,9 @@ hyperparameters (`setup/training.py:68-139`). This module is that path:
   it in one process) to the driver in one Spark job and fit the booster
   there; group-aware CV folds are fitted and scored on the same
   collected rows (``cross_validate_booster``, the one CV loop);
-* predict: pickle-broadcast the fitted booster and score in Arrow batches
-  via ``mapInPandas`` — M4 stays fully distributed.
+* predict: pickle-broadcast the fitted booster and score Arrow batches of
+  the feature columns in a pandas UDF — M4 stays fully distributed, and
+  a null/NaN predictor fails the scoring task (P11).
 
 xgboost/lightgbm are not in this container, so those backends raise a
 clear error unless a ``model_factory`` is injected. The always-available
@@ -20,12 +21,13 @@ GBM) is what ``ml/pipeline.train_imputation_model`` trains.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 # paper hyperparameters, verbatim from setup/training.py:68-139
 XGB_AOD_PARAMS = {
@@ -166,37 +168,43 @@ class BoosterImputer:
             self._bmodel_src = None
 
     def transform(self, df: DataFrame, output_col: str | None = None) -> DataFrame:
-        """M4: distributed batch predict. The fitted booster is broadcast
-        once per imputer (cached); each Arrow batch scores in-process (no
-        per-row Python)."""
+        """M4: distributed batch predict, ``df`` plus one ``output_col``.
+        The fitted booster is broadcast once per imputer (cached); a
+        scalar-iterator pandas UDF scores Arrow batches of the feature
+        columns alone (no per-row Python, the other columns stay in the
+        JVM). P11 (`imputation_model_pipeline.py:232-241`): predictors
+        must be fully non-null — the booster would silently score a
+        missing cell through its missing-value bin — so a batch with a
+        null/NaN feature fails its task with a ``ValueError``, which
+        aborts the job that consumes the scores (on the driver it
+        surfaces as Spark's ``PythonException``)."""
         out = output_col or f"{self.target}__predicted"
         if out in df.columns:
             raise ValueError(
                 f"output column {out!r} already exists in the input frame"
             )
         feats = list(self.features)
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
         sc = df.sparkSession.sparkContext
         if self._bmodel is None or self._bmodel_src is not self.model:
             self.release()  # a swapped model must never score stale
             self._bmodel = sc.broadcast(self.model)
             self._bmodel_src = self.model
         bmodel = self._bmodel
-        # StructType.add mutates in place — never call it on df's cached
-        # schema object; build a fresh one
-        schema = StructType(
-            list(df.schema.fields) + [StructField(out, DoubleType())]
-        )
 
-        def score(batches):
+        @F.pandas_udf(DoubleType())
+        def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
             model = bmodel.value
             for pdf in batches:
-                pdf = pdf.copy()
-                pdf[out] = model.predict(pdf[feats])
-                yield pdf
+                null_cols = [f for f in feats if pdf[f].isna().any()]
+                if null_cols:
+                    raise ValueError(
+                        f"BoosterImputer.transform: null/NaN in predictor "
+                        f"columns {null_cols} — run the interpolation/fill "
+                        "stages first (reference P11 contract)"
+                    )
+                yield pd.Series(model.predict(pdf[feats]))
 
-        return df.mapInPandas(score, schema=schema)
+        return df.withColumn(out, predict(F.struct(*feats)))
 
 
 def _collect_sample(

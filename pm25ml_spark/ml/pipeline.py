@@ -5,7 +5,8 @@ predicts per month (imputation_model_pipeline.py, regression_model_
 predictor.py). Here the sample is collected to the driver in one Spark
 job and a single-node histogram booster (``ml/numpy_gbm.NumpyHistGBM``)
 is fitted there through ``ml/boosters.cross_validate_booster``;
-prediction is distributed (broadcast model, ``mapInPandas``). The
+prediction is distributed (broadcast model, a pandas UDF over the
+feature columns) and adds its columns to the scored frame in place. The
 surrounding semantics are ported exactly:
 
 - M1/M2: group-aware CV fold assignment (GroupKFold ≙ dense_rank of the
@@ -13,6 +14,8 @@ surrounding semantics are ported exactly:
 - M5: R²/RMSE via SQL aggregates (``r2_score`` is the same R² on driver
   arrays).
 - M6: quality gate on mean CV R².
+- P11: null/NaN predictors fail training (on the collected sample) and
+  scoring (inside the scoring task).
 - M7: imputed-stats columns (flag/coalesce/score/share/rolling).
 """
 
@@ -116,22 +119,6 @@ def check_quality_gate(mean_r2: float, lo: float, hi: float) -> None:
         raise ModelQualityError(f"mean CV R² {mean_r2:.4f} outside [{lo}, {hi}]")
 
 
-def check_no_null_features(df: DataFrame, features: list[str], where: str) -> None:
-    """P11 (imputation_model_pipeline.py:232-241): predictors must be
-    fully non-null — the booster would silently score a missing cell
-    through its missing-value bin instead of failing the month.
-    Implemented as a limit-1 existence probe, not a full count."""
-    any_null = F.lit(False)
-    for f in features:
-        any_null = any_null | F.col(f).isNull() | F.isnan(F.col(f))
-    bad = df.filter(any_null).limit(1).count()
-    if bad:
-        raise ValueError(
-            f"{where}: null/NaN in predictor columns {features} — run the "
-            "interpolation/fill stages first (reference P11 contract)"
-        )
-
-
 def train_imputation_model(
     df: DataFrame,
     features: list[str],
@@ -213,10 +200,12 @@ def predict_with_stats(
     date_col: str = "date",
     key_col: str = "grid_id",
 ) -> DataFrame:
-    """M4+M7: batch predict + the five imputed-stats columns
-    (regression_model_predictor.py:132-229). Scoring is distributed:
-    the imputer broadcasts its model once and scores Arrow batches."""
-    check_no_null_features(df, imputer.features, "predict_with_stats")
+    """M4+M7: ``df`` plus ``{target}__predicted`` and the five
+    imputed-stats columns (regression_model_predictor.py:132-229), in one
+    pass over ``df``. Scoring is distributed: the imputer broadcasts its
+    model once and scores Arrow batches; a null/NaN predictor fails the
+    scoring task, and so the job that consumes the result (P11, see
+    ``BoosterImputer.transform``)."""
     return derive_imputed_stats(
         imputer.transform(df),
         imputer.target,

@@ -14,7 +14,8 @@ Stages (reference entry points in parentheses):
 5. sample   (s03/s06) — stratified per-50km split of non-null-target rows
 6. train    (s04/s07) — group-CV single-node booster on the collected
                         sample + quality gate
-7. impute   (s05/s08) — distributed predict + M7 stats columns; recombine
+7. impute   (s05/s08) — distributed predict + M7 stats columns, added to
+                        the features stage in one pass (no join)
 8. export   (s09)  — pivot to (time,y,x) raster + sink
 
 Each stage writes through :class:`StageStorage`, and every call
@@ -37,7 +38,6 @@ from pm25ml_spark.ml.pipeline import (
 from pm25ml_spark.operators.combine import wide_combine
 from pm25ml_spark.operators.features import generate_features
 from pm25ml_spark.operators.interpolation import daily_spatial_interpolate
-from pm25ml_spark.operators.recombine import recombine
 from pm25ml_spark.operators.sampling import stratified_split
 from pm25ml_spark.sources.archive import StageStorage
 from pm25ml_spark.sources.raster import RasterGranule, read_granules_wide
@@ -140,10 +140,9 @@ class Pm25Pipeline:
         sampled = self.store.scan_stage("sampled").filter(
             F.col("split") == "training"
         )
-        features = list(self.s.feature_cols)
         imputer = train_imputation_model(
             sampled,
-            features,
+            list(self.s.feature_cols),
             self.s.target,
             group_col="grid__id_50km",
             n_folds=self.s.n_folds,
@@ -153,21 +152,15 @@ class Pm25Pipeline:
             from pm25ml_spark.ml.pipeline import check_quality_gate
 
             check_quality_gate(imputer.mean_cv_r2, *self.s.quality_gate)
+        # score the features stage in place: one scan, no join; a null
+        # predictor fails the scoring task and so the write (P11)
         feat = self.store.scan_stage("generated_features")
-        impute_input = feat.select(
-            "grid_id", "date", "month", self.s.target, *features
-        )
-        imputed = predict_with_stats(impute_input, imputer)
-        merged = recombine(
-            [feat, imputed.drop("month", self.s.target, *features)],
-            id_cols=("grid_id", "date"),
-            overwrite_columns=True,
-            how="left",
-        )
-        self.store.sink_stage(merged, "imputed")
-        # the model broadcast is done once the stage is written; a later
-        # transform() re-broadcasts
-        imputer.release()
+        try:
+            self.store.sink_stage(predict_with_stats(feat, imputer), "imputed")
+        finally:
+            # the model broadcast is done once the stage is written (or
+            # has failed); a later transform() re-broadcasts
+            imputer.release()
         return imputer
 
     # -- stage 8: export ----------------------------------------------------

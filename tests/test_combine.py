@@ -12,7 +12,6 @@ from pm25ml_spark.operators.combine import (
     scaffold_complete,
     wide_combine,
 )
-from pm25ml_spark.operators.recombine import ColumnClashError, recombine
 
 
 @pytest.fixture()
@@ -82,18 +81,3 @@ def test_scaffold_complete_left_join(spark, monthly):
     missing = out.filter("grid_id = 3").collect()
     assert all(r.temperature is None for r in missing)
 
-
-def test_recombine_overwrite_semantics(spark):
-    base = spark.createDataFrame(
-        [(1, "2023-01-01", 1.0, 5.0)],
-        "grid_id long, date string, a double, b double",
-    )
-    newer = spark.createDataFrame(
-        [(1, "2023-01-01", 99.0)],
-        "grid_id long, date string, b double",
-    )
-    with pytest.raises(ColumnClashError):
-        recombine([base, newer], overwrite_columns=False)
-    out = recombine([base, newer], overwrite_columns=True)
-    row = out.collect()[0]
-    assert row.b == 99.0 and row.a == 1.0

@@ -154,3 +154,20 @@ def test_null_predictor_fails_training(training_frame):
             holed, ["f1", "f2"], "aot", group_col="id_50km", n_folds=3,
             max_iter=2,
         )
+
+
+@pytest.mark.parametrize("missing", [None, float("nan")])
+def test_null_predictor_fails_scoring(training_frame, missing):
+    """P11 on the scoring side: a predictor missing only in rows whose
+    target is null passes training (which sees labelled rows alone) but
+    fails the scoring job."""
+    holed = training_frame.withColumn(
+        "f2", F.when(F.col("aot").isNull(), missing).otherwise(F.col("f2"))
+    )
+    imputer = train_imputation_model(
+        holed, ["f1", "f2"], "aot", group_col="id_50km", n_folds=3,
+        max_iter=2,
+    )
+    with pytest.raises(Exception, match="P11"):
+        predict_with_stats(holed, imputer).collect()
+    imputer.release()

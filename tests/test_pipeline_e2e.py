@@ -90,20 +90,22 @@ def test_full_lifecycle(pipeline, spark, tmp_path):
     assert np.isfinite(raster["value"]).all()
 
 
-def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch):
-    """The stage destroys its model broadcast once ``imputed`` is
-    written, so months run in one session do not pile broadcasts up on
-    the executors; the returned imputer still scores (re-broadcasting)."""
-    from pm25ml_spark.ml.boosters import BoosterImputer
+_FEATURES = ("m2__t2m", "grid__lon", "grid__lat")
 
-    features = ("m2__t2m", "grid__lon", "grid__lat")
+
+def _sampled_pipeline(spark, tmp_path, t2m_holes: bool = False) -> Pm25Pipeline:
+    """A 6×6 grid × 5 days run through ``sample``, ready for
+    ``train_and_impute``. The target ``m2__aot`` is null on every
+    ``grid_id % 7 == 0`` cell; with ``t2m_holes`` the predictor
+    ``m2__t2m`` is null on exactly those cells too, so training (on
+    non-null targets) is clean and only scoring meets the nulls."""
     pipe = Pm25Pipeline(
         spark,
         synthetic_grid(spark, nx=6, ny=6),
         PipelineSettings(
             bucket=str(tmp_path / "bucket"),
             target="m2__aot",
-            feature_cols=features,
+            feature_cols=_FEATURES,
             sample_fraction=0.5,
             n_folds=2,
             max_iter=3,
@@ -116,13 +118,26 @@ def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch)
             for v in ("aot", "t2m")
         ]
     )
+    hole = F.col("grid_id") % 7 == 0
     ds = pipe.store.scan_stage("ingested").drop("month").withColumn(
-        "aot", F.when(F.col("grid_id") % 7 == 0, None).otherwise(F.col("aot"))
+        "aot", F.when(hole, None).otherwise(F.col("aot"))
     )
+    if t2m_holes:
+        ds = ds.withColumn("t2m", F.when(hole, None).otherwise(F.col("t2m")))
     pipe.combine({"m2": ds})
     pipe.interpolate()
     pipe.features(["m2__aot", "m2__t2m"])
     pipe.sample()
+    return pipe
+
+
+def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch):
+    """The stage destroys its model broadcast once ``imputed`` is
+    written, so months run in one session do not pile broadcasts up on
+    the executors; the returned imputer still scores (re-broadcasting)."""
+    from pm25ml_spark.ml.boosters import BoosterImputer
+
+    pipe = _sampled_pipeline(spark, tmp_path)
 
     broadcasts = []
     transform = BoosterImputer.transform
@@ -137,13 +152,47 @@ def test_train_and_impute_releases_model_broadcast(spark, tmp_path, monkeypatch)
     assert len(broadcasts) == 1
     assert not broadcasts[0]._jbroadcast.isValid()  # destroyed
 
-    feat = pipe.store.scan_stage("generated_features").select(*features)
+    feat = pipe.store.scan_stage("generated_features").select(*_FEATURES)
     scored = imputer.transform(feat).toPandas()
     assert len(scored) == 36 * 5
     assert scored["m2__aot__predicted"].notna().all()
     assert broadcasts[1] is not broadcasts[0]
     assert broadcasts[1]._jbroadcast.isValid()
     imputer.release()
+
+
+def test_impute_scores_the_features_scan_in_place(spark, tmp_path, monkeypatch):
+    """The frame ``train_and_impute`` writes is the features stage plus
+    the scoring columns: one parquet scan of ``generated_features`` and
+    no join gluing the scores back onto a second scan of it."""
+    pipe = _sampled_pipeline(spark, tmp_path)
+    sunk = {}
+    sink = pipe.store.sink_stage
+
+    def recording_sink(df, stage, *args, **kwargs):
+        sunk[stage] = df
+        return sink(df, stage, *args, **kwargs)
+
+    monkeypatch.setattr(pipe.store, "sink_stage", recording_sink)
+    pipe.train_and_impute()
+    plan = sunk["imputed"]._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    files = sunk["imputed"].inputFiles()
+    assert files and all("/stage=generated_features/" in f for f in files)
+    feat = pipe.store.scan_stage("generated_features")
+    assert sunk["imputed"].columns[: len(feat.columns)] == feat.columns
+
+
+def test_null_predictor_fails_impute_and_writes_no_month(spark, tmp_path):
+    """P11 on the scoring side: a predictor null only where the target is
+    null passes training but fails ``train_and_impute``, and the failed
+    stage write leaves no ``month=`` partition that could be read back as
+    a complete month."""
+    pipe = _sampled_pipeline(spark, tmp_path, t2m_holes=True)
+    with pytest.raises(Exception, match="P11"):
+        pipe.train_and_impute()
+    assert pipe.store.months_present("imputed") == []
 
 
 def _ingested(spark, tmp_path, grid, granules) -> pd.DataFrame:
