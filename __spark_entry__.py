@@ -29,6 +29,25 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q01_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
+# Queries whose latest green is KNOWN-suspect (e.g. flagged flaky by a
+# round verdict) are treated as never-verified by ``sample_order`` so they
+# lead the next sample; remove entries once re-verified green.
+FORCE_NEXT = frozenset({
+    # r14: incremental dedup probes verify against the store's
+    # post-append parquet snapshot (one broadcast + ReusedExchange
+    # instead of two cache-backed builds):
+    "dd15_incremental_dedup",
+    "gr08_incremental_edges",
+    "gr09_ingest_batch_summary",
+    # r14: a09 shares one split-sampling pass across its two
+    # quantile calls (fold-derived MAD splits, literal median frame);
+    # cp04 persists the benchmark n-gram set across its three
+    # consumers.
+    "a09_mad_outliers",
+    "cp04_decontamination_bloom",
+})
+
+
 def sample_order(names: list[str]) -> list[str]:
     """Explicit coverage rotation for the driver's prefix sample.
 
@@ -86,47 +105,9 @@ def sample_order(names: list[str]) -> list[str]:
                 last_green[n] = rnd
 
     reg_pos = {n: i for i, n in enumerate(names)}
-    # Queries whose latest green is KNOWN-suspect (e.g. flagged flaky by a
-    # round verdict) are treated as never-verified so they lead the next
-    # sample; remove entries once re-verified green.
-    force_next = {
-        # r14 (optimization round 2): every query whose PHYSICAL plan or
-        # drain lifecycle changed this round — results invariant by
-        # design, verify that. Streaming drains skip the trailing
-        # no-data micro-batch (complete/update/append emission
-        # unchanged); st04 is a built-in update-mode aggregation; st05
-        # drains in an isolated session with the empty-batch early
-        # return:
-        "st01_stream_sessions",
-        "st02_stream_hourly_volume",
-        "st03_stream_dedup_totals",
-        "st04_stateful_user_checksums",
-        "st05_stream_cdc_latest_state",
-        "st06_stream_attribution",
-        "st07_stream_static_enrichment",
-        "st08_stream_sliding_volume",
-        # r14: incremental dedup probes verify against the store's
-        # post-append parquet snapshot (one broadcast + ReusedExchange
-        # instead of two cache-backed builds):
-        "dd15_incremental_dedup",
-        "gr08_incremental_edges",
-        "gr09_ingest_batch_summary",
-        "st09_stream_dedup_graph",
-        # r14: a09 shares one split-sampling pass across its two
-        # quantile calls (fold-derived MAD splits, literal median frame);
-        # cp04 persists the benchmark n-gram set across its three
-        # consumers.
-        "a09_mad_outliers",
-        "cp04_decontamination_bloom",
-        # (r13's force_next set was fully verified green by the r13
-        # driver run — those entries rotate normally again. The r14
-        # coalesce(1) experiment on a09/a10 gid frames was REVERTED
-        # after a paired A/B; a10's final code is byte-identical to its
-        # r13-green shape.)
-    }
     return sorted(
         names,
-        key=lambda n: (0 if n in force_next else last_green[n], reg_pos[n]),
+        key=lambda n: (0 if n in FORCE_NEXT else last_green[n], reg_pos[n]),
     )
 
 

@@ -36,11 +36,10 @@ import time
 def compact_line(compact: dict, budget: int = 1950) -> str:
     """Render the driver-facing stdout line, degrading gracefully: the
     driver parses the LAST 2000 stdout chars, so if catalog growth
-    pushes the line past ``budget``, shed per-query PRECISION first
+    pushes the line past ``budget``, shed per-query PRECISION
     (1 dp, then integer seconds — full precision always lives in
-    BENCH_FULL.json, which the judge reads directly) and the stfix
-    streaming split LAST (it has no other driver-visible home). The
-    suite total and the per-query map always survive."""
+    BENCH_FULL.json, which the judge reads directly). The suite total
+    and the per-query map always survive."""
     line = json.dumps(compact, separators=(",", ":")) + "\n"
     if len(line) > budget:
         compact["queries"] = {
@@ -48,10 +47,6 @@ def compact_line(compact: dict, budget: int = 1950) -> str:
         }
         line = json.dumps(compact, separators=(",", ":")) + "\n"
     if len(line) > budget:
-        if "stfix" in compact:
-            compact["stfix"] = {
-                t: round(v, 1) for t, v in compact["stfix"].items()
-            }
         if "pipeline_e2e_sec" in compact:
             compact["pipeline_e2e_sec"] = round(
                 compact["pipeline_e2e_sec"], 1
@@ -61,9 +56,6 @@ def compact_line(compact: dict, budget: int = 1950) -> str:
         compact["queries"] = {
             t: int(round(v)) for t, v in compact["queries"].items()
         }
-        line = json.dumps(compact, separators=(",", ":")) + "\n"
-    if len(line) > budget:
-        compact.pop("stfix", None)
         line = json.dumps(compact, separators=(",", ":")) + "\n"
     return line
 
@@ -127,67 +119,6 @@ def main() -> None:
     stage_builds = {k: round(v, 4) for k, v in sorted(BUILD_SECONDS.items())}
     total = round(sum(timings.values()) + sum(stage_builds.values()), 4)
 
-    # Streaming/storage fixed-vs-data split: the st-family and the
-    # txlog queries are dominated by per-invocation fixed overhead
-    # (micro-batch replay, checkpoint dirs, log commits), so their
-    # round-over-round deltas are unattributable from one sf point.
-    # Time them once more at a second, smaller sf and solve the
-    # two-point linear model t(sf) = fixed + slope*sf:
-    #   fixed = (t_small*sf_big - t_big*sf_small) / (sf_big - sf_small)
-    # data cost at the benched sf is then t_big - fixed. Recorded per
-    # query in BENCH_FULL.json; the compact line carries the fixed
-    # component only (data = queries[tag] - stfix[tag]) to stay inside
-    # the driver's 2000-char stdout capture window.
-    split_tags = {"st01", "st02", "st03", "st04", "st05", "st06", "st07",
-                  "st08", "st09", "st10", "st11",
-                  "d12", "d13", "d14", "d15", "d16", "d17", "d20"}
-    small_dir = "/root/testdata/sf0.01"
-    streaming_split: dict[str, dict] = {}
-    # A split-tag query whose small-sf pass threw stays in query_only_sec
-    # WITH its fixed overhead uncorrected; record those names so a
-    # partial correction pass is visible instead of silently skewing the
-    # cross-round comparison (BENCH_FULL "streaming_split_uncorrected").
-    split_uncorrected: list[str] = []
-    try:
-        small_sf = float(small_dir.rstrip("/").split("sf")[-1])
-    except ValueError:
-        small_sf = 0.0
-    if (
-        sf > small_sf > 0
-        and os.path.isdir(small_dir)
-        and os.path.abspath(small_dir) != os.path.abspath(sf_dir)
-    ):
-        for name in sorted(QUERIES):
-            tag = name.split("_", 1)[0]
-            if tag not in split_tags or name not in timings:
-                continue
-            t_small = None
-            for _pass in range(2):
-                t0 = time.perf_counter()
-                try:
-                    df = QUERIES[name](spark, small_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    el = time.perf_counter() - t0
-                    t_small = el if t_small is None else min(t_small, el)
-                except Exception:
-                    t_small = None
-                    break
-                spark.catalog.clearCache()
-            if t_small is None:
-                split_uncorrected.append(name)
-                continue
-            t_big = timings[name]
-            fixed = max(
-                0.0,
-                (t_small * sf - t_big * small_sf) / (sf - small_sf),
-            )
-            streaming_split[name] = {
-                "fixed_sec": round(fixed, 3),
-                "data_sec": round(t_big - fixed, 3),
-                "t_small_sec": round(t_small, 3),
-                "sf_small": small_sf,
-            }
-
     # Composed-DAG entry: the reference's actual workload shape (s01→s09
     # chain), timed per stage. Kept OUT of the suite total so suite_sec
     # stays comparable across rounds; recorded under its own key.
@@ -207,14 +138,8 @@ def main() -> None:
     assert len(set(tags.values())) == len(tags), "query tags must stay unique"
 
     # The cross-round comparable number: suite minus one-time staged
-    # builds minus the measured streaming/txlog per-invocation fixed
-    # costs — what the queries themselves cost on DATA at this sf.
-    query_only = round(
-        total
-        - sum(stage_builds.values())
-        - sum(v["fixed_sec"] for v in streaming_split.values()),
-        4,
-    )
+    # builds — what the queries themselves cost at this sf.
+    query_only = round(total - sum(stage_builds.values()), 4)
 
     full = {
         "metric": "pm25ml_spark query suite wall time",
@@ -229,10 +154,6 @@ def main() -> None:
         full["stage_builds"] = stage_builds
     if pipe_stages:
         full["pipeline_e2e"] = pipe_stages
-    if streaming_split:
-        full["streaming_split"] = streaming_split
-    if split_uncorrected:
-        full["streaming_split_uncorrected"] = split_uncorrected
     if errors:
         full["errors"] = errors
     here = os.path.dirname(os.path.abspath(__file__))
@@ -249,11 +170,6 @@ def main() -> None:
     }
     if pipe_stages:
         compact["pipeline_e2e_sec"] = pipe_stages.get("total")
-    if streaming_split:
-        compact["stfix"] = {
-            tags[n]: round(v["fixed_sec"], 2)
-            for n, v in sorted(streaming_split.items())
-        }
     if errors:
         compact["errors"] = {tags[n]: e[:60] for n, e in errors.items()}
     line = compact_line(compact)

@@ -13,7 +13,6 @@ idiomatically on Spark DataFrames / Spark SQL so every operator distributes:
 - ``functions``  — scalar + exact-arithmetic + text + vector column functions.
 - ``plans``      — the query catalog: every operator from SURVEY §2 as a
                    (spark_fn, oracle_sql) pair runnable against the testdata.
-- ``streaming``  — Structured Streaming variants of the batch operators.
 - ``ml``         — the imputer: group-aware CV folds, a single-node booster
                    fitted on the collected sample, distributed predict.
 """

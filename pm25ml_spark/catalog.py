@@ -42,8 +42,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize the events ``ts`` column to TIMESTAMP regardless of the
-    parquet physical type the generator used (nanos-as-long or NTZ micros).
-    Shared by the batch catalog and the streaming reader."""
+    parquet physical type the generator used (nanos-as-long or NTZ micros)."""
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         # nanos → micros must use integer division: float division loses

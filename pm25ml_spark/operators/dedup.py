@@ -66,8 +66,7 @@ def tokens(col="text") -> F.Column:
 
 def word_ngrams(col="text", n: int = 3) -> F.Column:
     """Word n-gram INSTANCES (not distinct) of a single-space-tokenized
-    text — the shared expression under shingling, decontamination, and
-    the streaming duals.
+    text — the shared expression under shingling and decontamination.
 
     slice+array_join instead of per-position element_at: one array window
     per shingle (measured ~4× cheaper; ~12× when the token array is
@@ -332,8 +331,8 @@ def jaccard_delta_pairs(
     with J ≥ t whose LATER endpoint is in the batch — batch-internal
     pairs AND batch-vs-existing cross pairs together.
 
-    The incremental lifecycles (``plans/dup_graph.dup_edges_incremental``,
-    ``streaming/dedup_maintain``) used to run TWO full pipelines per
+    The incremental lifecycle (``plans/dup_graph.dup_edges_incremental``)
+    used to run TWO full pipelines per
     batch — :func:`jaccard_pairs` over the batch plus
     :func:`jaccard_pairs_between` against the pre-batch store — paying
     the document-frequency aggregate, the per-doc prefix window, the

@@ -497,8 +497,8 @@ def ivf_commit_audit(written: DataFrame) -> dict:
     """Per-commit IVF assignment-quality counters for the txlog entry
     (``TxTable.append(entry_extra=...)``): row count, mean assigned-
     list cosine DISTANCE (1 − asim), and the fraction of vectors whose
-    assigned similarity is ≤ 0 (no centroid even in their half-space —
-    the out-of-list analogue of the z-order clamped counter). One tiny
+    assigned similarity is ≤ 0 (no centroid even in their half-space,
+    i.e. a vector the frozen quantizer cannot place). One tiny
     aggregate over the commit's already-written files. Prefer
     :func:`ivf_audit_observed` on write paths — same counters, no
     extra Spark job."""
@@ -531,8 +531,7 @@ def ivf_drift_report(
     table, ratio_threshold: float = 1.5, halfspace_threshold: float = 0.1
 ) -> dict:
     """Fold a maintained IVF index's per-commit ``ivf_drift`` audits
-    into a RETRAIN signal — the vector-store dual of
-    ``zorder_drift_report``: the coarse quantizer is frozen across
+    into a RETRAIN signal. The coarse quantizer is frozen across
     refreshes (that is what keeps them append-only), so ingest drift
     shows up as later commits' mean assigned-list distance growing
     relative to the BASE commit's. ``retrain`` fires when any refresh
@@ -545,8 +544,7 @@ def ivf_drift_report(
     An ``ivf_model`` entry (a :func:`retrain_ivf` rewrite) RESETS the
     fold — drift is always measured against the CURRENT frozen
     quantizer, and the retrain commit's own audit becomes the new
-    base, so the signal clears once the repair lands (the exact
-    model-boundary semantics of ``zorder_drift_report``)."""
+    base, so the signal clears once the repair lands."""
     audits = []
     for e in table.history():
         if e.get("ivf_model"):
@@ -580,9 +578,8 @@ def retrain_ivf(
     c_id: str = "cid",
     c_vec: str = "ce",
 ) -> tuple[int, dict]:
-    """The REPAIR verb :func:`ivf_drift_report` recommends — the
-    vector-store dual of ``streaming.zorder_maintain.recluster_zorder``:
-    train a FRESH coarse quantizer from the table's CURRENT vectors
+    """The REPAIR verb :func:`ivf_drift_report` recommends: train a
+    FRESH coarse quantizer from the table's CURRENT vectors
     (strided selection by default, distributed k-means with
     ``use_kmeans=True``), re-assign every vector to its nearest new
     centroid, and atomically OVERWRITE the inverted-list table so

@@ -50,8 +50,7 @@ _HASH_BITS = 60
 
 
 def mg_summarizer(col: str, k: int):
-    """The per-partition Misra-Gries pass as a ``mapInPandas`` function
-    (shared by the batch operator and the streaming candidate dual):
+    """The per-partition Misra-Gries pass as a ``mapInPandas`` function:
     O(k) state per task, emits the surviving candidate keys.
 
     Weighted/batched variant of the classic sketch: each Arrow batch is

@@ -64,12 +64,6 @@ def load_all_plans() -> None:
     """
     import pm25ml_spark.plans.relational  # noqa: F401
     import pm25ml_spark.plans.windows  # noqa: F401
-    # live (streaming/storage) registers early on purpose:
-    # staleness ties in the driver-facing sample break by registration
-    # position, and these entries are the ones whose driver verification
-    # carries the most information (they exercise whole subsystems, not
-    # one plan shape).
-    import pm25ml_spark.plans.live  # noqa: F401
     import pm25ml_spark.plans.domain  # noqa: F401
     import pm25ml_spark.plans.dedup  # noqa: F401
     import pm25ml_spark.plans.similarity  # noqa: F401

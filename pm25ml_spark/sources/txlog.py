@@ -489,8 +489,8 @@ class TxTable:
     ) -> DataFrame:
         """Multi-column data skip: a file survives only if EVERY
         predicate's [lo, hi] intersects that column's recorded min/max
-        (AND-of-ranges). With a Z-ORDER file layout (interleaved-bit
-        sort key over the predicate columns, ``operators/zorder.py``)
+        (AND-of-ranges). With a Z-ORDER file layout (files written in
+        order of an interleaved-bit sort key over the predicate columns)
         each file covers a compact rectangle of the key space, so a box
         predicate on ANY subset of the z-columns skips files — the
         multi-dimensional clustering a linear range layout cannot give
@@ -1107,7 +1107,7 @@ class TxTable:
                     sub,
                     "u" if bucket is None else f"__b={bucket}",
                 )
-                # mergeSchema: an additively-evolved table (d16 contract)
+                # mergeSchema: an additively-evolved table (add-column contract)
                 # holds files with and without later columns — a plain
                 # read samples ONE footer for the schema and would
                 # silently rewrite the merged files WITHOUT the newer
@@ -1336,7 +1336,7 @@ class TxTable:
         deleted-file-retention rule; Delta defaults to 7 days). Files
         still inside the grace stay on disk, remain referenced by the
         log, and are reclaimed by a later vacuum once aged. The default
-        0.0 keeps single-process lifecycles (tests, the d18/d20 plans)
+        0.0 keeps single-process lifecycles (e.g. the tests)
         deterministic; production multi-reader deployments should set
         hours-to-days.
 
@@ -1357,8 +1357,8 @@ class TxTable:
         therefore: **grace must exceed the maximum write-to-commit
         duration of any concurrent writer**. The 7-day default makes
         that hold for any realistic batch job; pass ``0.0`` only in
-        single-writer contexts (e.g. crash-residue cleanup in tests
-        and the d20 lifecycle plan) where no write can be in flight.
+        single-writer contexts (e.g. crash-residue cleanup in tests)
+        where no write can be in flight.
         Live snapshots are untouched by construction: an orphan is by
         definition in no snapshot's file set.
 
@@ -1484,8 +1484,8 @@ def sink_stream_exactly_once(
 
     ``transform`` (optional, ``batch_df -> DataFrame``) is applied to
     each micro-batch BEFORE the write — the hook that lets maintenance
-    sinks (z-keying + range partitioning, ``streaming/zorder_maintain``)
-    reuse this stamp machinery instead of re-implementing it as
+    sinks (e.g. clustering-key derivation + range partitioning) reuse
+    this stamp machinery instead of re-implementing it as
     at-least-once. It must be deterministic per batch: a replayed epoch
     re-runs it, and the stamp only guarantees the COMMIT is not
     duplicated, not that side effects inside transform are.

@@ -7,7 +7,7 @@ import pytest
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Multi-minute integration tests (threaded stress fuzzes, recall sweeps,
-# streaming-vs-batch dual equivalences, randomized interleavings) carry
+# randomized interleavings) carry
 # @pytest.mark.slow and are SKIPPED by default so the whole suite fits
 # the external verify driver's time budget (r13: the 2848 s run was cut
 # at ~46 % and tests_ok went false with zero failures). They are not

@@ -10,53 +10,39 @@ import json
 from bench import compact_line
 
 
-def _compact(n_queries: int, with_stfix: bool = True) -> dict:
-    c = {
+def _compact(n_queries: int) -> dict:
+    return {
         "metric": "suite_sec",
         "value": 123.45,
         "unit": "sec",
         "sf": 0.1,
         "queries": {f"q{i:03d}": 1.23 for i in range(n_queries)},
     }
-    if with_stfix:
-        c["stfix"] = {f"st{i:02d}": 2.34 for i in range(9)}
-    return c
 
 
 def test_small_catalog_keeps_full_precision_and_stfix():
     line = compact_line(_compact(50))
     d = json.loads(line)
     assert d["queries"]["q000"] == 1.23
-    assert "stfix" in d
     assert len(line) <= 1950
 
 
 def test_large_catalog_degrades_precision_before_dropping_stfix():
-    line = compact_line(_compact(150))
+    line = compact_line(_compact(160))
     d = json.loads(line)
     assert len(line) <= 1950
     assert d["queries"]["q000"] == 1.2  # 1-dp fallback
-    assert "stfix" in d  # survived at this size
 
 
 def test_huge_catalog_sheds_precision_before_stfix():
     """Precision goes first (integer seconds; exact numbers live in
-    BENCH_FULL.json) — the stfix split has no other driver-visible home,
-    so it must survive as long as the budget allows."""
+    BENCH_FULL.json) — the suite total and every per-query entry
+    survive."""
     line = compact_line(_compact(175))
     d = json.loads(line)
     assert len(line) <= 1950
-    assert "stfix" in d
     assert d["queries"]["q000"] == 1  # integer rung engaged
     assert d["value"] == 123.45 and len(d["queries"]) == 175
-
-
-def test_astronomical_catalog_drops_stfix_as_last_resort():
-    line = compact_line(_compact(205))
-    d = json.loads(line)
-    assert len(line) <= 1950
-    assert "stfix" not in d
-    assert len(d["queries"]) == 205
 
 
 def test_line_is_single_json_object_with_required_keys():

@@ -418,80 +418,3 @@ def test_geotiff_roundtrip_property(
     np.testing.assert_array_equal(out["values"], g)
     np.testing.assert_allclose(out["ys"], ys)
     np.testing.assert_allclose(out["xs"], xs)
-
-
-# ---------------------------------------------------------------------------
-# typed z-order ranks: order preservation + clamp/NULL invariants.
-# The Morton layout's pruning correctness rests entirely on ranks being
-# monotone in the source value (a non-monotone rank would scatter a
-# range predicate's rows across the key space and the per-file min/max
-# rectangles would still be "correct" but useless); fixtures can't
-# cover the value space, so randomized inputs do.
-
-
-@given(
-    vals=st.lists(
-        st.one_of(st.none(), st.integers(min_value=-10**6, max_value=10**6)),
-        min_size=2,
-        max_size=12,
-    ),
-    lo=st.integers(min_value=-10**4, max_value=0),
-    span=st.integers(min_value=1, max_value=10**5),
-    bits=st.integers(min_value=2, max_value=12),
-)
-@SETTINGS
-def test_rank_scale_monotone_clamped_null_safe(spark, vals, lo, span, bits):
-    from pyspark.sql import functions as F
-
-    from pm25ml_spark.operators.zorder import rank_scale
-
-    hi = lo + span
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = {
-        r.v: r.s
-        for r in df.withColumn(
-            "s", rank_scale(F.col("v"), lo, hi, bits)
-        ).collect()
-    }
-    top = (1 << bits) - 1
-    ranked = sorted((v, got[v]) for v in got if v is not None)
-    for (_v1, s1), (_v2, s2) in zip(ranked, ranked[1:]):
-        assert s1 <= s2, "rank must be monotone in the value"
-    for v, s in ranked:
-        assert 0 <= s <= top, "clamp must bound every rank"
-        if lo <= v <= hi and span:
-            lin = (v - lo) * top / span
-            assert abs(s - lin) <= 1, "in-bounds rank must track the scale"
-    for v in got:
-        if v is None:
-            assert got[v] is None, "NULL must stay NULL, never an edge cell"
-
-
-@given(
-    words=st.lists(
-        st.text(
-            alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")),
-            min_size=1,
-            max_size=8,
-        ),
-        min_size=2,
-        max_size=10,
-        unique=True,
-    ),
-    bits=st.integers(min_value=3, max_value=10),
-)
-@SETTINGS
-@pytest.mark.slow
-def test_typed_string_rank_preserves_lexicographic_order(spark, words, bits):
-    """Dictionary rank must order exactly like the string column itself
-    — otherwise a BETWEEN predicate's stats prune and the z-layout
-    disagree about which files a range can live in."""
-    from pm25ml_spark.operators.zorder import typed_bounds, typed_zorder_key_fixed
-
-    df = spark.createDataFrame([(w, 0) for w in words], "s string, pad long")
-    spec = typed_bounds(df, ["s", "pad"])
-    keyed = typed_zorder_key_fixed(df, spec, bits=bits)
-    got = {r.s: r["__z"] for r in keyed.collect()}
-    ordered = sorted(words)
-    ks = [got[w] for w in ordered]
-    assert ks == sorted(ks), (ordered, ks)

@@ -43,6 +43,17 @@ def test_sample_order_is_permutation():
     assert list(o) == [n for n in order if n in o]
 
 
+def test_force_next_pins_only_registered_queries():
+    """A pin naming a deleted query would silently do nothing; every
+    FORCE_NEXT entry must still be in the catalog."""
+    from pm25ml_spark.plans import registry
+
+    registry.load_all_plans()
+    assert entry.FORCE_NEXT <= set(registry.QUERIES), sorted(
+        entry.FORCE_NEXT - set(registry.QUERIES)
+    )
+
+
 def test_not_green_promoted_to_prefix(tmp_path, monkeypatch):
     """Synthetic latest-round file: red + absent names must lead."""
     import json

@@ -3,7 +3,7 @@
 Usage: python tools/explain_dump.py OUTDIR SUFFIX query [query ...]
 Writes OUTDIR/<query>_<SUFFIX>.txt for each query.
 
-Lifecycle queries (txlog/streaming) RUN their setup when the plan is
+Lifecycle queries (txlog) RUN their setup when the plan is
 built; the dumped plan is the final returned frame's physical plan.
 """
 

@@ -19,10 +19,9 @@ physical plan and count the operators that matter at 100 TB:
                            more of the query fused into generated JVM
                            loops)
 
-Writes PLAN_CENSUS.json: per-query counts + catalog totals. Streaming
-drains and txlog queries execute real side effects to produce their
-result frame; their census reflects the final BATCH read-back plan
-(the streaming micro-batch plans are pinned separately in pytest).
+Writes PLAN_CENSUS.json: per-query counts + catalog totals. Txlog
+queries execute real side effects to produce their result frame; their
+census reflects the final read-back plan.
 
 Usage: python tools/plan_census.py [--sf-dir /root/testdata/sf0.001]
 """

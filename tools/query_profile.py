@@ -30,8 +30,6 @@ def main() -> None:
         "a09_mad_outliers",
         "a10_weighted_median_price",
         "a06_exact_quantiles",
-        "d12_txlog_upsert_merge",
-        "d13_txlog_time_travel",
         "ss09_lsh_multitable_top1",
         "sk01_heavy_hitters",
         "m10_ks_drift",

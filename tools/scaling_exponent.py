@@ -5,7 +5,7 @@ get a THIRD point (a sharded-replication sf, see ``gen_scaled_sf.py``)
 and a least-squares log-log fit of ``t = c·sf^e``.
 
 Reading ``e``: fixed per-query overhead (job scheduling, Python worker
-round-trips, streaming micro-batch choreography, parquet footers)
+round-trips, parquet footers)
 biases the fitted exponent DOWN at these tiny local sfs, so e is an
 upper-level sanity gate, not a precise complexity measure: e < 1.2
 means "no superlinear blow-up is hiding under the constant"; anything
@@ -40,21 +40,17 @@ _MARK_B = "<!-- scaling-exponent:end -->"
 
 # the r9 verdict's named heavy hitters — always measured
 _MANDATORY = [
-    "a09", "a10", "sk01", "cp04", "d12", "st05", "st06", "dd04", "dd07",
+    "a09", "a10", "sk01", "cp04", "dd04", "dd07",
     "t12",
-    # r10 additions: the incremental-artifact and clustered-copy
-    # lifecycles must prove sublinear growth too
-    "gr08", "ss13", "ss14", "d18", "st10",
-    # r11 additions: typed z-dims and the vacuum/retention lifecycle
-    "d19", "d20",
-    # r12 additions: st11 typed streaming maintenance, the IVF retrain
-    # and IVFADC-rerank lifecycles (new plans need growth evidence too)
-    "st11", "ss17", "ss18",
-    # r14 additions (r13 ADVICE): pin d13 and st04 permanently (they
-    # silently rotated out of the r13 sample), and track st09/dd15 —
-    # st09's exponent tripled in r13 (0.145 -> 0.342, the hash-order
-    # prefix fan-in) and both carry this round's snapshot-probe change
-    "d13", "st04", "st09", "dd15",
+    # r10 additions: the incremental-artifact lifecycles must prove
+    # sublinear growth too
+    "gr08", "ss13", "ss14",
+    # r12 additions: the IVF retrain and IVFADC-rerank lifecycles (new
+    # plans need growth evidence too)
+    "ss17", "ss18",
+    # r14 addition (r13 ADVICE): track dd15, which carries that round's
+    # snapshot-probe change
+    "dd15",
 ]
 
 
