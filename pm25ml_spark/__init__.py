@@ -9,7 +9,7 @@ idiomatically on Spark DataFrames / Spark SQL so every operator distributes:
 - ``storage``    — hive-path artifact store + declared-schema validation
                    (the reference's idempotency backbone, SURVEY §4.3).
 - ``operators``  — combine / features / sampling / interpolation /
-                   dedup / similarity / asof / nn-join building blocks.
+                   dedup / near-dup cosine / asof / nn-join building blocks.
 - ``functions``  — scalar + exact-arithmetic + text + vector column functions.
 - ``plans``      — the query catalog: every operator from SURVEY §2 as a
                    (spark_fn, oracle_sql) pair runnable against the testdata.

@@ -26,7 +26,7 @@ ROADMAP item.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +54,6 @@ class PipelineSettings:
     max_iter: int = 10
     quality_gate: tuple[float, float] | None = None
     interpolate_cols: tuple[str, ...] = ()
-    extra: dict = field(default_factory=dict)
 
 
 class Pm25Pipeline:

@@ -93,18 +93,16 @@ def staged_table(
     name: str,
     params: tuple,
     build: Callable[[], DataFrame],
-    partition_col: str | None = None,
     range_col: str | None = None,
     stats_cols: list[str] | None = None,
     inputs: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Return the staged table for ``(sf_dir, name, params)``, building
-    it with ``build()`` on first use. ``partition_col`` hash-partitions
-    the write (uniform files regardless of upstream skew); ``range_col``
-    RANGE-partitions it instead, which makes the per-file min/max of
-    that column TIGHT — the layout that turns ``stats_cols`` +
-    ``TxTable.read_pruned`` into real data skipping (a hash layout puts
-    the full key range in every file, so its stats prune nothing).
+    it with ``build()`` on first use. ``range_col`` RANGE-partitions the
+    write, which makes the per-file min/max of that column TIGHT — the
+    layout that turns ``stats_cols`` + ``TxTable.read_pruned`` into real
+    data skipping (a hash layout puts the full key range in every file,
+    so its stats prune nothing).
     ``stats_cols`` records per-file min/max for pruned point lookups.
     ``inputs`` names the source tables whose content version is folded
     into the memo key (see :func:`_input_fingerprint`); None fingerprints
@@ -139,8 +137,6 @@ def staged_table(
                     # identical either way; only the file layout
                     # depends on the sample)
                     df = df.repartitionByRange(nparts, F.col(range_col))
-                elif partition_col is not None:
-                    df = df.repartition(nparts, F.col(partition_col))
                 TxTable(spark, path).append(df, stats_cols=stats_cols)
                 BUILD_COUNTS[name] = BUILD_COUNTS.get(name, 0) + 1
                 BUILD_SECONDS[name] = (
@@ -157,11 +153,9 @@ def staged_incremental_table(
     name: str,
     params: tuple,
     steps: list[tuple[str, Callable[[], DataFrame]]],
-    partition_col: str | None = None,
     range_col: str | None = None,
     stats_cols: list[str] | None = None,
     inputs: tuple[str, ...] | None = None,
-    entry_extra=None,
 ) -> DataFrame:
     """INCREMENTALLY-MAINTAINED staged artifact: each ``(step, build)``
     appends one transaction-log commit on first use — the base build
@@ -174,13 +168,8 @@ def staged_incremental_table(
     a delta refresh did NOT re-run the base build.
 
     Same memo/locking/layout semantics as :func:`staged_table`; every
-    step's output is laid out with the shared ``range_col``/
-    ``partition_col`` policy so later commits keep the table's pruning
-    contract. ``entry_extra`` (``written_df -> dict``) is forwarded to
-    every step's :meth:`TxTable.append` — the hook maintained indices
-    use to record per-commit drift audits (e.g.
-    ``operators.similarity.ivf_commit_audit``) so a retrain signal can
-    be read from the log alone."""
+    step's output is laid out with the shared ``range_col`` policy so
+    later commits keep the table's pruning contract."""
     import time
 
     from pyspark.sql import functions as F
@@ -209,11 +198,7 @@ def staged_incremental_table(
                     df = build()
                     if range_col is not None:
                         df = df.repartitionByRange(nparts, F.col(range_col))
-                    elif partition_col is not None:
-                        df = df.repartition(nparts, F.col(partition_col))
-                    table.append(
-                        df, stats_cols=stats_cols, entry_extra=entry_extra
-                    )
+                    table.append(df, stats_cols=stats_cols)
                     skey = f"{name}.{step}"
                     BUILD_COUNTS[skey] = BUILD_COUNTS.get(skey, 0) + 1
                     BUILD_SECONDS[skey] = (

@@ -508,8 +508,8 @@ def cp04_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # feasible at corpus scale — candidate pairs shrink from n² to
 # Σ(cluster²) ≈ n²/k, and the within-cluster join is an equi-join on the
 # cluster id, never a cartesian. Composition of the catalog's own
-# operators: strided deterministic centroids + cosine assignment (the
-# ss04 assign step), JVM higher-order-function cosine pairs (the dd06
+# operators: strided deterministic centroids + broadcast cosine
+# assignment, JVM higher-order-function cosine pairs (the dd06
 # scoring), size-adaptive connected components (dd08). The oracle
 # recomputes the identical chain in SQL (recursive CTE for components).
 def _cos_sql_pair(av: str, bv: str) -> str:
@@ -591,8 +591,8 @@ def cp03_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not n×k (round-5 finding: the row_number window here shuffled the
     # whole explosion; test_plan_quality pins the window's absence).
     # At true 100 TB the production variant swaps the strided centroids
-    # for a fixed-size similarity.kmeans_codebook + mapInPandas assign
-    # (zero explosion); this spelling keeps the static SQL oracle.
+    # for a fixed-size trained codebook + mapInPandas assign (zero
+    # explosion); this spelling keeps the static SQL oracle.
     score = F.round(
         dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6
     )

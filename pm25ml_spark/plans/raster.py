@@ -78,7 +78,7 @@ def k02_raster_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `operators/interpolation.py` matches the reference's scipy.griddata
 # numerically but has no SQL dual, so IDW carries the family's
 # value-hash check). Synthetic station/grid geometry from the embedding
-# table, as in ss06: targets are every 5th vector, sources the rest.
+# table: targets are every 5th vector, sources the rest.
 # Scale shape: 3×3 cell-bucketed equi-join — no cross join, no broadcast
 # of the source table; the oracle pays the cross join only at oracle SF.
 _IDW_RADIUS_KM, _IDW_CELL_DEG = 250.0, 4.0

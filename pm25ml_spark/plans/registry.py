@@ -66,7 +66,6 @@ def load_all_plans() -> None:
     import pm25ml_spark.plans.windows  # noqa: F401
     import pm25ml_spark.plans.domain  # noqa: F401
     import pm25ml_spark.plans.dedup  # noqa: F401
-    import pm25ml_spark.plans.similarity  # noqa: F401
     import pm25ml_spark.plans.text  # noqa: F401
     import pm25ml_spark.plans.sketches  # noqa: F401
     import pm25ml_spark.plans.raster  # noqa: F401

@@ -57,7 +57,7 @@ class ObservedEntryExtra:
     """An ``entry_extra`` whose audit metadata rides the WRITE job's
     ``DataFrame.observe`` instead of re-reading the just-written files
     with a second Spark job — for audits that are plain global
-    aggregates over exactly the written rows (drift counters, IVF
+    aggregates over exactly the written rows (drift counters,
     assignment quality). ``exprs`` maps metric name → aggregate Column
     evaluated over the written rows; ``finalize`` maps the observed
     metrics dict to the entry fields to merge. Audits that need joins

@@ -6,15 +6,15 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Multi-minute integration tests (threaded stress fuzzes, recall sweeps,
-# randomized interleavings) carry
-# @pytest.mark.slow and are SKIPPED by default so the whole suite fits
-# the external verify driver's time budget (r13: the 2848 s run was cut
-# at ~46 % and tests_ok went false with zero failures). They are not
+# Multi-minute integration tests (threaded stress fuzzes, randomized
+# interleavings) carry @pytest.mark.slow and are SKIPPED by default so
+# the whole suite fits the external verify driver's time budget (r13:
+# the 2848 s run was cut at ~46 % and tests_ok went false with zero
+# failures). They are not
 # deleted: the round ledger runs them with PM25ML_RUN_SLOW=1, and each
 # skipped test's subject keeps a fast witness in the default profile
 # (oracle parity, unit-level operator checks) or a per-round tool sweep
-# (tools/ann_recall_sweep.py, tools/strict_sweep.py, tools/plan_census.py).
+# (tools/strict_sweep.py, tools/plan_census.py).
 
 
 def pytest_configure(config):

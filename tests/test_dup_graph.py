@@ -288,33 +288,6 @@ def test_staged_table_concurrent_first_build_is_single(spark, tmp_path):
     assert all(r == want for r in results) and len(results) == 4
 
 
-def test_pq_codes_staged_once_and_exact(spark, tmp_path):
-    """The staged PQ index must equal the directly-encoded codes and be
-    built once for both ADC consumers."""
-    from pm25ml_spark.operators import similarity as S
-    from pm25ml_spark.plans.similarity import (
-        _PQ_M,
-        _PQ_OFFSET,
-        _PQ_SD,
-        _PQ_STRIDE,
-        _pq_codes_staged,
-        _qc,
-    )
-
-    SF = _private_corpus(tmp_path, "embeddings")
-    before = ART.BUILD_COUNTS.get("pq_codes", 0)
-    staged = _pq_codes_staged(spark, SF)
-    got = {tuple(r) for r in staged.collect()}
-    _, _, c = _qc(spark, SF)
-    csubs = S.pq_codebook_subspaces(c, _PQ_M, _PQ_SD, _PQ_STRIDE, _PQ_OFFSET)
-    want = {
-        tuple(r) for r in S.pq_encode(c, csubs, _PQ_M, _PQ_SD).collect()
-    }
-    assert got == want and got
-    _pq_codes_staged(spark, SF).count()
-    assert ART.BUILD_COUNTS.get("pq_codes", 0) == before + 1
-
-
 def test_cache_registry_is_true_lru():
     """Re-registering an existing frame must move it to the MRU end —
     eviction order is LRU, not first-insert FIFO."""

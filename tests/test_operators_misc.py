@@ -326,9 +326,14 @@ def test_bucketed_nn_join_matches_broadcast(spark):
         r.id: (r.grid_id, r.nn_distance_km)
         for r in nearest_grid_join(pts, grid).collect()
     }
+    bucketed_df = nearest_grid_join_bucketed(pts, grid, cell_deg=0.5)
+    # the bucketed join must stay an equi-join on the cell key: a
+    # cartesian/BNL product is the failure mode the operator exists to avoid
+    plan = bucketed_df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     bucketed = {
-        r.id: (r.grid_id, r.nn_distance_km)
-        for r in nearest_grid_join_bucketed(pts, grid, cell_deg=0.5).collect()
+        r.id: (r.grid_id, r.nn_distance_km) for r in bucketed_df.collect()
     }
     assert set(bucketed) == set(exact)
     for i in exact:

@@ -81,16 +81,6 @@ def test_scaffold_day_side_broadcast(spark, sf_dir, name):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_ss04_probe_table_broadcast(spark, sf_dir):
-    """The (query, centroid) probe table is tiny; the inverted-list join
-    must broadcast it — a shuffled probe join would move every candidate
-    row at 10^9-vector scale."""
-    df = QUERIES["ss04_ivf_top3"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_dd03_no_cartesian_product(spark, sf_dir):
     """Prefix-filtered Jaccard must candidate-join on the shingle key —
     never fall back to a cartesian pair explosion."""
@@ -186,16 +176,6 @@ def test_cp02_decontamination_broadcasts_benchmark(spark, sf_dir):
     assert "BroadcastHashJoin" in physical_plan(df)
 
 
-def test_ss06_nn_join_no_cartesian(spark, sf_dir):
-    """The bucketed NN join must stay an equi-join on the cell key — a
-    cartesian/BNL product here is the exact failure mode the operator
-    exists to avoid."""
-    df = QUERIES["ss06_nn_bucketed_join"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_m01_fold_map_broadcasts(spark, sf_dir):
     """The fold map is distinct-group-sized: its join back onto the full
     frame must broadcast, never shuffle the corpus."""
@@ -284,50 +264,6 @@ def test_sk02_hll_is_jvm_only(spark, sf_dir):
     assert "HashAggregate" in plan
 
 
-def test_ss07_pq_is_broadcast_pipeline_with_one_prune_kernel(spark, sf_dir):
-    """PQ ADC over the STAGED code index (r9): the query plan reads the
-    staged codes table — ZERO Python kernels at query time (the encode
-    near-argmin prune runs once in the index build, pinned below) — and
-    the LUT join broadcasts; no cartesian, no sort-merge. The corpus
-    side moves through narrow map + partial-agg stages only."""
-    df = QUERIES["ss07_pq_adc_top3"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert plan.count("MapInPandas") == 0  # index staged, not rebuilt
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # the index BUILD plan keeps exactly ONE Arrow kernel (the K×
-    # near-argmin winnower); the decision fold stays JVM-side, visible
-    # as the broadcast join after the kernel
-    from pm25ml_spark.operators import similarity as S
-    from pm25ml_spark.plans.similarity import (
-        _PQ_M,
-        _PQ_OFFSET,
-        _PQ_SD,
-        _PQ_STRIDE,
-        _qc,
-    )
-
-    _, _, c = _qc(spark, sf_dir)
-    csubs = S.pq_codebook_subspaces(c, _PQ_M, _PQ_SD, _PQ_STRIDE, _PQ_OFFSET)
-    build_plan = physical_plan(S.pq_encode(c, csubs, _PQ_M, _PQ_SD))
-    assert build_plan.count("MapInPandas") == 1
-    assert "BroadcastHashJoin" in build_plan
-    assert "SortMergeJoin" not in build_plan
-
-
-def test_ss08_rerank_fetch_is_broadcast(spark, sf_dir):
-    """Stage-2 exact re-rank must FETCH shortlisted vectors via broadcast
-    joins (shortlist and probe sides both tiny) — never rescan/shuffle
-    the corpus a second time."""
-    df = QUERIES["ss08_pq_rerank_top3"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_t15_fim_is_pure_projection(spark, sf_dir):
     """FIM is row-local: the plan must contain NO exchange at all — a
     100 TB corpus is transformed at scan speed with zero shuffle."""
@@ -358,78 +294,6 @@ def test_t11_repetition_no_cartesian(spark, sf_dir):
     df = QUERIES["t11_repetition_signals"](spark, sf_dir)
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
-
-
-def test_ss09_multitable_join_is_bucket_equi(spark, sf_dir):
-    """The L-table union must still reach the corpus through a (tbl,
-    bucket) equi-join with the probe side broadcast — never a cartesian,
-    never a corpus-side sort-merge."""
-    df = QUERIES["ss09_lsh_multitable_top1"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-@pytest.mark.slow
-def test_lsh_query_plans_read_staged_postings(spark, sf_dir):
-    """ss03/ss09 read the build-once staged postings table (r10): the
-    query-time plan must scan the raw embeddings parquet exactly ONCE
-    (the query side) — the corpus-side L×n_planes signature pass runs in
-    the index build, once per corpus version, never per query. Two plans
-    per query pin both halves: scan count at query time, and postings
-    built exactly once across repeated invocations."""
-    from pm25ml_spark.plans.artifacts import BUILD_COUNTS
-
-    for name, n_planes, n_tables in [
-        ("ss03_lsh_bucket_top1", 6, 1),
-        ("ss09_lsh_multitable_top1", 8, 4),
-    ]:
-        df = QUERIES[name](spark, sf_dir)
-        plan = physical_plan(df)
-        # one scan of embeddings.parquet (queries) + one of the staged
-        # postings TxTable — never a second raw-corpus scan
-        assert plan.count("Scan parquet") == 2, name
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-        art = f"lsh_postings_p{n_planes}x{n_tables}"
-        builds_before = BUILD_COUNTS.get(art, 0)
-        assert builds_before >= 1, art
-        QUERIES[name](spark, sf_dir)  # re-plan: must hit the stage memo
-        assert BUILD_COUNTS.get(art, 0) == builds_before, art
-        # postings carry `cl` for the filtered consumer; unfiltered
-        # probes must not read it — Catalyst prunes it from the scan
-        read_schemas = [
-            seg.split("\n", 1)[0]
-            for seg in plan.split("ReadSchema:")[1:]
-        ]
-        assert read_schemas and not any("cl" in s for s in read_schemas), name
-
-
-def test_ss15_filtered_probe_shares_ss03_artifact(spark, sf_dir):
-    """Filtered search (ss15) must read the SAME staged postings build
-    as ss03 (one index, two probe shapes — no second corpus signing),
-    keep the label predicate inside the bucket join (pre-filter: a
-    Filter on ql = cl below the ranking window), and stay Python-free
-    with broadcast-only joins."""
-    from pm25ml_spark.plans.artifacts import BUILD_COUNTS
-
-    QUERIES["ss03_lsh_bucket_top1"](spark, sf_dir)
-    builds_before = BUILD_COUNTS.get("lsh_postings_p6x1", 0)
-    df = QUERIES["ss15_filtered_lsh_top2"](spark, sf_dir)
-    assert BUILD_COUNTS.get("lsh_postings_p6x1", 0) == builds_before
-    plan = physical_plan(df)
-    assert plan.count("Scan parquet") == 2
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # the metadata predicate reaches the index: Catalyst folds ql = cl
-    # into the JOIN KEYS (candidates of the wrong label never leave the
-    # hash join) and pushes the implied isnotnull(cl) into the postings
-    # scan — the pre-filter evaluated at the index, not after ranking
-    import re
-
-    assert re.search(r"BroadcastHashJoin \[cl#\d+, tbl#", plan), plan[:600]
-    assert "isnotnull(cl#" in plan
 
 
 # ---- catalog-wide unpartitioned-window audit ------------------------------
@@ -563,17 +427,6 @@ def test_t16_novelty_no_cartesian(spark, sf_dir):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_ss10_ivfpq_corpus_joins_are_equi_lut_broadcast(spark, sf_dir):
-    """IVFADC: the two corpus-sized joins (codes x assignment on cid,
-    scoring vs the probe LUT on (cen,s,code)) must be equi-joins with
-    the LUT broadcast; nothing quadratic, no cartesian."""
-    df = QUERIES["ss10_ivfpq_top3"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_d07_forward_asof_is_single_shuffle_union_window(spark, sf_dir):
@@ -813,69 +666,6 @@ def test_plan_census_is_fresh():
         n: c["error"] for n, c in doc["queries"].items() if "error" in c
     }
     assert not errs, f"census walk errored on: {errs}"
-
-
-def test_ss04_ivf_query_plan_is_python_free(spark, sf_dir):
-    """IVF over the STAGED inverted-list table (r10): the query-time
-    plan reads staged lists — zero Python kernels (the assign kernel
-    runs once in the index build), broadcast probe + query joins, JVM
-    cosine, no cartesian/sort-merge."""
-    df = QUERIES["ss04_ivf_top3"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert plan.count("MapInPandas") == 0
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # the index BUILD is exactly the one Arrow assign kernel
-    from pm25ml_spark.operators import similarity as S
-    from pm25ml_spark.plans.similarity import _qc
-
-    _, _, c = _qc(spark, sf_dir)
-    build_plan = physical_plan(
-        S.ivf_assign(c, centroid_stride=100, centroid_offset=7)
-    )
-    assert build_plan.count("MapInPandas") == 1
-
-
-def test_ss10_ivfpq_query_plan_is_python_free(spark, sf_dir):
-    """IVFADC over the STAGED residual codebook + code table (r10):
-    query-time is LUT broadcast join + decimal ADC aggregate + window —
-    zero Python kernels; the coarse-assign and PQ-encode kernels live in
-    the one-time staged builds."""
-    df = QUERIES["ss10_ivfpq_top3"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert plan.count("MapInPandas") == 0
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_ss13_incremental_ivf_query_plan_is_python_free(spark, sf_dir):
-    """IVF over the INCREMENTALLY-maintained staged lists (r10): same
-    Python-free broadcast query shape as ss04."""
-    df = QUERIES["ss13_incremental_ivf_top2"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert plan.count("MapInPandas") == 0
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_lsh_probe_expression_stays_subquadratic(spark, sf_dir):
-    """r11 regression pin for the probe-side expression blowup: the
-    multi-table probe must compute its L signatures once per row
-    (signature array + posexplode + mask explode = exactly TWO Generate
-    nodes). The old shape — tables × masks probe structs each inlining
-    the ~(planes × dim)-term signature tree via CollapseProject — was a
-    ~76k-node expression at (4 tables, h=2) and an 8× query-time
-    regression; one Generate with a giant struct array would recreate
-    it."""
-    df = QUERIES["ss09_lsh_multitable_top1"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert plan.count("Generate ") == 2, plan.count("Generate ")
 
 
 def test_wide_granule_reader_plan_has_no_exchange_or_cache(spark):

@@ -1,59 +1,20 @@
-"""Unit tests for the similarity operators' edge semantics.
+"""Unit tests for the near-duplicate cosine kernel and two small helpers.
 
-Parity tests (tests/test_oracle_parity.py) check the registered plans
-value-for-value against DuckDB; these cover the operator-level edges the
-plans don't reach: k larger than the candidate set, tie-breaking, self-
-exclusion, and regex projection column rules.
+The kernel's pairs are emitted once each, ordered ``id_a < id_b``, and cut
+at the threshold; regex projection keeps the id columns; a CSV read with a
+declared schema round-trips nulls.
 """
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from pm25ml_spark.operators.combine import regex_project
-from pm25ml_spark.plans.registry import load_all_plans
-
-load_all_plans()
-from pm25ml_spark.operators.similarity import (
-    cosine_neardup_pairs,
-    cosine_topk,
-    ivf_topk,
-    kmeans_codebook,
-    lsh_bucket_topk,
-    probe_masks,
-)
+from pm25ml_spark.operators.similarity import cosine_neardup_pairs
 
 
 def _vec_df(spark, name_id, name_vec, rows):
     return spark.createDataFrame(
         rows, f"{name_id} long, {name_vec} array<float>"
     )
-
-
-def test_cosine_topk_k_exceeds_candidates(spark):
-    # 3 candidates, one of which is the query itself -> only 2 rows,
-    # both emitted even though k=5 (the kth-threshold branch must not
-    # drop rows when a batch holds fewer than k candidates).
-    q = _vec_df(spark, "qid", "qe", [(1, [1.0, 0.0])])
-    c = _vec_df(
-        spark, "cid", "ce", [(1, [1.0, 0.0]), (2, [1.0, 0.1]), (3, [0.0, 1.0])]
-    )
-    out = cosine_topk(q, c, k=5).orderBy("rk").collect()
-    assert [r.cid for r in out] == [2, 3]
-    assert out[0].rk == 1 and out[0].score > 0.99
-    assert out[1].score == 0.0
-
-
-def test_cosine_topk_tie_broken_by_candidate_id(spark):
-    # two identical candidates: equal rounded score, lower cid ranks first
-    q = _vec_df(spark, "qid", "qe", [(10, [1.0, 0.0])])
-    c = _vec_df(
-        spark, "cid", "ce", [(7, [2.0, 0.0]), (5, [3.0, 0.0]), (9, [0.5, 0.5])]
-    )
-    out = cosine_topk(q, c, k=2).orderBy("rk").collect()
-    assert [(r.cid, r.rk) for r in out] == [(5, 1), (7, 2)]
-    assert out[0].score == 1.0 == out[1].score
 
 
 def test_cosine_neardup_pairs_symmetric_and_ordered(spark):
@@ -77,87 +38,6 @@ def test_cosine_neardup_threshold_excludes(spark):
     )
     out = cosine_neardup_pairs(emb, threshold=0.99, n_blocks=2).collect()
     assert [(r.id_a, r.id_b) for r in out] == [(1, 2)]
-
-
-def test_ivf_topk_excludes_self_and_ranks(spark):
-    # centroid = id 0 (stride 10, offset 0); all vectors in one list
-    rows = [(i, [1.0, float(i) / 100.0]) for i in range(5)]
-    q = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "qid long, qe array<float>"
-    )
-    c = _vec_df(spark, "cid", "ce", rows)
-    out = ivf_topk(
-        q, c, k=10, nprobe=1, centroid_stride=10, centroid_offset=0
-    ).orderBy("rk").collect()
-    assert [r.cid for r in out] == [1, 2, 3, 4]  # self (cid=0) excluded
-    assert [r.rk for r in out] == [1, 2, 3, 4]  # closest angle first
-
-
-def test_probe_masks_distinct_and_complete():
-    m0 = probe_masks(6, 0)
-    m1 = probe_masks(6, 1)
-    m2 = probe_masks(6, 2)
-    assert m0 == [0]
-    assert len(m1) == 7 and len(set(m1)) == 7
-    assert len(m2) == 1 + 6 + 15 and len(set(m2)) == 22
-    assert all(bin(m).count("1") <= 2 for m in m2)
-    with pytest.raises(ValueError):
-        probe_masks(6, 3)
-
-
-def test_lsh_multiprobe_superset_of_single_probe(spark):
-    # multi-probe may only ADD candidate pairs: any query whose true
-    # neighbour was found at h=0 must find a >= score at h=2, and h=2
-    # must surface at least every h=0 hit (same planes, same corpus)
-    import random
-
-    rng = random.Random(11)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)
-    ]
-    q = _vec_df(spark, "qid", "qe", [r for r in rows if r[0] % 10 == 0])
-    c = _vec_df(spark, "cid", "ce", rows)
-    r0 = {
-        r.qid: (r.cid, r.score)
-        for r in lsh_bucket_topk(q, c, k=1, n_planes=5, dim=8, probe_hamming=0).collect()
-    }
-    r2 = {
-        r.qid: (r.cid, r.score)
-        for r in lsh_bucket_topk(q, c, k=1, n_planes=5, dim=8, probe_hamming=2).collect()
-    }
-    assert set(r0) <= set(r2)  # a probed query never loses its result
-    for qid, (cid, score) in r0.items():
-        assert r2[qid][1] >= score  # wider probe can only improve top-1
-
-
-def test_lsh_multiprobe_no_duplicate_pairs(spark):
-    # identical vectors share a bucket; Hamming-adjacent probes must not
-    # emit the same (qid, cid) twice (masks are distinct; candidate has
-    # exactly one bucket)
-    rows = [(i, [1.0, 0.5, -0.25, 0.125]) for i in range(6)]
-    q = _vec_df(spark, "qid", "qe", rows[:2])
-    c = _vec_df(spark, "cid", "ce", rows)
-    out = lsh_bucket_topk(q, c, k=100, n_planes=4, dim=4, probe_hamming=2).collect()
-    pairs = [(r.qid, r.cid) for r in out]
-    assert len(pairs) == len(set(pairs))
-
-
-def test_ivf_kmeans_codebook_equivalent_contract(spark):
-    # a trained codebook plugs into the same machinery: results carry the
-    # same schema/tie rules, deterministic across two runs
-    rows = [
-        (i, [float((i % 7) - 3), float((i * 3) % 5), 1.0]) for i in range(40)
-    ]
-    q = _vec_df(spark, "qid", "qe", [r for r in rows if r[0] % 10 == 0])
-    c = _vec_df(spark, "cid", "ce", rows)
-    cb = kmeans_codebook(c, n_centroids=4, n_iter=3)
-    assert cb.shape == (4, 3)
-    out1 = ivf_topk(q, c, k=2, nprobe=2, codebook=cb).orderBy("qid", "rk").collect()
-    out2 = ivf_topk(q, c, k=2, nprobe=2, codebook=cb).orderBy("qid", "rk").collect()
-    assert [tuple(r) for r in out1] == [tuple(r) for r in out2]
-    assert all(r.qid != r.cid for r in out1)
-    cb2 = kmeans_codebook(c, n_centroids=4, n_iter=3)
-    assert (cb == cb2).all()  # training itself is deterministic
 
 
 def test_regex_project_keeps_ids_and_matches_in_schema_order(spark):
@@ -190,674 +70,3 @@ def test_csv_source_roundtrip_with_declared_schema(spark, tmp_path):
     assert df.schema.simpleString() == (
         "struct<location_id:bigint,value:double,date:string>"
     )
-
-
-@pytest.mark.slow
-def test_lsh_multitable_superset_and_dedup(spark):
-    """L tables union candidates: every single-table hit survives with a
-    >= score, no (qid, cid) pair ranks twice, runs deterministic."""
-    import random
-
-    rng = random.Random(11)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)]
-    q = _vec_df(spark, "qid", "qe", [r for r in rows if r[0] % 10 == 0])
-    c = _vec_df(spark, "cid", "ce", rows)
-    r1 = {
-        r.qid: (r.cid, r.score)
-        for r in lsh_bucket_topk(
-            q, c, k=1, n_planes=5, dim=8, probe_hamming=1, n_tables=1
-        ).collect()
-    }
-    r4 = {
-        r.qid: (r.cid, r.score)
-        for r in lsh_bucket_topk(
-            q, c, k=1, n_planes=5, dim=8, probe_hamming=1, n_tables=4
-        ).collect()
-    }
-    assert set(r1) <= set(r4)
-    for qid, (_, score) in r1.items():
-        assert r4[qid][1] >= score
-    out = lsh_bucket_topk(
-        q, c, k=100, n_planes=4, dim=8, probe_hamming=2, n_tables=3
-    ).collect()
-    pairs = [(r.qid, r.cid) for r in out]
-    assert len(pairs) == len(set(pairs))
-    out2 = lsh_bucket_topk(
-        q, c, k=100, n_planes=4, dim=8, probe_hamming=2, n_tables=3
-    ).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-
-
-def test_pq_codes_are_compressed_representation(spark, sf_dir):
-    """pq_encode emits exactly m code rows per vector, each code a valid
-    codebook id — the 16x-compressed corpus sketch ADC scans."""
-    from pyspark.sql import functions as F
-
-    from pm25ml_spark.operators import similarity as S
-    from pm25ml_spark.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    csubs = S.pq_codebook_subspaces(c, m=16, sub_dim=4, stride=13, offset=7)
-    codes = S.pq_encode(c, csubs, m=16, sub_dim=4)
-    n_vec = c.count()
-    assert codes.count() == n_vec * 16
-    per_vec = codes.groupBy("cid").count().agg(F.min("count"), F.max("count")).collect()[0]
-    assert per_vec[0] == per_vec[1] == 16
-    valid = {r.cen_id for r in csubs.select("cen_id").distinct().collect()}
-    got = {r.code for r in codes.select("code").distinct().collect()}
-    assert got <= valid
-
-
-def test_pq_adc_exact_when_query_is_centroid(spark, sf_dir):
-    """A query that IS a codebook centroid has a zero-distance LUT entry
-    to itself in every subspace, so its own reconstruction distance is 0
-    and any candidate encoded exactly onto it ranks first — sanity that
-    ADC distances are reconstruction distances, not cosines."""
-    from pyspark.sql import functions as F
-
-    from pm25ml_spark.operators import similarity as S
-    from pm25ml_spark.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    # use a centroid row as the probe (vec_id 7 is in the stride-13 set)
-    q = emb.filter(F.col("vec_id") == 7).select(
-        F.lit(999_999).alias("qid"), F.col("embedding").alias("qe")
-    )
-    top = S.pq_adc_topk(q, c, k=1, m=16, sub_dim=4, stride=13, offset=7).collect()
-    assert len(top) == 1
-    # nearest candidate by ADC is the centroid vector itself: distance 0
-    assert top[0].cid == 7
-    assert top[0].adist == 0.0
-
-
-def test_pq_rerank_never_worse_than_adc(spark, sf_dir):
-    """For every query, the exact-L2 distance of the re-ranked top-1 is
-    <= the exact distance of the raw ADC top-1 — re-ranking a superset
-    shortlist can only improve the final answer."""
-    import numpy as np
-    import pyarrow.parquet as pq_
-
-    from pm25ml_spark.plans.registry import QUERIES
-
-    t = pq_.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_numpy()
-    V = np.array(t["embedding"].to_pylist(), dtype=np.float64)
-    pos = {int(i): n for n, i in enumerate(ids)}
-
-    def exact(qid, cid):
-        d = V[pos[qid]] - V[pos[cid]]
-        return float((d * d).sum())
-
-    adc1 = {
-        r.qid: r.cid
-        for r in QUERIES["ss07_pq_adc_top3"](spark, sf_dir).collect()
-        if r.rk == 1
-    }
-    rr1 = {
-        r.qid: r.cid
-        for r in QUERIES["ss08_pq_rerank_top3"](spark, sf_dir).collect()
-        if r.rk == 1
-    }
-    assert set(adc1) == set(rr1)
-    for qid in rr1:
-        assert exact(qid, rr1[qid]) <= exact(qid, adc1[qid]) + 1e-9
-
-
-def test_pq_encode_prune_equals_full_explosion(spark, sf_dir):
-    """The Arrow near-argmin prune must reproduce the pure-JVM encode
-    bit-for-bit — on real data AND on an adversarial exact-tie corpus
-    where two centroids are equidistant from a vector (the rounded
-    tie-break must still pick the lower cen_id)."""
-    from pm25ml_spark.operators import similarity as S
-    from pm25ml_spark.plans.similarity import _qc
-
-    _, _, c = _qc(spark, sf_dir)
-    csubs = S.pq_codebook_subspaces(c, m=16, sub_dim=4, stride=13, offset=7)
-    fast = S.pq_encode(c, csubs, m=16, sub_dim=4)
-    slow = S.pq_encode(c, csubs, m=16, sub_dim=4, prune=False)
-    assert {(r.cid, r.s, r.code) for r in fast.collect()} == {
-        (r.cid, r.s, r.code) for r in slow.collect()
-    }
-
-    # adversarial ties: centroids at -1 and +1 per dim, vectors at 0 —
-    # every subspace distance ties exactly; both paths must break to the
-    # lower centroid id, identically
-    rows = [(i, [0.0] * 8) for i in range(20)]
-    rows += [(100, [-1.0] * 8), (101, [1.0] * 8)]
-    df = spark.createDataFrame(rows, "cid long, ce array<double>")
-    cs = df.filter(F.col("cid") >= 100).select(
-        F.col("cid").alias("cen_id"), F.col("ce").alias("cv")
-    )
-    csubs2 = S._subspaces(cs, "cen_id", "cv", 2, 4).withColumnRenamed(
-        "sub", "csub"
-    )
-    probe = df.filter(F.col("cid") < 100)
-    fast2 = {(r.cid, r.s): r.code for r in S.pq_encode(
-        probe, csubs2, m=2, sub_dim=4).collect()}
-    slow2 = {(r.cid, r.s): r.code for r in S.pq_encode(
-        probe, csubs2, m=2, sub_dim=4, prune=False).collect()}
-    assert fast2 == slow2
-    assert set(fast2.values()) == {100}
-
-
-def test_pq_encode_rejects_incomplete_codebook(spark):
-    """A codebook missing any (subspace, centroid) cell must fail loudly
-    instead of comparing against unset rows."""
-    import pytest as _pytest
-
-    from pm25ml_spark.operators import similarity as S
-
-    rows = [(0, [1.0] * 8), (1, [2.0] * 8)]
-    df = spark.createDataFrame(rows, "cid long, ce array<double>")
-    cs = df.select(F.col("cid").alias("cen_id"), F.col("ce").alias("cv"))
-    csubs = S._subspaces(cs, "cen_id", "cv", 2, 4).withColumnRenamed(
-        "sub", "csub"
-    )
-    holey = csubs.filter(
-        ~((F.col("s") == 1) & (F.col("cen_id") == 1))
-    )
-    with _pytest.raises(ValueError, match="complete m x K grid"):
-        S.pq_encode(df, holey, m=2, sub_dim=4)
-
-
-def test_ivfpq_residual_beats_reusing_one_lut(spark):
-    """IVFADC sanity on a structured mini-corpus: candidates cluster
-    tightly around two far-apart coarse centroids, so per-list residual
-    LUTs must rank each query's own-cluster neighbours first."""
-    from pm25ml_spark.operators.similarity import ivfpq_topk
-
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    centers = {0: np.zeros(8), 50: np.full(8, 10.0)}
-    rows = []
-    for i in range(100):
-        base = centers[0] if i < 50 else centers[50]
-        rows.append((i, (base + rng.normal(0, 0.1, 8)).tolist()))
-    # ids 0 and 50 are the strided coarse centroids (stride 50, offset 0)
-    c = spark.createDataFrame(rows, "cid long, ce array<double>")
-    q = spark.createDataFrame(
-        [(0, rows[0][1]), (50, rows[50][1])], "qid long, qe array<double>"
-    )
-    out = ivfpq_topk(
-        q, c, k=5, nprobe=1, coarse_stride=50, coarse_offset=0,
-        m=4, sub_dim=2, pq_stride=7, pq_offset=3,
-    ).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.qid, []).append(r.cid)
-    # every retrieved neighbour is from the query's own cluster
-    assert all(cid < 50 for cid in by_q[0])
-    assert all(cid >= 50 for cid in by_q[50])
-    assert len(by_q[0]) == 5 and len(by_q[50]) == 5
-
-
-def test_cosine_topk_group_mask_null_semantics(spark):
-    """q_grp/c_grp masking: equal non-null groups are excluded; NULL
-    groups on either side match nothing (row stays rankable)."""
-    q = spark.createDataFrame(
-        [(1, [1.0, 0.0], 7), (2, [0.0, 1.0], None)],
-        "qid long, qe array<float>, ql int",
-    )
-    c = spark.createDataFrame(
-        [
-            (10, [1.0, 0.0], 7),     # same group as q1 -> masked for q1
-            (11, [0.9, 0.1], 8),     # different group -> kept
-            (12, [0.8, 0.2], None),  # NULL group -> kept for both
-            (13, [0.0, 1.0], 9),
-        ],
-        "cid long, ce array<float>, cl int",
-    )
-    out = cosine_topk(q, c, k=4, q_grp="ql", c_grp="cl").collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.qid, []).append(r.cid)
-    # q1 (group 7): cid 10 masked, everything else survives
-    assert 10 not in by_q[1] and {11, 12, 13} <= set(by_q[1])
-    # q2 (NULL group): nothing masked, all four candidates survive
-    assert set(by_q[2]) == {10, 11, 12, 13}
-
-
-def test_cosine_topk_grp_args_must_pair(spark):
-    q = _vec_df(spark, "qid", "qe", [(1, [1.0, 0.0])])
-    c = _vec_df(spark, "cid", "ce", [(2, [1.0, 0.0])])
-    with pytest.raises(ValueError):
-        cosine_topk(q, c, q_grp="ql")
-
-
-def test_incremental_ivf_lists_equal_full_rebuild(spark, tmp_path):
-    """The incrementally-maintained inverted-list artifact (base commit
-    over the pre-batch corpus + append-only batch delta against the
-    FIXED corpus quantizer) must equal a from-scratch full-corpus
-    assignment, with lifecycle pins: two log commits, the pre-refresh
-    snapshot holds only corpus rows, re-reads rebuild nothing.
-
-    Runs against a PRIVATE copy of the corpus dir: the stage memo keys
-    on (applicationId, sf_dir, ...), so running after any other test
-    that touched ss13 at the shared sf_dir (e.g. the oracle-parity
-    sweep) would otherwise see an already-built artifact and break the
-    BUILD_COUNTS `+1` lifecycle pins."""
-    import shutil
-
-    import pm25ml_spark.plans.artifacts as ART
-    from pm25ml_spark.catalog import load_table
-    from pm25ml_spark.operators.similarity import ivf_assign
-    from pm25ml_spark.plans.artifacts import staged_table_handle
-    from pm25ml_spark.plans.similarity import _ivf_lists_incremental, _qc
-
-    SF = str(tmp_path / "sf")
-    (tmp_path / "sf").mkdir()
-    shutil.copy(
-        "/root/testdata/sf0.001/embeddings.parquet",
-        f"{SF}/embeddings.parquet",
-    )
-    b_base = ART.BUILD_COUNTS.get("ivf_lists_incr.base", 0)
-    b_delta = ART.BUILD_COUNTS.get("ivf_lists_incr.delta_batch", 0)
-    inc = _ivf_lists_incremental(spark, SF)
-    got = {(r.cid, r.cen) for r in inc.collect()}
-    _, _, c = _qc(spark, SF)
-    want = {
-        (r.cid, r.cen)
-        for r in ivf_assign(c, centroid_stride=100, centroid_offset=7).collect()
-    }
-    assert got == want and got
-    t = staged_table_handle(spark, SF, "ivf_lists_incr", (100, 7, 10, 3))
-    vs = t.versions()
-    assert len(vs) == 2, vs
-    base_rows = {r.cid for r in t.read(version=vs[0]).collect()}
-    assert base_rows == {cid for cid, _ in want if cid % 10 != 3}
-    assert {cid for cid, _ in want if cid % 10 == 3}  # delta non-empty
-    _ivf_lists_incremental(spark, SF).count()  # memoized: no rebuild
-    assert ART.BUILD_COUNTS.get("ivf_lists_incr.base", 0) == b_base + 1
-    assert ART.BUILD_COUNTS.get("ivf_lists_incr.delta_batch", 0) == b_delta + 1
-
-
-def test_lsh_postings_append_only_under_ingest(spark):
-    """The staged-postings refresh contract (r10): signatures have no
-    trained component, so an ingest batch's postings are EXACTLY the
-    from-scratch rebuild's delta — postings(A) ∪ postings(B) equals
-    postings(A ∪ B) row-for-row, for single- and multi-table indexes.
-    This is what makes the staged LSH artifact append-only (cheaper than
-    IVF/PQ, whose append-only-ness needs a frozen quantizer)."""
-    import random
-
-    from pm25ml_spark.operators.similarity import lsh_postings
-
-    rng = random.Random(23)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)]
-    corpus = _vec_df(spark, "cid", "ce", rows[:50])
-    batch = _vec_df(spark, "cid", "ce", rows[50:])
-    both = _vec_df(spark, "cid", "ce", rows)
-    for n_tables in (1, 2):
-        incr = (
-            lsh_postings(corpus, n_planes=5, dim=8, n_tables=n_tables)
-            .unionByName(
-                lsh_postings(batch, n_planes=5, dim=8, n_tables=n_tables)
-            )
-        )
-        full = lsh_postings(both, n_planes=5, dim=8, n_tables=n_tables)
-        key = lambda r: (r["tbl"], r["bucket"], r["cid"])
-        a = sorted((r.asDict() for r in incr.collect()), key=key)
-        b = sorted((r.asDict() for r in full.collect()), key=key)
-        assert a == b
-
-
-@pytest.mark.slow
-def test_incremental_lsh_postings_equal_full_rebuild(spark, tmp_path):
-    """ss14's incrementally-maintained postings artifact (base commit +
-    batch delta) must equal a from-scratch signing of the full corpus —
-    trivially true for LSH (no trained component) and pinned with the
-    same lifecycle checks as the IVF twin: two log commits, pre-refresh
-    snapshot is exactly the non-batch corpus, re-reads rebuild nothing.
-    Private corpus dir: see test_incremental_ivf_lists_equal_full_rebuild."""
-    import shutil
-
-    import pm25ml_spark.plans.artifacts as ART
-    from pm25ml_spark.operators.similarity import lsh_postings
-    from pm25ml_spark.plans.artifacts import staged_table_handle
-    from pm25ml_spark.plans.similarity import (
-        _IVF_BATCH_MOD,
-        _IVF_BATCH_REM,
-        _LSH_INCR_PLANES,
-        _LSH_INCR_TABLES,
-        _lsh_postings_incremental,
-        _qc,
-    )
-
-    SF = str(tmp_path / "sf")
-    (tmp_path / "sf").mkdir()
-    shutil.copy(
-        "/root/testdata/sf0.001/embeddings.parquet",
-        f"{SF}/embeddings.parquet",
-    )
-    b_base = ART.BUILD_COUNTS.get("lsh_postings_incr.base", 0)
-    b_delta = ART.BUILD_COUNTS.get("lsh_postings_incr.delta_batch", 0)
-    inc = _lsh_postings_incremental(spark, SF)
-    got = {(r.tbl, r.bucket, r.cid) for r in inc.collect()}
-    _, _, c = _qc(spark, SF)
-    want = {
-        (r.tbl, r.bucket, r.cid)
-        for r in lsh_postings(
-            c, n_planes=_LSH_INCR_PLANES, dim=64,
-            n_tables=_LSH_INCR_TABLES,
-        ).collect()
-    }
-    assert got == want and got
-    t = staged_table_handle(
-        spark, SF, "lsh_postings_incr",
-        (_LSH_INCR_PLANES, _IVF_BATCH_MOD, _IVF_BATCH_REM,
-         _LSH_INCR_TABLES),
-    )
-    vs = t.versions()
-    assert len(vs) == 2, vs
-    base_rows = {r.cid for r in t.read(version=vs[0]).collect()}
-    assert base_rows == {
-        cid for _, _, cid in want if cid % _IVF_BATCH_MOD != _IVF_BATCH_REM
-    }
-    assert {  # delta non-empty
-        cid for _, _, cid in want if cid % _IVF_BATCH_MOD == _IVF_BATCH_REM
-    }
-    _lsh_postings_incremental(spark, SF).count()  # memoized: no rebuild
-    assert ART.BUILD_COUNTS.get("lsh_postings_incr.base", 0) == b_base + 1
-    assert (
-        ART.BUILD_COUNTS.get("lsh_postings_incr.delta_batch", 0)
-        == b_delta + 1
-    )
-
-
-def test_lsh_probe_pair_filter_prefilters_before_ranking(spark):
-    """pair_filter must reject candidates BEFORE top-k ranking: with a
-    label filter, rank-1 is the best SAME-label match even when a
-    different-label candidate scores higher; an all-rejecting filter
-    yields an empty frame, not k arbitrary rows."""
-    from pm25ml_spark.operators.similarity import lsh_postings, lsh_probe_topk
-
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0], "a"),
-        (2, [0.99, 0.1, 0.0, 0.0], "b"),   # best overall, wrong label
-        (3, [0.8, 0.5, 0.0, 0.0], "a"),    # best same-label
-        (4, [0.0, 1.0, 0.0, 0.0], "a"),
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label string"
-    )
-    q = emb.filter(F.col("vec_id") == 1).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("ql"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("cl"),
-    )
-    postings = lsh_postings(c, n_planes=3, dim=4, meta_cols=("cl",))
-    out = lsh_probe_topk(
-        q, postings, k=1, n_planes=3, dim=4, probe_hamming=2,
-        q_meta=("ql",), pair_filter=F.col("ql") == F.col("cl"),
-    ).collect()
-    assert [(r.qid, r.cid, r.rk) for r in out] == [(1, 3, 1)]
-    none = lsh_probe_topk(
-        q, postings, k=5, n_planes=3, dim=4, probe_hamming=2,
-        q_meta=("ql",), pair_filter=F.lit(False),
-    ).collect()
-    assert none == []
-
-
-def test_ivf_drift_audit_and_retrain_signal(spark, tmp_path):
-    """Frozen-quantizer drift monitoring (r11 ask #6): every maintained-
-    index commit records assignment-quality counters, and a refresh
-    batch the quantizer no longer covers raises the RETRAIN flag from
-    the log alone — while assignments stay exact (each vector still
-    goes to its true nearest frozen centroid, so query results remain
-    oracle-green; the signal is recall economics, not correctness)."""
-    from pm25ml_spark.operators.similarity import (
-        ivf_assign,
-        ivf_commit_audit,
-        ivf_drift_report,
-    )
-    from pm25ml_spark.sources.txlog import TxTable
-
-    def vecs(rows):
-        return spark.createDataFrame(rows, "cid long, ce array<double>")
-
-    # base corpus: tight around two centroid directions (cids 0 and 10
-    # are the stride-10 codebook)
-    base = vecs(
-        [(i, [1.0, 0.05 * i, 0.0, 0.0]) for i in range(0, 9)]
-        + [(10 + i, [0.0, 0.0, 1.0, 0.05 * i]) for i in range(0, 9)]
-    )
-    t = TxTable(spark, str(tmp_path / "ivf"))
-    assigned = ivf_assign(base, centroid_stride=10, centroid_offset=0)
-    t.append(assigned, entry_extra=ivf_commit_audit)
-
-    # healthy refresh: same distribution, assigned against the SAME
-    # frozen quantizer → no flag
-    fresh = vecs([(100 + i, [1.0, 0.04 * i, 0.0, 0.0]) for i in range(5)])
-    t.append(
-        ivf_assign(fresh, centroid_stride=10, centroid_offset=0,
-                   cen_source=base),
-        entry_extra=ivf_commit_audit,
-    )
-    rep = ivf_drift_report(t)
-    assert rep["commits"] == 2 and rep["retrain"] is False, rep
-
-    # drifted refresh: vectors orthogonal-to-negative vs both frozen
-    # centroids → mean distance blows past the base ratio and some
-    # fall outside every centroid's half-space
-    drift = vecs(
-        [(200 + i, [-1.0, 0.0, -1.0, 1.0 + 0.1 * i]) for i in range(5)]
-    )
-    t.append(
-        ivf_assign(drift, centroid_stride=10, centroid_offset=0,
-                   cen_source=base),
-        entry_extra=ivf_commit_audit,
-    )
-    rep2 = ivf_drift_report(t)
-    assert rep2["commits"] == 3 and rep2["retrain"] is True, rep2
-
-    # audit lives IN the commit entries (log-only monitoring)
-    audited = [e for e in t.history() if "ivf_drift" in e]
-    assert len(audited) == 3
-    assert all(a["ivf_drift"]["n_rows"] > 0 for a in audited)
-
-    # correctness unaffected: every drifted vector still sits in its
-    # true nearest frozen centroid's list
-    import numpy as np
-
-    C = {0: np.array([1.0, 0.05 * 0, 0.0, 0.0]),
-         10: np.array([0.0, 0.0, 1.0, 0.05 * 0])}
-    got = {r.cid: r.cen for r in t.read().filter("cid >= 200").collect()}
-    for r in drift.collect():
-        v = np.array(r.ce)
-        best = max(
-            sorted(C),
-            key=lambda k: round(
-                float(v @ C[k] / (np.linalg.norm(v) * np.linalg.norm(C[k]))),
-                6,
-            ),
-        )
-        assert got[r.cid] == best
-
-
-def test_retrain_ivf_repairs_drift_and_resets_signal(spark, tmp_path):
-    """Round-12 ask #2: the repair verb the retrain signal recommends.
-    Drifted ingest raises the flag; retrain_ivf trains a fresh
-    quantizer from the CURRENT vectors, re-assigns everything, and
-    atomically swaps the lists (old snapshots still time-travel); the
-    result equals a from-scratch rebuild; the drift fold resets at the
-    model boundary; and incremental maintenance resumes against the
-    persisted retrained model."""
-    from pm25ml_spark.operators.similarity import (
-        ivf_assign,
-        ivf_commit_audit,
-        ivf_drift_report,
-        retrain_ivf,
-    )
-    from pm25ml_spark.sources.txlog import TxTable
-
-    def vecs(rows):
-        return spark.createDataFrame(rows, "cid long, ce array<double>")
-
-    base_rows = (
-        [(i, [1.0, 0.05 * i, 0.0, 0.0]) for i in range(0, 9)]
-        + [(10 + i, [0.0, 0.0, 1.0, 0.05 * i]) for i in range(0, 9)]
-    )
-    drift_rows = [
-        (200 + i, [-1.0, 0.0, -1.0, 1.0 + 0.1 * i]) for i in range(5)
-    ]
-    base = vecs(base_rows)
-    t = TxTable(spark, str(tmp_path / "ivf"))
-    t.append(
-        ivf_assign(base, centroid_stride=10, centroid_offset=0),
-        entry_extra=ivf_commit_audit,
-    )
-    t.append(
-        ivf_assign(vecs(drift_rows), centroid_stride=10, centroid_offset=0,
-                   cen_source=base),
-        entry_extra=ivf_commit_audit,
-    )
-    assert ivf_drift_report(t)["retrain"] is True
-    pre_version = t.latest_version()
-
-    v, model = retrain_ivf(t, centroid_stride=10, centroid_offset=0)
-    # the new strided quantizer covers the drifted direction (cid 200)
-    assert 200 in model["cen_ids"]
-    assert len(model["codebook"]) == len(model["cen_ids"])
-    assert t.history()[-1]["ivf_model"]["kind"] == "strided"
-
-    # retrained table equals a from-scratch rebuild over the same rows
-    scratch = {
-        (r.cid, r.cen)
-        for r in ivf_assign(
-            vecs(base_rows + drift_rows), centroid_stride=10,
-            centroid_offset=0,
-        ).collect()
-    }
-    got = {(r.cid, r.cen) for r in t.read().collect()}
-    assert got == scratch
-    # drifted vectors now live in the new centroid's list, not clamped
-    # into a far frozen one
-    assert all(cen == 200 for cid, cen in got if cid >= 200)
-    # old lists still time-travel
-    assert t.read(version=pre_version).count() == len(got)
-
-    # the fold reset: the retrain commit's own audit is the new base
-    rep = ivf_drift_report(t)
-    assert rep["commits"] == 1 and rep["retrain"] is False, rep
-
-    # incremental maintenance resumes against the PERSISTED model —
-    # same-direction ingest stays unflagged
-    more = vecs(
-        [(300 + i, [-1.0, 0.0, -1.0, 1.0 + 0.08 * i]) for i in range(4)]
-    )
-    t.append(
-        ivf_assign(
-            more,
-            codebook=model["codebook"],
-            codebook_ids=model["cen_ids"],
-        ),
-        entry_extra=ivf_commit_audit,
-    )
-    rep2 = ivf_drift_report(t)
-    assert rep2["commits"] == 2 and rep2["retrain"] is False, rep2
-
-
-@pytest.mark.slow
-def test_retrain_ivf_kmeans_path(spark, tmp_path):
-    """retrain_ivf(use_kmeans=True) — the trained-quantizer variant:
-    the persisted model (arange ids + k-means centroids) reproduces a
-    from-scratch kmeans assignment, and maintenance resumes against
-    the persisted matrix exactly like the strided path."""
-    from pm25ml_spark.operators.similarity import (
-        ivf_assign,
-        ivf_commit_audit,
-        ivf_drift_report,
-        kmeans_codebook,
-        retrain_ivf,
-    )
-    from pm25ml_spark.sources.txlog import TxTable
-
-    def vecs(rows):
-        return spark.createDataFrame(rows, "cid long, ce array<double>")
-
-    rows = (
-        [(i, [1.0, 0.02 * i, 0.0]) for i in range(12)]
-        + [(50 + i, [0.0, 1.0, 0.03 * i]) for i in range(12)]
-    )
-    t = TxTable(spark, str(tmp_path / "ivf"))
-    t.append(
-        ivf_assign(vecs(rows), centroid_stride=10, centroid_offset=0),
-        entry_extra=ivf_commit_audit,
-    )
-
-    v, model = retrain_ivf(t, use_kmeans=True, n_centroids=2)
-    assert model["kind"] == "kmeans"
-    assert model["cen_ids"] == [0, 1]
-    assert len(model["codebook"]) == 2
-
-    # equals a from-scratch kmeans build over the same rows (training
-    # is deterministic — k-lowest-id init)
-    cb = kmeans_codebook(vecs(rows), n_centroids=2, n_iter=5)
-    scratch = {
-        (r.cid, r.cen)
-        for r in ivf_assign(vecs(rows), codebook=cb).collect()
-    }
-    got = {(r.cid, r.cen) for r in t.read().collect()}
-    assert got == scratch
-    # both clusters non-trivially populated
-    assert len({cen for _c, cen in got}) == 2
-
-    # resume against the persisted matrix: same-distribution ingest
-    # lands clean, fold based at the retrain commit
-    t.append(
-        ivf_assign(
-            vecs([(100 + i, [1.0, 0.01 * i, 0.0]) for i in range(4)]),
-            codebook=model["codebook"],
-            codebook_ids=model["cen_ids"],
-        ),
-        entry_extra=ivf_commit_audit,
-    )
-    rep = ivf_drift_report(t)
-    assert rep["commits"] == 2 and rep["retrain"] is False, rep
-
-
-def test_exact_rescore_composes_with_any_shortlist(spark):
-    """exact_rescore's contract is first-stage-agnostic: handed an LSH
-    probe shortlist (or any (qid, cid) set, duplicates included), it
-    fetches only those pairs, ranks by exact cosine with the 6-dp
-    tie contract, and never invents pairs outside the shortlist."""
-    from pm25ml_spark.operators.similarity import (
-        cosine_topk,
-        exact_rescore,
-    )
-
-    rows = [(i, [1.0, 0.1 * i, 0.05 * i * i]) for i in range(8)]
-    q = spark.createDataFrame(rows[:2], "qid long, qe array<double>")
-    c = spark.createDataFrame(rows, "cid long, ce array<double>")
-
-    # a deliberately messy shortlist: duplicates + a self pair
-    short = spark.createDataFrame(
-        [(0, 3), (0, 3), (0, 5), (0, 7), (1, 2), (1, 4), (1, 6)],
-        "qid long, cid long",
-    )
-    out = exact_rescore(short, q, c, k=2).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.qid, []).append((r.rk, r.cid, r.score))
-    # only shortlisted pairs appear, at most k per query, rk contiguous
-    assert {c for _rk, c, _s in by_q[0]} <= {3, 5, 7}
-    assert {c for _rk, c, _s in by_q[1]} <= {2, 4, 6}
-    assert [rk for rk, _c, _s in sorted(by_q[0])] == [1, 2]
-    # ranks agree with the exact brute-force order restricted to the
-    # shortlist: top-1 for qid 0 must be its true-best among {3,5,7}
-    full = {
-        (r.qid, r.cid): r.score
-        for r in cosine_topk(q, c, k=8).collect()
-    }
-    best0 = max((full[(0, cc)], -cc) for cc in (3, 5, 7))
-    assert sorted(by_q[0])[0][1] == -best0[1]

@@ -30,7 +30,6 @@ def main() -> None:
         "a09_mad_outliers",
         "a10_weighted_median_price",
         "a06_exact_quantiles",
-        "ss09_lsh_multitable_top1",
         "sk01_heavy_hitters",
         "m10_ks_drift",
         "cp05_importance_resampling",

@@ -44,10 +44,7 @@ _MANDATORY = [
     "t12",
     # r10 additions: the incremental-artifact lifecycles must prove
     # sublinear growth too
-    "gr08", "ss13", "ss14",
-    # r12 additions: the IVF retrain and IVFADC-rerank lifecycles (new
-    # plans need growth evidence too)
-    "ss17", "ss18",
+    "gr08",
     # r14 addition (r13 ADVICE): track dd15, which carries that round's
     # snapshot-probe change
     "dd15",
