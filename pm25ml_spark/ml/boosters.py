@@ -12,10 +12,11 @@ hyperparameters (`setup/training.py:68-139`). This module is that path:
   the feature columns in a pandas UDF — M4 stays fully distributed, and
   a null/NaN predictor fails the scoring task (P11).
 
-xgboost/lightgbm are not in this container, so those backends raise a
-clear error unless a ``model_factory`` is injected. The always-available
-``backend="numpy"`` (``ml/numpy_gbm.NumpyHistGBM``, a real histogram
-GBM) is what ``ml/pipeline.train_imputation_model`` trains.
+The caller supplies the booster as a ``model_factory`` (any
+sklearn-style regressor). ``ml/pipeline.train_imputation_model`` passes
+``ml/numpy_gbm.NumpyHistGBM``, a histogram GBM; the paper's XGBoost and
+LightGBM hyperparameters below translate to its vocabulary through
+``numpy_params_from_xgb``/``numpy_params_from_lgbm``.
 """
 
 from __future__ import annotations
@@ -97,42 +98,6 @@ def numpy_params_from_lgbm(params: dict, **overrides) -> dict:
     }
     out.update(overrides)
     return out
-
-
-def _default_factory(backend: str, params: dict) -> Callable[[], object]:
-    if backend == "numpy":
-        # always-available histogram GBM (ml/numpy_gbm.py): the numeric
-        # end-to-end path in containers without xgboost/lightgbm
-        from pm25ml_spark.ml.numpy_gbm import NumpyHistGBM
-
-        return lambda: NumpyHistGBM(**params)
-    if backend == "numpy_xgb":
-        from pm25ml_spark.ml.numpy_gbm import NumpyHistGBM
-
-        return lambda: NumpyHistGBM(**numpy_params_from_xgb(params))
-    if backend == "numpy_lgbm":
-        from pm25ml_spark.ml.numpy_gbm import NumpyHistGBM
-
-        return lambda: NumpyHistGBM(**numpy_params_from_lgbm(params))
-    if backend == "xgb":
-        try:
-            from xgboost import XGBRegressor
-        except ImportError as exc:
-            raise ImportError(
-                "booster backend 'xgb' needs xgboost; use backend='numpy' "
-                "or inject model_factory"
-            ) from exc
-        return lambda: XGBRegressor(**params)
-    if backend == "lgbm":
-        try:
-            from lightgbm import LGBMRegressor
-        except ImportError as exc:
-            raise ImportError(
-                "booster backend 'lgbm' needs lightgbm; use backend='numpy' "
-                "or inject model_factory"
-            ) from exc
-        return lambda: LGBMRegressor(**params)
-    raise ValueError(f"unknown booster backend {backend!r}")
 
 
 @dataclass
@@ -220,36 +185,10 @@ def _collect_sample(
     return sample.sort_values(cols, kind="mergesort", ignore_index=True)
 
 
-def _fit(model_factory: Callable[[], object], X, y, n_jobs: int | None = None):
+def _fit(model_factory: Callable[[], object], X, y):
     model = model_factory()
-    if n_jobs is not None and hasattr(model, "set_params"):
-        model.set_params(n_jobs=n_jobs)
     model.fit(X, y)
     return model
-
-
-def train_booster_on_sample(
-    df: DataFrame,
-    features: list[str],
-    target: str,
-    *,
-    backend: str = "xgb",
-    params: dict | None = None,
-    model_factory: Callable[[], object] | None = None,
-    n_jobs: int | None = None,
-) -> BoosterImputer:
-    """M3 booster path without CV: collect the (sampled, small-by-
-    contract) training frame and fit exactly as the reference does
-    (`imputation_model_pipeline.py:90-112`). ``model_factory`` injects any
-    sklearn-style regressor — the seam for tests and for future backends.
-    """
-    if model_factory is None:
-        model_factory = _default_factory(
-            backend, params if params is not None else XGB_AOD_PARAMS
-        )
-    sample = _collect_sample(df, features, target)
-    model = _fit(model_factory, sample[features], sample[target], n_jobs)
-    return BoosterImputer(model=model, features=list(features), target=target)
 
 
 def cross_validate_booster(
@@ -258,10 +197,8 @@ def cross_validate_booster(
     target: str,
     group_col: str,
     *,
+    model_factory: Callable[[], object],
     n_folds: int = 3,
-    model_factory: Callable[[], object] | None = None,
-    backend: str = "xgb",
-    params: dict | None = None,
 ) -> BoosterImputer:
     """Group-aware CV (M1) + final fit: the one CV loop.
 
@@ -273,10 +210,6 @@ def cross_validate_booster(
     runs on the collected rows, so it costs no Spark job."""
     from pm25ml_spark.ml.pipeline import assign_group_folds, r2_score
 
-    if model_factory is None:
-        model_factory = _default_factory(
-            backend, params if params is not None else XGB_AOD_PARAMS
-        )
     sample = _collect_sample(
         assign_group_folds(df, group_col, n_folds), features, target, "fold"
     )

@@ -9,6 +9,7 @@ prediction is distributed (broadcast model, a pandas UDF over the
 feature columns) and adds its columns to the scored frame in place. The
 surrounding semantics are ported exactly:
 
+- A3: the exact per-stratum training split (``stratified_split``).
 - M1/M2: group-aware CV fold assignment (GroupKFold ≙ dense_rank of the
   group key mod k; stratified variant interleaves within strata).
 - M5: R²/RMSE via SQL aggregates (``r2_score`` is the same R² on driver
@@ -37,6 +38,40 @@ IMPUTER_MAX_DEPTH = 5
 IMPUTER_MAX_BIN = 32
 IMPUTER_MIN_CHILD_WEIGHT = 1
 IMPUTER_LEARNING_RATE = 0.7
+
+
+def stratified_split(
+    df: DataFrame,
+    stratum: str,
+    fraction: float,
+    seed: int,
+    key: list[str],
+) -> DataFrame:
+    """A3 (`sample/imputation_sampler.py:46-110`): label the first
+    ceil(fraction·n) rows of each stratum ``split="training"``, the rest
+    ``"test"``.
+
+    ``key`` names columns that identify rows UNIQUELY within a stratum:
+    the order is ``xxhash64(*key, seed)`` then the key columns themselves
+    — a total order that is a pure function of the row, so the split is
+    identical under ANY upstream partitioning. A non-unique key would
+    leave boundary ties to shuffle encounter order."""
+    keys = [F.col(k) for k in key]
+    w = Window.partitionBy(stratum).orderBy(
+        F.xxhash64(*keys, F.lit(seed)), *keys
+    )
+    wc = Window.partitionBy(stratum)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .withColumn("__n", F.count(F.lit(1)).over(wc))
+        .withColumn(
+            "split",
+            F.when(
+                F.col("__rn") <= F.ceil(F.col("__n") * fraction), "training"
+            ).otherwise("test"),
+        )
+        .drop("__rn", "__n")
+    )
 
 
 def assign_group_folds(

@@ -133,7 +133,6 @@ def generate_features(
     key: str = "grid_id",
     date_col: str = "date",
     with_fills: bool = True,
-    long_window: int = 365,
     exact: bool = False,
 ) -> DataFrame:
     """The full §3.2 feature chain over a wide table: for each base column
@@ -150,7 +149,7 @@ def generate_features(
     rolling_cols: dict[str, F.Column] = {}
     for c in base_cols:
         rolling_cols[f"{c}__mean_r7d"] = roll(c, 7, (key,), (date_col,))
-        rolling_cols[f"{c}__mean_r365d"] = roll(c, long_window, (key,), (date_col,))
+        rolling_cols[f"{c}__mean_r365d"] = roll(c, 365, (key,), (date_col,))
         rolling_cols[f"{c}__mean_year"] = pmean(c, (key, "year"))
         rolling_cols[f"{c}__mean_all"] = pmean(c, (key,))
     df = df.withColumns(rolling_cols)

@@ -1,22 +1,13 @@
-"""Stratified sampling + split labelling (SURVEY A3/W7).
+"""Catalog sampling helpers (SURVEY A3/W7): decimation, an md5-portable
+stratified split, per-stratum caps, global top-k and weighted sampling.
 
-Reference: `sample/imputation_sampler.py:46-110` — per-50km-stratum
-fraction sample (seed 42) of non-null-target rows, sampled keys labelled
-``split="training"``, the rest ``"test"``.
-
-Two strategies:
-- ``stratified_split`` — exact per-stratum counts via a rank window
-  (``row_number over (partition by stratum order by rand(seed), key)``):
-  deterministic for a fixed seed AND a fixed engine, per-stratum count =
-  ceil(fraction·n) exactly (the reference's map_groups-sample contract).
-- ``stratified_split_approx`` — ``sampleBy`` (Bernoulli per stratum):
-  no shuffle, preferred at 100 TB where a rank window per stratum would
-  shuffle everything; per-stratum counts are binomial around the target.
+The pipeline's own split — the reference's per-50km-stratum fraction
+sample (`sample/imputation_sampler.py:46-110`) — is
+``ml/pipeline.stratified_split``, beside the CV fold assignment.
 
 Seeded-RNG bit-parity with Polars is impossible cross-engine (SURVEY §7.4
-trap #2) — correctness is defined distributionally + deterministically
-within this engine. ``stratified_split_portable`` goes further: hash-
-ordered membership IS bit-identical across engines (oracle-checked in
+trap #2). ``stratified_split_portable`` sidesteps it: hash-ordered
+membership IS bit-identical across engines (oracle-checked in
 ``a03_stratified_split``), at the cost of md5 over xxhash64.
 """
 
@@ -24,78 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def stratified_split(
-    df: DataFrame,
-    stratum: str,
-    fraction: float,
-    seed: int = 42,
-    key: str | None = None,
-    split_col: str = "split",
-) -> DataFrame:
-    """Exact per-stratum fraction split with deterministic seeding.
-
-    ``key`` (a column name or list of names) must identify rows UNIQUELY
-    within a stratum: the shuffle order is ``xxhash64(*key, seed)`` then
-    the key columns themselves — a total order that is a pure function
-    of the row, so the split is identical under ANY upstream
-    partitioning. A non-unique key would leave boundary ties to shuffle
-    encounter order (nondeterministic split). Without a key it falls
-    back to ``rand(seed)``: deterministic only for a fixed partitioning.
-    """
-    if key:
-        keys = [key] if isinstance(key, str) else list(key)
-        order = [F.xxhash64(*[F.col(k) for k in keys], F.lit(seed))] + [
-            F.col(k) for k in keys
-        ]
-    else:
-        order = [F.rand(seed)]
-    w = Window.partitionBy(stratum).orderBy(*order)
-    wc = Window.partitionBy(stratum)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .withColumn("__n", F.count(F.lit(1)).over(wc))
-        .withColumn(
-            split_col,
-            F.when(
-                F.col("__rn") <= F.ceil(F.col("__n") * fraction), "training"
-            ).otherwise("test"),
-        )
-        .drop("__rn", "__n")
-    )
-
-
-def stratified_split_approx(
-    df: DataFrame,
-    stratum: str,
-    fractions: dict,
-    seed: int = 42,
-    split_col: str = "split",
-    id_cols: list | None = None,
-) -> DataFrame:
-    """Shuffle-free Bernoulli stratified sampling (the 100 TB path).
-
-    The Bernoulli draw derives from a deterministic hash of ``id_cols``
-    (the row's IDENTITY — not its measurements, which would flip the
-    split whenever an upstream value is revised). Without ``id_cols``
-    every column is hashed, which is only stable for immutable rows.
-    """
-    hash_cols = id_cols if id_cols else df.columns
-    # pmod, NOT abs(hash)%N — abs(Integer.MIN_VALUE) overflows
-    # (ANSI mode aborts the job; legacy mode goes negative and the row is
-    # always 'training'), and at the row counts this path targets that
-    # 2^-32 event is near-certain to occur
-    u = F.pmod(F.hash(*hash_cols, F.lit(seed)), F.lit(1_000_000)) / 1_000_000.0
-    frac_col = F.lit(None).cast("double")
-    expr = None
-    for k, f in fractions.items():
-        cond = F.col(stratum) == k
-        expr = F.when(cond, F.lit(f)) if expr is None else expr.when(cond, F.lit(f))
-    frac_col = expr.otherwise(F.lit(0.0)) if expr is not None else F.lit(0.0)
-    return df.withColumn(
-        split_col, F.when(u < frac_col, "training").otherwise("test")
-    )
 
 
 def decimate(df: DataFrame, every: int, order_cols: list[str]) -> DataFrame:
@@ -170,8 +89,8 @@ def stratified_split_portable(
     the key), both computable verbatim in any SQL engine — so the sampled
     set itself is oracle-checkable, going beyond the SURVEY §7.4 trap-#2
     concession that seeded-RNG parity is impossible. Same shuffle shape
-    as :func:`stratified_split` (one rank window per stratum); prefer
-    ``stratified_split`` (xxhash64) when only within-engine determinism is
+    as ``ml/pipeline.stratified_split`` (one rank window per stratum);
+    that one (xxhash64) suffices when only within-engine determinism is
     needed — xxhash64 is a cheaper hash than md5."""
     h = F.md5(F.concat(F.lit(str(seed) + ":"), F.col(key).cast("string")))
     w = Window.partitionBy(stratum).orderBy(h, F.col(key))

@@ -33,12 +33,12 @@ from pyspark.sql import functions as F
 
 from pm25ml_spark.ml.pipeline import (
     predict_with_stats,
+    stratified_split,
     train_imputation_model,
 )
 from pm25ml_spark.operators.combine import wide_combine
 from pm25ml_spark.operators.features import generate_features
 from pm25ml_spark.operators.interpolation import daily_spatial_interpolate
-from pm25ml_spark.operators.sampling import stratified_split
 from pm25ml_spark.sources.archive import StageStorage
 from pm25ml_spark.sources.raster import RasterGranule, read_granules_wide
 from pm25ml_spark.sources.results import pivot_to_raster, write_raster

@@ -2,7 +2,7 @@
 
 The general mechanism behind ``plans/dup_graph.py``: a corpus-derived
 intermediate that several catalog queries share (duplicate-pair edges,
-winnowing fingerprints, trained codebooks) is materialized ONCE per
+the shingle store, winnowing selections) is materialized ONCE per
 (session, corpus, params) into a transaction-log table under a
 process-local temp dir and read from parquet by every later consumer —
 the reference stages intermediate artifacts the same way

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pm25ml_spark.catalog import load_table
+from pm25ml_spark.functions.columns import haversine_col
 from pm25ml_spark.plans.registry import query
 
 _G1 = "synthetic://merra/2023-06-01.nc4"
@@ -51,7 +52,7 @@ _ORACLE = f"""
 
 @query("k02_raster_regrid", _ORACLE)
 def k02_raster_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.sources.raster import RasterGranule, read_granules_to_grid
+    from pm25ml_spark.sources.raster import RasterGranule, read_granules_wide
 
     emb = load_table(spark, sf_dir, "embeddings")
     grid_pdf = emb.select(
@@ -67,9 +68,12 @@ def k02_raster_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         RasterGranule(_G1, "2023-06-01", "t2m"),
         RasterGranule(_G2, "2023-06-02", "t2m"),
     ]
-    out = read_granules_to_grid(spark, granules, grid_pdf)
+    out = read_granules_wide(spark, granules, grid_pdf)
     return out.select(
-        "grid_id", "date", "variable", F.round("value", 6).alias("value")
+        "grid_id",
+        "date",
+        F.lit("t2m").alias("variable"),
+        F.round("t2m", 6).alias("value"),
     )
 
 
@@ -86,6 +90,99 @@ _IDW_DIST = """ROUND(2 * 6371.0088 * asin(sqrt(
                    pow(sin(radians(g.lat - p.latitude) / 2), 2)
                    + cos(radians(p.latitude)) * cos(radians(g.lat))
                      * pow(sin(radians(g.lon - p.longitude) / 2), 2))), 6)"""
+
+
+def idw_regrid_bucketed(
+    targets,
+    sources,
+    value_col: str,
+    radius_km: float,
+    cell_deg: float,
+    target_id: str = "id",
+    lat: str = "latitude",
+    lon: str = "longitude",
+    src_lat: str = "lat",
+    src_lon: str = "lon",
+    power: int = 2,
+):
+    """Inverse-distance-weighted interpolation onto target points — the
+    K1 family's oracle-checkable face (the Delaunay/barycentric operator
+    in ``operators/interpolation`` matches the reference numerically but
+    has no SQL dual; IDW is the standard alternative the literature
+    reports alongside it).
+
+    value(t) = Σ v_i / d_i^p  /  Σ 1 / d_i^p   over sources with
+    haversine d_i ≤ radius_km.  Targets with no source in range drop out
+    (same as an inner join — callers gap-fill downstream).
+
+    Scale shape (same as ``nn_join.nearest_grid_join_bucketed``): both
+    sides bucket into ``cell_deg`` cells, sources replicate to their 3×3
+    neighborhood, and the candidate set is a co-located equi-join — no
+    cross join, no broadcast of the full source table. EXACT coverage
+    requires radius_km ≤ cell_deg · 111.3 · cos(max |lat|) so a cell
+    step always exceeds the radius in km.
+
+    Determinism: the haversine distance is rounded to 6 dp FIRST (the
+    one cross-engine agreement point, as in the NN join oracle), the
+    per-pair weight chain ``1/d6^p`` is then a fixed IEEE double
+    sequence, and the two sums run in DECIMAL(38,18) — order-independent
+    and exactly mirrored in SQL. A floor of 1e-6 km on d6 guards
+    coincident points (deterministically, in both engines).
+    """
+    offsets = F.array(
+        *[
+            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+            for dx in (-1, 0, 1)
+            for dy in (-1, 0, 1)
+        ]
+    )
+    s = (
+        sources.select(src_lat, src_lon, value_col)
+        .withColumn("o", F.explode(offsets))
+        .select(
+            src_lat,
+            src_lon,
+            value_col,
+            (F.floor(F.col(src_lon) / cell_deg) + F.col("o.dx")).alias("cx"),
+            (F.floor(F.col(src_lat) / cell_deg) + F.col("o.dy")).alias("cy"),
+        )
+    )
+    t = targets.withColumn(
+        "cx", F.floor(F.col(lon) / cell_deg)
+    ).withColumn("cy", F.floor(F.col(lat) / cell_deg))
+    d6 = F.greatest(
+        F.round(
+            haversine_col(
+                F.col(lat), F.col(lon), F.col(src_lat), F.col(src_lon)
+            ),
+            6,
+        ),
+        F.lit(1e-6),
+    )
+    # spelled as repeated multiplication, not pow(): pow is not guaranteed
+    # correctly rounded everywhere, a product chain is
+    dpow = d6
+    for _ in range(power - 1):
+        dpow = dpow * d6
+    w = F.lit(1.0) / dpow
+    cand = (
+        t.join(s, ["cx", "cy"])
+        .withColumn("__d6", d6)
+        .filter(F.col("__d6") <= radius_km)
+        .withColumn("__w", w)
+    )
+    dec = "decimal(38,18)"
+    return cand.groupBy(target_id).agg(
+        F.count(F.lit(1)).alias("n_sources"),
+        (
+            F.sum((F.col("__w") * F.col(value_col).cast("double")).cast(dec)).cast("double")
+            / F.sum(F.col("__w").cast(dec)).cast("double")
+        ).alias("__idw"),
+    ).select(
+        target_id,
+        "n_sources",
+        F.round("__idw", 6).alias("idw_value"),
+    )
 
 
 @query(
@@ -117,8 +214,6 @@ _IDW_DIST = """ROUND(2 * 6371.0088 * asin(sqrt(
     """,
 )
 def k03_idw_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.interpolation import idw_regrid_bucketed
-
     emb = load_table(spark, sf_dir, "embeddings")
     lat = F.element_at("embedding", 1).cast("double") * 50
     lon = F.lit(70.0) + F.element_at("embedding", 2).cast("double") * 50

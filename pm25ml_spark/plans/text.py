@@ -350,10 +350,10 @@ def t08_tfidf_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # t09 — feature-hashed document vectors (the hashing trick): token →
 # md5-derived bucket, tf weights L2-normalized per doc, emitted long-form
-# (doc_id, bucket, w). The text → vector bridge into the similarity
-# operators; at corpus scale this is two hash aggregates, no vocabulary
-# build, no driver state. 6-dp rounding on the normalized weight makes
-# the value engine-portable (norm is an exact integer sum of tf²).
+# (doc_id, bucket, w), a sparse vector per document; at corpus scale
+# this is two hash aggregates, no vocabulary build, no driver state.
+# 6-dp rounding on the normalized weight makes the value engine-portable
+# (norm is an exact integer sum of tf²).
 @query(
     "t09_hashed_doc_vectors",
     """

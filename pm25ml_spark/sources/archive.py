@@ -35,8 +35,7 @@ class PipelineConfig:
     expected_rows: int | None = None
 
     def __post_init__(self):
-        legal = {"grid_id", "date", "user_id", "day"}  # benchmark tables reuse the layer
-        if not set(self.id_columns) <= legal:
+        if not set(self.id_columns) <= {"grid_id", "date"}:
             raise ValueError(f"illegal id columns: {self.id_columns}")
 
 
@@ -259,52 +258,6 @@ class StageStorage:
             set(self.months_present(in_stage)) - set(self.months_present(out_stage))
         )
 
-    def compact_stage(
-        self, stage: str, target_rows_per_file: int = 1_000_000
-    ) -> None:
-        """Small-file compaction: rewrite each month partition into
-        ⌈rows / target⌉ files. Streaming ingests and per-task writes leave
-        stage directories with thousands of small files; at 100 TB the
-        file-listing and per-file open costs dominate scan startup.
-        Row-count-proportional coalescing keeps file sizes uniform
-        without a full shuffle (coalesce bounds the WRITER task count, so
-        the per-month file count is ≤ that bound, not exactly
-        ⌈rows/target⌉ per stage). The rewrite lands in a sibling dir and
-        swaps in via rename-out → rename-in → delete-old: a crash leaves
-        either the old stage intact or a complete new stage plus an
-        ``__old`` dir to clean — never a deleted/partial stage (the
-        rmtree-first spelling loses the whole stage if the process dies
-        before the rename)."""
-        import shutil
-
-        path = self.stage_path(stage)
-        df = self.spark.read.parquet(path)
-        n_files = max(1, -(-df.count() // max(target_rows_per_file, 1)))
-        tmp = f"{path}__compacting"
-        old = f"{path}__old"
-        df.coalesce(n_files).write.partitionBy("month").mode(
-            "overwrite"
-        ).parquet(tmp)
-        if _is_local(self.bucket):
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(path, old)
-            os.rename(tmp, path)
-            shutil.rmtree(old)
-        else:
-            # same swap through the Hadoop FS API — os.rename/shutil on a
-            # scheme URI raises after the (expensive) rewrite already ran
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            jold = jvm.org.apache.hadoop.fs.Path(old)
-            jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-            if fs.exists(jold):
-                fs.delete(jold, True)
-            fs.rename(jpath, jold)
-            fs.rename(jtmp, jpath)
-            fs.delete(jold, True)
-
 
 def asof_fallback_months(
     wanted: list[str], available: list[str]
@@ -323,38 +276,3 @@ def asof_fallback_months(
         out[m] = earlier[-1] if earlier else None
     return out
 
-
-class BucketedStorage:
-    """Bucketed-table layout for co-located joins (SURVEY §7 scale path).
-
-    The wide-combine and feature stages join repeatedly on the same keys
-    (``grid_id`` / ``(grid_id, date)``). Writing both sides bucketed by
-    the join key lets Spark plan a SortMergeJoin with ZERO Exchange —
-    at 100 TB the bucketed layout amortizes one shuffle at write time
-    against every downstream join (tests/test_plan_quality.py pins the
-    no-Exchange property). Bucketed tables must live in a metastore
-    (``saveAsTable``), so this wraps table names, not raw paths.
-    """
-
-    def __init__(self, spark: SparkSession, database: str = "default"):
-        self.spark = spark
-        self.database = database
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_cols: list[str],
-        n_buckets: int = 16,
-        sort_cols: list[str] | None = None,
-    ) -> None:
-        writer = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        writer = writer.sortBy(*(sort_cols or bucket_cols))
-        writer.saveAsTable(f"{self.database}.{table}")
-
-    def read_table(self, table: str) -> DataFrame:
-        return self.spark.table(f"{self.database}.{table}")

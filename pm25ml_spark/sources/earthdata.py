@@ -10,7 +10,7 @@ The reference drives this through earthaccess/requests/fsspec; here the
 same protocol is spoken with ``urllib`` only, against any base URL — the
 tests run a local mock Earthdata server returning real classic-NetCDF
 bytes, and the downloaded files feed straight into the distributed
-granule reader (`raster.read_granules_to_grid`). These clients are
+granule reader (`raster.read_granules_wide`). These clients are
 deliberately driver-side: they orchestrate; the decode/regrid work is
 the cluster's (same isolation the reference's ABC seam enforces).
 """
@@ -207,7 +207,7 @@ def retrieve_subset(
 ) -> list[str]:
     """The full S15 flow: resolve collection → validate granules exist →
     submit subsetting job → poll → download every result link. Returns
-    local paths ready for `raster.read_granules_to_grid` manifests."""
+    local paths ready for `raster.read_granules_wide` manifests."""
     collection = cmr.collection_id(desc.dataset_name)
     cmr.search_granules(desc)  # presence + count validation, as reference
     job_id = harmony.submit_job(collection, desc)

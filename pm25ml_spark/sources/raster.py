@@ -2,16 +2,15 @@
 
 Reference shape: NASA granules (NetCDF / HDF-EOS) are opened with
 xarray/h5netcdf, bbox-subset, time-averaged to a day grid, then regridded
-to the 33k grid centroids (`collectors/ned/*`). Spark-first shapes, both
-over one per-granule decode + regrid helper:
+to the 33k grid centroids (`collectors/ned/*`). The Spark shape is one
+reader over a per-granule decode + regrid helper:
 
     read_granules_wide: one manifest row per date (its granules)
       → mapInPandas                       # a task decodes whole dates
       → wide rows (grid_id, date, <variable>…) over every grid cell
 
-    read_granules_to_grid: one manifest row per granule
-      → mapInPandas                       # one granule per task
-      → long rows (grid_id, date, variable, value)
+A long (grid_id, date, variable, value) view is a projection of the
+wide rows (plan ``k02_raster_regrid`` selects one).
 
 Decode resolution order (S12/S13):
 
@@ -235,52 +234,6 @@ def _manifest_entry(g: RasterGranule) -> tuple:
         list(g.bbox) if g.bbox is not None else None,
         g.level,
     )
-
-
-RASTER_ROW_SCHEMA = StructType(
-    [
-        StructField("grid_id", LongType()),
-        StructField("date", StringType()),
-        StructField("variable", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-
-def read_granules_to_grid(
-    spark: SparkSession,
-    granules: list[RasterGranule],
-    grid_pdf: pd.DataFrame,  # columns: grid_id, lon, lat (33k rows — broadcastable)
-) -> DataFrame:
-    """Distributed granule reader: one manifest row per granule, decoded
-    and regridded inside mapInPandas (one task per granule, matching the
-    reference's file-per-day unit of work)."""
-    manifest = spark.createDataFrame(
-        [(g.date, *_manifest_entry(g)) for g in granules],
-        "date string, path string, variable string, "
-        "bbox array<double>, level int",
-    ).repartition(max(1, min(len(granules), 64)))
-
-    g_ids = grid_pdf["grid_id"].to_numpy()
-    g_lon = grid_pdf["lon"].to_numpy(dtype=np.float64)
-    g_lat = grid_pdf["lat"].to_numpy(dtype=np.float64)
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                vals = _regrid_granule(
-                    row.path, row.variable, row.bbox, row.level, g_lon, g_lat
-                )
-                yield pd.DataFrame(
-                    {
-                        "grid_id": g_ids,
-                        "date": row.date,
-                        "variable": row.variable,
-                        "value": vals,
-                    }
-                )
-
-    return manifest.mapInPandas(fn, schema=RASTER_ROW_SCHEMA)
 
 
 def read_granules_wide(

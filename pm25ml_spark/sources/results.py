@@ -15,7 +15,8 @@ GeoTransform — written as real NetCDF via the numpy-only codecs:
   level-5 DEFLATE-compressed variable data, via `sources/hdf5_min`.
 
 Both carry identical data + CF metadata and both round-trip through
-``read_raster`` (which dispatches on the file magic).
+``read_raster`` (which dispatches on the file magic). Chunked Zarr cubes
+are ``sources/zarr_io``'s job, not this sink's.
 """
 
 from __future__ import annotations
@@ -80,12 +81,8 @@ def write_raster(
     GeoTransform. ``engine="netcdf4"`` adds the reference's zlib
     complevel-5 compression in a netCDF-4-style HDF5 container;
     ``engine="classic"`` writes the portable uncompressed NetCDF-3 file
-    with identical data + metadata. ``engine="zarr"`` writes the same
-    cube + coordinates as a Zarr v2 group (``sources/zarr_io``) — the
-    chunked cloud-raster layout; for an executor-parallel chunked write
-    straight from the long-form frame (no driver pivot), use
-    :func:`pm25ml_spark.sources.zarr_io.write_zarr_distributed`."""
-    if engine not in ("classic", "netcdf4", "zarr"):
+    with identical data + metadata."""
+    if engine not in ("classic", "netcdf4"):
         raise ValueError(f"unknown engine {engine!r}")
     days = (
         (np.asarray(dates, dtype="datetime64[D]") - _TIME_EPOCH)
@@ -100,27 +97,6 @@ def write_raster(
     # because its xarray cube is north-up/descending-y; emitting -dy over
     # ascending rows would georeference the raster vertically mirrored.)
     gt = f"{xs[0] - dx / 2.0} {dx} 0.0 {ys[0] - dy / 2.0} 0.0 {dy}"
-    if engine == "zarr":
-        from pm25ml_spark.sources.zarr_io import write_zarr_cube
-
-        out = path if path.endswith(".zarr") else f"{path}.zarr"
-        # no separate grid-mapping variable in the flat zarr layout —
-        # the CRS + GeoTransform ride on the value array's own attrs,
-        # so the projection survives the engine switch
-        write_zarr_cube(
-            out,
-            cube,
-            dates,
-            ys,
-            xs,
-            var_name=value_name,
-            attrs={
-                "Conventions": "CF-1.8",
-                "spatial_ref": "EPSG:7755",
-                "GeoTransform": gt,
-            },
-        )
-        return out
     out = path if path.endswith(".nc") else f"{path}.nc"
     coords = {
         "time": (
@@ -186,35 +162,16 @@ def write_raster(
 
 
 def read_raster(path: str) -> dict[str, np.ndarray]:
-    """Read a raster written by :func:`write_raster` — any engine,
-    dispatched on directory-vs-file and the file magic — or a legacy
-    .npz."""
-    import os
-
-    if os.path.isdir(path):  # Zarr v2 group store
-        from pm25ml_spark.sources.zarr_io import read_zarr_array
-
-        arrays = {}
-        for entry in sorted(os.listdir(path)):
-            sub = os.path.join(path, entry)
-            if os.path.isdir(sub) and os.path.exists(
-                os.path.join(sub, ".zarray")
-            ):
-                arrays[entry], _ = read_zarr_array(sub)
-        # fall through to the shared time-axis decode so every engine
-        # returns identical semantics (datetime64, not raw day counts)
-    elif path.endswith(".npz"):
-        with np.load(path, allow_pickle=False) as z:
-            return {k: z[k] for k in z.files}
+    """Read a raster written by :func:`write_raster` — either engine,
+    dispatched on the file magic."""
+    with open(path, "rb") as fh:
+        magic = fh.read(8)
+    if magic == b"\x89HDF\r\n\x1a\n":
+        f = read_hdf5(path)
+        arrays = {n: ds.read() for n, ds in f.root.datasets.items()}
     else:
-        with open(path, "rb") as fh:
-            magic = fh.read(8)
-        if magic == b"\x89HDF\r\n\x1a\n":
-            f = read_hdf5(path)
-            arrays = {n: ds.read() for n, ds in f.root.datasets.items()}
-        else:
-            _, variables, _ = read_netcdf3(path)
-            arrays = {n: arr for n, (_, arr, _) in variables.items()}
+        _, variables, _ = read_netcdf3(path)
+        arrays = {n: arr for n, (_, arr, _) in variables.items()}
     out = {}
     for name, arr in arrays.items():
         if name == "time":

@@ -1,6 +1,6 @@
 """M3 booster path tests: the collect/fit/broadcast/score plumbing is
-driven with an injected sklearn-style stub (the container has neither
-xgboost nor lightgbm); the real backends activate by import."""
+driven with an injected sklearn-style stub, and the paper's named
+learner configs run through their NumpyHistGBM translations."""
 
 from __future__ import annotations
 
@@ -13,8 +13,8 @@ from pm25ml_spark.ml.boosters import (
     LGBM_NO2_PARAMS,
     XGB_AOD_PARAMS,
     cross_validate_booster,
-    train_booster_on_sample,
 )
+from pm25ml_spark.ml.numpy_gbm import NumpyHistGBM
 
 
 class LinearStub:
@@ -45,8 +45,8 @@ def _frame(spark, n=200, seed=0):
 
 def test_fit_and_distributed_predict(spark):
     df = _frame(spark)
-    imp = train_booster_on_sample(
-        df, ["f1", "f2"], "y", model_factory=LinearStub
+    imp = cross_validate_booster(
+        df, ["f1", "f2"], "y", "grp", model_factory=LinearStub
     )
     scored = imp.transform(df).toPandas()
     # exact linear data → stub recovers it; scoring ran in executors
@@ -64,27 +64,20 @@ def test_group_cv_scores(spark):
 
 def test_null_target_rows_excluded(spark):
     pdf = pd.DataFrame(
-        {"f1": [1.0, 2.0, 3.0], "f2": [0.0, 0.0, 0.0], "y": [2.0, 4.0, None]}
+        {
+            "f1": [1.0, 2.0, 3.0],
+            "f2": [0.0, 0.0, 0.0],
+            "grp": [0, 1, 0],
+            "y": [2.0, 4.0, None],
+        }
     )
-    imp = train_booster_on_sample(
-        spark.createDataFrame(pdf), ["f1", "f2"], "y",
-        model_factory=LinearStub,
+    imp = cross_validate_booster(
+        spark.createDataFrame(pdf), ["f1", "f2"], "y", "grp",
+        n_folds=2, model_factory=LinearStub,
     )
     # fitted on the 2 labelled rows only: y = 2*f1
     out = imp.transform(spark.createDataFrame(pdf)).toPandas()
     assert out["y__predicted"].tolist() == pytest.approx([2.0, 4.0, 6.0])
-
-
-def test_missing_backend_raises_cleanly(spark):
-    df = _frame(spark, n=10)
-    try:
-        import xgboost  # noqa: F401
-
-        pytest.skip("xgboost installed; error path not reachable")
-    except ImportError:
-        pass
-    with pytest.raises(ImportError, match="xgb"):
-        train_booster_on_sample(df, ["f1"], "y", backend="xgb")
 
 
 def test_paper_hyperparameters_pinned():
@@ -141,7 +134,7 @@ class TestNamedLearnerAnalogues:
         assert params["subsample"] == 0.8
         imp = cross_validate_booster(
             df, ["f1", "f2"], "y", "grp", n_folds=2,
-            backend="numpy", params=params,
+            model_factory=lambda: NumpyHistGBM(**params),
         )
         assert imp.mean_cv_r2 > 0.8
         check_quality_gate(imp.mean_cv_r2, 0.5, 1.0)  # passes the gate
@@ -160,7 +153,7 @@ class TestNamedLearnerAnalogues:
         assert params["max_depth"] == 10
         imp = cross_validate_booster(
             df, ["f1", "f2"], "y", "grp", n_folds=2,
-            backend="numpy", params=params,
+            model_factory=lambda: NumpyHistGBM(**params),
         )
         assert imp.mean_cv_r2 > 0.8
         check_quality_gate(imp.mean_cv_r2, 0.5, 1.0)

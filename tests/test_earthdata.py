@@ -174,7 +174,7 @@ def test_rangeset_url_carries_subsets(earthdata_server):
 def test_full_retrieve_and_distributed_decode(spark, earthdata_server, tmp_path):
     """S15 end-to-end: submit → poll (running×2 → successful) → download
     real NetCDF bytes → manifest → mapInPandas decode/regrid."""
-    from pm25ml_spark.sources.raster import RasterGranule, read_granules_to_grid
+    from pm25ml_spark.sources.raster import RasterGranule, read_granules_wide
 
     cmr = CmrClient(earthdata_server)
     harmony = HarmonyClient(
@@ -190,8 +190,8 @@ def test_full_retrieve_and_distributed_decode(spark, earthdata_server, tmp_path)
         RasterGranule(p, d, "t2m")
         for p, d in zip(sorted(paths), ("2023-06-01", "2023-06-02"))
     ]
-    out = read_granules_to_grid(spark, granules, grid_pdf).toPandas()
+    out = read_granules_wide(spark, granules, grid_pdf).toPandas()
     expect = 0.5 * grid_pdf["lon"] + 0.25 * grid_pdf["lat"] + 1.0
     for d in ("2023-06-01", "2023-06-02"):
-        got = out[out.date == d].sort_values("grid_id")["value"].to_numpy()
+        got = out[out.date == d].sort_values("grid_id")["t2m"].to_numpy()
         assert np.allclose(got, expect)

@@ -39,7 +39,7 @@ def test_nan_to_null_launders_nan(series):
 
 
 def test_rolling_mean_min_samples_1(series):
-    feat = generate_features(series, ["v"], with_fills=False, long_window=365)
+    feat = generate_features(series, ["v"], with_fills=False)
     got = {
         r.date: r.v__mean_r7d
         for r in feat.filter("grid_id = 1").collect()

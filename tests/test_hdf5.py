@@ -28,7 +28,6 @@ from pm25ml_spark.sources.hdfeos import (
 from pm25ml_spark.sources.raster import (
     RasterGranule,
     decode_granule,
-    read_granules_to_grid,
     read_granules_wide,
 )
 
@@ -307,7 +306,7 @@ class TestDistributedRead:
             }
         )
         rows = (
-            read_granules_to_grid(
+            read_granules_wide(
                 spark,
                 [RasterGranule(path=path, date="2019-03-07", variable="ColumnAmountNO2")],
                 grid_pdf,
@@ -316,7 +315,9 @@ class TestDistributedRead:
             .sort_values("grid_id")
         )
         expect = 0.5 * grid_pdf["lon"] + 0.25 * grid_pdf["lat"] + 3.0
-        np.testing.assert_allclose(rows["value"].to_numpy(), expect, rtol=1e-5)
+        np.testing.assert_allclose(
+            rows["ColumnAmountNO2"].to_numpy(), expect, rtol=1e-5
+        )
         assert set(rows["date"]) == {"2019-03-07"}
 
     def test_decode_granule_dispatches_hdf5(self, tmp_path):
@@ -407,7 +408,7 @@ class TestGranuleSubsetPassThrough:
             level=1,
         )
         rows = (
-            read_granules_to_grid(spark, [granule], grid_pdf)
+            read_granules_wide(spark, [granule], grid_pdf)
             .toPandas()
             .sort_values("grid_id")
         )
@@ -421,16 +422,7 @@ class TestGranuleSubsetPassThrough:
             lons, lats, grid,
             grid_pdf["lon"].to_numpy(), grid_pdf["lat"].to_numpy(),
         )
-        np.testing.assert_allclose(rows["value"].to_numpy(), expect)
-        # the date-grouped reader passes bbox/level through the same way
-        wide = (
-            read_granules_wide(spark, [granule], grid_pdf)
-            .toPandas()
-            .sort_values("grid_id")
-        )
-        np.testing.assert_array_equal(
-            wide["t2m"].to_numpy(), rows["value"].to_numpy()
-        )
+        np.testing.assert_allclose(rows["t2m"].to_numpy(), expect)
 
     def test_level_on_hdfeos_grid_rejected(self, tmp_path):
         path = _write_omi(tmp_path / "omi.he5")

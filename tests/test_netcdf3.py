@@ -17,7 +17,7 @@ from pm25ml_spark.sources.raster import (
     RasterGranule,
     decode_granule,
     decode_granule_netcdf3,
-    read_granules_to_grid,
+    read_granules_wide,
 )
 from pm25ml_spark.sources.results import read_raster, write_raster
 
@@ -168,12 +168,12 @@ def test_read_granules_to_grid_real_files(spark, tmp_path):
             "lat": [11.0, 14.5, 18.5],  # inside the granule's lat range
         }
     )
-    out = read_granules_to_grid(spark, paths, grid_pdf).toPandas()
+    out = read_granules_wide(spark, paths, grid_pdf).toPandas()
     assert len(out) == 6
     # plane value: 0.5*lon + 0.25*lat + mean(t)=1.0
     expect = 0.5 * grid_pdf["lon"] + 0.25 * grid_pdf["lat"] + 1.0
     for d in ("2023-06-01", "2023-06-02"):
-        got = out[out.date == d].sort_values("grid_id")["value"].to_numpy()
+        got = out[out.date == d].sort_values("grid_id")["t2m"].to_numpy()
         assert np.allclose(got, expect)
 
 

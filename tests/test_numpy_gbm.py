@@ -13,7 +13,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pm25ml_spark.ml.boosters import cross_validate_booster, train_booster_on_sample
+from pm25ml_spark.ml.boosters import cross_validate_booster
 from pm25ml_spark.ml.numpy_gbm import NumpyHistGBM
 from pm25ml_spark.ml.pipeline import check_quality_gate, regression_metrics
 
@@ -85,8 +85,9 @@ class TestEndToEnd:
             "y",
             "grp",
             n_folds=3,
-            backend="numpy",
-            params={"n_estimators": 120, "max_depth": 5, "max_bin": 64},
+            model_factory=lambda: NumpyHistGBM(
+                n_estimators=120, max_depth=5, max_bin=64
+            ),
         )
         assert len(imp.cv_r2) == 3
         assert imp.mean_cv_r2 > 0.9  # nontrivial R² on held-out groups
@@ -100,15 +101,15 @@ class TestEndToEnd:
         assert regression_metrics(scored, "y")["r2"] > 0.95
         imp.release()
 
-    def test_backend_numpy_via_train_on_sample(self, spark):
+    def test_final_model_scores_training_frame(self, spark):
         pdf = _nonlinear(800, seed=5)
         df = spark.createDataFrame(pdf)
-        imp = train_booster_on_sample(
+        imp = cross_validate_booster(
             df,
             ["f1", "f2", "f3"],
             "y",
-            backend="numpy",
-            params={"n_estimators": 60, "max_depth": 4},
+            "grp",
+            model_factory=lambda: NumpyHistGBM(n_estimators=60, max_depth=4),
         )
         out = imp.transform(df).toPandas()
         r2 = 1 - ((out.y - out.y__predicted) ** 2).sum() / (

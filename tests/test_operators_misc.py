@@ -13,10 +13,11 @@ from pm25ml_spark.ml.pipeline import (
     check_quality_gate,
     ModelQualityError,
     regression_metrics,
+    stratified_split,
 )
 from pm25ml_spark.operators.asof import asof_join_backward
 from pm25ml_spark.operators.nn_join import nearest_grid_join
-from pm25ml_spark.operators.sampling import decimate, stratified_split
+from pm25ml_spark.operators.sampling import decimate
 from pm25ml_spark.sources.archive import (
     ArchiveStorage,
     PipelineConfig,
@@ -68,14 +69,14 @@ def test_nearest_grid_join(spark):
 def test_stratified_split_exact_fraction(spark):
     rows = [(i, i % 4) for i in range(400)]
     df = spark.createDataFrame(rows, "id long, stratum long")
-    out = stratified_split(df, "stratum", 0.1, seed=42, key="id")
+    out = stratified_split(df, "stratum", 0.1, seed=42, key=["id"])
     per = (
         out.filter("split = 'training'").groupBy("stratum").count().collect()
     )
     assert {r.stratum: r["count"] for r in per} == {0: 10, 1: 10, 2: 10, 3: 10}
     # deterministic across invocations
-    a = {r.id for r in stratified_split(df, "stratum", 0.1, 42, "id").filter("split='training'").select("id").collect()}
-    b = {r.id for r in stratified_split(df, "stratum", 0.1, 42, "id").filter("split='training'").select("id").collect()}
+    a = {r.id for r in stratified_split(df, "stratum", 0.1, 42, ["id"]).filter("split='training'").select("id").collect()}
+    b = {r.id for r in stratified_split(df, "stratum", 0.1, 42, ["id"]).filter("split='training'").select("id").collect()}
     assert a == b
 
 
@@ -160,6 +161,8 @@ def test_archive_storage_validated_idempotency(spark, tmp_path):
     bad_rows = PipelineConfig(sub, ("grid_id", "date"), {}, 3)
     with pytest.raises(ValidationError):
         store.validate(bad_rows)
+    with pytest.raises(ValueError, match="illegal id columns"):
+        PipelineConfig(sub, ("user_id",))
     rows, schema = store.read_dataframe_metadata(sub)
     assert rows == 2 and "temperature" in schema.names
     assert store.filter_paths_by_kv("month", "2023-01") == [
@@ -273,7 +276,7 @@ def test_grid_dimension_export_roundtrip(spark, tmp_path):
     assert set(back.columns) == set(grid.columns)
 
 
-def test_sink_stage_returns_observed_count_and_compacts(spark, tmp_path):
+def test_sink_stage_returns_observed_count(spark, tmp_path):
     from pyspark.sql import functions as F2
 
     from pm25ml_spark.sources.archive import StageStorage
@@ -283,17 +286,10 @@ def test_sink_stage_returns_observed_count_and_compacts(spark, tmp_path):
         spark.range(500)
         .withColumn("month", F2.when(F2.col("id") % 2 == 0, "2024-01").otherwise("2024-02"))
         .withColumn("v", F2.col("id") * 2)
-        .repartition(16)  # force many small files
+        .repartition(16)  # the count sums over many write tasks
     )
     n = store.sink_stage(df, "demo")
     assert n == 500  # observed during the write job, no second scan
-    import glob as g
-
-    files_before = len(g.glob(f"{tmp_path}/stage=demo/month=*/*.parquet"))
-    assert files_before > 2
-    store.compact_stage("demo", target_rows_per_file=1000)
-    files_after = len(g.glob(f"{tmp_path}/stage=demo/month=*/*.parquet"))
-    assert files_after < files_before
     back = store.scan_stage("demo")
     assert back.count() == 500
     assert set(back.select("month").distinct().toPandas()["month"]) == {

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from pm25ml_spark.pipeline import PipelineSettings, Pm25Pipeline
 from pm25ml_spark.sources.grid import synthetic_grid
-from pm25ml_spark.sources.raster import RasterGranule, read_granules_to_grid
+from pm25ml_spark.sources.raster import RasterGranule, _regrid_granule
 from pm25ml_spark.sources.results import read_raster
 
 
@@ -206,10 +206,10 @@ def _ingested(spark, tmp_path, grid, granules) -> pd.DataFrame:
 
 
 def test_ingest_equals_long_reader_pivoted_onto_grid_and_dates(spark, tmp_path):
-    """``ingested`` is the per-granule reader's long rows pivoted onto
-    grid × manifest dates: a (date, variable) with no granule is null on
-    that date, every other value is bit-identical, and the manifest's
-    order does not matter."""
+    """``ingested`` is the per-granule kernel's long rows, computed on
+    the driver one granule at a time, pivoted onto grid × manifest dates:
+    a (date, variable) with no granule is null on that date, every other
+    value is bit-identical, and the manifest's order does not matter."""
     grid = synthetic_grid(spark, nx=6, ny=6)
     granules = [
         RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
@@ -218,7 +218,21 @@ def test_ingest_equals_long_reader_pivoted_onto_grid_and_dates(spark, tmp_path):
         if (d, v) != (3, "t2m")
     ]
     grid_pdf = grid.select("grid_id", "lon", "lat").toPandas()
-    long = read_granules_to_grid(spark, granules, grid_pdf).toPandas()
+    g_lon = grid_pdf["lon"].to_numpy(dtype=np.float64)
+    g_lat = grid_pdf["lat"].to_numpy(dtype=np.float64)
+    long = pd.concat(
+        pd.DataFrame(
+            {
+                "grid_id": grid_pdf["grid_id"],
+                "date": g.date,
+                "variable": g.variable,
+                "value": _regrid_granule(
+                    g.path, g.variable, g.bbox, g.level, g_lon, g_lat
+                ),
+            }
+        )
+        for g in granules
+    )
     dates = sorted({g.date for g in granules})
     scaffold = pd.MultiIndex.from_product(
         [grid_pdf["grid_id"], dates], names=["grid_id", "date"]
@@ -290,14 +304,33 @@ def _static_import_closure(root: str) -> set[str]:
 
 
 def test_pipeline_import_closure_is_pm25_only():
-    """The pipeline reaches no catalog plans, streaming code, dedup or
-    nearest-neighbour join, even through a function-level import."""
-    closure = _static_import_closure("pm25ml_spark.pipeline")
-    assert "pm25ml_spark.operators.interpolation" in closure
-    leaked = sorted(
-        m
-        for m in closure
-        if m.startswith(("pm25ml_spark.plans", "pm25ml_spark.streaming"))
-        or m in ("pm25ml_spark.operators.dedup", "pm25ml_spark.operators.nn_join")
-    )
-    assert not leaked, leaked
+    """The pipeline reaches exactly the pm25 modules it runs, even through
+    function-level imports: no catalog plans, no catalog-only operators
+    or sources. A new module in the closure fails this test."""
+    assert _static_import_closure("pm25ml_spark.pipeline") == {
+        f"pm25ml_spark{m}"
+        for m in (
+            "",
+            ".functions",
+            ".functions.exact",
+            ".ml",
+            ".ml.boosters",
+            ".ml.numpy_gbm",
+            ".ml.pipeline",
+            ".operators",
+            ".operators.combine",
+            ".operators.features",
+            ".operators.interpolation",
+            ".pipeline",
+            ".sources",
+            ".sources.archive",
+            ".sources.grid",
+            ".sources.hdf5_min",
+            ".sources.hdfeos",
+            ".sources.hive_path",
+            ".sources.netcdf3",
+            ".sources.raster",
+            ".sources.results",
+            ".sources.shapefile_io",
+        )
+    }

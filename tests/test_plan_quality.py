@@ -113,47 +113,6 @@ def test_d05_regex_projection_prunes_scan(spark, sf_dir):
     assert "props" not in read_schema and "event_id" not in read_schema
 
 
-def test_bucketed_join_eliminates_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed+sorted on the join key must SortMergeJoin with
-    ZERO Exchange — the write-time shuffle is amortized against every
-    downstream join (the wide-combine/feature stages join the same keys
-    repeatedly)."""
-    from pm25ml_spark.sources.archive import BucketedStorage
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    bs = BucketedStorage(spark)
-    bs.write_bucketed(orders, "b_orders", ["o_orderkey"], n_buckets=8)
-    bs.write_bucketed(lineitem, "b_lineitem", ["l_orderkey"], n_buckets=8)
-    # disable broadcast so the test exercises the big-table plan shape the
-    # bucketing exists for (at sf0.001 everything fits a broadcast)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bs.read_table("b_orders").join(
-            bs.read_table("b_lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = physical_plan(joined)
-        assert "SortMergeJoin" in plan, plan[:1500]
-        assert "Exchange" not in plan, plan[:1500]
-        # sanity: the join actually returns the right rows
-        assert joined.count() == orders.join(
-            lineitem, F.col("o_orderkey") == F.col("l_orderkey")
-        ).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prev_aqe)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_dd09_blocking_is_equi_join(spark, sf_dir):
     """dd09's candidate generation must hash-join on the block key.
 

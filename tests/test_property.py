@@ -160,11 +160,11 @@ def test_jaccard_between_prefix_filter_is_lossless(spark, docs):
 )
 @SETTINGS
 def test_stratified_split_exact_counts(spark, sizes, frac):
-    from pm25ml_spark.operators.sampling import stratified_split
+    from pm25ml_spark.ml.pipeline import stratified_split
 
     rows = [(f"s{g}", g * 100 + i) for g, n in enumerate(sizes) for i in range(n)]
     df = spark.createDataFrame(rows, "stratum string, id long")
-    out = stratified_split(df, "stratum", frac, seed=42, key="id")
+    out = stratified_split(df, "stratum", frac, seed=42, key=["id"])
     counts = {
         r.stratum: r.n
         for r in out.filter(out.split == "training")

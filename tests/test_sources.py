@@ -9,7 +9,6 @@ import pytest
 from pm25ml_spark.sources.raster import (
     RasterGranule,
     bilinear_regrid,
-    read_granules_to_grid,
     read_granules_wide,
 )
 
@@ -44,15 +43,15 @@ def test_read_granules_distributed(spark):
         RasterGranule(f"fake://m2/{d}.nc", f"2023-01-{d:02d}", "aot")
         for d in range(1, 6)
     ]
-    out = read_granules_to_grid(spark, granules, grid_pdf)
+    out = read_granules_wide(spark, granules, grid_pdf)
     pdf = out.toPandas()
     assert len(pdf) == 5 * 20  # one row per granule-day × grid cell
     assert set(pdf.date.unique()) == {f"2023-01-{d:02d}" for d in range(1, 6)}
-    assert pdf.value.notna().all()
+    assert pdf.aot.notna().all()
     # determinism: same manifest → identical values
-    pdf2 = read_granules_to_grid(spark, granules, grid_pdf).toPandas()
-    a = pdf.sort_values(["date", "grid_id"]).value.to_numpy()
-    b = pdf2.sort_values(["date", "grid_id"]).value.to_numpy()
+    pdf2 = read_granules_wide(spark, granules, grid_pdf).toPandas()
+    a = pdf.sort_values(["date", "grid_id"]).aot.to_numpy()
+    b = pdf2.sort_values(["date", "grid_id"]).aot.to_numpy()
     assert np.array_equal(a, b)
 
 

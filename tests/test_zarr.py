@@ -157,30 +157,6 @@ def test_distributed_sink_skips_missing_chunks_as_fill(spark, tmp_path):
     np.testing.assert_array_equal(out["values"], cube)
 
 
-def test_write_raster_zarr_engine_roundtrip(tmp_path):
-    """The S17 sink's third engine: same cube through write_raster
-    (engine='zarr') reads back via read_raster's directory dispatch."""
-    from pm25ml_spark.sources.results import read_raster, write_raster
-
-    cube, dates, ys, xs = _cube_fixture()
-    out = write_raster(
-        str(tmp_path / "r"), cube, dates, ys, xs, value_name="value",
-        engine="zarr",
-    )
-    assert out.endswith(".zarr") and os.path.isdir(out)
-    back = read_raster(out)
-    np.testing.assert_array_equal(back["value"], cube)
-    np.testing.assert_array_equal(back["y"], ys)
-    # read_raster returns the SAME time semantics as the NetCDF engines:
-    # decoded datetime64, not raw days-since-2000 ints
-    np.testing.assert_array_equal(back["time"], dates)
-    # georeferencing survives the engine switch: CRS + GeoTransform ride
-    # on the value array's attrs (no dangling grid_mapping reference)
-    attrs = json.load(open(os.path.join(out, "value", ".zattrs")))
-    assert attrs["spatial_ref"] == "EPSG:7755"
-    assert "GeoTransform" in attrs and "grid_mapping" not in attrs
-
-
 def test_distributed_sink_refuses_silently_dropped_rows(spark, tmp_path):
     """Rows whose coordinates match no axis value must FAIL the write,
     not produce an all-fill store."""
