@@ -37,8 +37,6 @@ FORCE_NEXT = frozenset({
     # post-append parquet snapshot (one broadcast + ReusedExchange
     # instead of two cache-backed builds):
     "dd15_incremental_dedup",
-    "gr08_incremental_edges",
-    "gr09_ingest_batch_summary",
     # r14: a09 shares one split-sampling pass across its two
     # quantile calls (fold-derived MAD splits, literal median frame);
     # cp04 persists the benchmark n-gram set across its three

@@ -34,16 +34,15 @@ from pm25ml_spark.functions.columns import md5_long
 # hundred MB of broadcast is fine, multiple GB is a driver/executor OOM;
 # Spark hard-caps a broadcast relation at 8 GB / 512M rows). 128 MiB
 # leaves headroom for the hash-relation build overhead on top of the
-# estimated row bytes, and for the fact that these hints recur per
-# micro-batch in the incremental lifecycles.
+# estimated row bytes.
 _BCAST_CAP_BYTES = 128 << 20
 
 
 def _bcast_if_small(df: DataFrame, cap_bytes: int = _BCAST_CAP_BYTES) -> DataFrame:
     """Broadcast hint guarded by the optimizer's size ESTIMATE — driver-
-    side plan statistics, no job. The incremental probes broadcast their
-    batch-side prefix (and the verify joins their per-doc array tables)
-    because those frames are micro-batch/corpus-slice sized in the
+    side plan statistics, no job. The incremental-ingest probe broadcasts
+    its batch-side prefix (and the verify joins their per-doc array
+    tables) because those frames are batch/corpus-slice sized in the
     intended topology — but nothing used to ENFORCE that: a backfill-
     sized "batch" (10^7 docs × prefix length) hinted unconditionally
     would OOM the driver at 100 TB. Unknown statistics default to
@@ -217,8 +216,6 @@ def jaccard_pairs_between(
     n: int = 3,
     t_num: int = 3,
     t_den: int = 5,
-    sh_new: DataFrame | None = None,
-    sh_cor: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric exact n-gram-Jaccard join — the INCREMENTAL-INGEST
     probe: which incoming docs near-duplicate the existing corpus?
@@ -236,21 +233,9 @@ def jaccard_pairs_between(
     The batch-side prefix is broadcast into the candidate join (bounded
     by the ingest batch), the same ppjoin length and positional prunes
     apply, and candidates are exact-verified by JVM set intersection.
-
-    ``sh_new``/``sh_cor``: optional precomputed :func:`shingle_arrays`
-    frames (columns ``doc_id, h_arr, n_sh``) — the incremental-ingest
-    lifecycle stages the CORPUS shingles once next to the corpus and
-    probes them per batch, never re-shingling 100 TB of text per
-    refresh (``plans/dup_graph.py``). Only internally-created frames
-    are persisted and LRU-registered; a passed-in frame's lifetime
-    belongs to its owner.
     """
-    own_new = sh_new is None
-    own_cor = sh_cor is None
-    if own_new:
-        sh_new = shingle_arrays(new_docs, n=n)
-    if own_cor:
-        sh_cor = shingle_arrays(corpus_docs, n=n)
+    sh_new = shingle_arrays(new_docs, n=n)
+    sh_cor = shingle_arrays(corpus_docs, n=n)
     pa = _sorted_prefix(sh_new, t_num, t_den).select(
         F.col("doc_id").alias("new_id"),
         "s",
@@ -307,115 +292,12 @@ def jaccard_pairs_between(
             ).alias("jaccard"),
         )
     )
-    # internally persisted shingle frames go through the bounded LRU
-    # registry like every other multi-pass operator cache — without
-    # this, long-lived sessions leak caches per call
+    # the persisted shingle frames go through the bounded LRU registry
+    # like every other multi-pass operator cache — without this,
+    # long-lived sessions leak caches per call
     from pm25ml_spark.operators.cache import release_with
 
-    if own_new:
-        out = release_with(out, sh_new)
-    if own_cor:
-        out = release_with(out, sh_cor)
-    return out
-
-
-def jaccard_delta_pairs(
-    sh_batch: DataFrame,
-    sh_existing: DataFrame | None,
-    t_num: int = 3,
-    t_den: int = 5,
-    sh_combined: DataFrame | None = None,
-) -> DataFrame:
-    """The INGEST-BATCH DELTA of the exact-Jaccard pair set in ONE
-    prefix-filtered probe: all pairs ``(doc_a < doc_b, shared, jaccard)``
-    with J ≥ t whose LATER endpoint is in the batch — batch-internal
-    pairs AND batch-vs-existing cross pairs together.
-
-    The incremental lifecycle (``plans/dup_graph.dup_edges_incremental``)
-    used to run TWO full pipelines per
-    batch — :func:`jaccard_pairs` over the batch plus
-    :func:`jaccard_pairs_between` against the pre-batch store — paying
-    the document-frequency aggregate, the per-doc prefix window, the
-    candidate join and the verification join twice each. Probing the
-    batch against (existing ∪ batch) yields the identical delta in one
-    pass: an internal pair is generated in both directions and collapses
-    under least/greatest + distinct, verification is exact either way,
-    and existing×existing pairs can never appear because the probe side
-    is batch-only. Both sides rank under ONE global order — the FROZEN
-    hash order (:func:`_sorted_prefix`), so the store side is a single
-    MAP-ONLY pass per batch: no union document-frequency aggregate, no
-    per-doc window, zero store-wide shuffles. The batch prefix is
-    broadcast into the candidate join (bounded by the micro-batch), so
-    per-batch cost is O(store scan + batch × collisions) instead of
-    O(store shuffles); any shared total order keeps the result SET
-    unchanged (candidates are exact-verified).
-
-    ``sh_batch`` / ``sh_existing`` are :func:`shingle_arrays` frames
-    (``doc_id, h_arr, n_sh``); ``sh_existing=None`` means an empty store
-    (bootstrap batch — the result is exactly the batch's internal pair
-    set). Doc ids must be disjoint between the two frames, which the
-    append-only store gives by construction.
-
-    ``sh_combined`` (optional): a frame whose ROW SET equals
-    existing ∪ batch — the incremental lifecycles pass the shingle
-    store's just-committed snapshot (batch appended first), a plain
-    parquet read. That does two things the explicit union cannot:
-    the union's cached batch leg forces every consumer through an
-    ``InMemoryTableScan``, which Spark 4 AQE wraps in per-subtree
-    ``TableCacheQueryStage`` nodes so the verify join's two broadcasts
-    NEVER canonicalize equal and the store is collected TWICE per
-    probe; over one parquet snapshot the second broadcast becomes a
-    ``ReusedExchange`` (verified in the final adaptive plan), cutting
-    the per-batch store-wide passes from 3 (prefix + 2 verify builds)
-    to 2 (guide §1.2 / §2.4). Result-identical: verification reads the
-    same (doc_id, h_arr, n_sh) rows either way.
-    """
-    if sh_combined is not None:
-        combined = sh_combined.select("doc_id", "h_arr", "n_sh")
-    else:
-        combined = (
-            sh_batch
-            if sh_existing is None
-            else sh_existing.select("doc_id", "h_arr", "n_sh").unionByName(
-                sh_batch.select("doc_id", "h_arr", "n_sh")
-            )
-        )
-    pa = _sorted_prefix(sh_batch, t_num, t_den).select(
-        F.col("doc_id").alias("new_id"),
-        "s",
-        F.col("rn").alias("rn_a"),
-        F.col("n_sh").alias("na"),
-    )
-    pb = _sorted_prefix(combined, t_num, t_den).select(
-        F.col("doc_id").alias("other_id"),
-        "s",
-        F.col("rn").alias("rn_b"),
-        F.col("n_sh").alias("nb"),
-    )
-    alpha = (
-        F.lit(t_num) * (F.col("na") + F.col("nb")) + F.lit(t_num + t_den - 1)
-    ).cast("long") / F.lit(t_num + t_den)
-    alpha = alpha.cast("long")
-    overlap_ub = F.lit(1) + F.least(
-        F.col("na") - F.col("rn_a"), F.col("nb") - F.col("rn_b")
-    )
-    cand = (
-        _bcast_if_small(pa).join(pb, "s")
-        .filter(F.col("new_id") != F.col("other_id"))
-        .filter(F.least("na", "nb") * t_den >= t_num * F.greatest("na", "nb"))
-        .filter(overlap_ub >= alpha)
-        .select(
-            F.least("new_id", "other_id").alias("doc_a"),
-            F.greatest("new_id", "other_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    return _verify_pairs(cand, combined, t_num, t_den).select(
-        "doc_a",
-        "doc_b",
-        F.col("shared").cast("long").alias("shared"),
-        "jaccard",
-    )
+    return release_with(release_with(out, sh_new), sh_cor)
 
 
 def _sorted_prefix(sh_arr: DataFrame, t_num: int, t_den: int) -> DataFrame:
@@ -495,7 +377,6 @@ def jaccard_pairs(
     n: int = 3,
     t_num: int = 3,
     t_den: int = 5,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs (threshold = t_num/t_den) with PREFIX
     FILTERING — the ppjoin-family optimization that makes exact set-
@@ -519,12 +400,8 @@ def jaccard_pairs(
     shorten the prefix below the guarantee.
 
     Output: (doc_a, doc_b, shared, jaccard) with doc_a < doc_b.
-
-    ``sh``: optional precomputed :func:`shingle_arrays` frame — staged
-    shingle stores pass it so the corpus text is tokenized exactly once
-    per corpus version (see ``plans/dup_graph.py``).
     """
-    sh_arr = shingle_arrays(docs, n=n) if sh is None else sh
+    sh_arr = shingle_arrays(docs, n=n)
     # persisted: pa and pb below are two consumers of the same subtree
     prefix = _sorted_prefix(sh_arr, t_num, t_den).persist()
     pa = prefix.select(

@@ -36,7 +36,6 @@ def decimate_partitioned(
     every: int,
     order_cols: list[str],
     num_partitions: int | None = None,
-    bucket=None,
 ) -> DataFrame:
     """Exact gather_every(n) without the global window (the W7 scale
     path): EXACTLY the rows :func:`decimate` keeps, computed with
@@ -56,10 +55,6 @@ def decimate_partitioned(
     be deterministic (true of every storage scan; re-derive plans with
     nondeterministic columns should persist first) — and the bucket id
     itself is deterministic even across different physical partitionings.
-
-    Implementation: the global rank is ``prefix.ordered_prefix_sum`` of
-    a literal 1 — entirely JVM-side (per-bucket window + broadcast
-    offsets), no Python kernel.
     """
     from pm25ml_spark.operators.prefix import ordered_prefix_sum
 
@@ -69,7 +64,6 @@ def decimate_partitioned(
         "__one",
         "__rank",
         num_partitions=num_partitions,
-        bucket=bucket,
     )
     return ranked.filter((F.col("__rank") - 1) % every == 0).drop(
         "__one", "__rank"
@@ -82,7 +76,6 @@ def stratified_split_portable(
     fraction: float,
     key: str,
     seed: int = 42,
-    split_col: str = "split",
 ) -> DataFrame:
     """Exact per-stratum split whose membership is bit-identical across
     ENGINES, not just runs: rows are ordered by ``md5(seed || key)`` (then
@@ -91,7 +84,9 @@ def stratified_split_portable(
     concession that seeded-RNG parity is impossible. Same shuffle shape
     as ``ml/pipeline.stratified_split`` (one rank window per stratum);
     that one (xxhash64) suffices when only within-engine determinism is
-    needed — xxhash64 is a cheaper hash than md5."""
+    needed — xxhash64 is a cheaper hash than md5. The label goes to a
+    ``split`` column: ``"training"`` for each stratum's first
+    ``ceil(n · fraction)`` rows in that order, ``"test"`` for the rest."""
     h = F.md5(F.concat(F.lit(str(seed) + ":"), F.col(key).cast("string")))
     w = Window.partitionBy(stratum).orderBy(h, F.col(key))
     wc = Window.partitionBy(stratum)
@@ -99,7 +94,7 @@ def stratified_split_portable(
         df.withColumn("__rn", F.row_number().over(w))
         .withColumn("__n", F.count(F.lit(1)).over(wc))
         .withColumn(
-            split_col,
+            "split",
             F.when(
                 F.col("__rn") <= F.ceil(F.col("__n") * fraction), "training"
             ).otherwise("test"),
@@ -207,7 +202,7 @@ def weighted_sample_topk(
     Scale shape: a global top-k is a single-reducer sort, so the plan
     takes per-salt-lane top-k first (``salts`` parallel windows over a
     hash-derived lane) and the true top-k over the ≤ k·salts survivors —
-    the same two-level prune as the KMV sketch, exact by the same
+    the same two-level prune as :func:`global_topk`, exact by the same
     subset argument. Adds column ``es_key``; keeps id and weight.
 
     A-ES is defined for w > 0 only: rows with w = 0 have zero inclusion

@@ -2,9 +2,9 @@
 
 The general mechanism behind ``plans/dup_graph.py``: a corpus-derived
 intermediate that several catalog queries share (duplicate-pair edges,
-the shingle store, winnowing selections) is materialized ONCE per
-(session, corpus, params) into a transaction-log table under a
-process-local temp dir and read from parquet by every later consumer —
+winnowing selections) is materialized ONCE per (session, corpus,
+params) into a transaction-log table under a process-local temp dir
+and read from parquet by every later consumer —
 the reference stages intermediate artifacts the same way
 (``combiners/data_artifact.py:10-44``). At 100 TB these artifacts live
 on the object store next to the corpus, refreshed by the ingest
@@ -29,10 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 # (applicationId, sf_dir, name, params, input_fingerprint) -> TxTable path
 _ARTIFACTS: dict[tuple, str] = {}
-# (applicationId, sf_dir, name, params) -> path of the LATEST staged
-# version (whatever input fingerprint it was built against) — the lookup
-# table-level verbs use, since handle callers don't re-derive inputs
-_LATEST: dict[tuple, str] = {}
 # observability + test pin: from-scratch builds per artifact name
 BUILD_COUNTS: dict[str, int] = {}
 # honest-bench accounting: wall seconds spent building each artifact
@@ -41,11 +37,8 @@ BUILD_COUNTS: dict[str, int] = {}
 BUILD_SECONDS: dict[str, float] = {}
 # concurrent consumers (e.g. parallel test workers sharing a session)
 # must not each pay the build: one lock serializes first-build races —
-# the loser re-checks the memo and reads the winner's table. REENTRANT:
-# a build step may itself stage a sub-artifact (the incremental edge
-# table's base build reads the staged corpus-shingle store), and a
-# plain Lock would self-deadlock on that nested acquisition.
-_LOCK = threading.RLock()
+# the loser re-checks the memo and reads the winner's table
+_LOCK = threading.Lock()
 
 
 def _input_fingerprint(sf_dir: str, inputs: tuple[str, ...] | None) -> str:
@@ -93,22 +86,13 @@ def staged_table(
     name: str,
     params: tuple,
     build: Callable[[], DataFrame],
-    range_col: str | None = None,
-    stats_cols: list[str] | None = None,
     inputs: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Return the staged table for ``(sf_dir, name, params)``, building
-    it with ``build()`` on first use. ``range_col`` RANGE-partitions the
-    write, which makes the per-file min/max of that column TIGHT — the
-    layout that turns ``stats_cols`` + ``TxTable.read_pruned`` into real
-    data skipping (a hash layout puts the full key range in every file,
-    so its stats prune nothing).
-    ``stats_cols`` records per-file min/max for pruned point lookups.
-    ``inputs`` names the source tables whose content version is folded
-    into the memo key (see :func:`_input_fingerprint`); None fingerprints
-    every table under ``sf_dir``."""
-    from pyspark.sql import functions as F
-
+    it with ``build()`` on first use. ``inputs`` names the source
+    tables whose content version is folded into the memo key (see
+    :func:`_input_fingerprint`); None fingerprints every table under
+    ``sf_dir``."""
     from pm25ml_spark.sources.txlog import TxTable
 
     key = (
@@ -129,108 +113,10 @@ def staged_table(
                 base = tempfile.mkdtemp(prefix=f"pm25ml_stage_{name}_")
                 atexit.register(shutil.rmtree, base, True)
                 path = os.path.join(base, name)
-                df = build()
-                nparts = spark.sparkContext.defaultParallelism
-                if range_col is not None:
-                    # single write job: repartitionByRange's per-job
-                    # boundary resample can't bite here (content is
-                    # identical either way; only the file layout
-                    # depends on the sample)
-                    df = df.repartitionByRange(nparts, F.col(range_col))
-                TxTable(spark, path).append(df, stats_cols=stats_cols)
+                TxTable(spark, path).append(build())
                 BUILD_COUNTS[name] = BUILD_COUNTS.get(name, 0) + 1
                 BUILD_SECONDS[name] = (
                     BUILD_SECONDS.get(name, 0.0) + time.perf_counter() - t0
                 )
                 _ARTIFACTS[key] = path
-    _LATEST[key[:4]] = path
     return TxTable(spark, path).read()
-
-
-def staged_incremental_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    params: tuple,
-    steps: list[tuple[str, Callable[[], DataFrame]]],
-    range_col: str | None = None,
-    stats_cols: list[str] | None = None,
-    inputs: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """INCREMENTALLY-MAINTAINED staged artifact: each ``(step, build)``
-    appends one transaction-log commit on first use — the base build
-    plus ingest-refresh lifecycle a production corpus artifact runs
-    (full rebuilds only on bootstrap; every later refresh is an
-    append-only delta commit). The table's log therefore ends at
-    version ``len(steps)``, one commit per step, and
-    ``BUILD_COUNTS[f"{name}.{step}"]`` pins that each step ran exactly
-    once per (session, corpus-version, params) — the test hook proving
-    a delta refresh did NOT re-run the base build.
-
-    Same memo/locking/layout semantics as :func:`staged_table`; every
-    step's output is laid out with the shared ``range_col`` policy so
-    later commits keep the table's pruning contract."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from pm25ml_spark.sources.txlog import TxTable
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        params,
-        _input_fingerprint(sf_dir, inputs),
-    )
-    path = _ARTIFACTS.get(key)
-    if path is None:
-        with _LOCK:
-            path = _ARTIFACTS.get(key)
-            if path is None:
-                base = tempfile.mkdtemp(prefix=f"pm25ml_stage_{name}_")
-                atexit.register(shutil.rmtree, base, True)
-                path = os.path.join(base, name)
-                table = TxTable(spark, path)
-                nparts = spark.sparkContext.defaultParallelism
-                for step, build in steps:
-                    t0 = time.perf_counter()
-                    df = build()
-                    if range_col is not None:
-                        df = df.repartitionByRange(nparts, F.col(range_col))
-                    table.append(df, stats_cols=stats_cols)
-                    skey = f"{name}.{step}"
-                    BUILD_COUNTS[skey] = BUILD_COUNTS.get(skey, 0) + 1
-                    BUILD_SECONDS[skey] = (
-                        BUILD_SECONDS.get(skey, 0.0)
-                        + time.perf_counter()
-                        - t0
-                    )
-                _ARTIFACTS[key] = path
-    _LATEST[key[:4]] = path
-    return TxTable(spark, path).read()
-
-
-def staged_table_handle(
-    spark: SparkSession, sf_dir: str, name: str, params: tuple
-):
-    """The TxTable handle of an ALREADY-STAGED artifact — for consumers
-    that need table-level verbs (``read_pruned`` point lookups) instead
-    of the full scan. Resolves to the LATEST staged version for the
-    (sf_dir, name, params) triple. Raises if the artifact was never
-    built this session (call the staging accessor first)."""
-    from pm25ml_spark.sources.txlog import TxTable
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        params,
-    )
-    path = _LATEST.get(key)
-    if path is None:
-        raise KeyError(
-            f"staged artifact {name}{params} not built for {sf_dir} — "
-            "call its staging accessor first"
-        )
-    return TxTable(spark, path)

@@ -84,7 +84,7 @@ def dd02_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd03_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # served from the build-once staged artifact (plans/dup_graph.py):
     # the first pair consumer in a session pays the shingle join, every
-    # other (dd08/dd11/cp09/gr01-gr06) reads the staged parquet
+    # other (cp01/dd08/dd11/cp09) reads the staged parquet
     from pm25ml_spark.plans.dup_graph import dup_edges
 
     return dup_edges(spark, sf_dir)
@@ -981,197 +981,6 @@ def cp07_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# gr01 — PageRank over the near-duplicate graph (graph analytics on the
-# dedup family's own edge set): rank documents by duplicate-cluster
-# centrality with 3 unrolled power iterations, damping 0.85. Iterative
-# graph algorithms are the classic "Spark needs a loop" case — here the
-# loop is UNROLLED into pure DataFrame algebra (3 equi-join + aggregate
-# rounds over a rank frame keyed by node), so Catalyst sees one DAG and
-# there is no driver-side convergence state. Determinism: double sums
-# are order-dependent, so each node's incoming contributions are rounded
-# to 6 dp and DECIMAL-summed before the damped update, which the oracle
-# replicates term-for-term. At 10^9 nodes each iteration is one shuffle
-# keyed by node id — the standard distributed PageRank shape.
-_PR_D, _PR_ITERS = 0.85, 3
-
-
-def _pr_oracle() -> str:
-    d = _PR_D
-    it = f"""
-    SELECT e.dst AS doc_id,
-           ROUND({(1 - d)!r} / (SELECT n FROM nn)
-                 + {d!r} * CAST(SUM(CAST(ROUND(r.rank / deg.deg, 6)
-                                          AS DECIMAL(38,6))) AS DOUBLE),
-                 6) AS rank
-    FROM edges e
-    JOIN {{prev}} r ON r.doc_id = e.src
-    JOIN deg ON deg.doc_id = e.src
-    GROUP BY e.dst
-    """
-    return f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM qual
-        UNION ALL SELECT doc_b, doc_a FROM qual
-    ),
-    deg AS (SELECT src AS doc_id, COUNT(*) AS deg FROM edges GROUP BY src),
-    nn AS (SELECT COUNT(*) AS n FROM deg),
-    r0 AS (
-        SELECT doc_id, ROUND(1.0 / (SELECT n FROM nn), 6) AS rank FROM deg
-    ),
-    r1 AS ({it.format(prev="r0")}),
-    r2 AS ({it.format(prev="r1")}),
-    r3 AS ({it.format(prev="r2")})
-    SELECT doc_id, rank FROM r3
-    """
-
-
-@query("gr01_dupgraph_pagerank", _pr_oracle())
-def gr01_dupgraph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges_symmetric
-
-    # staged-artifact read (build-once, plans/dup_graph.py); persisted
-    # because every PageRank iteration joins against the edge set
-    edges = dup_edges_symmetric(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    nn = deg.agg(F.count(F.lit(1)).alias("n"))
-    # deg rides INSIDE the rank frame (doc_id-keyed equi-join, co-
-    # partitioned with the groupBy output) — never broadcast: at 10^9
-    # nodes a broadcast deg table would kill the driver long before the
-    # per-iteration shuffle mattered. Each iteration is then exactly one
-    # shuffle keyed by node id (edge join + regroup), plus a cheap
-    # co-partitioned deg re-attach on non-final iterations.
-    ranks = deg.crossJoin(F.broadcast(nn)).select(
-        "doc_id", F.round(F.lit(1.0) / F.col("n"), 6).alias("rank"), "deg"
-    )
-    for i in range(_PR_ITERS):
-        contrib = edges.join(
-            ranks.withColumnRenamed("doc_id", "src"), "src"
-        ).select(
-            F.col("dst").alias("doc_id"),
-            F.round(F.col("rank") / F.col("deg"), 6).alias("c"),
-        )
-        agg = (
-            contrib.groupBy("doc_id")
-            .agg(
-                F.sum(F.col("c").cast("decimal(38,6)"))
-                .cast("double")
-                .alias("s")
-            )
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "doc_id",
-                F.round(
-                    (1 - _PR_D) / F.col("n") + _PR_D * F.col("s"), 6
-                ).alias("rank"),
-            )
-        )
-        ranks = agg if i == _PR_ITERS - 1 else agg.join(deg, "doc_id")
-    return ranks
-
-
-# --------------------------------------------------------------------------
-# gr02 — triangle counting on the duplicate graph (per-node triangle
-# membership). Triangles in a near-dup graph expose CLUSTERS the pairwise
-# threshold alone can't: a doc in many triangles sits in a dense plagiarism
-# /boilerplate clique, not a chance collision. The plan is the classic
-# degree-oriented algorithm: orient every undirected edge from the
-# (degree, id)-SMALLER endpoint to the larger, enumerate wedges from each
-# source's oriented out-edges, and close them against the oriented edge
-# list — two equi-joins, O(m^1.5) wedges total, immune to high-degree hubs
-# (a hub's edges mostly point INTO it, so it sources few wedges). The
-# oracle enumerates each triangle once via a < b < c id-ordering —
-# different orientation, same triangle set, hash-identical counts.
-
-
-@query(
-    "gr02_dupgraph_triangles",
-    f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    tri AS (
-        SELECT q1.doc_a AS a, q1.doc_b AS b, q2.doc_b AS c
-        FROM qual q1
-        JOIN qual q2 ON q2.doc_a = q1.doc_b
-        JOIN qual q3 ON q3.doc_a = q1.doc_a AND q3.doc_b = q2.doc_b
-    )
-    SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-    FROM (
-        SELECT a AS node FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-    )
-    GROUP BY node
-    """,
-)
-def gr02_dupgraph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges
-
-    # staged-artifact read; still persisted because deg / e1 / e2 /
-    # closing reference the pair list six times downstream
-    pairs = dup_edges(spark, sf_dir).select("doc_a", "doc_b").persist()
-    # degree over both endpoints of the undirected pair list
-    deg = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .unionAll(pairs.select(F.col("doc_b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    e = (
-        pairs.join(
-            deg.select(
-                F.col("node").alias("doc_a"), F.col("deg").alias("da")
-            ),
-            "doc_a",
-        )
-        .join(
-            deg.select(
-                F.col("node").alias("doc_b"), F.col("deg").alias("db")
-            ),
-            "doc_b",
-        )
-    )
-    ka = F.struct(F.col("da").alias("d"), F.col("doc_a").alias("i"))
-    kb = F.struct(F.col("db").alias("d"), F.col("doc_b").alias("i"))
-    oriented = e.select(
-        F.when(ka < kb, F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
-        F.when(ka < kb, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
-        F.when(ka < kb, F.col("db")).otherwise(F.col("da")).alias("dst_deg"),
-    ).persist()
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    k1 = F.struct(F.col("e1.dst_deg").alias("d"), F.col("e1.dst").alias("i"))
-    k2 = F.struct(F.col("e2.dst_deg").alias("d"), F.col("e2.dst").alias("i"))
-    wedges = e1.join(
-        e2, (F.col("e1.src") == F.col("e2.src")) & (k1 < k2)
-    ).select(
-        F.col("e1.src").alias("a"),
-        F.col("e1.dst").alias("b"),
-        F.col("e2.dst").alias("c"),
-    )
-    closing = oriented.select(
-        F.col("src").alias("b"), F.col("dst").alias("c")
-    )
-    tri = wedges.join(closing, ["b", "c"])
-    nodes = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-    )
-    return nodes.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_triangles")
-    )
-
-
-# --------------------------------------------------------------------------
 # cp08 — contamination SCORING (the GPT-3 appendix-C recipe, Brown et al.
 # 2020): unlike cp02 (flag any hit) or cp04 (Bloom membership), score
 # EVERY corpus document by the fraction of its distinct 3-grams that also
@@ -1252,74 +1061,6 @@ def cp08_contamination_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_hit",
         F.round(frac, 6).alias("overlap_frac"),
         label.alias("label"),
-    )
-
-
-# --------------------------------------------------------------------------
-# gr03 — bounded k-core peel on the duplicate graph: R rounds of
-# "remove nodes with degree < k, recompute" (k=2, R=3 — enough to
-# converge on near-dup graphs, whose cores are shallow; the operator is
-# defined as the R-round peel so both engines compute the identical
-# partial fixpoint). k-cores separate DENSE duplication communities
-# (template farms, mirror networks) from incidental pairwise overlaps —
-# the graph-side quality gate after dd08's components. Each round is
-# one degree aggregate + two node-keyed semi joins: everything shuffles
-# on node id, nothing node-sized is ever broadcast or collected.
-_KCORE_K, _KCORE_ROUNDS = 2, 3
-
-
-def _kcore_oracle() -> str:
-    k = _KCORE_K
-    rounds = ""
-    prev = "e0"
-    for i in range(1, _KCORE_ROUNDS + 1):
-        rounds += f"""
-    d{i} AS (SELECT src, COUNT(*) AS c FROM {prev} GROUP BY src),
-    keep{i} AS (SELECT src FROM d{i} WHERE c >= {k}),
-    e{i} AS (
-        SELECT e.src, e.dst FROM {prev} e
-        JOIN keep{i} ka ON e.src = ka.src
-        JOIN keep{i} kb ON e.dst = kb.src
-    ),"""
-        prev = f"e{i}"
-    return f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    e0 AS (
-        SELECT doc_a AS src, doc_b AS dst FROM qual
-        UNION ALL SELECT doc_b, doc_a FROM qual
-    ),{rounds}
-    final AS (SELECT src AS doc_id, COUNT(*) AS degree
-              FROM {prev} GROUP BY src)
-    SELECT doc_id, degree FROM final
-    """
-
-
-@query("gr03_kcore_members", _kcore_oracle())
-def gr03_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges_symmetric
-
-    # staged-artifact read; persisted because each peel round feeds the
-    # next degree aggregate and two semi joins
-    edges = dup_edges_symmetric(spark, sf_dir).persist()
-    for _ in range(_KCORE_ROUNDS):
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-        keep = deg.filter(F.col("c") >= _KCORE_K).select("src")
-        # each round's edge set feeds BOTH the next degree aggregate and
-        # the next semi joins — persist per round or the lineage
-        # re-evaluates every earlier round 2× per reference
-        edges = (
-            edges.join(keep, "src", "left_semi")
-            .join(
-                keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
-            )
-            .persist()
-        )
-    return edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("degree")
     )
 
 
@@ -1476,90 +1217,6 @@ def dd11_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# gr04 — multi-source BFS hop distance on the duplicate graph (bounded
-# to 3 rounds, the diameter that matters for near-dup neighborhoods):
-# how far is every node from the graph's 3 highest-degree "template
-# hubs"? A node 1-2 hops from a boilerplate hub is near-certainly
-# templated content even when its own pairwise similarity was below the
-# dedup threshold — the transitive evidence dd08's components collapse
-# away. Each round is one edge join + one min-aggregate, all keyed by
-# node id; seeds are picked with the salt-lane exact top-k (never a
-# global sort), and nothing node-sized is broadcast or collected.
-_BFS_ROUNDS, _BFS_SEEDS = 3, 3
-
-
-def _bfs_oracle() -> str:
-    rounds = ""
-    prev = "d0"
-    for i in range(1, _BFS_ROUNDS + 1):
-        rounds += f"""
-    f{i} AS (
-        SELECT e.dst AS doc_id, p.hops + 1 AS hops
-        FROM {prev} p JOIN e ON e.src = p.doc_id
-    ),
-    d{i} AS (
-        SELECT doc_id, MIN(hops) AS hops
-        FROM (SELECT * FROM {prev} UNION ALL SELECT * FROM f{i})
-        GROUP BY doc_id
-    ),"""
-        prev = f"d{i}"
-    return f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    e AS (
-        SELECT doc_a AS src, doc_b AS dst FROM qual
-        UNION ALL SELECT doc_b, doc_a FROM qual
-    ),
-    deg AS (SELECT src AS doc_id, COUNT(*) AS degree FROM e GROUP BY src),
-    seeds AS (
-        SELECT doc_id FROM deg
-        ORDER BY degree DESC, doc_id LIMIT {_BFS_SEEDS}
-    ),
-    d0 AS (SELECT doc_id, 0 AS hops FROM seeds),{rounds}
-    final AS (SELECT doc_id, CAST(hops AS BIGINT) AS hops FROM {prev})
-    SELECT doc_id, hops FROM final
-    """
-
-
-@query("gr04_bfs_hops", _bfs_oracle())
-def gr04_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.sampling import global_topk
-
-    from pm25ml_spark.plans.dup_graph import dup_edges_symmetric
-
-    # staged-artifact read; persisted because the edge set feeds the
-    # degree aggregate plus one join per BFS round
-    edges = dup_edges_symmetric(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
-    seeds = global_topk(
-        deg, [F.desc("degree"), F.asc("doc_id")], _BFS_SEEDS, "doc_id"
-    ).select("doc_id")
-    dist = seeds.select("doc_id", F.lit(0).cast("bigint").alias("hops"))
-    for _ in range(_BFS_ROUNDS):
-        # dist feeds BOTH the frontier join and the union — persist per
-        # round or the lineage (and the seed top-k subplan inside it)
-        # re-evaluates 2^rounds times
-        dist = dist.persist()
-        frontier = edges.join(
-            dist.withColumnRenamed("doc_id", "src"), "src"
-        ).select(
-            F.col("dst").alias("doc_id"),
-            (F.col("hops") + 1).alias("hops"),
-        )
-        dist = (
-            dist.unionAll(frontier)
-            .groupBy("doc_id")
-            .agg(F.min("hops").alias("hops"))
-        )
-    return dist
-
-
-# --------------------------------------------------------------------------
 # dd12 — directed containment pairs (C(A→B) = |A∩B|/|A| ≥ 0.8): the
 # asymmetric near-dup relation resemblance misses — a short doc embedded
 # in a longer one scores high containment but low Jaccard (quote
@@ -1587,153 +1244,6 @@ def gr04_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd12_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.containment_pairs(docs, n=3, t_num=4, t_den=5)
-
-
-# --------------------------------------------------------------------------
-# gr05 — degree assortativity of the near-duplicate graph (Newman 2002:
-# the Pearson correlation of endpoint degrees over directed edges).
-# Positive assortativity means boilerplate hubs link to other hubs
-# (template families); negative means hub-and-spoke mirror clusters —
-# a one-number diagnostic of the dup graph's shape that decides whether
-# component-based or centrality-based canonicalization will work.
-# Plan shape: the qualified Jaccard pairs (same edge set as gr01-gr04)
-# doubled into directed edges, degree attached via TWO node-keyed
-# equi-joins (deg is node-sized — NEVER broadcast, the gr01 lesson),
-# then ONE map-side-combinable aggregate of integer sufficient stats
-# (degrees are exact BIGINTs, so every sum is exact; the final Pearson
-# formula is a fixed chain of IEEE ops over those integers, identical
-# in both engines, rounded 6 dp). At 10^9 nodes: two shuffles keyed by
-# node id + one scalar aggregate — no corpus-sized anything on the
-# driver. Sums need decimal widening around 10^9 edges x 10^6 max-degree;
-# documented, not hit at any bench sf.
-def _gr05_oracle() -> str:
-    return f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM qual
-        UNION ALL SELECT doc_b, doc_a FROM qual
-    ),
-    deg AS (SELECT src AS doc_id, COUNT(*) AS deg FROM edges GROUP BY src),
-    e AS (
-        SELECT ds.deg AS dx, dd.deg AS dy
-        FROM edges
-        JOIN deg ds ON ds.doc_id = edges.src
-        JOIN deg dd ON dd.doc_id = edges.dst
-    ),
-    s AS (
-        SELECT COUNT(*) AS m,
-               SUM(dx) AS sx, SUM(dy) AS sy,
-               SUM(dx * dx) AS sxx, SUM(dy * dy) AS syy,
-               SUM(dx * dy) AS sxy
-        FROM e
-    )
-    SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
-           CAST(m // 2 AS BIGINT) AS n_edges,
-           (SELECT MAX(deg) FROM deg) AS max_deg,
-           ROUND(CAST(m AS DOUBLE) / (SELECT COUNT(*) FROM deg), 6)
-             AS mean_deg,
-           ROUND(CAST(m * sxy - sx * sy AS DOUBLE)
-                 / (SQRT(CAST(m * sxx - sx * sx AS DOUBLE))
-                    * SQRT(CAST(m * syy - sy * sy AS DOUBLE))), 6)
-             AS assortativity
-    FROM s
-    """
-
-
-@query("gr05_degree_assortativity", _gr05_oracle())
-def gr05_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges_symmetric
-
-    # staged-artifact read; persisted: degree aggregate + two re-joins
-    edges = dup_edges_symmetric(spark, sf_dir).persist()
-    deg = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    ).persist()
-    e = (
-        edges.join(
-            deg.select(F.col("doc_id").alias("src"), F.col("deg").alias("dx")),
-            "src",
-        )
-        .join(
-            deg.select(F.col("doc_id").alias("dst"), F.col("deg").alias("dy")),
-            "dst",
-        )
-        .select("dx", "dy")
-    )
-    s = e.agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum("dx").alias("sx"),
-        F.sum("dy").alias("sy"),
-        F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).alias("syy"),
-        F.sum(F.col("dx") * F.col("dy")).alias("sxy"),
-    )
-    summary = deg.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.max("deg").alias("max_deg"),
-    )
-    m, sx, sy = F.col("m"), F.col("sx"), F.col("sy")
-    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
-    # nullif guards: a regular graph (every qualified pair isolated —
-    # all degrees equal) has zero degree variance, and an empty edge
-    # set has n_nodes = 0. DuckDB yields NULL for 0/0 double division;
-    # Spark 4 runs ANSI mode and would THROW — nullif makes both NULL.
-    den = F.sqrt((m * sxx - sx * sx).cast("double")) * F.sqrt(
-        (m * syy - sy * sy).cast("double")
-    )
-    return s.crossJoin(F.broadcast(summary)).select(
-        "n_nodes",
-        (m / 2).cast("bigint").alias("n_edges"),
-        "max_deg",
-        F.round(
-            m.cast("double") / F.nullif(F.col("n_nodes"), F.lit(0)), 6
-        ).alias("mean_deg"),
-        F.round(
-            (m * sxy - sx * sy).cast("double")
-            / F.nullif(den, F.lit(0.0)),
-            6,
-        ).alias("assortativity"),
-    )
-
-
-# --------------------------------------------------------------------------
-# gr06 — degree distribution of the duplicate graph, read from the
-# BUILD-ONCE staged edge artifact (plans/dup_graph.py): the catalog pin
-# for the build-once-analyze-many topology. The histogram itself is the
-# corpus-health panel's headline chart (how heavy is the boilerplate
-# tail), but the point of the entry is the lifecycle: this plan never
-# touches `documents` — it is two scans of the staged parquet + two
-# map-side-combinable aggregates, which is exactly what every gr-family
-# analysis costs at 100 TB once the pair build is a pipeline stage
-# instead of a per-query subplan. Oracle recomputes the edge list
-# brute-force, so the artifact's content is value-checked end-to-end.
-def _gr06_oracle() -> str:
-    return f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM qual
-        UNION ALL SELECT doc_b, doc_a FROM qual
-    ),
-    deg AS (SELECT src, COUNT(*) AS degree FROM edges GROUP BY src)
-    SELECT degree, COUNT(*) AS n_nodes FROM deg GROUP BY degree
-    """
-
-
-@query("gr06_dupgraph_degree_hist", _gr06_oracle())
-def gr06_dupgraph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges_symmetric
-
-    edges = dup_edges_symmetric(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
 # --------------------------------------------------------------------------
@@ -1888,49 +1398,6 @@ def dd14_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# gr07 — ego network of the duplicate graph's lowest-id node, served by
-# a STATS-PRUNED point lookup on the staged edge artifact: the seed is
-# one tiny aggregate (min doc_a — column-pruned scan of the artifact),
-# and the neighbor fetch opens ONLY the files whose recorded doc_a
-# range covers the seed (TxTable.read_pruned over the artifact's
-# range-partitioned layout — per-file min/max are tight by
-# construction). This is the 100 TB point-lookup shape: investigating
-# one document's duplicate neighborhood must not scan the corpus-scale
-# edge list, and with range layout + stats it provably doesn't
-# (tests/test_dup_graph.py pins files_opened < files_total). The seed
-# is the graph's minimum doc id, so it only ever appears on the doc_a
-# side (pairs are doc_a < doc_b) — one pruned read covers the whole
-# ego. Oracle recomputes seed + neighborhood brute-force.
-def _gr07_oracle() -> str:
-    return f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b, shared,
-               CAST(shared AS DOUBLE) / (na + nb - shared) AS jaccard
-        FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    ),
-    seed AS (SELECT MIN(doc_a) AS s FROM qual)
-    SELECT q.doc_b AS neighbor, q.shared, q.jaccard
-    FROM qual q, seed WHERE q.doc_a = seed.s
-    """
-
-
-@query("gr07_ego_network", _gr07_oracle())
-def gr07_ego_network(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges, dup_edges_pruned
-
-    edges = dup_edges(spark, sf_dir)  # ensures the artifact is staged
-    seed_row = edges.agg(F.min("doc_a").alias("s")).collect()[0]
-    if seed_row.s is None:  # empty graph: empty frame, right schema
-        return edges.select(
-            F.col("doc_b").alias("neighbor"), "shared", "jaccard"
-        ).filter(F.lit(False))
-    ego = dup_edges_pruned(spark, sf_dir, seed_row.s, seed_row.s)
-    return ego.select(F.col("doc_b").alias("neighbor"), "shared", "jaccard")
-
-
-# --------------------------------------------------------------------------
 # dd15 — incremental ingest dedup (batch-vs-corpus): which docs of an
 # incoming slice near-duplicate the EXISTING corpus? The shape every
 # continuously-crawling pipeline runs per ingest batch — and the one
@@ -1975,81 +1442,5 @@ def dd15_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.jaccard_pairs_between(batch, corpus, n=3, t_num=3, t_den=5)
     return pairs.groupBy(F.col("new_id").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_corpus_dups"),
-        F.max("jaccard").alias("max_jaccard"),
-    )
-
-
-# --------------------------------------------------------------------------
-# gr08 — the incrementally-MAINTAINED duplicate-pair graph: the artifact
-# lifecycle dd15 computes one step of, now MULTI-BATCH. The staged edge
-# table bootstraps from the pre-batch corpus (commit 1), then each
-# ingest batch (doc_id % 10 == 5, then == 9, in arrival order) appends
-# ONLY its delta — batch-vs-EXISTING cross pairs via the asymmetric
-# prefix-filtered probe over a TIME-TRAVEL read of the incrementally-
-# maintained shingle store (earlier batches are probed too, no text
-# ever re-shingled), plus batch-internal pairs. Spark reads the
-# maintained artifact; the oracle recomputes the FULL-corpus pair list
-# brute-force from raw text, so the equality "incremental maintenance
-# ≡ from-scratch rebuild" is exactly what the driver hash-checks.
-# Lifecycle pins (commit count, time travel to pre-refresh snapshots,
-# BUILD_COUNTS) live in tests/test_dup_graph.py. Reference analogue:
-# the staged-artifact refresh lifecycle of
-# combiners/data_artifact.py:10-44.
-@query(
-    "gr08_incremental_edges",
-    f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS}
-    SELECT doc_a, doc_b, shared,
-           CAST(shared AS DOUBLE) / (na + nb - shared) AS jaccard
-    FROM pairs
-    WHERE shared * 5 >= 3 * (na + nb - shared)
-    """,
-)
-def gr08_incremental_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges_incremental
-
-    return dup_edges_incremental(spark, sf_dir, n=3, t_num=3, t_den=5).select(
-        "doc_a", "doc_b", "shared", "jaccard"
-    )
-
-
-# --------------------------------------------------------------------------
-# gr09 — per-ingest-batch dup summary, verifying the incremental
-# artifact's PROVENANCE itself: each edge commit is tagged with the
-# batch that produced it, and because the exact pair set partitions
-# over arrival order, the tag must equal GREATEST(arrival(doc_a),
-# arrival(doc_b)) — which the oracle recomputes from raw text with a
-# CASE classification. A wrong delta (a pair missed at arrival and
-# picked up later, or recomputed corpus work leaking into a batch
-# commit) shifts a count between groups and breaks the hash. This is
-# the per-ingest monitoring readout a production dedup pipeline
-# actually watches ("how duplicated was today's crawl against the
-# corpus?").
-@query(
-    "gr09_ingest_batch_summary",
-    f"""
-    WITH {_SHINGLES_CTE}, {_JACCARD_PAIRS},
-    qual AS (
-        SELECT doc_a, doc_b,
-               CAST(shared AS DOUBLE) / (na + nb - shared) AS jaccard
-        FROM pairs
-        WHERE shared * 5 >= 3 * (na + nb - shared)
-    )
-    SELECT GREATEST(
-             CASE doc_a % 10 WHEN 5 THEN 1 WHEN 9 THEN 2 ELSE 0 END,
-             CASE doc_b % 10 WHEN 5 THEN 1 WHEN 9 THEN 2 ELSE 0 END
-           ) AS src_batch,
-           COUNT(*) AS n_edges,
-           MAX(jaccard) AS max_jaccard
-    FROM qual
-    GROUP BY 1
-    """,
-)
-def gr09_ingest_batch_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.plans.dup_graph import dup_edges_incremental
-
-    edges = dup_edges_incremental(spark, sf_dir, n=3, t_num=3, t_den=5)
-    return edges.groupBy(F.col("src_batch").cast("int").alias("src_batch")).agg(
-        F.count(F.lit(1)).alias("n_edges"),
         F.max("jaccard").alias("max_jaccard"),
     )

@@ -1,33 +1,19 @@
-"""Build-once duplicate-pair graph artifact (the 100 TB topology).
+"""Build-once duplicate-pair edge list.
 
-Round-8 bench read: gr01-gr05 + dd08/dd11/cp09 each rebuilt the exact
-n-gram-Jaccard pair list from the raw corpus — correct, but at corpus
-scale recomputing a corpus-wide MinHash/shingle join per analytics query
-is the wrong shape. Production dedup pipelines stage the pair graph ONCE
+dd03, cp01, dd08, cp09 and dd11 all start from the same exact
+n-gram-Jaccard pair list of the corpus. Recomputing the corpus-wide
+shingle join per query is the wrong shape, so ``dup_edges`` stages it
+ONCE per (session, corpus, params) through ``plans/artifacts.staged_table``
 (the reference stages intermediate artifacts the same way —
-``combiners/data_artifact.py:10-44``) and every downstream analysis
-(PageRank, triangles, k-core, BFS, assortativity, soft-dedup weights,
-canonical selection) reads the staged edge list.
-
-``dup_edges`` is that stage: the first caller in a session materializes
-``operators.dedup.jaccard_pairs`` into a transaction-log table (our own
-lakehouse layer — atomic swap, snapshot reads, per-file ``doc_a``/
-``doc_b`` min-max stats for pruned seed lookups) under a process-local
-temp dir; every later caller gets a parquet scan. At 100 TB the artifact
-would live on the object store next to the corpus and be refreshed by
-the ingest pipeline, not per query — the session-scoped memo here is the
-local-mode stand-in for that lifecycle.
-
-The artifact is partitioned by ``doc_a`` hash so the edge files are
-uniform regardless of upstream skew; graph queries that start from a
-node set can prune files via the recorded stats instead of scanning the
-full edge list.
+``combiners/data_artifact.py:10-44``): the first caller in a session
+materializes ``operators.dedup.jaccard_pairs`` into a transaction-log
+table under a process-local temp dir, and every later caller gets a
+parquet scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from pm25ml_spark.catalog import load_table
 from pm25ml_spark.plans.artifacts import staged_table
@@ -59,205 +45,8 @@ def dup_edges(
         "dup_edges",
         (n, t_num, t_den),
         build,
-        # RANGE layout on doc_a: per-file [min, max] stats are tight, so
-        # seed-targeted reads (gr07 ego lookup) skip every non-matching
-        # file via TxTable.read_pruned — the point-lookup shape a 100 TB
-        # edge artifact must support
-        range_col="doc_a",
-        stats_cols=["doc_a", "doc_b"],
         # key the stage to the corpus's content version: an in-place
         # mutation of documents.parquet triggers a rebuild, never a
         # stale artifact served for the rest of the session
         inputs=("documents",),
-    )
-
-
-def dup_edges_pruned(
-    spark: SparkSession,
-    sf_dir: str,
-    lo,
-    hi,
-    n: int = 3,
-    t_num: int = 3,
-    t_den: int = 5,
-) -> DataFrame:
-    """Stats-pruned point lookup on the staged edge list: only files
-    whose recorded doc_a range intersects [lo, hi] are opened."""
-    from pm25ml_spark.plans.artifacts import staged_table_handle
-
-    t = staged_table_handle(spark, sf_dir, "dup_edges", (n, t_num, t_den))
-    return t.read_pruned("doc_a", lo, hi)
-
-
-# The ingest model for the incremental dup-graph lifecycle: the corpus
-# bootstraps without the ``_BATCH_REMS`` doc_id slices, then each slice
-# arrives as one ingest batch IN ORDER (batch 1 = % 10 == 5, batch 2 =
-# % 10 == 9), and each arrival appends exactly its delta.
-_BATCH_MOD = 10
-_BATCH_REMS = (5, 9)
-
-
-def shingle_store_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    batch_mod: int = _BATCH_MOD,
-    batch_rems: tuple[int, ...] = _BATCH_REMS,
-):
-    """INCREMENTALLY-MAINTAINED shingle store: one transaction-log
-    commit per ingest step (base corpus, then each batch), one row per
-    doc with its 60-bit shingle-hash array. Production dedup keeps
-    exactly this table next to the corpus so a refresh probes staged
-    hashes instead of re-tokenizing 100 TB of text; each doc's text is
-    shingled EXACTLY ONCE across the whole lifecycle, and the store's
-    log versions give the edge builds time-travel reads of "the corpus
-    as of batch k's arrival". Returns the TxTable handle."""
-    from pm25ml_spark.operators import dedup as D
-    from pm25ml_spark.plans.artifacts import (
-        staged_incremental_table,
-        staged_table_handle,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    rem = F.col("doc_id") % batch_mod
-
-    def shingles_of(flt) -> DataFrame:
-        # .unpersist() immediately: the staged write materializes the
-        # frame exactly once, so the operator's internal cache would
-        # only hold memory past the build
-        return D.shingle_arrays(docs.filter(flt), n=n).unpersist()
-
-    steps = [
-        ("base", lambda: shingles_of(~rem.isin(list(batch_rems))))
-    ] + [
-        (f"batch{r}", lambda r=r: shingles_of(rem == r))
-        for r in batch_rems
-    ]
-    params = (n, batch_mod, batch_rems)
-    staged_incremental_table(
-        spark,
-        sf_dir,
-        "shingle_store",
-        params,
-        steps,
-        range_col="doc_id",
-        stats_cols=["doc_id"],
-        inputs=("documents",),
-    )
-    return staged_table_handle(spark, sf_dir, "shingle_store", params)
-
-
-def dup_edges_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    t_num: int = 3,
-    t_den: int = 5,
-    batch_mod: int = _BATCH_MOD,
-    batch_rems: tuple[int, ...] = _BATCH_REMS,
-) -> DataFrame:
-    """INCREMENTALLY-MAINTAINED duplicate-pair edge artifact — the
-    multi-refresh lifecycle a 100 TB dedup pipeline actually runs,
-    closing the loop dd15 opened:
-
-    - commit 1 (``base``): the bootstrap corpus's pair list
-      (:func:`pm25ml_spark.operators.dedup.jaccard_pairs` consuming the
-      staged shingle store — the text is never re-tokenized).
-    - commit 1+k (``delta<rem>``): ingest batch k arrives; ONLY its
-      delta is computed — batch-vs-EXISTING cross pairs via the
-      asymmetric prefix-filtered probe (``jaccard_pairs_between``;
-      "existing" is a TIME-TRAVEL read of the shingle store at the
-      version preceding this batch, so earlier batches are probed too,
-      O(batch × collisions)) plus the batch-internal pairs — and
-      APPENDED as one transaction-log commit tagged ``src_batch = k``.
-
-    The exact-Jaccard pair set partitions cleanly over arrival order
-    (a pair lands in the commit of its LATER-arriving endpoint), so the
-    incrementally-maintained table EQUALS a from-scratch rebuild over
-    the full corpus — which is exactly what the gr08 oracle recomputes
-    — and the ``src_batch`` provenance is itself oracle-checkable by
-    classifying each pair by GREATEST(arrival(doc_a), arrival(doc_b))
-    (gr09). No text is ever re-shingled and the O(existing × existing)
-    join never re-runs at refresh time (BUILD_COUNTS pins in
-    ``tests/test_dup_graph``).
-
-    Output: ``(doc_a, doc_b, shared, jaccard, src_batch)`` with
-    ``doc_a < doc_b``; ``src_batch`` 0 = bootstrap, k ≥ 1 = k-th batch.
-    """
-    from pm25ml_spark.operators import dedup as D
-    from pm25ml_spark.plans.artifacts import staged_incremental_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    rem = F.col("doc_id") % batch_mod
-    sh_t = shingle_store_incremental(spark, sf_dir, n, batch_mod, batch_rems)
-    sh_versions = sh_t.versions()  # v[0]=base, v[k]=after batch k
-
-    def build_base() -> DataFrame:
-        sh = sh_t.read(version=sh_versions[0])
-        return D.jaccard_pairs(
-            docs.filter(~rem.isin(list(batch_rems))),
-            n=n,
-            t_num=t_num,
-            t_den=t_den,
-            sh=sh,
-        ).withColumn("src_batch", F.lit(0))
-
-    def make_delta(k: int, r: int):
-        def build() -> DataFrame:
-            # the store AS OF this batch's arrival: base + batches < k.
-            # One probe of batch vs (existing ∪ batch) yields the full
-            # delta — internal + cross pairs — in a single df-aggregate/
-            # prefix/candidate/verify pipeline (jaccard_delta_pairs)
-            # instead of the two jaccard_pairs + jaccard_pairs_between
-            # pipelines this build used to run per batch.
-            batch_sh = sh_t.read(version=sh_versions[k]).filter(
-                F.col("doc_id") % batch_mod == r
-            )
-            # the version-k snapshot IS existing ∪ batch — pass it as
-            # the probe's combined side so both verify broadcasts share
-            # one parquet scan (ReusedExchange; see jaccard_delta_pairs)
-            return D.jaccard_delta_pairs(
-                batch_sh,
-                None,
-                t_num=t_num,
-                t_den=t_den,
-                sh_combined=sh_t.read(version=sh_versions[k]),
-            ).withColumn("src_batch", F.lit(k))
-
-        return build
-
-    steps = [("base", build_base)] + [
-        (f"delta{r}", make_delta(k, r))
-        for k, r in enumerate(batch_rems, start=1)
-    ]
-    return staged_incremental_table(
-        spark,
-        sf_dir,
-        "dup_edges_incr",
-        (n, t_num, t_den, batch_mod, batch_rems),
-        steps,
-        range_col="doc_a",
-        stats_cols=["doc_a", "doc_b"],
-        inputs=("documents",),
-    )
-
-
-def dup_edges_symmetric(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    t_num: int = 3,
-    t_den: int = 5,
-) -> DataFrame:
-    """Both orientations of the staged edge list: ``(src, dst)`` with
-    every undirected pair appearing twice — the adjacency shape the
-    iterative graph plans (PageRank, k-core, BFS, assortativity) start
-    from. Two scans of the staged parquet, no recompute."""
-    pairs = dup_edges(spark, sf_dir, n=n, t_num=t_num, t_den=t_den).select(
-        "doc_a", "doc_b"
-    )
-    return pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )

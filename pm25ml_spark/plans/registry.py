@@ -67,5 +67,4 @@ def load_all_plans() -> None:
     import pm25ml_spark.plans.domain  # noqa: F401
     import pm25ml_spark.plans.dedup  # noqa: F401
     import pm25ml_spark.plans.text  # noqa: F401
-    import pm25ml_spark.plans.sketches  # noqa: F401
     import pm25ml_spark.plans.raster  # noqa: F401

@@ -1318,8 +1318,6 @@ def winnow_selection_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         "winnow_sel",
         (_WIN_W, _WIN_PB),
         lambda: winnow_selection(load_table(spark, sf_dir, "documents")),
-        range_col="doc_id",
-        stats_cols=["doc_id"],
         inputs=("documents",),
     )
 

@@ -53,23 +53,6 @@ class VacuumedSnapshotError(ValueError):
     Delta/Iceberg contract for reads behind VACUUM."""
 
 
-class ObservedEntryExtra:
-    """An ``entry_extra`` whose audit metadata rides the WRITE job's
-    ``DataFrame.observe`` instead of re-reading the just-written files
-    with a second Spark job — for audits that are plain global
-    aggregates over exactly the written rows (drift counters,
-    assignment quality). ``exprs`` maps metric name → aggregate Column
-    evaluated over the written rows; ``finalize`` maps the observed
-    metrics dict to the entry fields to merge. Audits that need joins
-    or groupBys (e.g. typed drift with ``string_join`` dims or double
-    occupancy histograms) keep the callable form and its read-back
-    job — the commit machinery accepts either."""
-
-    def __init__(self, exprs: dict, finalize):
-        self.exprs = dict(exprs)
-        self.finalize = finalize
-
-
 _LOG_DIR = "_txlog"
 # append/overwrite auto-checkpoint when the claimed version crosses this
 # stride, so snapshot resolution stays O(tail) even for writers that
@@ -186,38 +169,28 @@ class TxTable:
             os.unlink(tmp)
         return version
 
-    def _write_files(
-        self, df: DataFrame, obs_exprs: dict | None = None
-    ) -> tuple[list[str], int, dict]:
+    def _write_files(self, df: DataFrame) -> tuple[list[str], int]:
         """Write df's rows as uniquely-named parquet under the table dir
         (a fully parallel Spark job; nothing references the files until
         the commit lands). The committed ``n_rows`` is observed ON the
         write job itself (``DataFrame.observe`` — accumulator-backed,
         exact on the successful execution) instead of re-reading the
         just-written files with a second count job: one Spark job per
-        commit, not two, at any scale. ``obs_exprs`` (name → aggregate
-        Column) rides the same Observation — the audit-metadata
-        analogue (:class:`ObservedEntryExtra`); the observed metrics
-        come back as the third element."""
+        commit, not two, at any scale."""
         from pyspark.sql import Observation
 
         sub = f"part-{uuid.uuid4().hex}"
         out_dir = os.path.join(self.path, sub)
         obs = Observation(f"txwrite_{sub}")
-        exprs = [F.count(F.lit(1)).alias("__txn")]
-        if obs_exprs:
-            if "__txn" in obs_exprs:
-                raise ValueError("'__txn' is a reserved observation name")
-            exprs += [c.alias(k) for k, c in obs_exprs.items()]
-        df.observe(obs, *exprs).write.mode("errorifexists").parquet(out_dir)
+        df.observe(obs, F.count(F.lit(1)).alias("__txn")).write.mode(
+            "errorifexists"
+        ).parquet(out_dir)
         files = [
             os.path.join(sub, f)
             for f in os.listdir(out_dir)
             if f.endswith(".parquet")
         ]
-        metrics = dict(obs.get)
-        n = int(metrics.pop("__txn"))
-        return sorted(files), n, metrics
+        return sorted(files), int(obs.get["__txn"])
 
     def _maybe_checkpoint(self, version: int) -> None:
         """Auto-checkpoint on the stride so resolution stays O(tail)
@@ -229,37 +202,6 @@ class TxTable:
                 self.checkpoint()
             except CommitConflict:
                 pass
-
-    def _apply_entry_extra(
-        self, entry: dict, entry_extra, files: list[str], metrics: dict
-    ) -> None:
-        """Merge ``entry_extra``'s fields into the commit entry.
-        :class:`ObservedEntryExtra` finalizes the metrics observed on
-        the write job (no extra Spark job); a plain callable gets the
-        classic read-back frame over the just-written files."""
-        if entry_extra is None:
-            return
-        if isinstance(entry_extra, ObservedEntryExtra):
-            extra = entry_extra.finalize(metrics)
-        else:
-            written = self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in files]
-            )
-            extra = entry_extra(written)
-        clash = set(extra) & set(entry)
-        if clash:
-            raise ValueError(
-                f"entry_extra may not override commit keys: {clash}"
-            )
-        entry.update(extra)
-
-    @staticmethod
-    def _obs_exprs(entry_extra) -> dict | None:
-        return (
-            entry_extra.exprs
-            if isinstance(entry_extra, ObservedEntryExtra)
-            else None
-        )
 
     @staticmethod
     def _check_stats_cols(dtypes: dict[str, str], stats_cols: list[str]) -> None:
@@ -420,24 +362,16 @@ class TxTable:
         df: DataFrame,
         max_retries: int = 5,
         stats_cols: list[str] | None = None,
-        entry_extra=None,
     ) -> int:
         """Atomic append: new files become visible all-or-nothing.
         ``stats_cols`` records per-file min/max in the commit entry so
-        :meth:`read_pruned` can skip files at resolution time.
-        ``entry_extra`` (optional, ``written_df -> dict``) merges audit
-        metadata (e.g. index-drift counters) into the commit entry; it
-        receives a frame over the just-written files (no lineage
-        recompute) and may not override reserved commit keys."""
+        :meth:`read_pruned` can skip files at resolution time."""
         if stats_cols:
             self._check_stats_cols(dict(df.dtypes), stats_cols)
-        files, n, metrics = self._write_files(
-            df, obs_exprs=self._obs_exprs(entry_extra)
-        )
+        files, n = self._write_files(df)
         entry: dict = {"op": "append", "added": files, "n_rows": n}
         if stats_cols:
             entry["stats"] = self._file_stats(files, stats_cols)
-        self._apply_entry_extra(entry, entry_extra, files, metrics)
         for _ in range(max_retries):
             try:
                 v = self._commit(entry)
@@ -561,23 +495,19 @@ class TxTable:
         df: DataFrame,
         max_retries: int = 5,
         stats_cols: list[str] | None = None,
-        entry_extra=None,
     ) -> int:
         """Atomic replace: readers see the old snapshot until the single
         commit file lands, then the new one — never a mix.
-        ``stats_cols`` / ``entry_extra`` mirror :meth:`append` (a
+        ``stats_cols`` mirrors :meth:`append` (a
         full-rewrite maintenance verb like RECLUSTER needs the new
         layout's file stats recorded in the same commit, or the rewrite
         would silently disable data skipping)."""
         if stats_cols:
             self._check_stats_cols(dict(df.dtypes), stats_cols)
-        files, n, metrics = self._write_files(
-            df, obs_exprs=self._obs_exprs(entry_extra)
-        )
+        files, n = self._write_files(df)
         entry: dict = {"op": "overwrite", "added": files, "n_rows": n}
         if stats_cols:
             entry["stats"] = self._file_stats(files, stats_cols)
-        self._apply_entry_extra(entry, entry_extra, files, metrics)
         for _ in range(max_retries):
             # the removed set is only valid for the snapshot it was read
             # from — pin the commit to that version so an interleaved
@@ -1461,7 +1391,6 @@ def sink_stream_exactly_once(
     available_now: bool = True,
     transform=None,
     stats_cols: list[str] | None = None,
-    entry_extra=None,
 ):
     """Exactly-once streaming sink into a TxTable via ``foreachBatch``.
 
@@ -1492,12 +1421,7 @@ def sink_stream_exactly_once(
 
     ``stats_cols`` records per-file min/max in the stamped commit (same
     contract as :meth:`TxTable.append`), so data skipping survives the
-    exactly-once path. ``entry_extra`` (optional,
-    ``written_df -> dict``) merges audit metadata (e.g. drift counters)
-    into the commit entry; reserved keys are protected. It is handed a
-    frame over the batch's ALREADY-WRITTEN files, so its aggregate
-    re-reads micro-batch-sized parquet rather than re-executing the
-    transform lineage.
+    exactly-once path.
 
     Returns the StreamingQuery (caller awaits termination).
     """
@@ -1511,9 +1435,7 @@ def sink_stream_exactly_once(
         out = transform(batch_df) if transform is not None else batch_df
         if stats_cols:
             table._check_stats_cols(dict(out.dtypes), stats_cols)
-        files, n, metrics = table._write_files(
-            out, obs_exprs=table._obs_exprs(entry_extra)
-        )
+        files, n = table._write_files(out)
         entry = {
             "op": "stream-append",
             "added": files,
@@ -1522,7 +1444,6 @@ def sink_stream_exactly_once(
         }
         if stats_cols:
             entry["stats"] = table._file_stats(files, stats_cols)
-        table._apply_entry_extra(entry, entry_extra, files, metrics)
         while True:
             try:
                 v = table._commit(entry, at_version=cache.scanned + 1)

@@ -487,24 +487,3 @@ def test_grouped_weighted_median_high_cardinality_fallback(spark):
         r.g: (r.wmedian, r.n, r.w_total) for r in d.collect()
     }
     assert as_map(small) == as_map(big)
-
-
-def _run_twice_hash_stable(spark, sf_dir, name):
-    """Two INDEPENDENT invocations of a catalog query (fresh plans, fresh
-    side effects) must produce the identical sorted value set: what the
-    driver's per-round value hash requires across rounds."""
-    from pm25ml_spark.plans.registry import QUERIES, load_all_plans
-
-    load_all_plans()
-
-    def snap():
-        df = QUERIES[name](spark, sf_dir)
-        return sorted(
-            tuple(str(v) for v in row) for row in df.collect()
-        )
-
-    assert snap() == snap(), f"{name}: two invocations disagree"
-
-
-def test_sk05_sample_quantiles_invocations_agree(spark, sf_dir):
-    _run_twice_hash_stable(spark, sf_dir, "sk05_sample_quantiles")

@@ -153,7 +153,7 @@ def test_decode_granule_missing_dim_rejected(tmp_path):
         decode_granule_netcdf3(p, "v")
 
 
-def test_read_granules_to_grid_real_files(spark, tmp_path):
+def test_read_granules_wide_real_files(spark, tmp_path):
     """Distributed decode end-to-end over real NetCDF bytes: the plane
     field regrids exactly (bilinear of a plane is the plane)."""
     paths = []

@@ -21,8 +21,5 @@ def test_oracle_parity(spark, sf_dir, name):
     assert_match(sdf, odf, name)
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+def test_every_query_has_an_oracle():
+    assert set(QUERIES) == set(ORACLES)

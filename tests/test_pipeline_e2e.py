@@ -205,7 +205,7 @@ def _ingested(spark, tmp_path, grid, granules) -> pd.DataFrame:
     )
 
 
-def test_ingest_equals_long_reader_pivoted_onto_grid_and_dates(spark, tmp_path):
+def test_ingest_via_read_granules_wide_equals_per_granule_pivot(spark, tmp_path):
     """``ingested`` is the per-granule kernel's long rows, computed on
     the driver one granule at a time, pivoted onto grid × manifest dates:
     a (date, variable) with no granule is null on that date, every other

@@ -56,7 +56,7 @@ def test_commit_conflict_raises_when_version_already_claimed(spark, tmp_path):
     )
     with open(interloper, "w") as f:
         json.dump({"op": "append", "added": [], "version": 1}, f)
-    files, n, _m = t._write_files(_df(spark, 5, 8, "b"))
+    files, n = t._write_files(_df(spark, 5, 8, "b"))
     with pytest.raises(CommitConflict):
         # latest_version() now sees 1, so _commit targets 2... force the
         # race by claiming 2 as well between resolve and commit: patch
@@ -78,8 +78,8 @@ def test_concurrent_appends_both_land_under_retry(spark, tmp_path):
     a = TxTable(spark, str(tmp_path / "t"))
     b = TxTable(spark, str(tmp_path / "t"))
     a.append(_df(spark, 0, 2, "seed"))
-    fa, na, _m = a._write_files(_df(spark, 10, 14, "a"))
-    fb, nb, _m = b._write_files(_df(spark, 20, 26, "b"))
+    fa, na = a._write_files(_df(spark, 10, 14, "a"))
+    fb, nb = b._write_files(_df(spark, 20, 26, "b"))
     b._commit({"op": "append", "added": fb, "n_rows": nb})
     a._commit({"op": "append", "added": fa, "n_rows": na})
     assert a.read().count() == 2 + 4 + 6
@@ -158,7 +158,7 @@ def test_streaming_sink_exactly_once_under_replay(spark, tmp_path):
         stamp = ["ingest", int(batch_id)]
         if any(e.get("stream_batch") == stamp for e in t.history()):
             return
-        files, n, _m = t._write_files(batch_df)
+        files, n = t._write_files(batch_df)
         t._commit({"op": "stream-append", "added": files,
                    "n_rows": n, "stream_batch": stamp})
 
@@ -178,12 +178,12 @@ def test_pinned_commit_rejects_interleaved_writer(spark, tmp_path):
     t.append(_df(spark, 0, 3, "seed"))  # version 0
     observed = t.latest_version()
     # another writer (a concurrent replay) lands version 1 in between
-    files_b, nb, _m = t._write_files(_df(spark, 10, 13, "replayA"))
+    files_b, nb = t._write_files(_df(spark, 10, 13, "replayA"))
     t._commit({"op": "stream-append", "added": files_b, "n_rows": nb,
                "stream_batch": ["q", 7]}, at_version=observed + 1)
     # our pinned claim at the SAME observed version must conflict, even
     # though version 2 would be free
-    files_a, na, _m = t._write_files(_df(spark, 20, 23, "replayB"))
+    files_a, na = t._write_files(_df(spark, 20, 23, "replayB"))
     with pytest.raises(CommitConflict):
         t._commit({"op": "stream-append", "added": files_a, "n_rows": na,
                    "stream_batch": ["q", 7]}, at_version=observed + 1)
@@ -213,7 +213,7 @@ def test_overwrite_conflicts_with_interleaved_append(spark, tmp_path):
     # interleave an append between overwrite's snapshot and its commit
     # by claiming the pinned version first
     sv, live = t.snapshot()
-    files_i, ni, _m = t._write_files(_df(spark, 50, 53, "interleaved"))
+    files_i, ni = t._write_files(_df(spark, 50, 53, "interleaved"))
     t._commit({"op": "append", "added": files_i, "n_rows": ni},
               at_version=sv + 1)
     # public overwrite retries internally and lands against the NEW
@@ -1197,7 +1197,7 @@ def test_vacuum_orphan_sweep_reclaims_uncommitted_files(spark, tmp_path):
     t.append(_df(spark, 0, 10, "a"))
 
     # crash mid-write: files written, commit never happened
-    orphan_files, _n, _m = t._write_files(_df(spark, 100, 105, "crash"))
+    orphan_files, _n = t._write_files(_df(spark, 100, 105, "crash"))
     # a later healthy commit advances the log past the orphan's mtime
     t.append(_df(spark, 10, 14, "b"))
     orphan_abs = [os.path.join(t.path, f) for f in orphan_files]
@@ -1205,7 +1205,7 @@ def test_vacuum_orphan_sweep_reclaims_uncommitted_files(spark, tmp_path):
 
     # a second crash residue that is IN-FLIGHT-aged: newer than the
     # latest commit, so the age guard must spare it even at grace=0
-    inflight_files, _n2, _m = t._write_files(_df(spark, 200, 202, "inflight"))
+    inflight_files, _n2 = t._write_files(_df(spark, 200, 202, "inflight"))
     inflight_abs = [os.path.join(t.path, f) for f in inflight_files]
     future = __import__("time").time() + 3600
     for p in inflight_abs:
@@ -1242,7 +1242,7 @@ def test_vacuum_orphan_sweep_composes_with_retention(spark, tmp_path):
     never-referenced residue, and the return value lists both."""
     t = TxTable(spark, str(tmp_path / "t"))
     t.append(_df(spark, 0, 10, "a"))
-    orphans, _, _m = t._write_files(_df(spark, 50, 53, "crash"))
+    orphans, _ = t._write_files(_df(spark, 50, 53, "crash"))
     t.overwrite(_df(spark, 0, 4, "b"))  # retires v0's files
 
     gone = t.vacuum(orphans=True, orphan_grace_sec=0.0)
@@ -1566,49 +1566,3 @@ def test_reader_vs_vacuum_race_with_grace_always_completes(spark, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))
     assert t.read().count() == 5
 
-
-def test_observed_entry_extra_matches_readback_form(spark, tmp_path):
-    """ObservedEntryExtra rides the write job's Observation; its entry
-    fields must equal what the classic read-back callable computes over
-    the written files, on append, overwrite, and the empty frame."""
-    from pm25ml_spark.sources.txlog import ObservedEntryExtra
-
-    def readback(written):
-        r = written.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("id").alias("s"),
-        ).collect()[0]
-        return {"audit": {"n": int(r["n"]), "s": int(r["s"] or 0)}}
-
-    observed = ObservedEntryExtra(
-        {"n": F.count(F.lit(1)), "s": F.sum("id")},
-        lambda m: {"audit": {"n": int(m["n"]), "s": int(m["s"] or 0)}},
-    )
-
-    ta = TxTable(spark, str(tmp_path / "a"))
-    tb = TxTable(spark, str(tmp_path / "b"))
-    df = _df(spark, 3, 9, "x")
-    ta.append(df, entry_extra=readback)
-    tb.append(df, entry_extra=observed)
-    ea = ta._entry(ta.latest_version())["audit"]
-    eb = tb._entry(tb.latest_version())["audit"]
-    assert ea == eb == {"n": 6, "s": sum(range(3, 9))}
-
-    # overwrite path + stats_cols coexistence
-    df2 = _df(spark, 10, 12, "y")
-    tb.overwrite(df2, stats_cols=["id"], entry_extra=observed)
-    e = tb._entry(tb.latest_version())
-    assert e["audit"] == {"n": 2, "s": 21}
-    assert e["stats"]  # stats still recorded alongside
-
-    # empty frame: count 0, sum observed as NULL -> finalize's `or 0`
-    empty = df.filter(F.col("id") > 100)
-    tb.append(empty, entry_extra=observed)
-    assert tb._entry(tb.latest_version())["audit"] == {"n": 0, "s": 0}
-
-    # reserved-key clash still raises
-    clashing = ObservedEntryExtra(
-        {"n": F.count(F.lit(1))}, lambda m: {"op": "evil"}
-    )
-    with pytest.raises(ValueError, match="override commit keys"):
-        tb.append(df, entry_extra=clashing)

@@ -30,12 +30,9 @@ def main() -> None:
         "a09_mad_outliers",
         "a10_weighted_median_price",
         "a06_exact_quantiles",
-        "sk01_heavy_hitters",
         "m10_ks_drift",
         "cp05_importance_resampling",
         "cp04_decontamination_bloom",
-        "sk03_countmin",
-        "sk04_kmv_intersection",
         "t12_bigram_perplexity",
         "t11_repetition_signals",
         "cp07_quality_gate",

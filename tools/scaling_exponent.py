@@ -40,11 +40,8 @@ _MARK_B = "<!-- scaling-exponent:end -->"
 
 # the r9 verdict's named heavy hitters — always measured
 _MANDATORY = [
-    "a09", "a10", "sk01", "cp04", "dd04", "dd07",
+    "a09", "a10", "cp04", "dd04", "dd07",
     "t12",
-    # r10 additions: the incremental-artifact lifecycles must prove
-    # sublinear growth too
-    "gr08",
     # r14 addition (r13 ADVICE): track dd15, which carries that round's
     # snapshot-probe change
     "dd15",
