@@ -33,16 +33,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # round verdict) are treated as never-verified by ``sample_order`` so they
 # lead the next sample; remove entries once re-verified green.
 FORCE_NEXT = frozenset({
-    # r14: incremental dedup probes verify against the store's
-    # post-append parquet snapshot (one broadcast + ReusedExchange
-    # instead of two cache-backed builds):
-    "dd15_incremental_dedup",
     # r14: a09 shares one split-sampling pass across its two
-    # quantile calls (fold-derived MAD splits, literal median frame);
-    # cp04 persists the benchmark n-gram set across its three
-    # consumers.
+    # quantile calls (fold-derived MAD splits, literal median frame).
     "a09_mad_outliers",
-    "cp04_decontamination_bloom",
 })
 
 

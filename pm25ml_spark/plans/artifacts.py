@@ -1,15 +1,14 @@
 """Session-scoped staged-table registry — build-once-analyze-many.
 
-The general mechanism behind ``plans/dup_graph.py``: a corpus-derived
-intermediate that several catalog queries share (duplicate-pair edges,
-winnowing selections) is materialized ONCE per (session, corpus,
-params) into a transaction-log table under a process-local temp dir
-and read from parquet by every later consumer —
-the reference stages intermediate artifacts the same way
-(``combiners/data_artifact.py:10-44``). At 100 TB these artifacts live
-on the object store next to the corpus, refreshed by the ingest
-pipeline rather than per analytics query; the session memo here is the
-local-mode stand-in for that lifecycle.
+A corpus-derived intermediate (today the winnowing fingerprint
+selection behind t20, ``plans/text.winnow_selection_staged``) is
+materialized ONCE per (session, corpus, params) into a
+transaction-log table under a process-local temp dir and read from
+parquet by every later consumer. The reference stages intermediate
+artifacts the same way (``combiners/data_artifact.py:10-44``). At 100 TB
+these artifacts live on the object store next to the corpus, refreshed
+by the ingest pipeline rather than per analytics query; the session memo
+here is the local-mode stand-in for that lifecycle.
 
 Correctness stays oracle-checked end-to-end: every consumer's DuckDB
 oracle recomputes the artifact's content from the raw corpus, so a

@@ -65,6 +65,5 @@ def load_all_plans() -> None:
     import pm25ml_spark.plans.relational  # noqa: F401
     import pm25ml_spark.plans.windows  # noqa: F401
     import pm25ml_spark.plans.domain  # noqa: F401
-    import pm25ml_spark.plans.dedup  # noqa: F401
     import pm25ml_spark.plans.text  # noqa: F401
     import pm25ml_spark.plans.raster  # noqa: F401

@@ -20,6 +20,24 @@ def _tokens():
     return F.split(F.col("text"), " ")
 
 
+def word_ngrams(n: int) -> F.Column:
+    """Word n-gram INSTANCES (not distinct) of the single-space-tokenized
+    ``text`` column.
+
+    slice+array_join instead of per-position element_at: one array window
+    per n-gram (measured ~4× cheaper).
+
+    Documents with fewer than n tokens yield an EMPTY array —
+    ``sequence(1, stop)`` with stop < 1 would generate a DESCENDING
+    sequence and ``slice(toks, 0, n)`` then throws, so the sequence is
+    gated on size ≥ n. Every caller relies on this gate."""
+    toks = _tokens()
+    idx = F.when(
+        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+
+
 # --------------------------------------------------------------------------
 # token counting + per-language profile.
 @query(
@@ -529,12 +547,8 @@ def t10_bm25_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t12_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.dedup import word_ngrams
-
     docs = load_table(spark, sf_dir, "documents")
-    bg = docs.select(
-        "doc_id", F.explode(word_ngrams("text", 2)).alias("b")
-    )
+    bg = docs.select("doc_id", F.explode(word_ngrams(2)).alias("b"))
     cb = bg.groupBy("b").agg(F.count(F.lit(1)).alias("cb"))
     # the prefix counts and the vocabulary both fold out of the
     # VOCABULARY-sized cb table instead of re-scanning the corpus:
@@ -668,22 +682,20 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     passes_repetition. Every ratio is one bigint/bigint double division —
     bit-deterministic against the SQL mirror.
     """
-    from pm25ml_spark.operators.dedup import word_ngrams
-
     words = docs.select(
         "doc_id",
         F.size(_tokens()).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(_tokens())).cast("long").alias("n_uniq"),
     )
     bg = (
-        docs.select("doc_id", F.explode(word_ngrams("text", 2)).alias("g"))
+        docs.select("doc_id", F.explode(word_ngrams(2)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("n"))
         .groupBy("doc_id")
         .agg(F.max("n").alias("top2_n"), F.sum("n").alias("n2_inst"))
     )
     tg = (
-        docs.select("doc_id", F.explode(word_ngrams("text", 3)).alias("g"))
+        docs.select("doc_id", F.explode(word_ngrams(3)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("n"))
         .groupBy("doc_id")
@@ -1014,15 +1026,13 @@ def t14_chunk_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t16_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pm25ml_spark.operators.dedup import word_ngrams
-
     docs = load_table(spark, sf_dir, "documents")
     # word_ngrams gates sequence() on size >= n: docs with < 3 tokens
     # yield an EMPTY gram array (a bare sequence(1, n-2) would DESCEND
     # for short docs and emit null-padded spurious grams the oracle's
     # range(1, len-1) never produces).
     grams = (
-        docs.select("doc_id", F.explode(word_ngrams("text", 3)).alias("g"))
+        docs.select("doc_id", F.explode(word_ngrams(3)).alias("g"))
         .distinct()
     )
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
@@ -1253,14 +1263,12 @@ def winnow_selection(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprint selection: ``(doc_id, n_kg, sel_pos,
     sel_h)`` — the distinct rightmost-min (hash, position) picks of
     every w-window over the doc's 3-gram hash sequence (algorithm and
-    packing-key argument in the comment above). Shared by t20 (per-doc
-    profile) and dd13 (fingerprint-join near-dup)."""
-    from pm25ml_spark.operators.dedup import word_ngrams
-
+    packing-key argument in the comment above), profiled per doc by
+    t20."""
     kgs = docs.select(
         "doc_id",
         (F.size(_tokens()) - 2).cast("bigint").alias("n_kg"),
-        F.posexplode(word_ngrams("text", 3)).alias("pos0", "kg"),
+        F.posexplode(word_ngrams(3)).alias("pos0", "kg"),
     )
     h = F.conv(F.substring(F.md5(F.col("kg")), 1, 10), 16, 10).cast("bigint")
     # enforce the documented packing bound: a position >= 2^21 would
@@ -1306,10 +1314,10 @@ def winnow_selection(docs: DataFrame) -> DataFrame:
 
 def winnow_selection_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once staged winnowing selection (plans/artifacts.py): t20
-    and dd13 both consume the full-corpus fingerprint pick, and at scale
-    a MOSS-style system stages exactly this table next to the corpus —
-    per query it is a posexplode of every 3-gram plus a sliding-window
-    min, the dominant cost of both consumers."""
+    consumes the full-corpus fingerprint pick, and at scale a MOSS-style
+    system stages exactly this table next to the corpus — per query it
+    is a posexplode of every 3-gram plus a sliding-window min, the
+    dominant cost of t20."""
     from pm25ml_spark.plans.artifacts import staged_table
 
     return staged_table(
@@ -1322,9 +1330,8 @@ def winnow_selection_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared oracle fragment: the winnowing selection CTE chain (DuckDB
-# spelling of winnow_selection) — used by t20 here and dd13 in
-# plans/dedup.py.
+# t20's oracle fragment: the winnowing selection CTE chain (DuckDB
+# spelling of winnow_selection).
 WINNOW_SEL_CTE = f"""
     tok AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
     kg AS (

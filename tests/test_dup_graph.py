@@ -1,15 +1,13 @@
-"""Build-once duplicate-pair edge list (plans/dup_graph.py) and the
-staged-table registry under it (plans/artifacts.py): the staged edge
-list is built exactly once per (session, corpus, params), matches the
-direct operator output, and every pair consumer reads it instead of
-recomputing the shingle join."""
+"""The session-scoped staged-table registry (plans/artifacts.py): a
+staged artifact is built exactly once per (session, corpus, params,
+input version), matches the direct computation, survives a concurrent
+first build, and rebuilds when its input changes in place. The winnowing
+selection behind t20 is the staged artifact under test; the operator
+cache's LRU registry is pinned here too."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 import pm25ml_spark.plans.artifacts as ART
-import pm25ml_spark.plans.dup_graph as DG
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,40 +27,6 @@ def _private_corpus(tmp_path, *tables: str) -> str:
     return str(d)
 
 
-def test_dup_edges_built_once_and_exact(spark, tmp_path):
-    from pm25ml_spark.catalog import load_table
-    from pm25ml_spark.operators import dedup as D
-
-    SF = _private_corpus(tmp_path, "documents")
-    before = ART.BUILD_COUNTS.get("dup_edges", 0)
-    e1 = DG.dup_edges(spark, SF)
-    got = {
-        (r.doc_a, r.doc_b, r.shared, round(r.jaccard, 9))
-        for r in e1.collect()
-    }
-    docs = load_table(spark, SF, "documents")
-    want = {
-        (r.doc_a, r.doc_b, r.shared, round(r.jaccard, 9))
-        for r in D.jaccard_pairs(docs, n=3, t_num=3, t_den=5).collect()
-    }
-    assert got == want and got  # artifact content == direct operator
-    # a second consumer reuses the staged table
-    DG.dup_edges(spark, SF).count()
-    assert ART.BUILD_COUNTS.get("dup_edges", 0) == before + 1
-
-
-def test_gr_family_shares_one_build(spark):
-    from pm25ml_spark.plans.registry import QUERIES, load_all_plans
-
-    load_all_plans()
-    DG.dup_edges(spark, SF).count()  # warm the artifact
-    before = ART.BUILD_COUNTS.get("dup_edges", 0)
-    a = QUERIES["dd08_dup_clusters"](spark, SF)
-    b = QUERIES["dd03_jaccard_pairs"](spark, SF)
-    assert a.count() > 0 and b.count() > 0
-    assert ART.BUILD_COUNTS.get("dup_edges", 0) == before  # zero rebuilds after the stage
-
-
 def test_winnow_artifact_built_once_and_exact(spark, tmp_path):
     from pm25ml_spark.catalog import load_table
     from pm25ml_spark.plans.text import (
@@ -79,70 +43,6 @@ def test_winnow_artifact_built_once_and_exact(spark, tmp_path):
     assert got == want and got
     winnow_selection_staged(spark, SF).count()  # second consumer: no rebuild
     assert ART.BUILD_COUNTS.get("winnow_sel", 0) == before + 1
-
-
-def test_jaccard_between_equals_filtered_self_join(spark):
-    """The asymmetric probe must return exactly the cross-set subset of
-    the symmetric pair set (same threshold, same shingles) — the
-    equivalence that lets the oracle recompute it brute-force."""
-    from pm25ml_spark.catalog import load_table
-    from pm25ml_spark.operators import dedup as D
-
-    docs = load_table(spark, SF, "documents")
-    batch = docs.filter(F.col("doc_id") % 10 == 7)
-    corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    got = {
-        (r.new_id, r.corpus_id, r.shared, round(r.jaccard, 9))
-        for r in D.jaccard_pairs_between(batch, corpus).collect()
-    }
-    full = D.jaccard_pairs(docs, n=3, t_num=3, t_den=5).collect()
-    want = set()
-    for r in full:
-        a_batch, b_batch = r.doc_a % 10 == 7, r.doc_b % 10 == 7
-        if a_batch != b_batch:  # cross pairs only, keyed new->corpus
-            new, cor = (r.doc_a, r.doc_b) if a_batch else (r.doc_b, r.doc_a)
-            want.add((new, cor, r.shared, round(r.jaccard, 9)))
-    assert got == want and got
-
-
-def test_oversized_batch_degrades_to_shuffle_join(spark):
-    """The guarded broadcast hints (`_bcast_if_small`) must DROP the
-    hint when the plan-statistics estimate exceeds the cap: a
-    backfill-sized "batch" fed to the incremental-ingest probe
-    (`jaccard_pairs_between`) degrades the prefix and verify joins to
-    shuffle joins instead of collecting 10^9 prefix rows into a
-    broadcast relation (r13 VERDICT hazard #2). A bench-sized batch
-    must keep the broadcast (the plan the r13 wins were measured on)."""
-    from pm25ml_spark.catalog import load_table
-    from pm25ml_spark.operators import cache as C
-    from pm25ml_spark.operators import dedup as D
-
-    huge = spark.range(1_000_000_000).select(
-        F.col("id").alias("doc_id"),
-        F.lit("a b c d").alias("text"),
-    )
-    try:
-        plan = (
-            D.jaccard_pairs_between(huge, huge)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BroadcastHashJoin" not in plan
-        assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
-
-        docs = load_table(spark, SF, "documents")
-        batch = docs.filter(F.col("doc_id") % 10 == 7)
-        corpus = docs.filter(F.col("doc_id") % 10 != 7)
-        small_plan = (
-            D.jaccard_pairs_between(batch, corpus)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BroadcastHashJoin" in small_plan
-    finally:
-        C.release_all()  # the probe's persisted shingle frames
 
 
 def test_staged_table_concurrent_first_build_is_single(spark, tmp_path):
@@ -206,49 +106,27 @@ def test_cache_registry_is_true_lru():
         C.release_all()
 
 
-def test_jaccard_between_registers_internal_caches(spark):
-    """The asymmetric probe's two persisted shingle frames must enter the
-    bounded LRU registry (long-lived sessions would otherwise leak two
-    caches per call)."""
-    from pm25ml_spark.catalog import load_table
-    from pm25ml_spark.operators import cache as C
-    from pm25ml_spark.operators import dedup as D
-
-    docs = load_table(spark, SF, "documents")
-    batch = docs.filter(F.col("doc_id") % 10 == 7)
-    corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    C.release_all()
-    out = D.jaccard_pairs_between(batch, corpus)
-    assert len(C._LRU) == 2
-    assert out.count() >= 0
-    C.release_all()
-
-
 def test_staged_artifact_rebuilds_on_input_mutation(spark, tmp_path):
     """The memo key folds in the input's content fingerprint: mutating
     the corpus under the SAME path mid-session must trigger a rebuild
     (BUILD_COUNTS increments) instead of serving the stale artifact."""
     import os
-    import shutil
 
-    corpus = str(tmp_path / "corpus")
-    os.makedirs(corpus)
-    shutil.copy(
-        os.path.join(SF, "documents.parquet"),
-        os.path.join(corpus, "documents.parquet"),
-    )
-    before = ART.BUILD_COUNTS.get("dup_edges", 0)
-    n1 = DG.dup_edges(spark, corpus).count()
-    assert ART.BUILD_COUNTS.get("dup_edges", 0) == before + 1
-    DG.dup_edges(spark, corpus).count()  # unchanged input: no rebuild
-    assert ART.BUILD_COUNTS.get("dup_edges", 0) == before + 1
+    from pm25ml_spark.plans.text import winnow_selection_staged
+
+    corpus = _private_corpus(tmp_path, "documents")
+    before = ART.BUILD_COUNTS.get("winnow_sel", 0)
+    n1 = winnow_selection_staged(spark, corpus).count()
+    assert ART.BUILD_COUNTS.get("winnow_sel", 0) == before + 1
+    # unchanged input: no rebuild
+    winnow_selection_staged(spark, corpus).count()
+    assert ART.BUILD_COUNTS.get("winnow_sel", 0) == before + 1
     # in-place mutation: same path, new content version
     st = os.stat(os.path.join(corpus, "documents.parquet"))
     os.utime(
         os.path.join(corpus, "documents.parquet"),
         ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000),
     )
-    n2 = DG.dup_edges(spark, corpus).count()
-    assert ART.BUILD_COUNTS.get("dup_edges", 0) == before + 2
+    n2 = winnow_selection_staged(spark, corpus).count()
+    assert ART.BUILD_COUNTS.get("winnow_sel", 0) == before + 2
     assert n1 == n2  # same bytes, so same content — only the key moved
-

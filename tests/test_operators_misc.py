@@ -1,4 +1,6 @@
-"""As-of join, NN join, sampling, storage layer, ML fold assignment."""
+"""As-of join, NN join, sampling, storage layer, ML fold assignment, and
+the text n-gram/span operators (word n-grams, novelty, winnowing,
+blocklist hits)."""
 
 from __future__ import annotations
 
@@ -362,30 +364,28 @@ def test_missing_months_incremental_skip(spark, tmp_path):
     assert store.missing_months("upstream", "downstream") == []
 
 
-def test_connected_components_chain_and_triangle(spark):
-    from pm25ml_spark.operators.components import connected_components, dedup_clusters
+def _docs_parquet(tmp_path, texts):
+    """Write a single-file ``documents.parquet`` (doc ids 1..n) for the
+    text queries that read their corpus from an sf dir."""
+    import pandas as pd
 
-    # chain 1-2-3-4-5 (diameter 4), triangle 10-11-12, pair 20-21
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "src long, dst long",
-    )
-    comp = {r.node: r.component for r in connected_components(edges).collect()}
-    assert all(comp[n] == 1 for n in (1, 2, 3, 4, 5))
-    assert all(comp[n] == 10 for n in (10, 11, 12))
-    assert comp[20] == 20 and comp[21] == 20
-
-    clusters = dedup_clusters(edges, id_a="src", id_b="dst").collect()
-    by_doc = {r.doc_id: r for r in clusters}
-    assert by_doc[3].cluster_id == 1 and by_doc[3].cluster_size == 5
-    assert by_doc[1].is_keeper == 1 and by_doc[5].is_keeper == 0
-    assert by_doc[12].cluster_size == 3
+    n = len(texts)
+    pd.DataFrame(
+        {
+            "doc_id": list(range(1, n + 1)),
+            "text": texts,
+            "lang": ["en"] * n,
+            "source": ["web"] * n,
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    return str(tmp_path)
 
 
 def test_shingle_operators_survive_short_docs(spark):
     # regression: docs with < n tokens previously generated a DESCENDING
     # sequence whose slice(toks, 0, n) crashed the whole job
-    from pm25ml_spark.operators.dedup import jaccard_pairs, minhash_dedup_pairs
+    from pm25ml_spark.plans.text import word_ngrams
 
     docs = spark.createDataFrame(
         [
@@ -396,10 +396,15 @@ def test_shingle_operators_survive_short_docs(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = jaccard_pairs(docs, n=3, t_num=1, t_den=2).collect()
-    assert {(r.doc_a, r.doc_b) for r in pairs} == {(1, 2)}
-    mh = minhash_dedup_pairs(docs, t_num=1, t_den=2).collect()
-    assert {(r.doc_a, r.doc_b) for r in mh} == {(1, 2)}
+    grams = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams(3).alias("g")).collect()}
+    assert grams[1] == ["aa bb cc", "bb cc dd", "cc dd ee", "dd ee ff"]
+    assert grams[2] == grams[1]
+    assert grams[3] == [] and grams[4] == []
+    # n = 1 keeps every token; n = 2 emits the one bigram of doc 3
+    uni = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams(1).alias("g")).collect()}
+    assert uni[3] == ["aa", "bb"]
+    bi = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams(2).alias("g")).collect()}
+    assert bi[3] == ["aa bb"]
 
 
 def test_asof_payload_row_integrity(spark):
@@ -421,63 +426,68 @@ def test_asof_payload_row_integrity(spark):
     assert out.asof_score == 500  # and score from the SAME (ts=5) row
 
 
-def test_repeated_spans_flags_shared_boilerplate(spark):
-    import pandas as pd
-    from pm25ml_spark.operators.dedup import repeated_spans
+def test_repeated_spans_flags_shared_boilerplate(spark, tmp_path):
+    """t16 marks a 3-gram novel only in the first doc that holds it, so a
+    boilerplate span shared by two docs counts against the later one —
+    exactly its inner grams, none of the grams around it."""
+    from pm25ml_spark.plans.registry import QUERIES
 
-    boiler = "subscribe to our newsletter now"  # 5 tokens
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2, 3],
-                "text": [
-                    boiler + " unique alpha beta gamma delta",
-                    boiler + " other words entirely here now",
-                    "no shared content in this document at all yes",
-                ],
-            }
-        )
+    boiler = "subscribe to our newsletter now"  # 5 tokens -> 3 grams
+    sf = _docs_parquet(
+        tmp_path,
+        [
+            boiler + " unique alpha beta gamma delta",
+            boiler + " other words entirely here now",
+            "no shared content in this document at all yes",
+        ],
     )
-    out = repeated_spans(docs, span_tokens=5, min_docs=2).toPandas()
-    # exactly the shared leading 5-token span qualifies
-    assert len(out) == 1
-    assert out.iloc[0].n_docs == 2
-    assert out.iloc[0].first_doc == 1
+    out = {r.doc_id: r for r in QUERIES["t16_ngram_novelty"](spark, sf).collect()}
+    assert {d: r.n_grams - r.n_novel for d, r in out.items()} == {1: 0, 2: 3, 3: 0}
+    assert out[2].n_grams == 8
 
 
 def test_repeated_spans_short_doc_safe(spark):
+    """Winnowing on docs too short for a full window: fewer than w
+    k-grams still select exactly one span fingerprint, and docs with
+    no k-gram select none instead of failing the job."""
     import pandas as pd
-    from pm25ml_spark.operators.dedup import repeated_spans
+
+    from pm25ml_spark.plans.text import winnow_selection
 
     docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "text": ["too short"]})
-    )
-    assert repeated_spans(docs, span_tokens=5).count() == 0
-
-
-def test_contamination_hits_counts_instances(spark):
-    import pandas as pd
-    from pm25ml_spark.operators.dedup import contamination_hits
-
-    bench = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [100], "text": ["the quick brown fox"]})
-    )
-    corpus = spark.createDataFrame(
         pd.DataFrame(
             {
-                "doc_id": [1, 2],
-                "text": [
-                    # 'quick brown' appears twice -> 2 hits, 1 distinct
-                    "a quick brown b quick brown c",
-                    "totally clean document here",
-                ],
+                "doc_id": [1, 2, 3, 4],
+                "text": ["too short", "", "three tokens here", "a b c d e"],
             }
         )
     )
-    out = contamination_hits(corpus, bench, n=2).toPandas()
-    assert out.doc_id.tolist() == [1]
-    assert out.iloc[0].n_hits == 2
-    assert out.iloc[0].n_spans == 1
+    out = winnow_selection(docs).toPandas()
+    assert set(out.doc_id) == {3, 4}
+    assert (out.groupby("doc_id").size() == 1).all()
+    assert out.set_index("doc_id").n_kg.to_dict() == {3: 1, 4: 3}
+
+
+def test_contamination_hits_counts_instances(spark, tmp_path):
+    """t19's blocklist hits count every occurrence of a listed term, not
+    distinct terms or documents; whole-word matching ignores 'keys'."""
+    from pm25ml_spark.plans.registry import QUERIES
+
+    sf = _docs_parquet(
+        tmp_path,
+        [
+            # 'key' twice + 'error' once -> 3 hits; 'keys' is no word match
+            "a key b key c error d keys",
+            "totally clean document here",
+        ],
+    )
+    (r,) = QUERIES["t19_blocklist_redaction"](spark, sf).collect()
+    assert r.n_docs == 2
+    assert r.docs_with_hits == 1
+    assert r.total_hits == 3
+    # each hit becomes the 3-char '[X]': 'key' keeps its length, 'error'
+    # loses 2 chars
+    assert r.total_chars - r.redacted_chars == 2
 
 
 def test_interval_join_matches_bruteforce(spark):
@@ -516,28 +526,6 @@ def test_interval_join_matches_bruteforce(spark):
     assert got.equals(expect)
     # sanity: many-to-many actually happened (t=55 in both 2 and 4)
     assert (got.p_id == 4).sum() == 2
-
-
-def test_connected_components_paths_agree(spark):
-    """The driver union-find (small graphs) and the distributed
-    min-label loop must label identically; the loop path is forced via
-    small_graph_edges=0."""
-    from pm25ml_spark.operators.components import connected_components
-
-    import random
-
-    rng = random.Random(7)
-    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    fast = {
-        (r.node, r.component)
-        for r in connected_components(df).collect()
-    }
-    slow = {
-        (r.node, r.component)
-        for r in connected_components(df, small_graph_edges=0).collect()
-    }
-    assert fast == slow
 
 
 # ---- weighted sampling (operators/sampling.py weighted_sample_topk) ------

@@ -81,27 +81,6 @@ def test_scaffold_day_side_broadcast(spark, sf_dir, name):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_dd03_no_cartesian_product(spark, sf_dir):
-    """Prefix-filtered Jaccard must candidate-join on the shingle key —
-    never fall back to a cartesian pair explosion."""
-    df = QUERIES["dd03_jaccard_pairs"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_dd06_tiles_not_cross_join(spark, sf_dir):
-    """Blocked all-pairs cosine: block-pair replication is ONE broadcast
-    join of the 36-row pair table (OR-condition → BroadcastNestedLoop
-    over 36 rows, then a side-explode); the n x n cross product must
-    never appear, and the embeddings subtree must be scanned once."""
-    df = QUERIES["dd06_embedding_neardup"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan
-    assert plan.count("Scan parquet") == 1  # single pass over embeddings
-
-
 def test_d05_regex_projection_prunes_scan(spark, sf_dir):
     """Regex projection resolves driver-side, so Catalyst must prune the
     events scan to the columns the projected families need."""
@@ -111,28 +90,6 @@ def test_d05_regex_projection_prunes_scan(spark, sf_dir):
     assert "user_id" in read_schema
     # payload columns never touched by the projected families
     assert "props" not in read_schema and "event_id" not in read_schema
-
-
-def test_dd09_blocking_is_equi_join(spark, sf_dir):
-    """dd09's candidate generation must hash-join on the block key.
-
-    The Levenshtein threshold and the doc_id< inequality are residual
-    predicates ON an equi join — if they leaked into the join strategy
-    the plan would degrade to BroadcastNestedLoop/Cartesian, which is
-    quadratic shuffle at corpus scale.
-    """
-    df = QUERIES["dd09_editdist_pairs"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "HashJoin" in plan or "SortMergeJoin" in plan
-
-
-def test_cp02_decontamination_broadcasts_benchmark(spark, sf_dir):
-    """The benchmark n-gram side is eval-suite-sized by contract: the
-    flagging join must be a broadcast hash join (zero corpus shuffle)."""
-    df = QUERIES["cp02_decontamination"](spark, sf_dir)
-    assert "BroadcastHashJoin" in physical_plan(df)
 
 
 def test_m01_fold_map_broadcasts(spark, sf_dir):
@@ -149,18 +106,6 @@ def test_iv01_interval_join_no_cartesian(spark, sf_dir):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_cp03_within_cluster_join_is_equi(spark, sf_dir):
-    """SemDeDup's whole point is the candidate restriction: the pair
-    join must be an equi-join on the cluster id. The only BNL allowed is
-    the intentional centroid-assignment broadcast (centroids are
-    corpus/stride-sized); a CartesianProduct anywhere means the
-    restriction was lost."""
-    df = QUERIES["cp03_semantic_dedup"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
 def test_w08_decimation_has_no_single_partition_window(spark, sf_dir):
@@ -180,19 +125,6 @@ def test_w08_decimation_has_no_single_partition_window(spark, sf_dir):
     # boundary resample caused the r6 w08 red)
     assert "hashpartitioning(__bucket" in plan
     assert "rangepartitioning" not in plan.lower()
-
-
-def test_cp03_assignment_has_no_window(spark, sf_dir):
-    """The centroid argmax must be the map-side-combinable max(struct)
-    aggregate, NOT row_number over the exploded n×k frame: a Window
-    there shuffles corpus×centroids rows (round-5 finding). Any Window
-    in cp03's plan means the assignment regressed."""
-    df = QUERIES["cp03_semantic_dedup"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "Window" not in plan
-    # partial aggregation proof: HashAggregate appears on both sides of
-    # the exchange for the argmax (merge_max + partial_max)
-    assert "partial_max" in plan or "HashAggregate" in plan
 
 
 def test_t15_fim_is_pure_projection(spark, sf_dir):
@@ -238,7 +170,6 @@ _BOUNDED_GLOBAL_WINDOWS = {
     "t14_chunk_language_mix": (1, "bucket-offset running sum over ≤ num_buckets rows"),
     "w08_decimate_100": (1, "bucket-offset running sum over ≤ num_buckets rows"),
     "m10_ks_drift": (2, "two composed prefix sums, each ≤ num_buckets offset rows"),
-    "dd14_sorted_neighborhood": (1, "bucket-offset running sum over ≤ num_buckets rows"),
 }
 
 
@@ -366,17 +297,6 @@ def test_m04_auc_has_no_unpartitioned_window(spark, sf_dir):
         assert "__bucket" in spec, f"unpartitioned window in m04 plan: {spec}"
 
 
-def test_dd12_no_cartesian_product(spark, sf_dir):
-    """Containment candidates must equi-join contained-side prefixes
-    against the full shingle index on the shingle key — never a
-    cartesian pair explosion (the probe side cannot prefix-prune, so
-    the ONLY thing keeping this sub-quadratic is the keyed join)."""
-    df = QUERIES["dd12_containment_pairs"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_d09_stack_feeds_hash_aggregates(spark, sf_dir):
     """The full stacked frame (|rows| x |columns|) must meet HASH
     aggregates only: a combined countDistinct + string min/max agg
@@ -432,26 +352,6 @@ def test_d10_join_runs_on_salted_key(spark, sf_dir):
     join) while silently losing the skew spread."""
     df = QUERIES["d10_salted_hot_join"](spark, sf_dir)
     assert "__salt" in physical_plan(df)
-
-
-def test_dd13_no_cartesian_product(spark, sf_dir):
-    """Winnowing-pair candidates must equi-join on the fingerprint key
-    after the df-cap prune — never a cartesian pair explosion."""
-    df = QUERIES["dd13_winnowing_pairs"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_dd14_rank_join_is_equi_and_window_free(spark, sf_dir):
-    """Sorted-neighborhood pairs come from an EQUI-join on the global
-    rank (rank+j explode), never a cartesian or range self-join; the
-    rank itself comes from ordered_prefix_sum (bucket-partitioned
-    windows only — the catalog-wide audit enforces the rest)."""
-    df = QUERIES["dd14_sorted_neighborhood"](spark, sf_dir)
-    plan = physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_q24_dims_broadcast_no_cartesian(spark, sf_dir):

@@ -69,87 +69,6 @@ def test_asof_backward_matches_bruteforce(spark, left, right):
 
 
 # ---------------------------------------------------------------------------
-# prefix-filtered Jaccard ≡ brute-force pair set (the filter must never
-# drop a qualifying pair)
-
-_WORDS = ["aa", "bb", "cc", "dd", "ee"]
-
-
-@given(
-    docs=st.lists(
-        st.lists(st.sampled_from(_WORDS), min_size=3, max_size=8),
-        min_size=2,
-        max_size=8,
-    )
-)
-@SETTINGS
-@pytest.mark.slow
-def test_jaccard_prefix_filter_is_lossless(spark, docs):
-    from pm25ml_spark.operators.dedup import jaccard_pairs
-
-    rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in jaccard_pairs(df, n=3, t_num=1, t_den=2).collect()
-    }
-
-    def shingle_set(toks):
-        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-
-    want = set()
-    for a in range(len(docs)):
-        for b in range(a + 1, len(docs)):
-            sa, sb = shingle_set(docs[a]), shingle_set(docs[b])
-            inter = len(sa & sb)
-            if inter * 2 >= 1 * (len(sa) + len(sb) - inter):
-                want.add((a, b))
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# asymmetric (batch-vs-corpus) jaccard probe: the union-order prefix
-# filter must be lossless — every qualifying cross pair survives, and no
-# same-side pair ever appears
-
-
-@given(
-    docs=st.lists(
-        st.lists(st.sampled_from(_WORDS), min_size=3, max_size=8),
-        min_size=2,
-        max_size=8,
-    )
-)
-@SETTINGS
-@pytest.mark.slow
-def test_jaccard_between_prefix_filter_is_lossless(spark, docs):
-    from pm25ml_spark.operators.dedup import jaccard_pairs_between
-
-    rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    batch = df.filter("doc_id % 2 = 0")
-    corpus = df.filter("doc_id % 2 = 1")
-    got = {
-        (r.new_id, r.corpus_id)
-        for r in jaccard_pairs_between(
-            batch, corpus, n=3, t_num=1, t_den=2
-        ).collect()
-    }
-
-    def shingle_set(toks):
-        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-
-    want = set()
-    for a in range(0, len(docs), 2):
-        for b in range(1, len(docs), 2):
-            sa, sb = shingle_set(docs[a]), shingle_set(docs[b])
-            inter = len(sa & sb)
-            if inter * 2 >= 1 * (len(sa) + len(sb) - inter):
-                want.add((a, b))
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # exact stratified split: per-stratum training count is exactly
 # ceil(fraction * n_stratum), regardless of data shape
 
@@ -175,75 +94,6 @@ def test_stratified_split_exact_counts(spark, sizes, frac):
     }
     for g, n in enumerate(sizes):
         assert counts.get(f"s{g}", 0) == math.ceil(n * frac), (g, n, frac)
-
-
-# ---------------------------------------------------------------------------
-# blocked cosine near-dup: block count must not change the result
-
-
-@given(
-    n_blocks=st.sampled_from([1, 2, 3, 7]),
-    n_vecs=st.integers(3, 10),
-)
-@SETTINGS
-@pytest.mark.slow
-def test_blocked_neardup_invariant_to_block_count(spark, n_blocks, n_vecs):
-    from pm25ml_spark.operators.similarity import cosine_neardup_pairs
-
-    rows = [
-        (i, [1.0, 0.01 * (i % 3), 0.02 * (i % 2)]) for i in range(n_vecs)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        (r.id_a, r.id_b, r.score)
-        for r in cosine_neardup_pairs(df, threshold=0.99, n_blocks=n_blocks).collect()
-    }
-    ref = {
-        (r.id_a, r.id_b, r.score)
-        for r in cosine_neardup_pairs(df, threshold=0.99, n_blocks=1).collect()
-    }
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# connected components ≡ local union-find on random graphs
-
-
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)),
-        min_size=1,
-        max_size=25,
-    )
-)
-@SETTINGS
-@pytest.mark.slow
-def test_connected_components_match_union_find(spark, edges):
-    from pm25ml_spark.operators.components import connected_components
-
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        edges = [(0, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.component for r in connected_components(df).collect()}
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {}
-    for n in parent:
-        want[n] = find(n)
-    assert got == want
 
 
 # ---------------------------------------------------------------------------

@@ -1,43 +1,11 @@
-"""Unit tests for the near-duplicate cosine kernel and two small helpers.
-
-The kernel's pairs are emitted once each, ordered ``id_a < id_b``, and cut
-at the threshold; regex projection keeps the id columns; a CSV read with a
-declared schema round-trips nulls.
+"""Unit tests for two small source-side helpers: ``regex_project`` keeps
+the id columns and the matched columns in schema order, and a CSV read
+with a declared schema round-trips nulls without an inference scan.
 """
 
 from __future__ import annotations
 
 from pm25ml_spark.operators.combine import regex_project
-from pm25ml_spark.operators.similarity import cosine_neardup_pairs
-
-
-def _vec_df(spark, name_id, name_vec, rows):
-    return spark.createDataFrame(
-        rows, f"{name_id} long, {name_vec} array<float>"
-    )
-
-
-def test_cosine_neardup_pairs_symmetric_and_ordered(spark):
-    # pair emitted once with id_a < id_b regardless of block placement
-    rows = [(i, [1.0, float(i) * 1e-4]) for i in range(20)]
-    emb = _vec_df(spark, "vec_id", "embedding", rows)
-    out = cosine_neardup_pairs(
-        emb, threshold=0.999, id_col="vec_id", vec_col="embedding", n_blocks=4
-    ).collect()
-    assert len(out) == 190  # all C(20,2) pairs are near-identical
-    assert all(r.id_a < r.id_b for r in out)
-    assert len({(r.id_a, r.id_b) for r in out}) == 190
-
-
-def test_cosine_neardup_threshold_excludes(spark):
-    emb = _vec_df(
-        spark,
-        "vec_id",
-        "embedding",
-        [(1, [1.0, 0.0]), (2, [1.0, 0.001]), (3, [0.0, 1.0])],
-    )
-    out = cosine_neardup_pairs(emb, threshold=0.99, n_blocks=2).collect()
-    assert [(r.id_a, r.id_b) for r in out] == [(1, 2)]
 
 
 def test_regex_project_keeps_ids_and_matches_in_schema_order(spark):

@@ -37,28 +37,3 @@ def test_bigram_perplexity_bounds(spark, sf_dir):
         # H can't exceed ln(cw + V) <= ln(instances + V)
         assert r.cross_entropy > 0
         assert r.n_bigrams >= 1
-
-
-def test_dsir_semantics(spark, sf_dir):
-    rows = QUERIES["cp05_importance_resampling"](spark, sf_dir).collect()
-    assert len(rows) == 500
-    # acceptance rule: a non-negative score is ALWAYS kept (ln(u) < 0)
-    assert all(r.kept == 1 for r in rows if r.score >= 0)
-    # the resample must actually discriminate: docs scoring far below 0
-    # are mostly dropped, and both classes are non-empty
-    kept = sum(r.kept for r in rows)
-    assert 0 < kept < 500
-    low = [r for r in rows if r.score < -5]
-    if low:
-        assert sum(r.kept for r in low) / len(low) < 0.2
-
-
-def test_dsir_plan_broadcasts_distributions(spark, sf_dir):
-    from tests.test_plan_quality import physical_plan
-
-    df = QUERIES["cp05_importance_resampling"](spark, sf_dir)
-    plan = physical_plan(df)
-    # the B-sized weight table joins the bigram stream via broadcast;
-    # a sort-merge join there would shuffle the whole corpus by bucket
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan

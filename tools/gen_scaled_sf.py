@@ -14,10 +14,9 @@ old — so per-query work should scale the way production ingest would:
   UNCHANGED and only table cardinality grows;
 - dimension tables (region/nation) stay fixed, as TPC-H scaling does;
 - ``documents`` text is token-suffixed per shard (``_s<shard>``), so
-  shards share NO shingles: cross-shard near-dup pairs stay zero and
-  the duplicate-pair graph grows linearly (replicating identical text
-  would instead create cross-shard cliques — a different, artificially
-  quadratic workload);
+  shards share NO n-grams: vocabulary and n-gram tables grow linearly
+  (replicating identical text would instead make every shard a copy of
+  the first — a different workload);
 - ``embeddings`` replicate with offset vec_ids (perf probe only — the
   ANN operators' cost is driven by cardinality, not vector values).
 

@@ -31,11 +31,8 @@ def main() -> None:
         "a10_weighted_median_price",
         "a06_exact_quantiles",
         "m10_ks_drift",
-        "cp05_importance_resampling",
-        "cp04_decontamination_bloom",
         "t12_bigram_perplexity",
         "t11_repetition_signals",
-        "cp07_quality_gate",
     ]
 
     # Warm up the session (JIT, worker pool) once.

@@ -39,13 +39,7 @@ _MARK_A = "<!-- scaling-exponent:start (generated by tools/scaling_exponent.py) 
 _MARK_B = "<!-- scaling-exponent:end -->"
 
 # the r9 verdict's named heavy hitters — always measured
-_MANDATORY = [
-    "a09", "a10", "cp04", "dd04", "dd07",
-    "t12",
-    # r14 addition (r13 ADVICE): track dd15, which carries that round's
-    # snapshot-probe change
-    "dd15",
-]
+_MANDATORY = ["a09", "a10", "t12"]
 
 
 def _sf_of(path: str) -> float:
