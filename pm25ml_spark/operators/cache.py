@@ -10,11 +10,12 @@ subtree in the final job.
 
 Lifetime design: a bounded LRU registry (strong references). A weakref
 tied to the returned DataFrame is NOT viable — composed plans drop the
-intermediate Python object immediately (``pack_sequences`` selects over
-the prefix result and returns a new frame; CPython refcounting would
-fire the finalizer before the caller ever executes the plan, silently
-re-deriving the upstream subtree the persist exists to avoid — observed:
-0 cached RDDs after building a packing plan under the weakref design).
+intermediate Python object immediately (``sampling.decimate_partitioned``
+filters the prefix result and returns a new frame; CPython refcounting
+would fire the finalizer before the caller ever executes the plan,
+silently re-deriving the upstream subtree the persist exists to avoid —
+observed: 0 cached RDDs after building such a composed plan under the
+weakref design).
 Instead the last ``MAX_CACHED`` operator caches stay alive; inserting
 past the bound unpersists the oldest (non-blocking). Long-lived library
 sessions are therefore bounded at MAX_CACHED spillable projections

@@ -1,7 +1,7 @@
 """Exact distributed prefix sum over an ordered key.
 
-The generalization of the two-pass shape ``packing.pack_sequences`` and
-``sampling.decimate_partitioned`` share, exposed as its own operator: an
+The two-pass shape behind ``sampling.decimate_partitioned`` and the
+rank/CDF queries of ``plans/domain``, exposed as its own operator: an
 inclusive running sum of ``value_col`` in ``order_cols`` order, with no
 global window and no single-task sort.
 
@@ -19,7 +19,7 @@ global window and no single-task sort.
 Integral value columns sum in LONG (exact); floating columns sum in
 DECIMAL(38,6) (exact, associative) and return as double — either way the
 result is independent of physical partitioning and bit-identical to a
-single global window (the equivalence the t13/w08 regression suite pins).
+single global window (the equivalence the w08 regression suite pins).
 ``order_cols`` must be a unique key for a well-defined order.
 """
 
@@ -39,22 +39,11 @@ def ordered_prefix_sum(
     value_col: str,
     out_col: str,
     num_partitions: int | None = None,
-    bucket=None,
 ) -> DataFrame:
     """Add ``out_col`` = inclusive prefix sum of ``value_col`` over the
-    global ``order_cols`` order. Schema: input columns + ``out_col``.
-
-    ``bucket`` (optional): a precomputed ``(bucket_expr, n_buckets)``
-    pair from :func:`~pm25ml_spark.operators.bucketize.
-    range_bucket_column` over the SAME ``order_cols``. Composed plans
-    that take several prefix sums in one ordering (e.g. packing followed
-    by a rank over the packed order) pass the pair once so the split
-    keys are sampled a single time instead of once per call — the
-    sampling job is the only per-call overhead of the deterministic
-    two-pass shape.
-    """
+    global ``order_cols`` order. Schema: input columns + ``out_col``."""
     return ordered_prefix_sums(
-        df, order_cols, [(value_col, out_col)], num_partitions, bucket
+        df, order_cols, [(value_col, out_col)], num_partitions
     )
 
 
@@ -63,7 +52,6 @@ def ordered_prefix_sums(
     order_cols: list[str],
     cols: list[tuple[str, str]],
     num_partitions: int | None = None,
-    bucket=None,
 ) -> DataFrame:
     """Several inclusive prefix sums over ONE shared ``order_cols``
     ordering, in one pass: ``cols`` is ``[(value_col, out_col), ...]``.
@@ -91,7 +79,7 @@ def ordered_prefix_sums(
 
     # The operator scans its input in two jobs (split sampling; the
     # final job reads it twice — bucket totals + the window-join side);
-    # persist it so upstream work (e.g. tokenization feeding a packing
+    # persist it so upstream work (e.g. the aggregate feeding a rank
     # plan) runs once. Callers pass the projection they want ranked —
     # typically keys + one value column, tens of bytes per row — and
     # MEMORY_AND_DISK spills rather than evicts at corpus scale, where
@@ -100,7 +88,7 @@ def ordered_prefix_sums(
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
 
-    bucket_expr, _ = bucket or range_bucket_column(df, order_cols, nparts)
+    bucket_expr, _ = range_bucket_column(df, order_cols, nparts)
     part = df.withColumn("__bucket", bucket_expr)
     # Per-bucket totals and their exclusive running sum stay IN THE PLAN
     # (no driver collect): the offsets frame is ≤ num_buckets rows, so

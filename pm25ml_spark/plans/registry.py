@@ -1,7 +1,6 @@
 """Query catalog registry.
 
-Every operator claimed in SURVEY §2 (plus the beyond-reference LLM-pipeline
-operators) registers here as a named query:
+Every operator claimed in SURVEY §2 registers here as a named query:
 
 - a Spark builder  ``fn(spark, sf_dir) -> DataFrame``
 - optionally a DuckDB oracle SQL string computing the same result over the
@@ -20,10 +19,11 @@ Determinism contract for every registered query:
 - NEVER ``ROUND(grid_value / small_int, 6)`` on doubles: a 1e-6-grid
   numerator over a small integer denominator lands ON 6-dp half-way points
   with probability ~1/(2n), where Spark's exact-decimal HALF_UP and
-  DuckDB's float-scaled round disagree (the t12 sf0.1 finding). Round such
-  means in integer micro-units instead: ``(2a + n) div (2n)`` with
-  ``a = sum of round(x*1e6) longs``. Ratios of two LARGE grid sums (rates,
-  shares) are fine — their quotients are not structurally grid-aligned.
+  DuckDB's float-scaled round disagree (an sf0.1 parity-sweep finding).
+  Round such means in integer micro-units instead: ``(2a + n) div (2n)``
+  with ``a = sum of round(x*1e6) longs``. Ratios of two LARGE grid sums
+  (rates, shares) are fine — their quotients are not structurally
+  grid-aligned.
 """
 
 from __future__ import annotations
@@ -65,5 +65,4 @@ def load_all_plans() -> None:
     import pm25ml_spark.plans.relational  # noqa: F401
     import pm25ml_spark.plans.windows  # noqa: F401
     import pm25ml_spark.plans.domain  # noqa: F401
-    import pm25ml_spark.plans.text  # noqa: F401
     import pm25ml_spark.plans.raster  # noqa: F401

@@ -1,5 +1,5 @@
 """Multi-partition, multi-action determinism for every two-pass (multi-job)
-operator — the regression class behind the round-6 w08/t13 reds.
+operator — the regression class behind the round-6 w08 red.
 
 Why these tests are shaped this way: the r6 bug was `repartitionByRange`
 re-sampling its split boundaries PER JOB, so an operator that evaluates the
@@ -59,59 +59,6 @@ def test_decimate_partitioned_fresh_plans_agree(spark):
     assert len(runs) == 1
 
 
-def test_pack_sequences_at_scale_matches_global(spark):
-    from pm25ml_spark.operators.packing import (
-        pack_sequences,
-        pack_sequences_global,
-    )
-
-    docs = (
-        spark.range(0, 12_000)
-        .select(
-            F.concat(
-                F.lit("doc_"), F.lpad(F.col("id").cast("string"), 6, "0")
-            ).alias("doc_id"),
-            ((F.col("id") * 31 % 97) + 1).cast("long").alias("n_tokens"),
-        )
-        .repartition(17)
-    )
-    a = pack_sequences(docs, "n_tokens", ["doc_id"], 128, num_partitions=BUCKETS)
-    b = pack_sequences_global(docs, "n_tokens", ["doc_id"], 128)
-    got1 = sorted(map(tuple, a.collect()))
-    got2 = sorted(map(tuple, a.collect()))
-    want = sorted(map(tuple, b.collect()))
-    assert got1 == want
-    assert got2 == want
-
-
-def test_pack_sequences_composite_order_key(spark):
-    """t14's shape: a two-column (string, string) order key."""
-    from pm25ml_spark.operators.packing import (
-        pack_sequences,
-        pack_sequences_global,
-    )
-
-    docs = (
-        spark.range(0, 10_500)
-        .select(
-            F.concat(
-                F.lit("d"), F.lpad(F.col("id").cast("string"), 6, "0")
-            ).alias("doc_id"),
-            F.element_at(
-                F.array(F.lit("de"), F.lit("en"), F.lit("fr"), F.lit("hi")),
-                (F.col("id") % 4 + 1).cast("int"),
-            ).alias("lang"),
-            ((F.col("id") * 13 % 61) + 1).cast("long").alias("n_tokens"),
-        )
-        .repartition(19)
-    )
-    a = pack_sequences(
-        docs, "n_tokens", ["lang", "doc_id"], 200, num_partitions=BUCKETS
-    )
-    b = pack_sequences_global(docs, "n_tokens", ["lang", "doc_id"], 200)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_range_bucket_column_is_row_pure_and_monotone(spark):
     from pm25ml_spark.operators.bucketize import range_bucket_column
 
@@ -155,8 +102,9 @@ def test_range_bucket_column_degenerate_single_key(spark):
 
 def test_exact_quantiles_matches_sort_and_repeats(spark):
     """exact_quantiles is a two-pass (counts job + pick job) operator on
-    range buckets — same regression class as decimate/pack: multi-bucket,
-    shuffled layout, independent actions, duplicate values included."""
+    range buckets — same regression class as decimation and the prefix
+    sum: multi-bucket, shuffled layout, independent actions, duplicate
+    values included."""
     import math
 
     from pm25ml_spark.operators.quantiles import exact_quantiles
@@ -254,6 +202,69 @@ def test_ordered_prefix_sum_all_null_bucket(spark):
         for r in df.withColumn("c", F.sum("v").over(w)).collect()
     }
     assert got == want
+
+
+def test_ordered_prefix_sum_composite_order_key(spark):
+    """A two-column (string, string) order key: composite keys are what
+    m06 ranks over (neg_score, vec_id)."""
+    from pyspark.sql import Window
+
+    from pm25ml_spark.operators.prefix import ordered_prefix_sum
+
+    docs = (
+        spark.range(0, 10_500)
+        .select(
+            F.concat(
+                F.lit("d"), F.lpad(F.col("id").cast("string"), 6, "0")
+            ).alias("doc_id"),
+            F.element_at(
+                F.array(F.lit("de"), F.lit("en"), F.lit("fr"), F.lit("hi")),
+                (F.col("id") % 4 + 1).cast("int"),
+            ).alias("lang"),
+            ((F.col("id") * 13 % 61) + 1).cast("long").alias("n_tokens"),
+        )
+        .repartition(19)
+    )
+    w = Window.orderBy("lang", "doc_id").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    want = sorted(
+        map(tuple, docs.withColumn("c", F.sum("n_tokens").over(w)).collect())
+    )
+    out = ordered_prefix_sum(
+        docs, ["lang", "doc_id"], "n_tokens", "c", num_partitions=BUCKETS
+    )
+    assert sorted(map(tuple, out.collect())) == want
+    assert sorted(map(tuple, out.collect())) == want  # second action
+
+
+def test_cache_registry_is_true_lru():
+    """Re-registering an existing frame must move it to the MRU end —
+    eviction order is LRU, not first-insert FIFO."""
+    from pm25ml_spark.operators import cache as C
+
+    class Fake:
+        def __init__(self):
+            self._jdf = object()
+            self.unpersisted = False
+
+        def unpersist(self, blocking=False):
+            self.unpersisted = True
+
+    C.release_all()
+    old_max = C.MAX_CACHED
+    C.MAX_CACHED = 2
+    try:
+        a, b, c = Fake(), Fake(), Fake()
+        C.release_with(None, a)
+        C.release_with(None, b)
+        C.release_with(None, a)  # re-use: a becomes most-recent
+        C.release_with(None, c)  # must evict b (the true LRU), not a
+        assert b.unpersisted
+        assert not a.unpersisted and not c.unpersisted
+    finally:
+        C.MAX_CACHED = old_max
+        C.release_all()
 
 
 def test_grouped_exact_quantiles_matches_window(spark):

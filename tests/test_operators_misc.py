@@ -1,6 +1,5 @@
-"""As-of join, NN join, sampling, storage layer, ML fold assignment, and
-the text n-gram/span operators (word n-grams, novelty, winnowing,
-blocklist hits)."""
+"""As-of join, NN join, sampling, storage layer, ML fold assignment,
+salted joins, interval joins, weighted sampling and grouped quantiles."""
 
 from __future__ import annotations
 
@@ -364,49 +363,6 @@ def test_missing_months_incremental_skip(spark, tmp_path):
     assert store.missing_months("upstream", "downstream") == []
 
 
-def _docs_parquet(tmp_path, texts):
-    """Write a single-file ``documents.parquet`` (doc ids 1..n) for the
-    text queries that read their corpus from an sf dir."""
-    import pandas as pd
-
-    n = len(texts)
-    pd.DataFrame(
-        {
-            "doc_id": list(range(1, n + 1)),
-            "text": texts,
-            "lang": ["en"] * n,
-            "source": ["web"] * n,
-            "n_chars": [len(t) for t in texts],
-        }
-    ).to_parquet(tmp_path / "documents.parquet", index=False)
-    return str(tmp_path)
-
-
-def test_shingle_operators_survive_short_docs(spark):
-    # regression: docs with < n tokens previously generated a DESCENDING
-    # sequence whose slice(toks, 0, n) crashed the whole job
-    from pm25ml_spark.plans.text import word_ngrams
-
-    docs = spark.createDataFrame(
-        [
-            (1, "aa bb cc dd ee ff"),
-            (2, "aa bb cc dd ee ff"),
-            (3, "aa bb"),          # 2 tokens < n=3
-            (4, ""),               # empty text
-        ],
-        "doc_id long, text string",
-    )
-    grams = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams(3).alias("g")).collect()}
-    assert grams[1] == ["aa bb cc", "bb cc dd", "cc dd ee", "dd ee ff"]
-    assert grams[2] == grams[1]
-    assert grams[3] == [] and grams[4] == []
-    # n = 1 keeps every token; n = 2 emits the one bigram of doc 3
-    uni = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams(1).alias("g")).collect()}
-    assert uni[3] == ["aa", "bb"]
-    bi = {r.doc_id: r.g for r in docs.select("doc_id", word_ngrams(2).alias("g")).collect()}
-    assert bi[3] == ["aa bb"]
-
-
 def test_asof_payload_row_integrity(spark):
     # regression: a genuine NULL in the latest right row must surface as
     # NULL, not be replaced by an older row's value; multi-payload
@@ -424,70 +380,6 @@ def test_asof_payload_row_integrity(spark):
     ).collect()[0]
     assert out.asof_mark is None  # latest row's null, not 'A'
     assert out.asof_score == 500  # and score from the SAME (ts=5) row
-
-
-def test_repeated_spans_flags_shared_boilerplate(spark, tmp_path):
-    """t16 marks a 3-gram novel only in the first doc that holds it, so a
-    boilerplate span shared by two docs counts against the later one —
-    exactly its inner grams, none of the grams around it."""
-    from pm25ml_spark.plans.registry import QUERIES
-
-    boiler = "subscribe to our newsletter now"  # 5 tokens -> 3 grams
-    sf = _docs_parquet(
-        tmp_path,
-        [
-            boiler + " unique alpha beta gamma delta",
-            boiler + " other words entirely here now",
-            "no shared content in this document at all yes",
-        ],
-    )
-    out = {r.doc_id: r for r in QUERIES["t16_ngram_novelty"](spark, sf).collect()}
-    assert {d: r.n_grams - r.n_novel for d, r in out.items()} == {1: 0, 2: 3, 3: 0}
-    assert out[2].n_grams == 8
-
-
-def test_repeated_spans_short_doc_safe(spark):
-    """Winnowing on docs too short for a full window: fewer than w
-    k-grams still select exactly one span fingerprint, and docs with
-    no k-gram select none instead of failing the job."""
-    import pandas as pd
-
-    from pm25ml_spark.plans.text import winnow_selection
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [1, 2, 3, 4],
-                "text": ["too short", "", "three tokens here", "a b c d e"],
-            }
-        )
-    )
-    out = winnow_selection(docs).toPandas()
-    assert set(out.doc_id) == {3, 4}
-    assert (out.groupby("doc_id").size() == 1).all()
-    assert out.set_index("doc_id").n_kg.to_dict() == {3: 1, 4: 3}
-
-
-def test_contamination_hits_counts_instances(spark, tmp_path):
-    """t19's blocklist hits count every occurrence of a listed term, not
-    distinct terms or documents; whole-word matching ignores 'keys'."""
-    from pm25ml_spark.plans.registry import QUERIES
-
-    sf = _docs_parquet(
-        tmp_path,
-        [
-            # 'key' twice + 'error' once -> 3 hits; 'keys' is no word match
-            "a key b key c error d keys",
-            "totally clean document here",
-        ],
-    )
-    (r,) = QUERIES["t19_blocklist_redaction"](spark, sf).collect()
-    assert r.n_docs == 2
-    assert r.docs_with_hits == 1
-    assert r.total_hits == 3
-    # each hit becomes the 3-char '[X]': 'key' keeps its length, 'error'
-    # loses 2 chars
-    assert r.total_chars - r.redacted_chars == 2
 
 
 def test_interval_join_matches_bruteforce(spark):

@@ -31,8 +31,6 @@ def main() -> None:
         "a10_weighted_median_price",
         "a06_exact_quantiles",
         "m10_ks_drift",
-        "t12_bigram_perplexity",
-        "t11_repetition_signals",
     ]
 
     # Warm up the session (JIT, worker pool) once.

@@ -39,7 +39,7 @@ _MARK_A = "<!-- scaling-exponent:start (generated by tools/scaling_exponent.py) 
 _MARK_B = "<!-- scaling-exponent:end -->"
 
 # the r9 verdict's named heavy hitters — always measured
-_MANDATORY = ["a09", "a10", "t12"]
+_MANDATORY = ["a09", "a10"]
 
 
 def _sf_of(path: str) -> float:
