@@ -1030,7 +1030,7 @@ def d10_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # latest STATE (the event_type of the most recent event) as of T1 vs
 # as of T2, full-outer joined and classified added / removed /
 # changed / same — the audit a pipeline runs after a backfill ("what
-# did the new data actually change?") and the batch dual of txlog time
+# did the new data actually change?") and the batch dual of time
 # travel. Scale shape: each snapshot is one user-keyed partitioned
 # window (rn = 1 pick, no global frame), the diff is one user-keyed
 # full-outer equi-join, and the result collapses to ≤ 4 classification

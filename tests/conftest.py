@@ -6,8 +6,9 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Multi-minute integration tests (threaded stress fuzzes, randomized
-# interleavings) carry @pytest.mark.slow and are SKIPPED by default so
+# Multi-minute tests (the weighted-sample 50-seed sweep, the interval
+# join's negative-endpoint floor test, and the asof / decimate
+# Hypothesis property tests) carry @pytest.mark.slow and are SKIPPED so
 # the whole suite fits the external verify driver's time budget (r13:
 # the 2848 s run was cut at ~46 % and tests_ok went false with zero
 # failures). They are not

@@ -8,9 +8,8 @@ small point). With data growing ``G`` times, a scale-linear plan grows
 ≤ ~G in wall time (usually much less locally, where fixed per-query
 overhead — job scheduling, Python worker reuse, parquet footers —
 dominates small-sf runs); anything growing ≫ G is superlinear and gets
-flagged for a plan read. Fixed-cost families (txlog commit
-choreography, generated-input codec queries) are expected to sit near
-ratio 1.
+flagged for a plan read. Fixed-cost queries (generated-input codec
+queries) are expected to sit near ratio 1.
 
 Writes a markdown table + flag list between the ``<!-- scaling-trend``
 markers in SCALING.md and a machine copy to SCALING_TREND.json.
@@ -101,10 +100,9 @@ def main() -> int:
         "",
         f"Bench-style noop-sink timings; ratio > {args.flag_factor:g}×"
         f"{growth:g} = {args.flag_factor * growth:g} with t(sf{sf_big:g}) "
-        "> 1 s is flagged as superlinear-suspect. Fixed-cost families "
-        "(txlog commit choreography, generated-input codec queries like "
-        "k05/k06) are expected near ratio 1; tiny-time ratios are "
-        "noise-dominated.",
+        "> 1 s is flagged as superlinear-suspect. Fixed-cost queries "
+        "(generated-input codec queries like k05/k06) are expected near "
+        "ratio 1; tiny-time ratios are noise-dominated.",
         "",
     ]
     if flagged:
