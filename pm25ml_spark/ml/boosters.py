@@ -5,9 +5,10 @@ stratified sample (`imputation_model_pipeline.py:90-112`) with the paper's
 hyperparameters (`setup/training.py:68-139`). This module is that path:
 
 * fit: collect the SAMPLE (small by contract — the reference itself fits
-  it in one process) to the driver in one Spark job and fit the booster
-  there; group-aware CV folds are fitted and scored on the same
-  collected rows (``cross_validate_booster``, the one CV loop);
+  it in one process) with its group key to the driver in one Spark job
+  and fit the booster there; the GroupKFold folds are assigned to the
+  collected rows on the driver (``group_folds``), then fitted and scored
+  on them (``cross_validate_booster``, the one CV loop);
 * predict: pickle-broadcast the fitted booster and score Arrow batches of
   the feature columns in a pandas UDF — M4 stays fully distributed, and
   a null/NaN predictor fails the scoring task (P11).
@@ -173,16 +174,42 @@ class BoosterImputer:
 
 
 def _collect_sample(
-    df: DataFrame, features: list[str], target: str, *extra: str
+    df: DataFrame, features: list[str], target: str, group_col: str
 ) -> pd.DataFrame:
-    """One Spark job: the non-null-target rows, sorted on their own
-    columns so that a fit never depends on row order or partition count
-    (the learners' float sums follow row order)."""
-    cols = [*extra, *features, target]
-    sample = df.filter(F.col(target).isNotNull()).select(*cols).toPandas()
-    if sample.empty:
+    """One Spark job: every row's group key (as ``__group``), whether
+    its target is non-null (``__labelled``; a NaN target is not null),
+    and the features and target of the labelled rows. An unlabelled
+    row carries only its key (it still counts in the fold ranking), so
+    the collect grows by keys, not by feature rows, with the unlabelled
+    share of ``df``."""
+    labelled = F.col(target).isNotNull()
+    sample = df.select(
+        F.col(group_col).alias("__group"),
+        *(F.when(labelled, F.col(f)).alias(f) for f in features),
+        target,
+        labelled.alias("__labelled"),
+    ).toPandas()
+    if not sample["__labelled"].any():
         raise ValueError("no non-null training rows to fit the booster on")
-    return sample.sort_values(cols, kind="mergesort", ignore_index=True)
+    return sample
+
+
+def group_folds(keys: pd.Series, k: int) -> np.ndarray:
+    """GroupKFold (M1) on driver-side long or string keys: the fold
+    ``assign_group_folds`` gives each key, as floats with NaN for a null
+    key. The fold is the 0-based dense rank of the key among the sorted
+    distinct keys, mod ``k``; as in that Spark window (nulls first), a
+    null key present takes rank 0 and shifts the others' ranks by one.
+    That shift is a known defect shared with ``assign_group_folds``
+    (fold balance depends on whether any key is null), kept here only so
+    the two agree; the parity test in ``tests/test_ml_pipeline.py``
+    holds them together until both rank the non-null keys alone."""
+    null = keys.isna().to_numpy()
+    present = keys.to_numpy()[~null]
+    rank = np.searchsorted(np.unique(present), present) + int(null.any())
+    fold = np.full(len(keys), np.nan)
+    fold[~null] = rank % k
+    return fold
 
 
 def _fit(model_factory: Callable[[], object], X, y):
@@ -202,16 +229,24 @@ def cross_validate_booster(
 ) -> BoosterImputer:
     """Group-aware CV (M1) + final fit: the one CV loop.
 
-    Spark assigns the folds (``assign_group_folds``) and the fold-assigned
-    sample is collected once; the ``n_folds`` fold models and the final
-    model are then fitted on the driver, and each fold's held-out R² is
-    scored in numpy with ``regression_metrics``' formula. Predictors must
-    be non-null (P11, `imputation_model_pipeline.py:232-241`): the check
+    One Spark job collects the rows with their group key; the GroupKFold
+    folds are assigned on the driver (``group_folds``, over the group
+    keys of every row, labelled or not, as ``assign_group_folds`` ranks
+    them) and the unlabelled rows dropped. The labelled rows are sorted
+    on ``fold``, the features and the target, so that a fit never
+    depends on row order or partition count (the learners' float sums
+    follow row order). The ``n_folds`` fold models and the final model
+    are fitted on the driver, and each fold's held-out R² is scored in
+    numpy with ``regression_metrics``' formula. Predictors must be
+    non-null (P11, `imputation_model_pipeline.py:232-241`): the check
     runs on the collected rows, so it costs no Spark job."""
-    from pm25ml_spark.ml.pipeline import assign_group_folds, r2_score
+    from pm25ml_spark.ml.pipeline import r2_score
 
-    sample = _collect_sample(
-        assign_group_folds(df, group_col, n_folds), features, target, "fold"
+    rows = _collect_sample(df, features, target, group_col)
+    rows["fold"] = group_folds(rows["__group"], n_folds)
+    cols = ["fold", *features, target]
+    sample = rows.loc[rows["__labelled"], cols].sort_values(
+        cols, kind="mergesort", ignore_index=True
     )
     null_cols = [f for f in features if sample[f].isna().any()]
     if null_cols:

@@ -82,7 +82,9 @@ def assign_group_folds(
 
     The rank runs over the DISTINCT group keys (dimension-sized) and
     broadcast-joins back — a dense_rank over the full frame would funnel
-    every row through one unpartitioned-window task."""
+    every row through one unpartitioned-window task. Plan
+    ``m01_group_folds`` runs it; the imputer's CV assigns the same folds
+    to its collected sample on the driver (``boosters.group_folds``)."""
     groups = df.select(group_col).distinct()
     w = Window.orderBy(group_col)
     fold_map = groups.withColumn(fold_col, (F.dense_rank().over(w) - 1) % k)
@@ -167,10 +169,11 @@ def train_imputation_model(
 
     Training data is the stratified sample (2-3 % of the corpus), which
     the reference fits in one process (imputation_model_pipeline.py:
-    90-112); so does this: one Spark job collects the fold-assigned
-    sample, and the ``n_folds`` fold models and the final model are
-    fitted on the driver (``cross_validate_booster``, which also checks
-    the P11 non-null-predictor contract on the collected rows).
+    90-112); so does this: one Spark job collects the sample with its
+    group key, the folds are assigned on the driver, and the ``n_folds``
+    fold models and the final model are fitted there
+    (``cross_validate_booster``, which also checks the P11
+    non-null-predictor contract on the collected rows).
     """
 
     def booster() -> NumpyHistGBM:

@@ -15,12 +15,14 @@ Scan/sink operators covered: S1-S7 of SURVEY §2.1.
 from __future__ import annotations
 
 import glob
+import json
 import os
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from pm25ml_spark.sources.hive_path import HivePath
 
@@ -197,21 +199,59 @@ class ArchiveStorage:
             return True
 
 
+# the footer key under which Spark's parquet writer stores the row
+# schema as StructType JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(stage_dir: str) -> StructType | None:
+    """The data schema Spark wrote into the footer of the stage's first
+    part file (sorted path order), read with pyarrow; None when the
+    stage has no part file or the file was not written by Spark."""
+    files = sorted(glob.glob(f"{stage_dir}/month=*/*.parquet"))
+    if not files:
+        return None
+    meta = pq.read_metadata(files[0]).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return None
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
 class StageStorage:
     """Stage-partitioned store: ``stage=<s>/month=YYYY-MM/...`` with the
     month as a REAL partition column (S4/S5). Spark prunes month
-    directories from any filter on ``month`` automatically."""
+    directories from any filter on ``month`` automatically.
+
+    ``digests`` maps each stage this store wrote to the digest of its
+    last write (see :meth:`sink_stage`)."""
 
     def __init__(self, spark: SparkSession, bucket: str):
         self.spark = spark
         self.bucket = bucket.rstrip("/")
+        self.digests: dict[str, int] = {}
 
     def stage_path(self, stage: str) -> str:
         return f"{self.bucket}/stage={stage}"
 
     # -- S4: hive-partitioned scan ----------------------------------------
     def scan_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self.stage_path(stage))
+        """The stage's months as one frame: the data columns, then the
+        ``month`` partition column (string).
+
+        On a local bucket the schema comes from the Spark row schema in
+        a part file's footer (one pyarrow metadata read), and is passed
+        to the reader, so the scan starts no schema-inference job. Like
+        Spark's own inference without ``mergeSchema`` it trusts one part
+        file to speak for all. It is read on every call, never kept, so
+        a stage another writer has rewritten scans with the new columns.
+        A remote bucket, an empty stage or a footer without a Spark
+        schema leaves the schema to Spark's inference."""
+        path = self.stage_path(stage)
+        data = _footer_schema(path) if _is_local(self.bucket) else None
+        if data is None:
+            return self.spark.read.parquet(path)
+        schema = StructType(data.fields + [StructField("month", StringType())])
+        return self.spark.read.schema(schema).parquet(path)
 
     # -- S5: partitioned sink ---------------------------------------------
     def sink_stage(
@@ -225,11 +265,24 @@ class StageStorage:
         ``Observation`` attached to the write job itself — the
         reference's post-write row validation (§4.3) without the second
         scan a ``count()`` would cost (at 100 TB the re-scan is a whole
-        extra job)."""
+        extra job).
+
+        The same ``Observation`` sums ``xxhash64`` over all of ``df``'s
+        columns as ``decimal(38,0)`` (a bigint sum overflows under ANSI
+        mode) and records it in ``digests[stage]``: a digest of the
+        written rows that no row order or partitioning can change, so
+        two runs can be compared stage by stage without a re-scan."""
         from pyspark.sql import Observation
 
         obs = Observation(f"sink_{stage}")
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        # one parsed expression, not a Column per field: each Column is
+        # a JVM round trip, ~0.5 ms a field on the driver
+        cols = ", ".join("`" + c.replace("`", "``") + "`" for c in df.columns)
+        observed = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.expr(f"sum(cast(xxhash64({cols}) as decimal(38,0)))").alias("digest"),
+        )
         # dynamic partition overwrite: replace ONLY the month partitions
         # present in df. Static overwrite would clear the whole stage —
         # with the missing_months incremental workflow that silently
@@ -237,7 +290,9 @@ class StageStorage:
         observed.write.partitionBy("month").mode(mode).option(
             "partitionOverwriteMode", "dynamic"
         ).parquet(self.stage_path(stage))
-        return int(obs.get["rows"])
+        got = obs.get
+        self.digests[stage] = int(got["digest"] or 0)
+        return int(got["rows"])
 
     def months_present(self, stage: str) -> list[str]:
         pattern = f"{self.stage_path(stage)}/month=*"

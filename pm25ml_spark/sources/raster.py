@@ -5,8 +5,9 @@ xarray/h5netcdf, bbox-subset, time-averaged to a day grid, then regridded
 to the 33k grid centroids (`collectors/ned/*`). The Spark shape is one
 reader over a per-granule decode + regrid helper:
 
-    read_granules_wide: one manifest row per date (its granules)
-      → mapInPandas                       # a task decodes whole dates
+    read_granules_wide: the manifest, grouped by date on the driver,
+      rides in the task closure as plain tuples;
+      spark.range(dates) → mapInPandas    # a task decodes whole dates
       → wide rows (grid_id, date, <variable>…) over every grid cell
 
 A long (grid_id, date, variable, value) view is a projection of the
@@ -213,27 +214,14 @@ def bilinear_regrid(
 def _regrid_granule(
     path: str,
     variable: str,
-    bbox,
-    level,
+    bbox: tuple[float, float, float, float] | None,
+    level: int | None,
     g_lon: np.ndarray,
     g_lat: np.ndarray,
 ) -> np.ndarray:
-    """Decode one manifest granule and sample it at the grid centroids.
-    ``bbox`` and ``level`` arrive as the manifest columns surface them in
-    pandas: an array (or None) and a nullable int (null as NaN/None)."""
-    bbox = tuple(bbox) if bbox is not None else None
-    level = None if pd.isna(level) else int(level)
+    """Decode one manifest granule and sample it at the grid centroids."""
     lons, lats, grid2d = decode_granule(path, variable, bbox=bbox, level=level)
     return bilinear_regrid(lons, lats, grid2d, g_lon, g_lat)
-
-
-def _manifest_entry(g: RasterGranule) -> tuple:
-    return (
-        g.path,
-        g.variable,
-        list(g.bbox) if g.bbox is not None else None,
-        g.level,
-    )
 
 
 def read_granules_wide(
@@ -247,8 +235,12 @@ def read_granules_wide(
     The manifest is grouped by date on the driver, so a task decodes and
     regrids every granule of its dates and emits each date's complete
     grid; a variable the date has no granule for is null. The output is
-    complete by construction, with no shuffle: the manifest rows spread
-    over ``min(dates, defaultParallelism)`` partitions.
+    complete by construction, with no shuffle: ``spark.range`` numbers
+    the dates over ``min(dates, defaultParallelism)`` partitions, and
+    each task looks its dates up in the manifest its closure carries.
+    The source is a JVM range, so a task runs one Python runner, the
+    ``mapInPandas`` one; a Python-side source (``parallelize``) would
+    start a second runner per task.
 
     Two granules for the same (date, variable) raise ``ValueError``
     before any Spark job: which one would win is not a function of the
@@ -263,16 +255,11 @@ def read_granules_wide(
                 f"{day[g.variable].path!r} and {g.path!r}"
             )
         day[g.variable] = g
-    rows = [
-        (date, [_manifest_entry(day[v]) for v in sorted(day)])
+    manifest = [
+        (date, [(g.path, v, g.bbox, g.level) for v, g in sorted(day.items())])
         for date, day in sorted(by_date.items())
     ]
-    n_slices = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
-    manifest = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n_slices),
-        "date string, granules array<struct<path: string, variable: string, "
-        "bbox: array<double>, level: int>>",
-    )
+    n_slices = max(1, min(len(manifest), spark.sparkContext.defaultParallelism))
 
     g_ids = grid_pdf["grid_id"].to_numpy(dtype=np.int64)
     g_lon = grid_pdf["lon"].to_numpy(dtype=np.float64)
@@ -284,13 +271,13 @@ def read_granules_wide(
 
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for date, entries in zip(pdf["date"], pdf["granules"]):
+            for i in pdf["id"]:
+                date, entries = manifest[i]
                 cols = {v: np.full(len(g_ids), np.nan) for v in variables}
-                for e in entries:
-                    cols[e["variable"]] = _regrid_granule(
-                        e["path"], e["variable"], e["bbox"], e["level"],
-                        g_lon, g_lat,
+                for path, variable, bbox, level in entries:
+                    cols[variable] = _regrid_granule(
+                        path, variable, bbox, level, g_lon, g_lat
                     )
                 yield pd.DataFrame({"grid_id": g_ids, "date": date, **cols})
 
-    return manifest.mapInPandas(fn, schema=schema)
+    return spark.range(0, len(manifest), 1, n_slices).mapInPandas(fn, schema=schema)

@@ -171,3 +171,44 @@ def test_null_predictor_fails_scoring(training_frame, missing):
     with pytest.raises(Exception, match="P11"):
         predict_with_stats(holed, imputer).collect()
     imputer.release()
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_driver_group_folds_equal_assign_group_folds(spark, key_type):
+    """The imputer's CV assigns folds on the driver (``group_folds``);
+    ``assign_group_folds`` (plan m01) assigns them in Spark. Both give
+    every row the same fold, null keys included (no fold, and a present
+    null shifts the others' ranks)."""
+    from pm25ml_spark.ml.boosters import group_folds
+
+    rng = np.random.RandomState(5)
+    raw = rng.randint(0, 23, 300).tolist()
+    keys = [
+        None if i % 17 == 0 else (k if key_type == "long" else f"g{k * 37 % 101}")
+        for i, k in enumerate(raw)
+    ]
+    for with_null in (True, False):
+        rows = [(i, k) for i, k in enumerate(keys) if with_null or k is not None]
+        df = spark.createDataFrame(rows, f"row long, grp {key_type}")
+        for k in (2, 3):
+            spark_folds = (
+                assign_group_folds(df, "grp", k)
+                .toPandas()
+                .sort_values("row", ignore_index=True)
+            )
+            got = group_folds(spark_folds["grp"], k)
+            want = spark_folds["fold"].to_numpy(dtype=float)
+            np.testing.assert_array_equal(got, want)
+
+
+def test_cv_collect_carries_only_the_keys_of_unlabelled_rows(training_frame):
+    """Unlabelled rows count in the fold ranking, so the CV collect keeps
+    their group key, and only that: no feature or target values."""
+    from pm25ml_spark.ml.boosters import _collect_sample
+
+    rows = _collect_sample(training_frame, ["f1", "f2"], "aot", "id_50km")
+    unlabelled = rows[~rows["__labelled"]]
+    assert len(rows) == 400 and len(unlabelled) == 80
+    assert unlabelled[["f1", "f2", "aot"]].isna().all().all()
+    assert unlabelled["__group"].notna().all()
+    assert rows.loc[rows["__labelled"], ["f1", "f2", "aot"]].notna().all().all()

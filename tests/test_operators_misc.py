@@ -277,6 +277,48 @@ def test_grid_dimension_export_roundtrip(spark, tmp_path):
     assert set(back.columns) == set(grid.columns)
 
 
+def test_scan_stage_sees_a_rewrite_by_another_store(spark, tmp_path):
+    """The scan schema is read from the files on every call: a stage
+    that a second ``StageStorage`` rewrites with an extra column scans
+    with that column through the first store."""
+    from pyspark.sql import functions as F2
+
+    from pm25ml_spark.sources.archive import StageStorage
+
+    first = StageStorage(spark, str(tmp_path))
+    base = spark.range(6).withColumn("month", F2.lit("2024-01"))
+    first.sink_stage(base, "demo")
+    assert first.scan_stage("demo").columns == ["id", "month"]
+
+    second = StageStorage(spark, str(tmp_path))
+    second.sink_stage(base.withColumn("extra", F2.col("id") * 3), "demo")
+    back = first.scan_stage("demo")
+    assert back.columns == ["id", "extra", "month"]
+    assert sorted(r.extra for r in back.collect()) == [0, 3, 6, 9, 12, 15]
+
+
+def test_sink_stage_digest_ignores_row_order_and_partitioning(spark, tmp_path):
+    """The digest the write job observes is a function of the rows
+    alone: the same rows in another order and partitioning give the same
+    digest, and a changed value changes it."""
+    from pyspark.sql import functions as F2
+
+    from pm25ml_spark.sources.archive import StageStorage
+
+    store = StageStorage(spark, str(tmp_path))
+    df = spark.range(200).withColumn(
+        "month", F2.when(F2.col("id") < 90, "2024-01").otherwise("2024-02")
+    ).withColumn("v", F2.col("id") / 7.0)
+    store.sink_stage(df.coalesce(1), "a")
+    store.sink_stage(df.orderBy(F2.desc("id")).repartition(9), "b")
+    changed = df.withColumn(
+        "v", F2.when(F2.col("id") == 5, 0.5).otherwise(F2.col("v"))
+    )
+    store.sink_stage(changed, "c")
+    assert store.digests["a"] == store.digests["b"]
+    assert store.digests["a"] != store.digests["c"]
+
+
 def test_sink_stage_returns_observed_count(spark, tmp_path):
     from pyspark.sql import functions as F2
 

@@ -255,6 +255,112 @@ def test_ingest_via_read_granules_wide_equals_per_granule_pivot(spark, tmp_path)
     pd.testing.assert_frame_equal(again, got, check_exact=True)
 
 
+_STAGES = (
+    "ingested",
+    "combined_monthly",
+    "combined_with_spatial_interpolation",
+    "generated_features",
+    "sampled",
+    "imputed",
+)
+
+
+def _run_month(spark, bucket: str, granules) -> tuple[Pm25Pipeline, str]:
+    """The seven stages on an 8×8 grid with the benchmark's hole
+    pattern; returns the pipeline and its export raster path."""
+    pipe = Pm25Pipeline(
+        spark,
+        synthetic_grid(spark, nx=8, ny=8),
+        PipelineSettings(
+            bucket=bucket,
+            target="m2__aot",
+            feature_cols=_FEATURES,
+            sample_fraction=0.5,
+            n_folds=2,
+            max_iter=3,
+            interpolate_cols=("m2__t2m",),
+        ),
+    )
+    pipe.ingest(granules)
+    ds = (
+        pipe.store.scan_stage("ingested")
+        .drop("month")
+        .withColumn(
+            "aot", F.when(F.col("grid_id") % 7 == 0, None).otherwise(F.col("aot"))
+        )
+        .withColumn(
+            "t2m", F.when(F.col("grid_id") % 11 == 3, None).otherwise(F.col("t2m"))
+        )
+    )
+    pipe.combine({"m2": ds})
+    pipe.interpolate()
+    pipe.features(["m2__aot", "m2__t2m"])
+    pipe.sample()
+    pipe.train_and_impute()
+    return pipe, pipe.export(f"{bucket}/final")
+
+
+@pytest.fixture(scope="module")
+def invariance_runs(spark, tmp_path_factory):
+    """One month (8×8 grid × 5 days) run twice: with one shuffle
+    partition, then with 32 and the granule manifest reversed. Adaptive
+    execution would coalesce this month's 32 small shuffle partitions
+    back into one, so the second run turns coalescing off: its stages
+    really run, write and re-read 32 partitions."""
+    granules = [
+        RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
+        for d in range(1, 6)
+        for v in ("aot", "t2m")
+    ]
+    parts = "spark.sql.shuffle.partitions"
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = {k: spark.conf.get(k) for k in (parts, coalesce)}
+    runs = []
+    try:
+        for n, manifest in (("1", granules), ("32", granules[::-1])):
+            spark.conf.set(parts, n)
+            spark.conf.set(coalesce, str(n == "1").lower())
+            bucket = str(tmp_path_factory.mktemp(f"invariance{n}"))
+            runs.append(_run_month(spark, bucket, manifest))
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    return runs
+
+
+def test_stage_digests_invariant_to_partitions_and_manifest_order(invariance_runs):
+    """Every stage output is a function of the inputs and the seed (aim
+    3): the write-observed digest of each of the six stages, and the
+    export raster's bytes, do not change with the shuffle partition
+    count or the granule manifest's order."""
+    (a, raster_a), (b, raster_b) = invariance_runs
+    assert set(a.store.digests) == set(_STAGES)
+    for stage in _STAGES:
+        assert a.store.digests[stage] == b.store.digests[stage], stage
+        assert a.store.digests[stage] != 0, stage
+    with open(raster_a, "rb") as fa, open(raster_b, "rb") as fb:
+        assert fa.read() == fb.read()
+
+
+def test_scan_stage_schema_equals_inference_and_runs_no_job(spark, invariance_runs):
+    """``scan_stage`` reads the schema from the stage's parquet footer:
+    for all six stages it equals what Spark infers (names, types, order,
+    nullability), and building the six scans starts no Spark job."""
+    pipe, _ = invariance_runs[0]
+    sc = spark.sparkContext
+    sc.setJobGroup("scan-stage-probe", "scan_stage schema probe")
+    try:
+        scans = {s: pipe.store.scan_stage(s) for s in _STAGES}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("scan-stage-probe")) == []
+    for stage, df in scans.items():
+        inferred = spark.read.parquet(pipe.store.stage_path(stage)).schema
+        assert df.schema == inferred, stage
+        assert df.schema.fieldNames()[-1] == "month"
+
+
 def _static_import_closure(root: str) -> set[str]:
     """Package modules reachable from ``root`` through its import
     statements, module-level and function-level alike (an AST walk;
