@@ -198,15 +198,10 @@ def group_folds(keys: pd.Series, k: int) -> np.ndarray:
     """GroupKFold (M1) on driver-side long or string keys: the fold
     ``assign_group_folds`` gives each key, as floats with NaN for a null
     key. The fold is the 0-based dense rank of the key among the sorted
-    distinct keys, mod ``k``; as in that Spark window (nulls first), a
-    null key present takes rank 0 and shifts the others' ranks by one.
-    That shift is a known defect shared with ``assign_group_folds``
-    (fold balance depends on whether any key is null), kept here only so
-    the two agree; the parity test in ``tests/test_ml_pipeline.py``
-    holds them together until both rank the non-null keys alone."""
+    distinct non-null keys, mod ``k``."""
     null = keys.isna().to_numpy()
     present = keys.to_numpy()[~null]
-    rank = np.searchsorted(np.unique(present), present) + int(null.any())
+    rank = np.searchsorted(np.unique(present), present)
     fold = np.full(len(keys), np.nan)
     fold[~null] = rank % k
     return fold

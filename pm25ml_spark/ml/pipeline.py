@@ -79,13 +79,14 @@ def assign_group_folds(
 ) -> DataFrame:
     """GroupKFold (M1): all rows of a group land in one fold;
     dense_rank(group) % k balances groups across folds deterministically.
+    Only non-null keys are ranked; rows with a null key get a null fold.
 
     The rank runs over the DISTINCT group keys (dimension-sized) and
     broadcast-joins back — a dense_rank over the full frame would funnel
     every row through one unpartitioned-window task. Plan
     ``m01_group_folds`` runs it; the imputer's CV assigns the same folds
     to its collected sample on the driver (``boosters.group_folds``)."""
-    groups = df.select(group_col).distinct()
+    groups = df.select(group_col).distinct().where(F.col(group_col).isNotNull())
     w = Window.orderBy(group_col)
     fold_map = groups.withColumn(fold_col, (F.dense_rank().over(w) - 1) % k)
     return df.join(F.broadcast(fold_map), on=group_col, how="left")
@@ -103,8 +104,13 @@ def assign_stratified_group_folds(
     even when a group spans strata: each group is first reduced to one
     representative stratum (its minimum), then ranked. Ranking per
     (stratum, group) pair instead would hand the same group different
-    folds in different strata, leaking the group across train/test."""
-    groups = df.groupBy(group_col).agg(F.min(stratum_col).alias("__stratum"))
+    folds in different strata, leaking the group across train/test.
+    Only non-null keys are ranked; rows with a null key get a null fold."""
+    groups = (
+        df.where(F.col(group_col).isNotNull())
+        .groupBy(group_col)
+        .agg(F.min(stratum_col).alias("__stratum"))
+    )
     w = Window.partitionBy("__stratum").orderBy(group_col)
     fold_map = groups.withColumn(fold_col, (F.row_number().over(w) - 1) % k).drop(
         "__stratum"

@@ -398,7 +398,9 @@ def d06_imputed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "m01_group_folds",
     """
-    WITH groups AS (SELECT DISTINCT user_id FROM events),
+    WITH groups AS (
+        SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL
+    ),
     fm AS (
         SELECT user_id,
                CAST((DENSE_RANK() OVER (ORDER BY user_id) - 1) % 5 AS BIGINT)
@@ -429,7 +431,8 @@ def m01_group_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     "m02_stratified_group_folds",
     """
     WITH groups AS (
-        SELECT user_id, MIN(event_type) AS stratum FROM events GROUP BY user_id
+        SELECT user_id, MIN(event_type) AS stratum FROM events
+        WHERE user_id IS NOT NULL GROUP BY user_id
     ),
     fm AS (
         SELECT user_id,

@@ -333,100 +333,9 @@ def k04_grid_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# k05 — Zarr store round-trip (the S17 sink family's catalog pin): a
-# deterministic closed-form cube is written with the CHUNK-PARALLEL sink
-# (sources/zarr_io.write_zarr_distributed — every task writes its own
-# chunk object, two-rename atomic go-live) and read back with the
-# chunk-parallel reader (read_zarr_cube_distributed — driver touches
-# only the consolidated metadata + coordinate axes; chunk decode runs on
-# executors), then reduced to per-time-slab stats. Missing cells
-# (v == 13) are never written, so they come back as NaN fill and must be
-# ABSENT from the read — n_cells pins fill-handling, v_sum/v_min/v_max
-# pin the codec bytes (values are small integers, exact in float32, so
-# the integer sum is engine-portable with no rounding step). The oracle
-# recomputes the generator formula relationally; nothing about the store
-# can drift without a hash mismatch. Fixed-size by design (a codec
-# entry): ~6k cells locally, while both the sink and the
-# scan parallelize per chunk at any scale.
-_K5_T, _K5_Y, _K5_X = 6, 32, 32
-
-
-@query(
-    "k05_zarr_roundtrip_stats",
-    f"""
-    WITH cells AS (
-        SELECT t.t AS t_idx,
-               (t.t * 31 + y.y * 7 + x.x * 3) % 97 AS v
-        FROM UNNEST(range({_K5_T})) AS t(t),
-             UNNEST(range({_K5_Y})) AS y(y),
-             UNNEST(range({_K5_X})) AS x(x)
-    )
-    SELECT CAST(t_idx AS INT) AS t_idx,
-           COUNT(*) AS n_cells,
-           CAST(SUM(v) AS BIGINT) AS v_sum,
-           CAST(MIN(v) AS DOUBLE) AS v_min,
-           CAST(MAX(v) AS DOUBLE) AS v_max
-    FROM cells WHERE v <> 13
-    GROUP BY t_idx
-    """,
-)
-def k05_zarr_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from pm25ml_spark.sources.zarr_io import (
-        read_zarr_cube_distributed,
-        write_zarr_distributed,
-    )
-
-    t_n, y_n, x_n = _K5_T, _K5_Y, _K5_X
-    long = (
-        spark.range(t_n * y_n * x_n)
-        .select(
-            (F.col("id") / (y_n * x_n)).cast("bigint").alias("t"),
-            ((F.col("id") / x_n) % y_n).cast("bigint").alias("yi"),
-            (F.col("id") % x_n).alias("xi"),
-        )
-        .select(
-            "t",
-            "yi",
-            "xi",
-            (
-                (F.col("t") * 31 + F.col("yi") * 7 + F.col("xi") * 3) % 97
-            ).alias("v"),
-        )
-        .filter(F.col("v") != 13)  # holes: must come back as absent fill
-        .select(
-            F.date_add(F.lit("2024-01-01").cast("date"), F.col("t").cast("int")).alias("date"),
-            (F.col("yi") * 1000.0).alias("original_y"),
-            (F.col("xi") * 1000.0).alias("original_x"),
-            F.col("v").cast("double").alias("value"),
-        )
-    )
-    dates = np.datetime64("2024-01-01", "D") + np.arange(t_n)
-    ys = np.arange(y_n, dtype=np.float64) * 1000.0
-    xs = np.arange(x_n, dtype=np.float64) * 1000.0
-    store = tempfile.mkdtemp(prefix="pm25ml_k05_zarr_")
-    atexit.register(shutil.rmtree, store, True)
-    write_zarr_distributed(
-        long, store, dates, ys, xs, "value", chunks=(2, 16, 16)
-    )
-    cube = read_zarr_cube_distributed(spark, store)
-    return cube.groupBy("t_idx").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.sum(F.col("value").cast("bigint")).alias("v_sum"),
-        F.min("value").alias("v_min"),
-        F.max("value").alias("v_max"),
-    )
-
-
-# --------------------------------------------------------------------------
 # k06 — per-day GeoTIFF export + ingest, both FILE-PARALLEL (the S17
-# GeoTIFF sink's catalog pin, closing the "no catalog-visible query"
-# gap the same way k05 did for Zarr): each executor task writes one
+# GeoTIFF sink's catalog pin, closing its "no catalog-visible query"
+# gap): each executor task writes one
 # day's GeoTIFF (sources/geotiff.write_geotiff — real TIFF 6.0 / OGC
 # GeoTIFF 1.1 bytes: zlib strips, ModelPixelScale/Tiepoint, GeoKey
 # directory, GDAL nodata) and a second task-per-file pass decodes them

@@ -15,8 +15,7 @@ GeoTransform — written as real NetCDF via the numpy-only codecs:
   level-5 DEFLATE-compressed variable data, via `sources/hdf5_min`.
 
 Both carry identical data + CF metadata and both round-trip through
-``read_raster`` (which dispatches on the file magic). Chunked Zarr cubes
-are ``sources/zarr_io``'s job, not this sink's.
+``read_raster`` (which dispatches on the file magic).
 """
 
 from __future__ import annotations

@@ -177,9 +177,16 @@ def test_null_predictor_fails_scoring(training_frame, missing):
 def test_driver_group_folds_equal_assign_group_folds(spark, key_type):
     """The imputer's CV assigns folds on the driver (``group_folds``);
     ``assign_group_folds`` (plan m01) assigns them in Spark. Both give
-    every row the same fold, null keys included (no fold, and a present
-    null shifts the others' ranks)."""
+    every row the same fold, null keys included: a null key gets no
+    fold and does not shift the ranks of the others."""
     from pm25ml_spark.ml.boosters import group_folds
+
+    pinned = [None, 1, 3, 5] if key_type == "long" else [None, "1", "3", "5"]
+    df = spark.createDataFrame(list(enumerate(pinned)), f"row long, grp {key_type}")
+    spark_folds = assign_group_folds(df, "grp", 2).toPandas().sort_values("row")
+    want = [np.nan, 0.0, 1.0, 0.0]
+    np.testing.assert_array_equal(spark_folds["fold"].to_numpy(dtype=float), want)
+    np.testing.assert_array_equal(group_folds(pd.Series(pinned), 2), want)
 
     rng = np.random.RandomState(5)
     raw = rng.randint(0, 23, 300).tolist()

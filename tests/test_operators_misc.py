@@ -213,6 +213,13 @@ def test_stratified_group_folds(spark):
     out = assign_stratified_group_folds(df, "grp", "stratum", k=5)
     per_group = out.groupBy("grp").agg(F.countDistinct("fold").alias("n")).collect()
     assert all(r.n == 1 for r in per_group)
+    # a null key gets no fold and does not shift the ranks of the others
+    df = spark.createDataFrame(
+        [(0, None, 0), (1, 1, 0), (2, 3, 0), (3, 5, 0)],
+        "id long, grp long, stratum long",
+    )
+    out = assign_stratified_group_folds(df, "grp", "stratum", k=2)
+    assert [r.fold for r in out.orderBy("id").collect()] == [None, 0, 1, 0]
 
 
 def test_metrics_and_gate(spark):

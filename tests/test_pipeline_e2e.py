@@ -300,6 +300,57 @@ def _run_month(spark, bucket: str, granules) -> tuple[Pm25Pipeline, str]:
     return pipe, pipe.export(f"{bucket}/final")
 
 
+def _invariance_granules() -> list[RasterGranule]:
+    return [
+        RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
+        for d in range(1, 6)
+        for v in ("aot", "t2m")
+    ]
+
+
+# The second invariance run again, in a fresh ``local[1]`` session:
+# ``get_spark`` reads ``SPARK_GRAFT_CPUS`` when it builds the session.
+# It keeps coalescing off: with it on, this small month is folded into
+# one shuffle partition under any ``local[N]``, and a split ordered by
+# ``rand(seed)`` gave equal digests under local[1] and local[4].
+_LOCAL1_MONTH = """
+import json, sys
+from pm25ml_spark.session import get_spark
+from tests.test_pipeline_e2e import _invariance_granules, _run_month
+spark = get_spark("pm25ml_spark-local1")
+spark.conf.set("spark.sql.shuffle.partitions", "32")
+spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+pipe, raster = _run_month(spark, sys.argv[1], _invariance_granules()[::-1])
+print(json.dumps({"digests": pipe.store.digests, "raster": raster}))
+spark.stop()
+"""
+
+
+@pytest.fixture(scope="module", autouse=True)
+def local1_run(tmp_path_factory):
+    """Starts ``_LOCAL1_MONTH`` in a subprocess when the module's first
+    test starts, so that its session start and month overlap the tests
+    before the invariance gate, and yields it with the paths of its
+    stdout and stderr."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    tmp = tmp_path_factory.mktemp("local1")
+    out, err = tmp / "stdout", tmp / "stderr"
+    root = pathlib.Path(__file__).resolve().parents[1]
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    with open(out, "w") as fo, open(err, "w") as fe:
+        proc = subprocess.Popen(
+            [sys.executable, "-c", _LOCAL1_MONTH, str(tmp / "bucket")],
+            cwd=root, env=env, stdout=fo, stderr=fe,
+        )
+    yield proc, out, err
+    proc.kill()
+    proc.wait()
+
+
 @pytest.fixture(scope="module")
 def invariance_runs(spark, tmp_path_factory):
     """One month (8×8 grid × 5 days) run twice: with one shuffle
@@ -307,11 +358,7 @@ def invariance_runs(spark, tmp_path_factory):
     execution would coalesce this month's 32 small shuffle partitions
     back into one, so the second run turns coalescing off: its stages
     really run, write and re-read 32 partitions."""
-    granules = [
-        RasterGranule(f"fake://m2/{v}/{d}.nc", f"2023-01-{d:02d}", v)
-        for d in range(1, 6)
-        for v in ("aot", "t2m")
-    ]
+    granules = _invariance_granules()
     parts = "spark.sql.shuffle.partitions"
     coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     before = {k: spark.conf.get(k) for k in (parts, coalesce)}
@@ -339,6 +386,22 @@ def test_stage_digests_invariant_to_partitions_and_manifest_order(invariance_run
         assert a.store.digests[stage] == b.store.digests[stage], stage
         assert a.store.digests[stage] != 0, stage
     with open(raster_a, "rb") as fa, open(raster_b, "rb") as fb:
+        assert fa.read() == fb.read()
+
+
+def test_stage_digests_invariant_to_local_parallelism(invariance_runs, local1_run):
+    """The second invariance run (32 shuffle partitions, reversed
+    manifest) repeated in a ``local[1]`` subprocess, so that only the
+    session's parallelism differs: its six stage digests and its export
+    raster's bytes equal the in-process run's."""
+    import json
+
+    proc, out, err = local1_run
+    assert proc.wait(timeout=600) == 0, err.read_text()[-3000:]
+    got = json.loads(out.read_text().strip().splitlines()[-1])
+    pipe, raster = invariance_runs[1]
+    assert got["digests"] == {s: pipe.store.digests[s] for s in _STAGES}
+    with open(raster, "rb") as fa, open(got["raster"], "rb") as fb:
         assert fa.read() == fb.read()
 
 
@@ -444,16 +507,13 @@ def test_pipeline_import_closure_is_pm25_only():
 
 # Reference operators no job calls yet: the J8 station-to-cell join, the
 # S9/S10 station reads, the S14-S16 Earthdata and GEE clients and the S18
-# model store. The station stage needs the first two. The last entry is
-# the transaction-log core (commits, snapshots, stats pruning), kept
-# with its own tests until it is deleted.
+# model store. The station stage needs the first two.
 _UNREACHED_KEEP = {
     "pm25ml_spark.ml.store",
     "pm25ml_spark.operators.nn_join",
     "pm25ml_spark.sources.http_csv",
     "pm25ml_spark.sources.earthdata",
     "pm25ml_spark.sources.gee",
-    "pm25ml_spark.sources.txlog",
 }
 
 

@@ -176,10 +176,10 @@ def catalog_plan_census(spark, sf_dir):
     built ONCE and shared by the two audits below. Some plans run Spark
     jobs while they are built: the exact-quantile queries (a06, a09,
     a10) and the prefix-sum and decimation queries (m04, m10, w08)
-    sample their range splits, k02 collects its grid and k05 writes its
-    Zarr store. On a 4-vCPU host at sf0.001, the walk over all 88
-    queries took 56 s of fixture setup when this file ran alone (the
-    whole file 98 s) and 20 s inside a full suite run."""
+    sample their range splits, and k02 collects its grid. On a 4-vCPU
+    host at sf0.001, the walk over the 88 queries the catalog then had
+    took 56 s of fixture setup when this file ran alone (the whole file
+    98 s) and 20 s inside a full suite run."""
     census = {}
     for name, fn in QUERIES.items():
         cart = unpart = 0

@@ -210,33 +210,6 @@ def test_decimate_partitioned_property(spark, n, every, nparts, shuffle_seed):
 
 @settings(max_examples=25, deadline=None)
 @given(
-    shape=st.tuples(
-        st.integers(1, 6), st.integers(1, 9), st.integers(1, 9)
-    ),
-    chunks=st.tuples(
-        st.integers(1, 4), st.integers(1, 5), st.integers(1, 5)
-    ),
-    level=st.sampled_from([None, 1, 5]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_zarr_roundtrip_property(tmp_path_factory, shape, chunks, level, seed):
-    """Any shape × any chunking × any codec level round-trips exactly,
-    NaNs included — chunk-grid arithmetic has no edge-size bugs."""
-    import numpy as np
-
-    from pm25ml_spark.sources.zarr_io import read_zarr_array, write_zarr_array
-
-    rng = np.random.default_rng(seed)
-    arr = rng.normal(size=shape).astype(np.float32)
-    arr[rng.random(shape) < 0.2] = np.nan
-    p = str(tmp_path_factory.mktemp("z") / "a")
-    write_zarr_array(p, arr, chunks, ["t", "y", "x"], level=level)
-    back, _ = read_zarr_array(p)
-    np.testing.assert_array_equal(back, arr)
-
-
-@settings(max_examples=25, deadline=None)
-@given(
     h=st.integers(1, 40),
     w=st.integers(1, 20),
     rows_per_strip=st.integers(1, 48),

@@ -3,10 +3,9 @@
 Usage: python tools/explain_dump.py OUTDIR SUFFIX query [query ...]
 Writes OUTDIR/<query>_<SUFFIX>.txt for each query.
 
-Some queries run Spark jobs while their plan is built (k05 writes its
-Zarr store, k02 collects its grid, the exact-quantile and prefix-sum
-queries sample their range splits); the dumped plan is the final
-returned frame's physical plan.
+Some queries run Spark jobs while their plan is built (k02 collects its
+grid, the exact-quantile and prefix-sum queries sample their range
+splits); the dumped plan is the final returned frame's physical plan.
 """
 
 from __future__ import annotations

@@ -19,9 +19,9 @@ physical plan and count the operators that matter at 100 TB:
                            more of the query fused into generated JVM
                            loops)
 
-Writes PLAN_CENSUS.json: per-query counts + catalog totals. Txlog
-queries execute real side effects to produce their result frame; their
-census reflects the final read-back plan.
+Writes PLAN_CENSUS.json: per-query counts + catalog totals. Some
+queries run Spark jobs while their plan is built; their census reflects
+the final returned frame's plan.
 
 Usage: python tools/plan_census.py [--sf-dir /root/testdata/sf0.001]
 """

@@ -101,7 +101,7 @@ def main() -> int:
         f"Bench-style noop-sink timings; ratio > {args.flag_factor:g}×"
         f"{growth:g} = {args.flag_factor * growth:g} with t(sf{sf_big:g}) "
         "> 1 s is flagged as superlinear-suspect. Fixed-cost queries "
-        "(generated-input codec queries like k05/k06) are expected near "
+        "(generated-input codec queries like k06) are expected near "
         "ratio 1; tiny-time ratios are noise-dominated.",
         "",
     ]
